@@ -128,6 +128,10 @@ object BlockedALS {
     */
   val AutoBlocks: Int = -1
 
+  /** Failure message for an input with no ratings left to train on. */
+  private[als] val EmptyRatingsMessage =
+    "ratings input is empty after null-dropping — nothing to train on"
+
   /** Per-block byte budget for the auto sizing rule. The per-task
     * working set of the iteration cogroup is the binding constraint
     * (SCALING §12.7 wall 2): one CSR in-block (~16 B/rating) plus the
@@ -214,8 +218,11 @@ object BlockedALS {
     val sc = ratings.sparkContext
     val autoBlocks =
       if (cfg.numUserBlocks == AutoBlocks || cfg.numItemBlocks == AutoBlocks) {
-        // one scan over the raw ratings, paid only in auto mode
-        val n = autoBlockCount(ratings.count(), cfg.rank, sc.defaultParallelism)
+        // one scan over the raw ratings, paid only in auto mode; it doubles
+        // as the empty-input check
+        val numRatings = ratings.count()
+        require(numRatings > 0, EmptyRatingsMessage)
+        val n = autoBlockCount(numRatings, cfg.rank, sc.defaultParallelism)
         org.slf4j.LoggerFactory.getLogger(getClass)
           .info(s"auto block sizing: $n blocks per auto side " +
             s"(target ${TargetBlockBytes >> 20} MB/block, rank ${cfg.rank})")
@@ -890,11 +897,15 @@ object BlockedALS {
       }
       val n = inBlock.srcIds.length
       val dstFactors = new Array[Array[Float]](n)
-      val ls = new NormalEquation(rank)
+      // row-major Gramian, vectorized four observations per pass and
+      // factored in place: byte-identical to per-rating packed
+      // NormalEquation.add + a left-looking Cholesky (RowGramian and
+      // CholeskySolver.solveInPlace docs; HalfStepParitySpec)
+      val ls = new RowGramian(rank)
+      val yty = ytyOpt.orNull
       var j = 0
       while (j < n) {
-        ls.reset()
-        ytyOpt.foreach(ls.merge)
+        ls.reset(yty)
         var numExplicits = 0
         var i = inBlock.dstPtrs(j)
         val end = inBlock.dstPtrs(j + 1)
@@ -919,7 +930,7 @@ object BlockedALS {
           i += 1
         }
         // ALS-WR weighted regularization: λ · (#observations for this row)
-        dstFactors(j) = solver.solve(ls, numExplicits * regParam)
+        dstFactors(j) = solver.solveRows(ls, numExplicits * regParam)
         j += 1
       }
       dstFactors

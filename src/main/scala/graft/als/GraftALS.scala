@@ -46,6 +46,7 @@ case class GraftALS(
 
   def fit(df: DataFrame): GraftALSModel = {
     val spark = df.sparkSession
+    val ratingName = ratingCol
     val ratings = df
       .select(
         col(userCol).cast("long"),
@@ -53,10 +54,22 @@ case class GraftALS(
         col(ratingCol).cast("float"))
       .na.drop()
       .rdd
-      .map(r => Rating(r.getLong(0), r.getLong(1), r.getFloat(2)))
+      .map { r =>
+        // .na.drop() removes null and NaN but not ±Inf, which would turn
+        // into Inf/NaN factors and a misleading Cholesky failure one
+        // half-step later
+        val rating = r.getFloat(2)
+        if (rating.isInfinite)
+          throw new IllegalArgumentException(
+            s"rating column '$ratingName' holds a non-finite value $rating " +
+              s"(user ${r.getLong(0)}, item ${r.getLong(1)}); ratings must be finite")
+        Rating(r.getLong(0), r.getLong(1), rating)
+      }
     // fail with a clear message instead of an empty-block crash deep in the
-    // kernel (reference asserts the same up front, ALS.py:39-40)
-    require(!ratings.isEmpty(), "ratings input is empty after null-dropping — nothing to train on")
+    // kernel (reference asserts the same up front, ALS.py:39-40); an auto
+    // grid counts the ratings anyway, and BlockedALS.train checks that count
+    if (numUserBlocks != BlockedALS.AutoBlocks && numItemBlocks != BlockedALS.AutoBlocks)
+      require(!ratings.isEmpty(), BlockedALS.EmptyRatingsMessage)
 
     val cfg = BlockedALS.Config(
       rank = rank,

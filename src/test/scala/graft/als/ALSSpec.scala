@@ -306,6 +306,31 @@ class ALSSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("empty"))
   }
 
+  test("non-finite ratings fail loudly, naming the rating column and the value") {
+    import scala.jdk.CollectionConverters._
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("user", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("item", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("score", org.apache.spark.sql.types.DoubleType)))
+    for ((bad, implicitPrefs, blocks) <- Seq(
+        (Double.PositiveInfinity, false, 2),
+        (Double.NegativeInfinity, true, 2),
+        (1e300, false, BlockedALS.AutoBlocks), // overflows the float cast
+        (Double.PositiveInfinity, true, BlockedALS.AutoBlocks))) {
+      val rows = lowRankRatings(rank = 2, seed = 41)
+        .map(r => org.apache.spark.sql.Row(r.user, r.item, r.rating.toDouble)) :+
+        org.apache.spark.sql.Row(3L, 4L, bad)
+      val df = spark.createDataFrame(rows.asJava, schema)
+      val e = intercept[Exception](GraftALS(rank = 2, maxIter = 1, ratingCol = "score",
+        implicitPrefs = implicitPrefs, numUserBlocks = blocks, numItemBlocks = blocks).fit(df))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(messages.contains("rating column 'score' holds a non-finite value"), messages)
+      assert(messages.contains("Infinity"), messages)
+      assert(!messages.contains("Cholesky"), messages)
+    }
+  }
+
   test("item-side recommendations and neighbors serve off the same model") {
     val ratings = lowRankRatings(rank = 3, seed = 121)
     import scala.jdk.CollectionConverters._

@@ -88,6 +88,46 @@ class SolverSpec extends AnyFunSuite {
     intercept[ArithmeticException](new CholeskySolver().solve(ne, 0.0))
   }
 
+  test("a non-PD system throws at the same pivot, with the same value, as the left-looking form") {
+    def packed(k: Int, upper: Double*): NormalEquation = {
+      val ne = new NormalEquation(k)
+      upper.copyToArray(ne.ata)
+      ne.atb.indices.foreach(i => ne.atb(i) = i + 1.0)
+      ne
+    }
+    // (system, λ, failing pivot); the upper triangle is listed row by row
+    val cases = Seq(
+      (packed(2, 0, 0, 0), 0.0, 0),
+      (packed(3, 4, 2, 0, 1, 0, 1), 0.0, 1),       // rank-deficient leading 2×2
+      (packed(3, 1, 0, 0, 1, 0, -1), 0.0, 2),      // negative last pivot
+      (packed(3, 1, Double.NaN, 0, 1, 0, 1), 0.5, 1),
+      (packed(4, 1, 0, 0, 0, 1, 0, 0, -3, 0, 1), 1.0, 2))
+    for ((ne, lambda, pivot) <- cases) {
+      val expected = intercept[ArithmeticException](
+        HalfStepParitySpec.packedSolve(ne, lambda, nonnegative = false)).getMessage
+      val got = intercept[ArithmeticException](new CholeskySolver().solve(ne, lambda)).getMessage
+      assert(got == expected)
+      assert(got.startsWith(s"Cholesky failed at pivot $pivot "), got)
+    }
+    // rank-deficient Gramians at λ = 0: whichever way rounding takes the
+    // last pivots, both forms agree (same exception or same bits)
+    val rng = new java.util.Random(3)
+    for (k <- Seq(5, 16, 33); obs <- Seq(1, k / 2, k - 1)) {
+      val ne = new NormalEquation(k)
+      for (_ <- 0 until obs) ne.add(Array.fill(k)(rng.nextGaussian().toFloat), rng.nextGaussian())
+      val copy = new NormalEquation(k).merge(ne)
+      val expected = scala.util.Try(HalfStepParitySpec.packedSolve(copy, 0.0, nonnegative = false))
+      val got = scala.util.Try(new CholeskySolver().solve(ne, 0.0))
+      (expected, got) match {
+        case (scala.util.Failure(e), scala.util.Failure(g)) => assert(g.getMessage == e.getMessage)
+        case (scala.util.Success(e), scala.util.Success(g)) =>
+          assert(g.map(java.lang.Float.floatToRawIntBits).toSeq ==
+            e.map(java.lang.Float.floatToRawIntBits).toSeq)
+        case other => fail(s"k=$k obs=$obs: outcomes differ: $other")
+      }
+    }
+  }
+
   test("NNLS returns the unconstrained solution when it is nonnegative") {
     val ne = new NormalEquation(2)
     ne.add(Array(1f, 0f), 1.0)

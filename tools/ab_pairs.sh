@@ -1,0 +1,113 @@
+#!/usr/bin/env bash
+# Alternating-order A/B of one perfbench workload: a parent ref against the
+# current checkout, one pair of fresh-JVM runs per seed.
+#
+#   tools/ab_pairs.sh <parent-ref> <workload> <seed>...
+#
+# Run from the root of the checkout. The parent ref is exported with
+# `git archive` into $AB_DIR/parent (default /tmp/ab_pairs; re-exported on
+# every call, so a stale tree is never measured); each side builds its own
+# benchmark from its own sources on first use. Pair n runs the parent first
+# when n is even and the checkout first when n is odd, so a drift across the
+# sequence of runs cancels. Each run is
+#   python3 perfbench/run.py --workload W --seed S --seconds R --trace 0
+# with R the run length BENCHMARK.json declares (`run_seconds`).
+#
+# Prints one row per pair (op_s_p50, setup_s, shuffle_mb, quality on each
+# side), then per metric the number of pairs the checkout won (ties count
+# for neither side), each side's median and quartile spread (IQR), and
+# whether the medians differ by more than the parent's IQR. Every result
+# line is kept in $AB_DIR/results.jsonl.
+set -euo pipefail
+
+if [ $# -lt 3 ]; then
+  sed -n '2,20p' "$0" | sed 's/^# \{0,1\}//'
+  exit 2
+fi
+ref=$1
+workload=$2
+shift 2
+
+root=$(git rev-parse --show-toplevel)
+dir=${AB_DIR:-/tmp/ab_pairs}
+seconds=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
+  "$root/BENCHMARK.json")
+parent=$dir/parent
+results=$dir/results.jsonl
+
+git -C "$root" rev-parse --verify --quiet "$ref^{commit}" > /dev/null ||
+  { echo "ab_pairs: unknown ref $ref" >&2; exit 2; }
+mkdir -p "$dir"
+rm -rf "$parent"
+mkdir -p "$parent"
+git -C "$root" archive "$ref" | tar -x -C "$parent"
+: > "$results"
+
+run() { # side checkout seed pair
+  local line
+  line=$(cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3" \
+    --seconds "$seconds" --trace 0 2> "$dir/$1-$3.err" | tail -n 1) ||
+    { echo "ab_pairs: $1 run failed on seed $3 (see $dir/$1-$3.err)" >&2; exit 1; }
+  printf '{"pair": %d, "seed": %d, "side": "%s", "result": %s}\n' \
+    "$4" "$3" "$1" "$line" >> "$results"
+  echo "ab_pairs: pair $4 seed $3 $1 done" >&2
+}
+
+n=0
+for seed in "$@"; do
+  if [ $((n % 2)) -eq 0 ]; then
+    run parent "$parent" "$seed" "$n"; run change "$root" "$seed" "$n"
+  else
+    run change "$root" "$seed" "$n"; run parent "$parent" "$seed" "$n"
+  fi
+  n=$((n + 1))
+done
+
+python3 - "$results" "$ref" "$workload" <<'EOF'
+import json
+import statistics
+import sys
+
+path, ref, workload = sys.argv[1:]
+runs = [json.loads(line) for line in open(path)]
+pairs = {}
+for r in runs:
+    pairs.setdefault(r["pair"], {"seed": r["seed"]})[r["side"]] = r["result"]
+metrics = [("op_s_p50", "lower"), ("setup_s", "lower"), ("shuffle_mb", "lower"),
+           ("quality", "higher")]
+
+
+def value(result, name):
+    return result["metrics"][name]["value"]
+
+
+def quartiles(xs):
+    q = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else xs * 3
+    return q[0], statistics.median(xs), q[2]
+
+
+print(f"{workload}: parent {ref} vs checkout, {len(pairs)} pairs")
+print("each metric: parent, then checkout")
+print("pair seed first  " + "  ".join(f"{m:>23}" for m, _ in metrics))
+for n in sorted(pairs):
+    p, c = pairs[n]["parent"], pairs[n]["change"]
+    first = "parent" if n % 2 == 0 else "change"
+    cells = "  ".join(f"{value(p, m):>11.6g} {value(c, m):>11.6g}" for m, _ in metrics)
+    print(f"{n:>4} {pairs[n]['seed']:>4} {first:<6} {cells}")
+failed = sum(r["result"]["failed"] for r in runs)
+print(f"failed ops: {failed} of {sum(r['result']['attempted'] for r in runs)}")
+for m, better in metrics:
+    ps = [value(pairs[n]["parent"], m) for n in pairs]
+    cs = [value(pairs[n]["change"], m) for n in pairs]
+    sign = 1 if better == "lower" else -1
+    wins = sum(1 for p, c in zip(ps, cs) if sign * (p - c) > 0)
+    losses = sum(1 for p, c in zip(ps, cs) if sign * (c - p) > 0)
+    pq, cq = quartiles(ps), quartiles(cs)
+    diff = cq[1] - pq[1]
+    rel = diff / pq[1] if pq[1] else float("nan")
+    piqr = pq[2] - pq[0]
+    print(f"{m}: checkout wins {wins}/{len(ps)} (losses {losses}); "
+          f"median parent {pq[1]:.6g} [IQR {piqr:.4g}] checkout {cq[1]:.6g} "
+          f"[IQR {cq[2] - cq[0]:.4g}]; diff {diff:+.6g} ({rel:+.1%}); "
+          f"|diff| > parent IQR: {abs(diff) > piqr}")
+EOF
