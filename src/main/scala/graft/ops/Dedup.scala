@@ -36,36 +36,63 @@ object Dedup {
       .agg(min(col(idCol)).as("keeper_id"))
       .select("keeper_id")
 
-  /** A MinHash hash family: turns the exploded `(id, s)` shingle frame into
-    * `(id, sig ARRAY<BIGINT>)` signatures. The production family is
-    * [[XxHash64Minhash]]; oracle-gate twins may substitute a cross-engine
-    * family (see `graft.queries.PortableMinhash`) — the same hook pattern
-    * as [[simhashSignatures]]'s `hashFn`.
+  /** A MinHash hash family: turns the `(id, sh ARRAY<STRING>)` shingle
+    * frame ([[shingleFrame]]) into `(id, sig ARRAY<BIGINT>)` signatures,
+    * one row per document with at least one shingle — a document whose
+    * array is empty or null gets no signature row, so it never enters a
+    * bucket. The production family is [[XxHash64Minhash]]; oracle-gate
+    * twins may substitute a cross-engine family (see
+    * `graft.queries.PortableMinhash`) — the same hook pattern as
+    * [[simhashSignatures]]'s `hashFn`.
     */
   trait MinhashFamily {
-    def signatures(exploded: DataFrame, numHashes: Int): DataFrame
+    def signatures(shingled: DataFrame, numHashes: Int): DataFrame
   }
 
   /** Production MinHash family: `numHashes` independent seeded xxhash64
-    * minima, computed as parallel `min(xxhash64(s, seed))` aggregates
-    * (codegen'd hash aggregate with map-side partial combine).
+    * minima, signature element `i-1` = `min over s of xxhash64(s, i)`.
     *
-    * Why not `transform(sequence(...), seed -> array_min(...))` over a
-    * shingles array column: higher-order functions are interpreted (outside
-    * whole-stage codegen) and CollapseProject re-inlines the shingle
-    * expression into every one of the 64 lambdas — measured 39s vs ~2s on
-    * the 500-doc fixture. The explode+groupBy form is exactly what scales
-    * to 100 TB.
+    * One map-only projection per row ([[graft.functions.MinhashExpr]]):
+    * each shingle's bytes are hashed once and the `numHashes` seeded
+    * values derive from that hash, because Catalyst's
+    * `xxhash64(s, lit(i))` IS `hashInt(i, hashUnsafeBytes(s, 42))`. The
+    * values are therefore bit-identical to the `explode` +
+    * `min(xxhash64(s, lit(i)))` hash aggregate this replaces (pinned by
+    * `MinhashExprSpec`), and since every signature depends on its own row
+    * alone, no exchange is needed at any corpus size. Rows with an empty
+    * or null shingle array are filtered out first: the aggregate produced
+    * no group for them, and that rule stays.
     */
   object XxHash64Minhash extends MinhashFamily {
-    def signatures(exploded: DataFrame, numHashes: Int): DataFrame = {
-      val minCols = (1 to numHashes).map(seed => min(xxhash64(col("s"), lit(seed))).as(s"m$seed"))
-      exploded
-        .groupBy("id")
-        .agg(minCols.head, minCols.tail: _*)
-        .select(col("id"), array((1 to numHashes).map(i => col(s"m$i")): _*).as("sig"))
-    }
+    def signatures(shingled: DataFrame, numHashes: Int): DataFrame =
+      shingled
+        .where(size(col("sh")) > 0)
+        .select(col("id"), minhash(col("sh"), numHashes).as("sig"))
   }
+
+  private def native(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    org.apache.spark.sql.GraftSqlShims.column(e)
+
+  private def expr(c: Column) = org.apache.spark.sql.GraftSqlShims.expression(c)
+
+  /** `numHashes` xxhash64 minima of a shingle array
+    * ([[graft.functions.MinhashExpr]]); NULL for an empty array.
+    */
+  private[graft] def minhash(sh: Column, numHashes: Int): Column =
+    native(graft.functions.MinhashExpr(expr(sh), numHashes))
+
+  /** `numBands` LSH keys of a signature, key `b` = xxhash64 of the band's
+    * `rowsPerBand`-long slice ([[graft.functions.BandKeysExpr]]).
+    */
+  private[graft] def bandKeys(sig: Column, numBands: Int, rowsPerBand: Int): Column =
+    native(graft.functions.BandKeysExpr(expr(sig), numBands, rowsPerBand))
+
+  /** The xxhash64 image of a shingle array, element by element
+    * ([[graft.functions.HashedShinglesExpr]]) — what the Jaccard verifies
+    * compare.
+    */
+  private[graft] def hashedShingles(sh: Column): Column =
+    native(graft.functions.HashedShinglesExpr(expr(sh)))
 
   /** The canonical `(id, sh ARRAY<STRING>)` distinct-shingle frame both
     * textual near-dup tiers derive from. A caller composing tiers (the
@@ -83,8 +110,8 @@ object Dedup {
       col(idCol).as("id"),
       array_distinct(TextOps.shingles(col(textCol), shingleSize)).as("sh"))
 
-  /** MinHash signatures as a (id, sig ARRAY<BIGINT>) DataFrame in the
-    * scale-correct shape: explode shingles → `family` minima → array.
+  /** MinHash signatures as a (id, sig ARRAY<BIGINT>) DataFrame:
+    * [[shingleFrame]] → `family` signatures.
     */
   def minhashSignatures(
       documents: DataFrame,
@@ -92,12 +119,8 @@ object Dedup {
       idCol: String = "doc_id",
       numHashes: Int = 64,
       shingleSize: Int = 3,
-      family: MinhashFamily = XxHash64Minhash): DataFrame = {
-    val exploded = Parallelism.widen(documents).select(
-      col(idCol).as("id"),
-      explode(TextOps.shingles(col(textCol), shingleSize)).as("s"))
-    family.signatures(exploded, numHashes)
-  }
+      family: MinhashFamily = XxHash64Minhash): DataFrame =
+    family.signatures(shingleFrame(documents, textCol, idCol, shingleSize), numHashes)
 
   /** MinHash + banded LSH near-duplicate pairs.
     *
@@ -129,12 +152,10 @@ object Dedup {
     // shared shingle frame (id, sh ARRAY): signatures and the verify join
     // both derive from it, and a METER composing this tier with the exact
     // tier passes one precomputed frame instead of shingling the corpus
-    // once per tier. Min over a band is duplicate-invariant, so distinct
-    // arrays feed the signature explode unchanged.
+    // once per tier.
     val shingled = preShingled.getOrElse(
       shingleFrame(documents, textCol, idCol, shingleSize).persist())
-    val withSig = family.signatures(
-      shingled.select(col("id"), explode(col("sh")).as("s")), numHashes)
+    val withSig = family.signatures(shingled, numHashes)
 
     // one row per (doc, band): bucket key = hash of that band's slice.
     // Cached: candidate generation scans it, and the 100 TB version writes
@@ -171,8 +192,7 @@ object Dedup {
     // r16 (it re-derived 10⁷ postings the array cache already holds) —
     // the shingle SETS still come straight from the cache, only their
     // element representation shrinks.
-    val hashedSh = shingled.select(
-      col("id"), transform(col("sh"), s => xxhash64(s)).as("sh"))
+    val hashedSh = shingled.select(col("id"), hashedShingles(col("sh")).as("sh"))
     val verified = candidates
       .join(hashedSh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(hashedSh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
@@ -192,21 +212,15 @@ object Dedup {
   }
 
   /** One row per (doc, band) of a signature frame: bucket key = xxhash64
-    * of that band's signature slice — the banding step shared by
-    * [[minhashNearDups]] and the parity spec/probes.
+    * of that band's signature slice ([[bandKeys]]) — the banding step
+    * shared by [[minhashNearDups]], [[incrementalNearDupKeepers]] and the
+    * parity spec.
     */
   private[graft] def bandedFrame(
       withSig: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame =
     withSig.select(
       col("id"),
-      explode(
-        transform(
-          sequence(lit(0), lit(numBands - 1)),
-          b => struct(
-            b.as("band"),
-            xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))).as("bucket"))))
-        .as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+      posexplode(bandKeys(col("sig"), numBands, rowsPerBand)).as(Seq("band", "bucket")))
 
   /** Intra-bucket candidate pairs (id_a < id_b, deduped across bands) from
     * a banded frame, in ONE exchange: group each (band, bucket) to its
@@ -214,7 +228,7 @@ object Dedup {
     * key before the shuffle), then emit the pairs from the aggregated
     * arrays. The equivalent bucket SELF-JOIN shuffles the banded frame
     * TWICE (the two sides alias distinct attribute ids, so exchange reuse
-    * never fires — `CandPlanProbe`) and sorts both sides under
+    * never fires — SCALING §15.8) and sorts both sides under
     * sort-merge. Measured at the ×1000 tier (8 alternating fresh-JVM
     * legs, `bench_artifacts/cand_oneshuffle_ab_r18.json`): WALL PARITY
     * with the join — the saved exchange read buys back what the
@@ -1202,14 +1216,9 @@ object Dedup {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
     val rowsPerBand = numHashes / numBands
     val shingled = shingleFrame(documents, textCol, idCol, shingleSize)
-    val withSig = family.signatures(
-      shingled.select(col("id"), explode(col("sh")).as("s")), numHashes)
-    withSig
-      .select(col("id"),
-        transform(sequence(lit(0), lit(numBands - 1)),
-          b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))
-          .as("buckets"))
-      .join(shingled.select(col("id"), transform(col("sh"), s => xxhash64(s)).as("sh")), "id")
+    family.signatures(shingled, numHashes)
+      .select(col("id"), bandKeys(col("sig"), numBands, rowsPerBand).as("buckets"))
+      .join(shingled.select(col("id"), hashedShingles(col("sh")).as("sh")), "id")
   }
 
   /** Incremental NEAR-dup dedup: keep only the new-batch documents with no
@@ -1238,14 +1247,7 @@ object Dedup {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
     val rowsPerBand = numHashes / numBands
     val shingled = shingleFrame(newDocs, textCol, idCol, shingleSize).persist()
-    val withSig = family.signatures(
-      shingled.select(col("id"), explode(col("sh")).as("s")), numHashes)
-    val batchBands = withSig.select(
-      col("id"),
-      posexplode(
-        transform(sequence(lit(0), lit(numBands - 1)),
-          b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))
-        .as(Seq("band", "bucket")))
+    val batchBands = bandedFrame(family.signatures(shingled, numHashes), numBands, rowsPerBand)
     val corpusBands = index.select(
       col("id").as("id_b"),
       posexplode(col("buckets")).as(Seq("band", "bucket")))
@@ -1253,8 +1255,7 @@ object Dedup {
       .join(corpusBands.as("y"), Seq("band", "bucket"))
       .select(col("x.id").as("id_a"), col("id_b"))
       .distinct()
-    val batchHashed = shingled.select(
-      col("id").as("id_a"), transform(col("sh"), s => xxhash64(s)).as("sh_a"))
+    val batchHashed = shingled.select(col("id").as("id_a"), hashedShingles(col("sh")).as("sh_a"))
     val matched = candidates
       .join(batchHashed, "id_a")
       .join(index.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")

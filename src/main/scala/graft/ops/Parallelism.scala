@@ -42,16 +42,21 @@ object Parallelism {
     // their in-flight Spark jobs running on the cluster after the caller
     // has already thrown. Job groups are thread-local, so each worker
     // thread sets the group itself; on failure the whole group is
-    // cancelled (interruptOnCancel) before the cause is rethrown.
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    // cancelled (interruptOnCancel) before the cause is rethrown. Without
+    // any session (pure-computation thunks) there are no jobs to group.
+    val sc = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext)
     val group = s"graft-inparallel-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(thunks.size, 8))
     try {
       val futs = thunks.map { t =>
         pool.submit(new java.util.concurrent.Callable[T] {
-          override def call(): T = {
-            sc.setJobGroup(group, "graft.Parallelism.inParallel", interruptOnCancel = true)
-            try t() finally sc.clearJobGroup()
+          override def call(): T = sc match {
+            case Some(c) =>
+              c.setJobGroup(group, "graft.Parallelism.inParallel", interruptOnCancel = true)
+              try t() finally c.clearJobGroup()
+            case None => t()
           }
         })
       }
@@ -59,7 +64,7 @@ object Parallelism {
         try f.get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            try sc.cancelJobGroup(group) catch { case _: Throwable => () }
+            sc.foreach(c => try c.cancelJobGroup(group) catch { case _: Throwable => () })
             throw e.getCause
         }
       }

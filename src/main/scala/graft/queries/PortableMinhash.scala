@@ -23,8 +23,12 @@ object PortableMinhash extends Dedup.MinhashFamily {
     */
   val Modulus: Long = 1L << 56
 
-  def signatures(exploded: DataFrame, numHashes: Int): DataFrame = {
-    val hs = exploded.select(
+  /** Explodes the shingle arrays and aggregates `numHashes` minima per
+    * id — an empty or null array explodes to no rows, so its document gets
+    * no signature row.
+    */
+  def signatures(shingled: DataFrame, numHashes: Int): DataFrame = {
+    val hs = shingled.select(col("id"), explode(col("sh")).as("s")).select(
       col("id"),
       TextOps.portableHash56(col("s")).as("h1"),
       TextOps.portableHash56(concat(col("s"), lit("#"))).as("h2"))

@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** THROWAWAY fixture tool (test scope): writes ONLY the synthesized
   * documents table of a scale tier (ScaleData.writeDocs at count×factor —
-  * the same generator ScaleUp uses), so docs-only probes (MinhashStepProbe
-  * core-count A/B, round-18) don't pay the full tier's ~13 GB of
-  * relational tables they never read.
+  * the same generator ScaleUp uses), so docs-only probes (the incremental
+  * minhash tiers, `tools/inc_minhash_r18.sh`) don't pay the full tier's
+  * ~13 GB of relational tables they never read.
   *
   * Usage: runMain graft.DocsTierFixture <outDir> [srcDir] [factor]
   */

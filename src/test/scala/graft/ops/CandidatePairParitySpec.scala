@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkFixture
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the r18 one-exchange candidate builder pair-set-identical to the
@@ -33,8 +32,7 @@ class CandidatePairParitySpec extends AnyFunSuite with SparkFixture {
         StructField("source", StringType),
         StructField("n_chars", LongType))))
     val shingled = Dedup.shingleFrame(df, "text", "doc_id", 3)
-    val withSig = Dedup.XxHash64Minhash.signatures(
-      shingled.select(col("id"), explode(col("sh")).as("s")), 64)
+    val withSig = Dedup.XxHash64Minhash.signatures(shingled, 64)
     Dedup.bandedFrame(withSig, 16, 4).persist()
   }
 

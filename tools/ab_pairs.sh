@@ -18,10 +18,16 @@
 # for neither side), each side's median and quartile spread (IQR), and
 # whether the medians differ by more than the parent's IQR. Every result
 # line is kept in $AB_DIR/results.jsonl.
+#
+# With AB_TRACE=1 it then runs one traced pair (`--trace 1`, first seed,
+# parent first) and prints both sides' per-layer metrics for the
+# workload's own layers — `spark.*` plus `dedup.*` (dedup_docs), `model.*`
+# (als_serve) or `als.*` (the fits) — so one command shows the end-to-end
+# result and the layer that moved. Traced lines go to $AB_DIR/trace.jsonl.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  sed -n '2,20p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,26p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 ref=$1
@@ -34,6 +40,7 @@ seconds=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_
   "$root/BENCHMARK.json")
 parent=$dir/parent
 results=$dir/results.jsonl
+traces=$dir/trace.jsonl
 
 git -C "$root" rev-parse --verify --quiet "$ref^{commit}" > /dev/null ||
   { echo "ab_pairs: unknown ref $ref" >&2; exit 2; }
@@ -43,14 +50,15 @@ mkdir -p "$parent"
 git -C "$root" archive "$ref" | tar -x -C "$parent"
 : > "$results"
 
-run() { # side checkout seed pair
-  local line
+run() { # side checkout seed pair [trace]
+  local line trace=${5:-0} out=$results
+  [ "$trace" = 1 ] && out=$traces
   line=$(cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3" \
-    --seconds "$seconds" --trace 0 2> "$dir/$1-$3.err" | tail -n 1) ||
-    { echo "ab_pairs: $1 run failed on seed $3 (see $dir/$1-$3.err)" >&2; exit 1; }
+    --seconds "$seconds" --trace "$trace" 2> "$dir/$1-$3-t$trace.err" | tail -n 1) ||
+    { echo "ab_pairs: $1 run failed on seed $3 (see $dir/$1-$3-t$trace.err)" >&2; exit 1; }
   printf '{"pair": %d, "seed": %d, "side": "%s", "result": %s}\n' \
-    "$4" "$3" "$1" "$line" >> "$results"
-  echo "ab_pairs: pair $4 seed $3 $1 done" >&2
+    "$4" "$3" "$1" "$line" >> "$out"
+  echo "ab_pairs: pair $4 seed $3 $1 (trace $trace) done" >&2
 }
 
 n=0
@@ -62,13 +70,17 @@ for seed in "$@"; do
   fi
   n=$((n + 1))
 done
+: > "$traces"
+if [ "${AB_TRACE:-0}" = 1 ]; then
+  run parent "$parent" "$1" 0 1; run change "$root" "$1" 0 1
+fi
 
-python3 - "$results" "$ref" "$workload" <<'EOF'
+python3 - "$results" "$traces" "$ref" "$workload" <<'EOF'
 import json
 import statistics
 import sys
 
-path, ref, workload = sys.argv[1:]
+path, trace_path, ref, workload = sys.argv[1:]
 runs = [json.loads(line) for line in open(path)]
 pairs = {}
 for r in runs:
@@ -110,4 +122,15 @@ for m, better in metrics:
           f"median parent {pq[1]:.6g} [IQR {piqr:.4g}] checkout {cq[1]:.6g} "
           f"[IQR {cq[2] - cq[0]:.4g}]; diff {diff:+.6g} ({rel:+.1%}); "
           f"|diff| > parent IQR: {abs(diff) > piqr}")
+traced = {r["side"]: r["result"] for r in map(json.loads, open(trace_path))}
+if traced:
+    family = ("dedup." if workload.startswith("dedup") else
+              "model." if workload == "als_serve" else "als.")
+    names = [n for n in traced["parent"]["metrics"]
+             if n.startswith("spark.") or n.startswith(family)]
+    print(f"traced pair, seed {runs[0]['seed']}: per-layer metrics, parent then checkout")
+    for n in names:
+        p, c = (traced[side]["metrics"][n]["value"] for side in ("parent", "change"))
+        rel = f"{(c - p) / p:+.1%}" if p else "n/a"
+        print(f"{n:<40} {p:>12.6g} {c:>12.6g}  {rel}")
 EOF
