@@ -206,10 +206,25 @@ object BlockedALS {
     */
   @volatile private[graft] var lastLedgerForTest: ShuffleLedger = _
 
+  /** One trained side: the persisted id→factor RDD plus its row count and
+    * id range. All three figures come from the pass that materializes the
+    * RDD, so they cost no job of their own. `minId`/`maxId` are
+    * `Long.MaxValue`/`Long.MinValue` when `rows` is 0.
+    */
+  case class TrainedSide(factors: RDD[(Long, Array[Float])], rows: Long, minId: Long, maxId: Long)
+
   /** Trains the model; returns (userId→factor, itemId→factor) RDDs, both
     * persisted at `finalStorageLevel`. Reference flow: `ALS.py:39-191`.
     */
   def train(ratings: RDD[Rating], cfg: Config): (RDD[(Long, Array[Float])], RDD[(Long, Array[Float])]) = {
+    val (users, items) = trainSides(ratings, cfg)
+    (users.factors, items.factors)
+  }
+
+  /** [[train]], returning each side with the row count and id range that
+    * its materializing pass measured.
+    */
+  def trainSides(ratings: RDD[Rating], cfg: Config): (TrainedSide, TrainedSide) = {
     require(cfg.rank > 0 && cfg.maxIter >= 0 && cfg.regParam >= 0)
     require((cfg.numUserBlocks > 0 || cfg.numUserBlocks == AutoBlocks) &&
       (cfg.numItemBlocks > 0 || cfg.numItemBlocks == AutoBlocks),
@@ -501,8 +516,8 @@ object BlockedALS {
       .persist(cfg.finalStorageLevel)
 
     // materialize the model, then free every intermediate (ALS.py:181-189)
-    userIdAndFactors.count()
-    itemIdAndFactors.count()
+    val users = materializeSide(userIdAndFactors)
+    val items = materializeSide(itemIdAndFactors)
     userFactors.unpersist()
     itemFactors.unpersist()
     lastExplicitCache.foreach(_.unpersist())
@@ -531,7 +546,29 @@ object BlockedALS {
         .info(s"shuffle ledger: reaped ${ledger.reaped} retired factor-routing " +
           "shuffles mid-fit (iteration-scoped scratch cleanup)")
 
-    (userIdAndFactors, itemIdAndFactors)
+    (users, items)
+  }
+
+  /** Materializes a persisted factor RDD in one job that also measures its
+    * row count and id range: the same single pass as a `count()`.
+    */
+  private def materializeSide(side: RDD[(Long, Array[Float])]): TrainedSide = {
+    val (rows, minId, maxId) = side
+      .mapPartitions { iter =>
+        var n = 0L
+        var lo = Long.MaxValue
+        var hi = Long.MinValue
+        iter.foreach { case (id, _) =>
+          n += 1
+          if (id < lo) lo = id
+          if (id > hi) hi = id
+        }
+        Iterator.single((n, lo, hi))
+      }
+      .fold((0L, Long.MaxValue, Long.MinValue)) { case ((n1, lo1, hi1), (n2, lo2, hi2)) =>
+        (n1 + n2, math.min(lo1, lo2), math.max(hi1, hi2))
+      }
+    TrainedSide(side, rows, minId, maxId)
   }
 
   /** Tiles the ratings into (srcBlock, dstBlock) columnar blocks.

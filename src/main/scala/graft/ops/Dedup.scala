@@ -2,7 +2,9 @@ package graft.ops
 
 import graft.als.ShuffleLedger
 import graft.functions.VectorFunctions
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
+import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,6 +17,18 @@ import org.apache.spark.sql.functions._
   * and verification runs only inside buckets.
   */
 object Dedup {
+
+  /** One Kryo serializer per SparkContext for the two-long shuffle records
+    * of the candidate postings and the CC rounds. A serializer is immutable
+    * once built and ships with each shuffle dependency, so building one per
+    * call only repeated the conf scan and class registration. Weak keys:
+    * a stopped context is not kept alive by its serializer.
+    */
+  private val kryoByContext = new java.util.WeakHashMap[SparkContext, KryoSerializer]()
+
+  private def kryoFor(sc: SparkContext): KryoSerializer = kryoByContext.synchronized {
+    kryoByContext.computeIfAbsent(sc, c => new KryoSerializer(c.getConf))
+  }
 
   /** Exact duplicate groups by content hash: one row per duplicated text
     * with the keeper (min id) and the duplicate count. A 256-bit hash makes
@@ -576,8 +590,7 @@ object Dedup {
           .map(r => (r.getLong(0), r.getLong(1))),
         new HPartitioner(parts))
       shuffled.setKeyOrdering(implicitly[Ordering[Long]])
-      shuffled.setSerializer(
-        new org.apache.spark.serializer.KryoSerializer(spark0.sparkContext.getConf))
+      shuffled.setSerializer(kryoFor(spark0.sparkContext))
       shuffled
     }
     val pairPostings = spark0.createDataFrame(
@@ -878,7 +891,7 @@ object Dedup {
     val sc = spark.sparkContext
     val ledger = new ShuffleLedger(sc, Seq.empty)
     lastCcLedgerForTest = ledger
-    val kryo = new org.apache.spark.serializer.KryoSerializer(sc.getConf)
+    val kryo = kryoFor(sc)
 
     // Scale-adaptive reduce width from the LIVE edge count (each round's
     // fingerprint carries it for free): ~2M 16-byte edges ≈ 32 MB raw per

@@ -3,6 +3,8 @@ package org.apache.spark.sql
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into `private[sql]` Column↔Expression plumbing, the standard
@@ -28,4 +30,24 @@ object GraftSqlShims {
       rdd: RDD[InternalRow],
       schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** Wraps an `InternalRow` RDD in a DataFrame whose plan leaf reports
+    * `sizeInBytes` and `rowCount` as its statistics. A DataFrame built
+    * from an RDD otherwise reports `spark.sql.defaultSizeInBytes`
+    * (Long.MaxValue), so the planner never broadcasts it and every join
+    * against it is planned as a sort-merge join. With exact stats, the
+    * `autoBroadcastJoinThreshold` rule decides at plan time. The caller
+    * vouches for the figures: nothing checks them against the rows.
+    */
+  def dataFrameWithStats(
+      spark: SparkSession,
+      rdd: RDD[InternalRow],
+      schema: StructType,
+      sizeInBytes: BigInt,
+      rowCount: BigInt): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val plan = execution.LogicalRDD(DataTypeUtils.toAttributes(schema), rdd)(
+      session, originStats = Some(Statistics(sizeInBytes, Some(rowCount))))
+    classic.Dataset.ofRows(session, plan)
+  }
 }

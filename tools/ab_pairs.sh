@@ -24,10 +24,15 @@
 # workload's own layers — `spark.*` plus `dedup.*` (dedup_docs), `model.*`
 # (als_serve) or `als.*` (the fits) — so one command shows the end-to-end
 # result and the layer that moved. Traced lines go to $AB_DIR/trace.jsonl.
+# It also prints, for every span name of the traced runs, each side's median
+# jobs, stages and shuffle_write_bytes over the timed ops (a span's own
+# counts plus those of the spans nested in it), read from the span JSONL
+# each run writes to <checkout>/.bench_build/perfbench/traces/ — this shows
+# the Spark work of layers that have no per-layer metric of their own.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  sed -n '2,26p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,31p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 ref=$1
@@ -75,12 +80,13 @@ if [ "${AB_TRACE:-0}" = 1 ]; then
   run parent "$parent" "$1" 0 1; run change "$root" "$1" 0 1
 fi
 
-python3 - "$results" "$traces" "$ref" "$workload" <<'EOF'
+python3 - "$results" "$traces" "$ref" "$workload" "$parent" "$root" "$1" <<'EOF'
 import json
+import os
 import statistics
 import sys
 
-path, trace_path, ref, workload = sys.argv[1:]
+path, trace_path, ref, workload, parent_dir, change_dir, first_seed = sys.argv[1:]
 runs = [json.loads(line) for line in open(path)]
 pairs = {}
 for r in runs:
@@ -133,4 +139,32 @@ if traced:
         p, c = (traced[side]["metrics"][n]["value"] for side in ("parent", "change"))
         rel = f"{(c - p) / p:+.1%}" if p else "n/a"
         print(f"{n:<40} {p:>12.6g} {c:>12.6g}  {rel}")
+
+    def span_medians(checkout):
+        """Per span name: median inclusive (jobs, stages, shuffle bytes) over timed ops."""
+        f = os.path.join(checkout, ".bench_build", "perfbench", "traces",
+                         f"{workload}-seed{first_seed}.jsonl")
+        spans = [json.loads(line) for line in open(f)]
+        children = {}
+        for s in spans:
+            children.setdefault(s["parent"], []).append(s)
+
+        def inclusive(s, key):
+            return s[key] + sum(inclusive(ch, key) for ch in children.get(s["id"], []))
+
+        keys = ("jobs", "stages", "shuffle_write_bytes")
+        by_name = {}
+        for s in spans:
+            if s["op"] >= 0:
+                by_name.setdefault(s["name"], []).append(s)
+        return {name: tuple(statistics.median(inclusive(s, k) for s in ss) for k in keys)
+                for name, ss in by_name.items()}
+
+    sides = [span_medians(parent_dir), span_medians(change_dir)]
+    print("traced pair: per-span medians over timed ops, parent -> checkout")
+    print(f"{'span':<40} {'jobs':>13} {'stages':>13} {'shuffle_write_bytes':>25}")
+    for name in list(sides[0]) + [n for n in sides[1] if n not in sides[0]]:
+        p, c = (side.get(name, (float("nan"),) * 3) for side in sides)
+        cells = [f"{a:g} -> {b:g}" for a, b in zip(p, c)]
+        print(f"{name:<40} {cells[0]:>13} {cells[1]:>13} {cells[2]:>25}")
 EOF
