@@ -214,11 +214,11 @@ object Bench {
       // intermediates, checkpointed component frontiers); a leak here
       // occupies storage memory for the REST of the suite and shows up as
       // late-suite inflation, so unpersist and name the leaker. The
-      // memoized session models' factor RDDs are EXEMPT: they are the
-      // documented one-model-per-sfDir session cache, and sweeping them
-      // forces every later ALS query to recompute factors from lineage
-      // (measured als_item_neighbors 21→56 s at ×10 under such a sweep).
-      val pinned = graft.queries.Queries.pinnedRddIds
+      // session models' factor RDDs (SessionArtifacts) are EXEMPT: they
+      // are shared session state, and sweeping them forces every later
+      // ALS query to recompute factors from lineage (measured
+      // als_item_neighbors 21→56 s at ×10 under such a sweep).
+      val pinned = graft.queries.SessionArtifacts.pinnedRddIds
       val leaked = spark.sparkContext.getPersistentRDDs
         .filter { case (id, _) => !pinned.contains(id) }
       if (leaked.nonEmpty) {
@@ -253,7 +253,7 @@ object Bench {
           // In-process fallback — numbers will carry end-of-suite JVM state,
           // but a contaminated row beats an absent one, and the recorded
           // fork error flags it.
-          graft.queries.Queries.clearModels()
+          graft.queries.SessionArtifacts.clear()
           spark.catalog.clearCache()
           System.gc()
           var graftModel: graft.als.GraftALSModel = null

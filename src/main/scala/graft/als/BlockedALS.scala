@@ -716,7 +716,7 @@ object BlockedALS {
     // and per executor — not the boxed Map[Int, Long] that collectAsMap
     // returns (87 B/entry measured via SizeEstimator: 366 MB/side of
     // driver + per-executor broadcast heap at the §13.7 100 TB grid vs
-    // 33.5 MB for the array — BlockCountFootprintProbe). Block ids are
+    // 33.5 MB for the array — SCALING §13.8). Block ids are
     // 0..numPartitions-1 by the partitioner contract, so the dense index
     // is total; blocks with no ratings read 0 and are never looked up
     // (no tile carries their id).

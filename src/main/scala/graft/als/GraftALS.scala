@@ -148,8 +148,8 @@ case class GraftALSModel(
 
   /** INT-key scoring (round-10 verdict #5; DEFAULT since round 14): when
     * EVERY trained id fits in an Int, returns a model whose [[transform]]
-    * joins on INT keys instead of LONG — `TransformProbe` measured BIGINT
-    * join keys at ~29% over INT on the identical ×100 plan, a tax the
+    * joins on INT keys instead of LONG — BIGINT join keys measured ~29%
+    * over INT on the identical ×100 plan (SCALING §11.3), a tax the
     * LONG-id API would otherwise pay even when ids are small (MLlib's ids
     * are natively Int, so this also makes the head-to-head
     * key-width-symmetric). [[GraftALSModel.load]] calls this

@@ -663,7 +663,9 @@ object Dedup {
   }
 
   /** Exact Jaccard verification of candidate pairs over hashed postings —
-    * the verify stage [[ngramJaccardPairs]] and [[minhashNearDups]] share.
+    * the verify stage of [[ngramJaccardPairs]]'s large-input path.
+    * ([[minhashNearDups]] verifies differently: `array_intersect` over the
+    * [[hashedShingles]] arrays of each candidate pair.)
     *
     * `inverted` is (id, n, h): one row per distinct shingle per document,
     * `n` the document's distinct-shingle count, `h` the 64-bit shingle
@@ -1228,10 +1230,24 @@ object Dedup {
       family: MinhashFamily = XxHash64Minhash): DataFrame = {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
     val rowsPerBand = numHashes / numBands
-    val shingled = shingleFrame(documents, textCol, idCol, shingleSize)
-    family.signatures(shingled, numHashes)
-      .select(col("id"), bandKeys(col("sig"), numBands, rowsPerBand).as("buckets"))
-      .join(shingled.select(col("id"), hashedShingles(col("sh")).as("sh")), "id")
+    family match {
+      case XxHash64Minhash =>
+        // One row-wise projection instead of the join below, so each
+        // document is read and shingled once. `text IS NOT NULL` is the
+        // family's `size(sh) > 0` rule: ShinglesExpr never yields an empty
+        // array for non-null text (fewer tokens than `shingleSize` yield
+        // the whole text as one shingle).
+        shingleFrame(documents.where(col(textCol).isNotNull), textCol, idCol, shingleSize)
+          .select(
+            col("id"),
+            bandKeys(minhash(col("sh"), numHashes), numBands, rowsPerBand).as("buckets"),
+            hashedShingles(col("sh")).as("sh"))
+      case _ =>
+        val shingled = shingleFrame(documents, textCol, idCol, shingleSize)
+        family.signatures(shingled, numHashes)
+          .select(col("id"), bandKeys(col("sig"), numBands, rowsPerBand).as("buckets"))
+          .join(shingled.select(col("id"), hashedShingles(col("sh")).as("sh")), "id")
+    }
   }
 
   /** Incremental NEAR-dup dedup: keep only the new-batch documents with no

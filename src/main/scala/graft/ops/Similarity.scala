@@ -372,13 +372,15 @@ object Similarity {
   /** Spherical-k-means refinement of the IVF codebook: assign every vector
     * to its max-dot centroid (the SAME rule `ivfTopK` probes with; with
     * unit centroids that is max-cosine), recompute per-cell per-dimension
-    * means as an exploded two-key aggregate, re-normalize each centroid to
+    * means in one job ([[lloydMeans]]), re-normalize each centroid to
     * unit L2 (the closed-form optimal unit centroid for the dot objective —
     * plain mean centroids shrink toward 0 and degrade the assignment), and
-    * repeat. Each iteration is one distributed pass; only the k×dim
-    * centroid table ever reaches the driver, so the same loop trains on a
-    * 100 TB corpus. Cells that lose all members keep their previous
-    * centroid. Monotone: Σ maxᶜ v·c never decreases across iterations.
+    * repeat. Each iteration is one distributed pass; each partition sends
+    * the driver one k×dim partial, which is added on arrival, so the
+    * driver holds the running total plus the partials that arrive ahead of
+    * a lower-indexed one, never O(corpus). Cells that lose all members
+    * keep their previous centroid. Monotone: Σ maxᶜ v·c never decreases
+    * across iterations.
     */
   def trainCodebook(
       vectors: DataFrame,
@@ -443,15 +445,18 @@ object Similarity {
     * order the old `avg` computed — per key, row order within a partition,
     * partitions merged in partition-index order — which is what keeps the
     * trained floats stable (and byte-identical to the dumps the replaying
-    * oracles pin). Only `groups × width` doubles reach the driver.
+    * oracles pin). Each partition ships one `groups × width` partial, and
+    * [[LloydMerge]] adds it as it arrives, so the driver holds the total
+    * plus only the partials that finish ahead of a lower-indexed one.
     */
   private def lloydMeans(
       assigned: DataFrame,
       groups: Int,
       width: Int): (Array[Long], Array[Array[Double]]) = {
-    val sc = assigned.sparkSession.sparkContext
-    val perPart = sc.runJob(
-      assigned.queryExecution.toRdd,
+    val rdd = assigned.queryExecution.toRdd
+    val merge = new LloydMerge(groups, width)
+    assigned.sparkSession.sparkContext.runJob(
+      rdd,
       (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
         val counts = new Array[Long](groups)
         val sums = Array.ofDim[Double](groups, width)
@@ -465,21 +470,47 @@ object Similarity {
           counts(g) += 1L
         }
         (counts, sums)
-      })
-    val counts = new Array[Long](groups)
-    val sums = Array.ofDim[Double](groups, width)
-    perPart.foreach { case (c, ss) =>
-      var g = 0
-      while (g < groups) {
-        counts(g) += c(g)
-        val s = sums(g)
-        val t = ss(g)
-        var i = 0
-        while (i < width) { s(i) += t(i); i += 1 }
-        g += 1
+      },
+      merge.add _)
+    merge.result(rdd.getNumPartitions)
+  }
+
+  /** Sums per-partition Lloyd partials `(counts, sums)` in partition-index
+    * order, whatever order they arrive in: partial `p` is added once every
+    * partial before it has been, and only partials that arrive early are
+    * held until then. The additions are therefore the same, in the same
+    * order, as a collect-then-merge — bit-identical totals.
+    */
+  private[ops] final class LloydMerge(groups: Int, width: Int) {
+    private val counts = new Array[Long](groups)
+    private val sums = Array.ofDim[Double](groups, width)
+    private val early =
+      scala.collection.mutable.HashMap.empty[Int, (Array[Long], Array[Array[Double]])]
+    private var next = 0
+
+    def add(p: Int, partial: (Array[Long], Array[Array[Double]])): Unit = synchronized {
+      early(p) = partial
+      while (early.contains(next)) {
+        val (c, ss) = early.remove(next).get
+        var g = 0
+        while (g < groups) {
+          counts(g) += c(g)
+          val s = sums(g)
+          val t = ss(g)
+          var i = 0
+          while (i < width) { s(i) += t(i); i += 1 }
+          g += 1
+        }
+        next += 1
       }
     }
-    (counts, sums)
+
+    /** The totals, once partials `0 until numPartitions` have all arrived. */
+    def result(numPartitions: Int): (Array[Long], Array[Array[Double]]) = synchronized {
+      require(next == numPartitions && early.isEmpty,
+        s"merged $next of $numPartitions partitions, ${early.size} held")
+      (counts, sums)
+    }
   }
 
   /** Adds the IVF `cell` assignment (argmax-dot centroid) to a corpus —

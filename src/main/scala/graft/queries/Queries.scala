@@ -721,92 +721,80 @@ object Queries {
     * `dir.hashCode` is a 32-bit Int (and `math.abs(Int.MinValue)` is
     * negative): two distinct dirs colliding would silently serve one
     * dataset's on-disk index against another dataset's cached codebook.
-    * md5 of the full dir matches the granularity of the in-memory caches,
-    * which are keyed by the dir string itself.
+    * md5 of the full dir matches the granularity of [[SessionArtifacts]],
+    * which keys by the dir string itself.
     */
   private def dirKey(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString.take(16)
 
-  /** One trained model per (session, sfDir) — the ALS queries share it. The
-    * session UUID in the key keeps a restarted session from receiving a
-    * model bound to a stale predecessor's DataFrames.
+  /** Trained IVF codebook per (session, dir) — deterministic for a given
+    * dir, shared by every query that probes the IVF index (sim_recall,
+    * sim_topk_ivf) so the 3-pass k-means trains once per dataset, not once
+    * per query.
     */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), GraftALSModel]
-
-  /** Trained IVF codebook per data dir. Unlike the model caches this holds
-    * plain driver-side floats (no DataFrame/RDD, so no session binding and
-    * nothing to unpersist) — deterministic for a given dir, shared by every
-    * query that probes the IVF index (sim_recall, sim_topk_ivf) so the
-    * 3-pass k-means trains once per dataset, not once per query.
-    */
-  private val codebookCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Float]]]
-
-  private def trainedCodebook(s: SparkSession, dir: String): Array[Array[Float]] =
-    codebookCache.getOrElseUpdate(dir, {
+  private[graft] def trainedCodebook(s: SparkSession, dir: String): Array[Array[Float]] =
+    SessionArtifacts.getOrBuild(s, dir, "codebook") {
       val e = t(s, dir, "embeddings")
       // √n-sized codebook (Similarity.defaultNumCells): a fixed 16-cell
       // book made inverted lists grow linearly with the corpus and the
       // batch ANN queries O(n²/16) — the round-8 x10 measurement
       Similarity.trainCodebook(e, numCells = Similarity.defaultNumCells(e.count()))
-    })
+    }
 
-  /** Trained PQ codebooks per data dir — trained on RESIDUALS of the dir's
-    * IVF codebook (the IVF-PQ contract; see Similarity.withCellResiduals),
-    * so the two caches always describe the same composed index.
+  /** Trained PQ codebooks — trained on RESIDUALS of the dir's IVF codebook
+    * (the IVF-PQ contract; see Similarity.withCellResiduals), so the two
+    * entries always describe the same composed index.
     */
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Float]]]]
-
   private def trainedPq(s: SparkSession, dir: String): Array[Array[Array[Float]]] =
-    pqCache.getOrElseUpdate(dir, Similarity.trainPqCodebooks(
+    SessionArtifacts.getOrBuild(s, dir, "pq")(Similarity.trainPqCodebooks(
       Similarity.withCellResiduals(t(s, dir, "embeddings"), trainedCodebook(s, dir)),
       vecCol = "residual"))
 
-  /** Trained MIPS index per data dir (augmented-space codebook + the
-    * augmentation bound) — the same train-once/serve-many split as
-    * [[trainedCodebook]]. The cache also makes the sim_topk_mips oracle
-    * sound: the dumped codebook (sim_mips_codebook) and the serving query
-    * replay the SAME trained floats, rather than two k-means runs whose
+  /** Trained MIPS index (augmented-space codebook + the augmentation
+    * bound) — the same train-once/serve-many split as [[trainedCodebook]].
+    * Sharing it also makes the sim_topk_mips oracle sound: the dumped
+    * codebook (sim_mips_codebook) and the serving query replay the SAME
+    * trained floats, rather than two k-means runs whose
     * double-accumulation order could differ at the last bit.
     */
-  private val mipsIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.MipsIndex]
-
   private def trainedMipsIdx(s: SparkSession, dir: String): Similarity.MipsIndex =
-    mipsIndexCache.getOrElseUpdate(dir, {
+    SessionArtifacts.getOrBuild(s, dir, "mipsIndex") {
       val e = t(s, dir, "embeddings")
       Similarity.trainMipsIndex(e, vecCol = "embedding", dim = 64,
         numCells = Similarity.defaultNumCells(e.count()))
-    })
+    }
 
-  /** Stable identity of a live session. `sessionUUID` is private[sql] in
-    * 4.1, so object identity stands in — good enough to keep a restarted
-    * session from being handed a model bound to a stale predecessor.
-    */
-  private def sessionKey(s: SparkSession): String =
-    System.identityHashCode(s).toString
-
-  /** The gate's trained model. `checkpointInterval = 2` (not the default
-    * 10 > maxIter) so the lineage-cut path (BlockedALS's checkpoint of the
-    * factor RDDs) RUNS under Verify whenever the session has a checkpoint
-    * dir — round-7 verdict #8: the gate must exercise
+  /** Hyperparameters every session model shares: five λ = 0.1 iterations
+    * on an 8×8 grid from seed 42. `checkpointInterval = 2` (not the
+    * default 10 > maxIter) so the lineage-cut path (BlockedALS's
+    * checkpoint of the factor RDDs) RUNS under Verify whenever the session
+    * has a checkpoint dir — round-7 verdict #8: the gate must exercise
     * shouldCheckpoint=true, not just the specs. Checkpointing truncates
     * lineage only; every factor value is bit-identical with or without it,
     * so the hash-green replay oracles are unaffected.
     */
+  private val sessionAls = GraftALS(
+    rank = 8, maxIter = 5, regParam = 0.1,
+    numUserBlocks = 8, numItemBlocks = 8,
+    userCol = "user_id", itemCol = "item_id", ratingCol = "rating",
+    seed = 42L, checkpointInterval = 2)
+
+  /** One trained model per (session, dir, name), fit on first use and
+    * shared by every query that serves from it.
+    */
+  private def sessionModel(
+      s: SparkSession,
+      dir: String,
+      name: String,
+      als: GraftALS,
+      ratings: (SparkSession, String) => DataFrame = ratingsDF): GraftALSModel =
+    SessionArtifacts.getOrBuild(s, dir, name)(als.fit(ratings(s, dir)))
+
+  /** The gate's trained model, which most ALS queries share. */
   private[graft] def model(s: SparkSession, dir: String): GraftALSModel =
-    modelCache.getOrElseUpdate((sessionKey(s), dir), {
-      GraftALS(
-        rank = 8, maxIter = 5, regParam = 0.1,
-        numUserBlocks = 8, numItemBlocks = 8,
-        userCol = "user_id", itemCol = "item_id", ratingCol = "rating",
-        seed = 42L, checkpointInterval = 2)
-        .fit(ratingsDF(s, dir))
-    })
+    sessionModel(s, dir, "model", sessionAls)
 
   /** MEMBERSHIP oracle for an exploded trained-float dump `(id, pos,
     * value)` (round-7 verdict #7): DuckDB cannot train ALS/k-means, so the
@@ -860,23 +848,12 @@ object Queries {
       .select(col("id"), posexplode(col("features")).as(Seq("pos", "value")))
   }.sortedDump("id", "pos")
 
-  /** NNLS-trained model (nonnegative = true), cached like [[model]] — the
-    * projected-gradient NNLS solver was spec-only (SolverSpec KKT) until
-    * round 9; this model routes it through the gate.
+  /** NNLS-trained model (nonnegative = true) — the projected-gradient
+    * NNLS solver was spec-only (SolverSpec KKT) until round 9; this model
+    * routes it through the gate.
     */
-  private val nnModelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), GraftALSModel]
-
   private[graft] def nnModel(s: SparkSession, dir: String): GraftALSModel =
-    nnModelCache.getOrElseUpdate((sessionKey(s), dir), {
-      GraftALS(
-        rank = 8, maxIter = 5, regParam = 0.1,
-        numUserBlocks = 8, numItemBlocks = 8,
-        nonnegative = true,
-        userCol = "user_id", itemCol = "item_id", ratingCol = "rating",
-        seed = 42L, checkpointInterval = 2)
-        .fit(ratingsDF(s, dir))
-    })
+    sessionModel(s, dir, "nnModel", sessionAls.copy(nonnegative = true))
 
   /** Both factor halves of a `nonnegative = true` training run
     * (round-8 verdict #8: NNLS existed only behind SolverSpec; no gate
@@ -911,25 +888,15 @@ object Queries {
           posexplode(col("features")).as(Seq("pos", "value"))))
   }.sortedDump("side", "id", "pos")
 
-  /** Rank-32 training run, cached like [[model]]. The round-15 rank sweep
+  /** Rank-32 training run. The round-15 rank sweep
     * found a 1.47×-MLlib regression at rank 64 (per-entity solver scratch
     * churn) that was INVISIBLE to every rank-8 gate row and bench artifact
     * — this model keeps the rank axis exercised by the standing gate
     * (round-15 verdict #2), at rank 32 where the Gramian term already
     * dominates the wire term (SCALING §12.14).
     */
-  private val rank32ModelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), GraftALSModel]
-
   private[graft] def rank32Model(s: SparkSession, dir: String): GraftALSModel =
-    rank32ModelCache.getOrElseUpdate((sessionKey(s), dir), {
-      GraftALS(
-        rank = 32, maxIter = 5, regParam = 0.1,
-        numUserBlocks = 8, numItemBlocks = 8,
-        userCol = "user_id", itemCol = "item_id", ratingCol = "rating",
-        seed = 42L, checkpointInterval = 2)
-        .fit(ratingsDF(s, dir))
-    })
+    sessionModel(s, dir, "rank32Model", sessionAls.copy(rank = 32))
 
   /** Both factor halves of the rank-32 run, membership-checked over the
     * full (side × ids × 32 positions) grid AND capacity-ENFORCING: the
@@ -990,24 +957,14 @@ object Queries {
           posexplode(col("features")).as(Seq("pos", "value"))))
   }.sortedDump("side", "id", "pos")
 
-  /** Rank-64 training run, cached like [[rank32Model]]. Rank 64 is where
+  /** Rank-64 training run. Rank 64 is where
     * the round-15 solver-scratch regression actually bit (1.47×-MLlib wall
     * time, invisible below rank 32 because the Gramian/solve term only
     * dominates there) — this model puts that rank in the standing gate,
     * not just the head-to-head protocol tier (round-17 verdict #7).
     */
-  private val rank64ModelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), GraftALSModel]
-
   private[graft] def rank64Model(s: SparkSession, dir: String): GraftALSModel =
-    rank64ModelCache.getOrElseUpdate((sessionKey(s), dir), {
-      GraftALS(
-        rank = 64, maxIter = 5, regParam = 0.1,
-        numUserBlocks = 8, numItemBlocks = 8,
-        userCol = "user_id", itemCol = "item_id", ratingCol = "rating",
-        seed = 42L, checkpointInterval = 2)
-        .fit(ratingsDF(s, dir))
-    })
+    sessionModel(s, dir, "rank64Model", sessionAls.copy(rank = 64))
 
   /** Both factor halves of the rank-64 run — the same membership +
     * capacity-ENFORCING oracle shape as [[alsRank32Factors]], one rank
@@ -1483,44 +1440,11 @@ object Queries {
     * the Hu-Koren-Volinsky path, NNLS-free. Factors are rows-only; the
     * derivation itself is oracle-checked via als_implicit_ratings.
     */
-  private val implicitModelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), GraftALSModel]
-
-  /** Frees every cached model's persisted factor RDDs and empties both
-    * caches — the isolation hook for bench/long-lived sessions (cached
-    * models otherwise pin executor memory for the session lifetime).
-    */
-  def clearModels(): Unit = {
-    (modelCache.values ++ implicitModelCache.values ++ nnModelCache.values)
-      .foreach(_.unpersist())
-    modelCache.clear()
-    implicitModelCache.clear()
-    nnModelCache.clear()
-  }
-
-  /** RDD ids pinned by the memoized session models: deliberate cross-query
-    * session state ("ALS queries share one trained model per sfDir per
-    * JVM"), NOT leaks — a harness sweeping `sc.getPersistentRDDs` between
-    * queries must exempt these or every later ALS query recomputes its
-    * factors from lineage (and localCheckpointed factors cannot recompute
-    * at all: measured als_item_neighbors 21→56 s at ×10 when a round-10
-    * bench sweep unpersisted them).
-    */
-  def pinnedRddIds: Set[Int] =
-    (modelCache.values ++ implicitModelCache.values ++ nnModelCache.values ++
-      rank32ModelCache.values ++ rank64ModelCache.values)
-      .flatMap(m => m.backingRdds.map(_.id) ++ m.servingIndexRddIds).toSet
-
   private def implicitModel(s: SparkSession, dir: String): GraftALSModel =
-    implicitModelCache.getOrElseUpdate((sessionKey(s), dir), {
-      GraftALS(
-        rank = 8, maxIter = 5, regParam = 0.1, alpha = 10.0,
-        implicitPrefs = true,
-        numUserBlocks = 4, numItemBlocks = 4,
-        userCol = "user_id", itemCol = "item_id", ratingCol = "rating",
-        seed = 42L)
-        .fit(graft.sources.RatingsSource.implicitFromEvents(s, dir))
-    })
+    sessionModel(s, dir, "implicitModel",
+      sessionAls.copy(implicitPrefs = true, alpha = 10.0,
+        numUserBlocks = 4, numItemBlocks = 4, checkpointInterval = 10),
+      graft.sources.RatingsSource.implicitFromEvents)
 
   val alsImplicitFactors: QueryDef = QueryDef.withOracle(
     duckMembershipOracle("als_implicit_factors",
@@ -1900,11 +1824,8 @@ object Queries {
   private[graft] def prewarmShreddedEvents(s: SparkSession, dir: String): Unit =
     shreddedEvents(s, dir).write.format("noop").mode("overwrite").save()
 
-  private val mllibRmseCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Double]
-
   private[graft] def prewarmMllibRmse(s: SparkSession, dir: String): Double =
-    mllibRmseCache.getOrElseUpdate((sessionKey(s), dir), {
+    SessionArtifacts.getOrBuild(s, dir, "mllibRmse") {
       val ratings = ratingsDF(s, dir)
         .withColumn("user_int", col("user_id").cast("int"))
         .withColumn("item_int", col("item_id").cast("int"))
@@ -1924,7 +1845,7 @@ object Queries {
         mllib.itemFactors.unpersist()
         rmse
       } finally ratings.unpersist()
-    })
+    }
 
   /** Explicit-path MLlib parity floor. The two RMSE floats are trained-
     * model outputs and pass through the dump, but the oracle now ENFORCES
@@ -2063,11 +1984,8 @@ object Queries {
     * (session, dir) — the competitor trains once untimed (Bench pre-warms
     * this like [[prewarmMllibRmse]]) and only the scalar survives.
     */
-  private val mllibImplicitMprCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Double]
-
   private[graft] def prewarmMllibImplicitMpr(s: SparkSession, dir: String): Double =
-    mllibImplicitMprCache.getOrElseUpdate((sessionKey(s), dir), {
+    SessionArtifacts.getOrBuild(s, dir, "mllibImplicitMpr") {
       val inter = graft.sources.RatingsSource.implicitFromEvents(s, dir)
         .withColumn("user_int", col("user_id").cast("int"))
         .withColumn("item_int", col("item_id").cast("int"))
@@ -2087,7 +2005,7 @@ object Queries {
         mllib.itemFactors.unpersist()
         mpr
       } finally inter.unpersist()
-    })
+    }
 
   /** Implicit-path MLlib parity floor (round-6 verdict #8): the
     * Hu-Koren-Volinsky branch gets the same driver-visible quality row the
@@ -4122,16 +4040,13 @@ object Queries {
     * count as the stale per-dir codebook so the drift meter isolates
     * centroid placement from probe-fraction effects.
     */
-  private val driftCodebookCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Float]]]
-
   private def trainedDriftCodebook(s: SparkSession, dir: String): Array[Array[Float]] =
-    driftCodebookCache.getOrElseUpdate(dir, {
+    SessionArtifacts.getOrBuild(s, dir, "driftCodebook") {
       val base = t(s, dir, "embeddings").select("vec_id", "embedding")
       Similarity.trainCodebook(
         base.unionByName(driftedEmbeddings(s, dir)),
         numCells = Similarity.defaultNumCells(base.count()))
-    })
+    }
 
   /** The retrained (base ∪ drifted) codebook as scalar rows — the dump the
     * sim_drift_recall oracle replays the fresh tier against. Grid-checked

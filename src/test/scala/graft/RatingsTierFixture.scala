@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** THROWAWAY fixture tool (test scope): writes the ×`factor` ratings
-  * parquet DIRECTLY from the source tier's derived ratings, skipping the
-  * full [[ScaleUp]] fixture. Under ScaleUp's key-shifted replication the
+/** Test-scope fixture helper: the ×`factor` ratings frame derived
+  * DIRECTLY from the source tier's ratings, skipping the full [[ScaleUp]]
+  * fixture. Under ScaleUp's key-shifted replication the
   * lineitem⋈orders→groupBy derivation commutes with replication: replica
   * `i` of the fixture yields exactly the source ratings with
   * `user_id + i·custStride` / `item_id + i·partStride` (join matches and
@@ -16,11 +16,9 @@ import org.apache.spark.sql.functions._
   * cost of scanning ~600k rows instead of joining 600M
   * ([[RatingsReplicationEquivalenceSpec]] pins this).
   *
-  * Motivation: the ×1000 ALS wall-crossing run (SCALING §12.7 wall 3) is
-  * scratch-DISK-bound; this avoids spending 13 GB of the budget on fixture
+  * The ×1000 ALS wall-crossing run (SCALING §12.7 wall 3) wrote its
+  * ratings this way, to avoid spending 13 GB of scratch disk on fixture
   * tables ALS never reads.
-  *
-  * Usage: runMain graft.RatingsTierFixture <outPath> [srcDir] [factor] [parts]
   */
 object RatingsTierFixture {
 
@@ -38,28 +36,5 @@ object RatingsTierFixture {
         (col("user_id") + col("__rep") * custS).as("user_id"),
         (col("item_id") + col("__rep") * partS).as("item_id"),
         col("rating"))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val out = args.lift(0).getOrElse("/tmp/graft_x1000_ratings")
-    val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val factor = args.lift(2).map(_.toInt).getOrElse(1000)
-    val parts = args.lift(3).map(_.toInt).getOrElse(256)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t0 = System.nanoTime()
-    scaledRatings(spark, src, factor)
-      .repartition(parts)
-      .write.mode("overwrite").parquet(out)
-    val n = spark.read.parquet(out).count()
-    println(f"[fixture] wrote x$factor ratings: $n rows, $parts parts, " +
-      f"${(System.nanoTime() - t0) / 1e9}%.1f s -> $out")
-    spark.stop()
   }
 }

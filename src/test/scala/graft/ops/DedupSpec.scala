@@ -3,6 +3,7 @@ package graft.ops
 import graft.SparkFixture
 import graft.queries.PortableMinhash
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -261,6 +262,37 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     val unioned = rows(Dedup.minhashIndex(corpus.unionByName(batch)))
     val appended = rows(Dedup.minhashIndex(corpus)) ++ rows(Dedup.minhashIndex(batch))
     assert(unioned == appended.sortBy(_._1))
+  }
+
+  private def shinglePasses(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case p =>
+      p.expressions.map(_.collect { case e: graft.functions.ShinglesExpr => e }.size).sum
+    }.sum
+
+  test("minhashIndex and minhashSignatures shingle each document once") {
+    // a repartitioned input, so the plan is not folded into a local relation
+    val docs = docsDF(Seq(1L -> base, 2L -> "a short one")).repartition(2)
+    assert(shinglePasses(Dedup.minhashIndex(docs)) == 1)
+    assert(shinglePasses(Dedup.minhashSignatures(docs)) == 1)
+  }
+
+  test("minhashIndex rows equal the shingle-frame join it replaces") {
+    val docs = spark.createDataFrame(
+      Seq[(Long, String)](1L -> base, 2L -> base.replace("lazy", "sleepy"),
+        3L -> "two words", 4L -> "", 5L -> null, 6L -> "x  y  z", 7L -> "é ü 𝄞 ok")
+        .map { case (id, text) => Row(id, text) }.asJava,
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+      .repartition(3)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[Long]("id"),
+        r.getAs[Seq[Long]]("buckets"), r.getAs[Seq[Long]]("sh"))).sortBy(_._1).toSeq
+    val shingled = Dedup.shingleFrame(docs)
+    val joined = Dedup.XxHash64Minhash.signatures(shingled, 64)
+      .select(col("id"), Dedup.bandKeys(col("sig"), 16, 4).as("buckets"))
+      .join(shingled.select(col("id"), Dedup.hashedShingles(col("sh")).as("sh")), "id")
+    val expected = rows(joined)
+    assert(expected.map(_._1) == Seq(1L, 2L, 3L, 4L, 6L, 7L))
+    assert(rows(Dedup.minhashIndex(docs)) == expected)
   }
 
   test("connected components fail loudly at the round cap instead of mislabeling") {
