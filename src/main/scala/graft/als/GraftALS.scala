@@ -1,6 +1,7 @@
 package graft.als
 
 import graft.functions.VectorFunctions
+import graft.ops.BlockTopK
 import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
@@ -225,34 +226,8 @@ case class GraftALSModel(
       ratings: DataFrame,
       regParam: Double,
       ratingCol: String = "rating",
-      nonnegative: Boolean = false): DataFrame = {
-    val spark = ratings.sparkSession
-    import spark.implicits._
-    val itf = itemFactors.select(col("id").as("__iid"), col("features").as("__ifeat"))
-    val joined = ratings
-      .select(
-        col(userCol).cast("long").as("u"),
-        col(itemCol).cast("long").as("i"),
-        col(ratingCol).cast("float").as("r"))
-      .join(itf, col("i") === col("__iid")) // inner: unknown items carry no signal
-      .select(col("u"), col("__ifeat"), col("r"))
-    val k = rank
-    val nn = nonnegative
-    joined.rdd
-      .map(row => (row.getLong(0),
-        (row.getAs[scala.collection.Seq[Float]](1).toArray, row.getFloat(2))))
-      .aggregateByKey((new NormalEquation(k), 0L))(
-        seqOp = { case ((ne, n), (f, r)) => ne.add(f, r); (ne, n + 1) },
-        combOp = { case ((a, na), (b, nb)) => a.merge(b); (a, na + nb) })
-      .mapValues { case (ne, n) =>
-        val solver: LeastSquaresNESolver =
-          if (nn) new NNLSSolver else new CholeskySolver
-        // ALS-WR weighted regularization, as in the training kernel
-        solver.solve(ne, n * regParam)
-      }
-      .map { case (id, f) => FactorRow(id, f) }
-      .toDF("id", "features")
-  }
+      nonnegative: Boolean = false): DataFrame =
+    foldIn(ratings, regParam, ratingCol, nonnegative, implicitAlpha = None)
 
   /** Item fold-in: factors for new items (a fresh catalog entry with its
     * first ratings) against the FIXED user factors — [[foldInUsers]] with
@@ -301,43 +276,70 @@ case class GraftALSModel(
       regParam: Double,
       alpha: Double = 1.0,
       ratingCol: String = "rating",
-      nonnegative: Boolean = false): DataFrame = {
+      nonnegative: Boolean = false): DataFrame =
+    foldIn(ratings, regParam, ratingCol, nonnegative, implicitAlpha = Some(alpha))
+
+  /** The body of [[foldInUsers]] (`implicitAlpha = None`) and
+    * [[foldInUsersImplicit]]: ratings join the item factors, one
+    * `aggregateByKey` per user builds `(NormalEquation, n)` in the input's
+    * order, and each user is solved with `n · regParam`. The implicit form
+    * weights each rating as the training kernel does and adds the item
+    * Gramian before the solve.
+    */
+  private def foldIn(
+      ratings: DataFrame,
+      regParam: Double,
+      ratingCol: String,
+      nonnegative: Boolean,
+      implicitAlpha: Option[Double]): DataFrame = {
     val spark = ratings.sparkSession
     import spark.implicits._
     val k = rank
-    val yty = itemFactors.select("features").rdd
-      .treeAggregate(new NormalEquation(k))(
-        (ne, row) => ne.add(row.getAs[scala.collection.Seq[Float]](0).toArray, 0.0),
-        (a, b) => a.merge(b))
-    val ytyAta = spark.sparkContext.broadcast(yty.ata)
+    val ytyAta = implicitAlpha.map { _ =>
+      val yty = itemFactors.select("features").rdd
+        .treeAggregate(new NormalEquation(k))(
+          (ne, row) => ne.add(row.getAs[scala.collection.Seq[Float]](0).toArray, 0.0),
+          (a, b) => a.merge(b))
+      spark.sparkContext.broadcast(yty.ata)
+    }
     val itf = itemFactors.select(col("id").as("__iid"), col("features").as("__ifeat"))
     val joined = ratings
       .select(
         col(userCol).cast("long").as("u"),
         col(itemCol).cast("long").as("i"),
         col(ratingCol).cast("float").as("r"))
-      .join(itf, col("i") === col("__iid"))
+      .join(itf, col("i") === col("__iid")) // inner: unknown items carry no signal
       .select(col("u"), col("__ifeat"), col("r"))
-    val a = alpha
     val nn = nonnegative
     joined.rdd
       .map(row => (row.getLong(0),
         (row.getAs[scala.collection.Seq[Float]](1).toArray, row.getFloat(2))))
       .aggregateByKey((new NormalEquation(k), 0L))(
         seqOp = { case ((ne, n), (f, r)) =>
-          // Hu-Koren-Volinsky: c1 = α|r|, preference 1 w/ weight 1+c1 if r>0
-          val c1 = a * math.abs(r)
-          ne.add(f, if (r > 0.0f) 1.0 + c1 else 0.0, c1)
-          (ne, n + (if (r > 0.0f) 1L else 0L))
+          implicitAlpha match {
+            case None =>
+              ne.add(f, r)
+              (ne, n + 1)
+            case Some(a) =>
+              // Hu-Koren-Volinsky: c1 = α|r|, preference 1 w/ weight 1+c1 if r>0
+              val c1 = a * math.abs(r)
+              ne.add(f, if (r > 0.0f) 1.0 + c1 else 0.0, c1)
+              (ne, n + (if (r > 0.0f) 1L else 0L))
+          }
         },
         combOp = { case ((x, nx), (y, ny)) => x.merge(y); (x, nx + ny) })
       .mapValues { case (ne, n) =>
-        val withGramian = new NormalEquation(k)
-        Array.copy(ytyAta.value, 0, withGramian.ata, 0, withGramian.triK)
-        withGramian.merge(ne)
+        val system = ytyAta match {
+          case Some(ata) =>
+            val withGramian = new NormalEquation(k)
+            Array.copy(ata.value, 0, withGramian.ata, 0, withGramian.triK)
+            withGramian.merge(ne)
+          case None => ne
+        }
         val solver: LeastSquaresNESolver =
           if (nn) new NNLSSolver else new CholeskySolver
-        solver.solve(withGramian, n * regParam)
+        // ALS-WR weighted regularization, as in the training kernel
+        solver.solve(system, n * regParam)
       }
       .map { case (id, f) => FactorRow(id, f) }
       .toDF("id", "features")
@@ -508,7 +510,7 @@ case class GraftALSModel(
   /** Blocked cross-score top-k kernel shared by [[recommendForAllUsers]] and
     * [[itemNeighbors]]: factors are chunked into (ids, row-major matrix)
     * blocks, block pairs meet in an RDD cartesian, and each pair runs a
-    * tight primitive triple loop keeping one bounded top-k buffer per left
+    * tight primitive triple loop keeping one [[BlockTopK]] buffer per left
     * row; buffers then merge across right blocks. Compute is
     * O(left·right·rank) fused multiply-adds but NOTHING materializes per
     * (left, right) pair — versus a crossJoin+window plan that shuffles and
@@ -530,28 +532,23 @@ case class GraftALSModel(
     val spark = left.sparkSession
     val r = rank
 
+    // unkeyed chunks of `blockSize` rows; `normalize` scales each row by
+    // the inverse of its packed norm
     def toBlocks(df: DataFrame) =
       df.select("id", "features").rdd
-        .map(row => (row.getLong(0), row.getSeq[Float](1).toArray))
+        .map(row => ((), (row.getLong(0), row.getSeq[Float](1).toArray)))
         .mapPartitions { iter =>
-          iter.grouped(blockSize).map { chunk =>
-            val ids = new Array[Long](chunk.length)
-            val mat = new Array[Float](chunk.length * r)
-            var i = 0
-            chunk.foreach { case (id, f) =>
-              ids(i) = id
-              System.arraycopy(f, 0, mat, i * r, r)
-              if (normalize) {
-                var s = 0.0
-                var d = 0
-                while (d < r) { s += mat(i * r + d).toDouble * mat(i * r + d); d += 1 }
-                if (s > 0.0) {
-                  val inv = 1.0 / math.sqrt(s)
-                  d = 0
+          BlockTopK.pack(iter, blockSize).map { case (_, (ids, mat, norms)) =>
+            if (normalize) {
+              var i = 0
+              while (i < ids.length) {
+                if (norms(i) > 0.0) {
+                  val inv = 1.0 / norms(i)
+                  var d = 0
                   while (d < r) { mat(i * r + d) = (mat(i * r + d) * inv).toFloat; d += 1 }
                 }
+                i += 1
               }
-              i += 1
             }
             (ids, mat)
           }
@@ -563,16 +560,11 @@ case class GraftALSModel(
     // per (leftBlock, rightBlock): bounded top-k per left row over this block
     val partial = leftBlocks.cartesian(rightBlocks).flatMap {
       case ((uids, umat), (iids, imat)) =>
-        val nU = uids.length
-        val nI = iids.length
-        val out = new Array[(Long, (Array[Long], Array[Double]))](nU)
-        var u = 0
-        while (u < nU) {
-          val topIds = new Array[Long](k)
-          val topScores = Array.fill(k)(Double.NegativeInfinity)
-          var size = 0
+        val top = new BlockTopK.Buffer(k)
+        Iterator.tabulate(uids.length) { u =>
+          top.reset()
           var i = 0
-          while (i < nI) {
+          while (i < iids.length) {
             if (!(excludeSelf && iids(i) == uids(u))) {
               var s = 0.0
               var d = 0
@@ -582,44 +574,16 @@ case class GraftALSModel(
                 s += umat(uOff + d).toDouble * imat(iOff + d)
                 d += 1
               }
-              // bounded insertion, kept sorted (score desc, id asc); k is
-              // small so a linear shift beats a heap on cache behavior
-              val isWorseThanLast = size == k &&
-                (s < topScores(k - 1) || (s == topScores(k - 1) && iids(i) > topIds(k - 1)))
-              if (!isWorseThanLast) {
-                var pos = if (size < k) size else k - 1
-                while (pos > 0 && (topScores(pos - 1) < s ||
-                       (topScores(pos - 1) == s && topIds(pos - 1) > iids(i)))) {
-                  topScores(pos) = topScores(pos - 1)
-                  topIds(pos) = topIds(pos - 1)
-                  pos -= 1
-                }
-                topScores(pos) = s
-                topIds(pos) = iids(i)
-                if (size < k) size += 1
-              }
+              top.offer(iids(i), s)
             }
             i += 1
           }
-          out(u) = (uids(u), (topIds.take(size), topScores.take(size)))
-          u += 1
+          (uids(u), top.result())
         }
-        out.iterator
-    }
-
-    // merge per-left-row buffers across right blocks
-    val merged = partial.reduceByKey {
-      (a: (Array[Long], Array[Double]), b: (Array[Long], Array[Double])) =>
-        val pairs = (a._1.zip(a._2) ++ b._1.zip(b._2))
-          .sortBy { case (id, s) => (-s, id) }
-          .take(k)
-        (pairs.map(_._1), pairs.map(_._2))
     }
 
     import spark.implicits._
-    merged.flatMap { case (uid, (ids, scores)) =>
-      ids.indices.map(i => (uid, ids(i), i + 1, scores(i)))
-    }.toDS()
+    BlockTopK.topKRows(partial, k).toDS()
   }
 
   /** RMSE over a ratings DataFrame (√mse; cold-start rows dropped). */

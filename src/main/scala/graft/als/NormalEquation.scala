@@ -202,9 +202,9 @@ private[als] final class RowGramian(val k: Int) {
   * across `solve` calls, so a solver instance is single-owner — exactly one
   * thread may ever call `solve` on it. Inside `BlockedALS` this holds by
   * construction (each task deserializes its own private copy from the task
-  * closure), but a driver-local caller sharing one instance across threads
-  * (e.g. a parallel fold-in) would corrupt factors silently. Set
-  * `GRAFT_SOLVER_THREAD_ASSERT=1` to turn the contract into a hard check.
+  * closure), and a caller sharing one instance across threads (e.g. a
+  * parallel fold-in) gets an `IllegalStateException` instead of silently
+  * corrupted factors.
   */
 trait LeastSquaresNESolver extends Serializable {
 
@@ -235,27 +235,18 @@ trait LeastSquaresNESolver extends Serializable {
 
   @transient private var ownerThread: Long = 0L
 
-  /** Opt-in single-owner check (`GRAFT_SOLVER_THREAD_ASSERT=1`): first call
-    * binds the instance to the calling thread, later calls from any other
-    * thread throw. Zero-cost when the env flag is unset.
+  /** Single-owner check: the first call binds the instance to the calling
+    * thread, later calls from any other thread throw. One thread-id read
+    * per solve.
     */
-  protected final def assertSingleOwner(): Unit =
-    if (LeastSquaresNESolver.assertEnabled) {
-      val t = Thread.currentThread().getId
-      if (ownerThread == 0L) ownerThread = t
-      else if (ownerThread != t)
-        throw new IllegalStateException(
-          s"solver instance shared across threads ($ownerThread then $t): " +
-            "LeastSquaresNESolver scratch is single-owner; use one instance per thread")
-    }
-}
-
-object LeastSquaresNESolver {
-  /** var (not val) only so specs can exercise the assert without forking a
-    * JVM with the env flag; production code never writes it.
-    */
-  private[als] var assertEnabled: Boolean =
-    sys.env.get("GRAFT_SOLVER_THREAD_ASSERT").contains("1")
+  protected final def assertSingleOwner(): Unit = {
+    val t = Thread.currentThread().getId
+    if (ownerThread == 0L) ownerThread = t
+    else if (ownerThread != t)
+      throw new IllegalStateException(
+        s"solver instance shared across threads ($ownerThread then $t): " +
+          "LeastSquaresNESolver scratch is single-owner; use one instance per thread")
+  }
 }
 
 /** Cholesky solve of the regularized normal equations.

@@ -1125,14 +1125,18 @@ object Dedup {
     }
   }
 
-  /** Partitions by the full (u, v) pair — the dedup shuffle. */
-  private final class PairPartitioner(parts: Int) extends org.apache.spark.Partitioner {
+  /** Partitions by the full (u, v) pair — the dedup shuffle. The hash is
+    * XXH64 chained over u then v, as in the connected-components
+    * fingerprint: a linear mix such as `31·hash(u) + hash(v)` sends every
+    * `(u, u + 1)` key to one partition when `parts` divides 32.
+    */
+  private[ops] final class PairPartitioner(parts: Int) extends org.apache.spark.Partitioner {
     def numPartitions: Int = parts
     def getPartition(key: Any): Int = {
       val k = key.asInstanceOf[(Long, Long)]
-      val h = java.lang.Long.hashCode(k._1) * 31 + java.lang.Long.hashCode(k._2)
-      val mod = h % parts
-      if (mod < 0) mod + parts else mod
+      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(
+        k._2, org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(k._1, 42L))
+      java.lang.Math.floorMod(h, parts.toLong).toInt
     }
   }
 

@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   *   - [[ivfTopK]] — IVF-style coarse quantization against a deterministic
   *     centroid codebook; queries probe the `nProbe` nearest cells. The
   *     100 TB pattern (partition pruning by cell).
+  *
+  * [[lshTopK]], [[ivfTopK]], [[mipsIvfTopK]] and the ADC shortlist of
+  * [[ivfPqTopK]] score (query, block) pairs into [[BlockTopK]] buffers and
+  * merge them per query there; cells are probed by [[probeCellsPrim]]
+  * alone. Ranking is score descending by `Double.compare`, then id
+  * ascending, so a NaN score ranks after every real neighbor.
   */
 object Similarity {
 
@@ -214,8 +220,8 @@ object Similarity {
     * ONE primitive block (the `maxBucket` cap bounds it by construction —
     * the skew chunker the IVF kernel needs is unnecessary here); query
     * rows stream against their buckets' blocks by reference. Unlike IVF
-    * (one cell per corpus vector), a pair can collide in several tables,
-    * so the per-query merge dedups neighbor ids before truncating to k.
+    * (one cell per corpus vector), a pair can collide in several tables;
+    * [[BlockTopK.merge]] drops the copies, which meet with one score.
     */
   private def bucketedTopKKernel(
       queryBands: DataFrame,
@@ -223,12 +229,6 @@ object Similarity {
       base: DataFrame,
       k: Int): DataFrame = {
     val spark = base.sparkSession
-    def selfDot(v: Array[Float]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
-      s
-    }
     // (t, sig) -> (id, vec): vectors re-attach to the 16-byte band rows
     // BEFORE the kernel so the bucket shuffle moves n·tables vectors once
     def withVecs(bands: DataFrame) = bands
@@ -243,83 +243,29 @@ object Similarity {
     val bucketBlocks = withVecs(cappedBands)
       .repartitionAndSortWithinPartitions(
         new org.apache.spark.HashPartitioner(parts))
-      .mapPartitions({ it =>
-        val buf = it.buffered
-        new Iterator[((Int, Long), (Array[Long], Array[Float], Array[Double]))] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): ((Int, Long), (Array[Long], Array[Float], Array[Double])) = {
-            val key = buf.head._1
-            val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
-            while (buf.hasNext && buf.head._1 == key) rows += buf.next()._2
-            val n = rows.length
-            val d = rows(0)._2.length
-            val ids = new Array[Long](n)
-            val mat = new Array[Float](n * d)
-            val norms = new Array[Double](n)
-            var i = 0
-            while (i < n) {
-              ids(i) = rows(i)._1
-              System.arraycopy(rows(i)._2, 0, mat, i * d, d)
-              norms(i) = math.sqrt(selfDot(rows(i)._2))
-              i += 1
-            }
-            (key, (ids, mat, norms))
-          }
-        }
-      }, preservesPartitioning = true)
+      .mapPartitions(BlockTopK.pack(_, Int.MaxValue), preservesPartitioning = true)
 
     val partial = withVecs(queryBands).join(bucketBlocks, partitioner).map {
       case (_, ((qid, qv), (ids, mat, norms))) =>
         val d = qv.length
-        val qn = math.sqrt(selfDot(qv))
-        val topIds = new Array[Long](k)
-        val topScores = Array.fill(k)(Double.NegativeInfinity)
-        var size = 0
-        val nI = ids.length
+        val qn = math.sqrt(BlockTopK.selfDot(qv))
+        val top = new BlockTopK.Buffer(k)
         var i = 0
-        while (i < nI) {
+        while (i < ids.length) {
           if (ids(i) != qid) {
             var s = 0.0
             var dd = 0
             val off = i * d
             while (dd < d) { s += qv(dd).toDouble * mat(off + dd); dd += 1 }
-            s = if (qn == 0.0 || norms(i) == 0.0) 0.0 else s / (qn * norms(i))
-            val isWorseThanLast = size == k &&
-              (s < topScores(k - 1) || (s == topScores(k - 1) && ids(i) > topIds(k - 1)))
-            if (!isWorseThanLast) {
-              var pos = if (size < k) size else k - 1
-              while (pos > 0 && (topScores(pos - 1) < s ||
-                     (topScores(pos - 1) == s && topIds(pos - 1) > ids(i)))) {
-                topScores(pos) = topScores(pos - 1)
-                topIds(pos) = topIds(pos - 1)
-                pos -= 1
-              }
-              topScores(pos) = s
-              topIds(pos) = ids(i)
-              if (size < k) size += 1
-            }
+            top.offer(ids(i), if (qn == 0.0 || norms(i) == 0.0) 0.0 else s / (qn * norms(i)))
           }
           i += 1
         }
-        (qid, (topIds.take(size), topScores.take(size)))
-    }
-
-    // cross-table merge: the same neighbor can arrive from every table it
-    // collides in (identical cosine each time) — dedup by id, then
-    // (score desc, id asc) truncate
-    val merged = partial.reduceByKey {
-      (a: (Array[Long], Array[Double]), b: (Array[Long], Array[Double])) =>
-        val pairs = (a._1.zip(a._2) ++ b._1.zip(b._2))
-          .distinctBy(_._1)
-          .sortBy { case (id, s) => (-s, id) }
-          .take(k)
-        (pairs.map(_._1), pairs.map(_._2))
+        (qid, top.result())
     }
 
     import spark.implicits._
-    merged.flatMap { case (qid, (ids, scores)) =>
-      ids.indices.map(i => (qid, ids(i), i + 1, scores(i)))
-    }.toDF("query_id", "neighbor_id", "rank", "cosine")
+    BlockTopK.topKRows(partial, k).toDF("query_id", "neighbor_id", "rank", "cosine")
       // bounded (nQueries·k) result materialized so the banded cache is
       // released per-call, not at session end — see ivfTopK/mipsIvfTopK
       .localCheckpoint()
@@ -350,8 +296,8 @@ object Similarity {
     * `array_sort`(lambda) + `slice` HOF chain, evaluated interpreted with
     * O(cells·log cells) lambda comparator frames per ROW; under √n-sized
     * codebooks that interpreted island dominated every IVF stage). Ties
-    * break toward the LOWEST cell id — the SAME rule [[probeCells]]
-    * applies driver-side, so index assignment and probe selection can
+    * break toward the LOWEST cell id — the SAME rule [[probeCellsPrim]]
+    * applies outside Catalyst, so index assignment and probe selection can
     * never diverge on a near-tie; parity with the HOF form is pinned in
     * TopCellsExprSpec.
     *
@@ -543,25 +489,6 @@ object Similarity {
       .repartition(clusterWidth(corpus), col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
-  /** Driver-side probe selection for ONE query vector: its `nProbe`
-    * max-dot cells. Plain Scala on a k×dim table — the codebook is the
-    * only thing that ever lives on the driver. Arithmetic ((score desc,
-    * cell asc), left-to-right double accumulation of float products) is
-    * bit-identical to [[topCellsCol]]/DotProductExpr, so the serve path
-    * probes exactly the cells the index assigned.
-    */
-  def probeCells(v: Array[Float], cells: Array[Array[Float]], nProbe: Int): Seq[Int] =
-    cells.zipWithIndex
-      .map { case (c, i) => (i, c.zip(v).map { case (a, b) => a.toDouble * b }.sum) }
-      // `+ 0.0` collapses -0.0 to +0.0: SQL comparisons treat signed zeros
-      // as equal (so TopCellsExpr tie-breaks by cell id) while Scala's
-      // total ordering would rank -0.0-keyed cells first — found by the
-      // AggregationPropertySpec zero-vector case
-      .sortBy { case (i, d) => (-(d + 0.0), i) }
-      .take(nProbe)
-      .map(_._1)
-      .toSeq
-
   /** Incremental index maintenance: appends NEW vectors to an existing
     * cell-partitioned index under the SAME codebook — assignment-only, the
     * add-without-train operation a serving index needs between codebook
@@ -605,10 +532,10 @@ object Similarity {
       occupiedCells: Option[Set[Int]] = None): DataFrame = {
     val occ = occupiedCells.getOrElse(
       index.select("cell").distinct().collect().map(_.getInt(0)).toSet)
-    val occSubset = cells.zipWithIndex.collect {
+    val (occIds, occMat) = flattenCells(cells.zipWithIndex.collect {
       case (c, i) if occ.contains(i) => (i, c)
-    }.toSeq
-    val probes = probeCellsSubset(queryVec, occSubset, nProbe)
+    }.toSeq)
+    val probes = probeCellsPrim(queryVec, occIds, occMat, nProbe).toSeq
     val qn = math.sqrt(queryVec.map(x => x.toDouble * x).sum)
     val qv = array(queryVec.map(lit): _*)
     index
@@ -843,8 +770,8 @@ object Similarity {
     *
     * Round 10: the ADC shortlist runs in the same bucketed primitive-array
     * kernel as [[ivfTopK]] (per-cell blocks of ids + packed code BYTES,
-    * per-query lut as one primitive double array, bounded top-`rerank`
-    * insertion per block, map-side reduceByKey merge) instead of a Catalyst
+    * per-query lut as one primitive double array, a [[BlockTopK]] buffer
+    * of `rerank` per block and its map-side merge) instead of a Catalyst
     * join+groupBy over every candidate row — at the ×100 tier the row form
     * spent ~13× plain IVF's cost moving ~360M candidates through row
     * machinery while PQ's entire point is a CHEAPER per-candidate score
@@ -901,18 +828,7 @@ object Similarity {
       val pqv = bcPq.value
       val bias = bcBias.value
       it.map { case (id, v) =>
-        // TopCellsExpr with n=1: strict > keeps the LOWEST cell id on ties
-        var best = 0.0
-        var bestC = -1
-        var c = 0
-        while (c < cs.length) {
-          val row = cs(c)
-          var s = 0.0
-          var i = 0
-          while (i < v.length) { s += v(i).toDouble * row(i); i += 1 }
-          if (bestC < 0 || s > best) { best = s; bestC = c }
-          c += 1
-        }
+        val bestC = assignCell(cs, v)
         val cent = cs(bestC)
         val resid = new Array[Float](v.length)
         var i = 0
@@ -946,27 +862,16 @@ object Similarity {
     val subBlockRows = 65536
     val cellBlocks = assigned
       .repartitionAndSortWithinPartitions(partitioner)
-      .mapPartitions({ it =>
-        val buf = it.buffered
-        new Iterator[(Int, (Array[Long], Array[Byte]))] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (Int, (Array[Long], Array[Byte])) = {
-            val cell = buf.head._1
-            val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]
-            while (buf.hasNext && buf.head._1 == cell && rows.length < subBlockRows)
-              rows += buf.next()._2
-            val n = rows.length
-            val ids = new Array[Long](n)
-            val packed = new Array[Byte](n * numSub)
-            var i = 0
-            while (i < n) {
-              ids(i) = rows(i)._1
-              System.arraycopy(rows(i)._2, 0, packed, i * numSub, numSub)
-              i += 1
-            }
-            (cell, (ids, packed))
-          }
+      .mapPartitions(it => BlockTopK.runs(it, subBlockRows).map { case (cell, rows) =>
+        val ids = new Array[Long](rows.length)
+        val packed = new Array[Byte](rows.length * numSub)
+        var i = 0
+        while (i < rows.length) {
+          ids(i) = rows(i)._1
+          System.arraycopy(rows(i)._2, 0, packed, i * numSub, numSub)
+          i += 1
         }
+        (cell, (ids, packed))
       }, preservesPartitioning = true)
 
     // ---- query side: lut (M×K double dots) + top-nProbe cells ----------
@@ -978,7 +883,7 @@ object Similarity {
       .mapPartitions { it =>
         val cs = bcCells.value
         val pqv = bcPq.value
-        val idxCells: Seq[(Int, Array[Float])] = cs.indices.map(i => (i, cs(i)))
+        val (allIds, allMat) = flattenCells(cs.indices.map(i => (i, cs(i))))
         it.flatMap { case (qid, qv) =>
           val lut = new Array[Double](numSub * numCent)
           var m = 0
@@ -995,7 +900,7 @@ object Similarity {
             }
             m += 1
           }
-          probeCellsSubset(qv, idxCells, nProbe).map { cell =>
+          probeCellsPrim(qv, allIds, allMat, nProbe).map { cell =>
             val cent = cs(cell)
             var s = 0.0
             var j = 0
@@ -1008,12 +913,9 @@ object Similarity {
     // ---- ADC scoring: per (query, block) bounded top-`rerank` buffer ----
     val partial = probedQ.join(cellBlocks, partitioner).map {
       case (_, ((qid, lut, qdotcell), (ids, packed))) =>
-        val topIds = new Array[Long](rerank)
-        val topScores = Array.fill(rerank)(Double.NegativeInfinity)
-        var size = 0
-        val nI = ids.length
+        val top = new BlockTopK.Buffer(rerank)
         var i = 0
-        while (i < nI) {
+        while (i < ids.length) {
           if (ids(i) != qid) {
             // lutSum left-associative from m=0, then qdotcell + lutSum —
             // the twin's `col("qdotcell") + (l0 + l1 + …)` fold order
@@ -1021,40 +923,16 @@ object Similarity {
             var ls = lut(packed(off) & 0xff)
             var m = 1
             while (m < numSub) { ls += lut(m * numCent + (packed(off + m) & 0xff)); m += 1 }
-            val s = qdotcell + ls
-            val isWorseThanLast = size == rerank &&
-              (s < topScores(rerank - 1) ||
-                (s == topScores(rerank - 1) && ids(i) > topIds(rerank - 1)))
-            if (!isWorseThanLast) {
-              var pos = if (size < rerank) size else rerank - 1
-              while (pos > 0 && (topScores(pos - 1) < s ||
-                     (topScores(pos - 1) == s && topIds(pos - 1) > ids(i)))) {
-                topScores(pos) = topScores(pos - 1)
-                topIds(pos) = topIds(pos - 1)
-                pos -= 1
-              }
-              topScores(pos) = s
-              topIds(pos) = ids(i)
-              if (size < rerank) size += 1
-            }
+            top.offer(ids(i), qdotcell + ls)
           }
           i += 1
         }
-        (qid, (topIds.take(size), topScores.take(size)))
-    }
-
-    // merge per-query shortlists across probed cells — (adc desc, id asc)
-    val merged = partial.reduceByKey {
-      (a: (Array[Long], Array[Double]), b: (Array[Long], Array[Double])) =>
-        val pairs = (a._1.zip(a._2) ++ b._1.zip(b._2))
-          .sortBy { case (id, s) => (-s, id) }
-          .take(rerank)
-        (pairs.map(_._1), pairs.map(_._2))
+        (qid, top.result())
     }
 
     import spark.implicits._
-    val candidates = merged
-      .flatMap { case (qid, (ids, _)) => ids.map(nid => (qid, nid)) }
+    val candidates = BlockTopK.topKRows(partial, rerank)
+      .map { case (qid, nid, _, _) => (qid, nid) }
       .toDF("query_id", "neighbor_id")
 
     // ---- exact re-rank of the bounded candidate set (queries × rerank
@@ -1172,52 +1050,13 @@ object Similarity {
       .select("query_id", "neighbor_id", "rank", "cosine")
   }
 
-  /** IVF-style ANN: every corpus vector is assigned to its nearest centroid
-    * cell (one narrow pass); each query probes its `nProbe` nearest cells
-    * and re-ranks exactly inside them. The cell column is the partition-
-    * pruning key at scale — a 100 TB corpus stored partitioned by cell only
-    * scans `nProbe/numCells` of the data per query batch.
-    */
-  /** Approximate maximum-inner-product top-k (MIPS) through the IVF
-    * router, for scoring-shaped serving (recommendations rank by raw dot,
-    * where a longer corpus vector legitimately outranks a more-aligned
-    * short one — cosine routing alone would mis-route). Uses the standard
-    * order-preserving reduction (Bachrach et al., RecSys 2014; public
-    * technique): corpus vectors are augmented with one extra coordinate
-    * `sqrt(maxNorm² − ‖v‖²)` so every augmented vector has identical norm,
-    * and queries are padded with 0 — cosine ordering in the augmented
-    * space then equals dot ordering in the original space, so the
-    * spherical-k-means codebook and cell probing machinery route MIPS
-    * correctly. Candidates are finally ranked by the TRUE dot product.
-    * Query and corpus ids live in different entity spaces, so (unlike
-    * [[ivfTopK]]) no self-exclusion applies.
-    */
-  /** Driver-side probe selection against an OCCUPIED-cell subset — the
-    * `(cellId, centroid)` twin of [[probeCells]], same arithmetic contract
-    * (left-to-right double dots, score desc / cell-id asc with the −0.0
-    * collapse), shared by the serving kernel and spec'd against
-    * TopCellsExpr parity.
-    */
-  private[ops] def probeCellsSubset(
-      v: Array[Float],
-      cells: Seq[(Int, Array[Float])],
-      nProbe: Int): Seq[Int] =
-    cells.map { case (cid, c) =>
-      var s = 0.0
-      var i = 0
-      while (i < v.length) { s += v(i).toDouble * c(i); i += 1 }
-      (cid, s)
-    }
-      .sortBy { case (i, d) => (-(d + 0.0), i) }
-      .take(nProbe)
-      .map(_._1)
-
-  /** Allocation-free twin of [[probeCellsSubset]] over flattened primitive
-    * occupancy arrays (`occIds` + row-major `occMat`): fused dot + bounded
-    * top-nProbe insertion, SAME selection contract (left-to-right double
-    * dots, −0.0 collapse via `s + 0.0`, score desc with cell-id-asc ties).
-    * The serving kernel runs this once per query; parity with the boxed
-    * form is spec-pinned in SimilaritySpec.
+  /** The `nProbe` cells of `occIds` (centroids row-major in `occMat`)
+    * with the largest dot against `v` — the only probe selector, used by
+    * the IVF and MIPS kernels, [[servePrunedTopK]] and [[ivfPqTopK]]. Dots
+    * are left-to-right double sums of float-widened products (the
+    * DotProductExpr contract) ranked by [[BlockTopK]]'s total order, so
+    * ties go to the lowest cell id as in [[graft.functions.TopCellsExpr]]
+    * and a NaN-scored cell ranks last.
     */
   private[ops] def probeCellsPrim(
       v: Array[Float],
@@ -1225,73 +1064,46 @@ object Similarity {
       occMat: Array[Float],
       nProbe: Int): Array[Int] = {
     val d = v.length
-    val n = occIds.length
-    val p = math.min(nProbe, n)
+    val p = math.min(nProbe, occIds.length)
     if (p <= 0) return Array.emptyIntArray
-    val topIds = new Array[Int](p)
-    val topS = Array.fill(p)(Double.NegativeInfinity)
-    var size = 0
+    val top = new BlockTopK.Buffer(p)
     var c = 0
-    while (c < n) {
+    while (c < occIds.length) {
       var s = 0.0
       var i = 0
       val off = c * d
       while (i < d) { s += v(i).toDouble * occMat(off + i); i += 1 }
-      s = s + 0.0 // collapse -0.0 to 0.0, as the boxed comparator does
-      val cid = occIds(c)
-      // total ordering on the NEGATED key, exactly the boxed sortBy's
-      // (-(d+0.0), i) tuple order: primitive <,== are false for NaN, which
-      // let a NaN-scored cell overwrite the last slot instead of ranking
-      // LAST as the boxed total order does (round-14 ADVICE — reachable
-      // with NaN/Inf embeddings); Double.compare(-NaN, x) > 0 ranks it last
-      val worse = size == p && {
-        val cmp = java.lang.Double.compare(-s, -topS(p - 1))
-        cmp > 0 || (cmp == 0 && cid > topIds(p - 1))
-      }
-      if (!worse) {
-        var pos = if (size < p) size else p - 1
-        while (pos > 0 && {
-               val cmp = java.lang.Double.compare(-topS(pos - 1), -s)
-               cmp > 0 || (cmp == 0 && topIds(pos - 1) > cid)
-             }) {
-          topS(pos) = topS(pos - 1)
-          topIds(pos) = topIds(pos - 1)
-          pos -= 1
-        }
-        topS(pos) = s
-        topIds(pos) = cid
-        if (size < p) size += 1
-      }
+      top.offer(occIds(c), s)
       c += 1
     }
-    if (size == p) topIds else java.util.Arrays.copyOf(topIds, size)
+    top.result()._1.map(_.toInt)
   }
 
-  /** Inverted-list blocked kernel shared by [[ivfTopK]] and [[mipsIvfTopK]]
-    * (round 7). The previous explode→join→TopKAggregator plan moved every
-    * candidate through row-based join machinery at ~3M pairs/s; this is the
-    * cell-routed sibling of GraftALSModel's blockedCrossTopK — per-cell
-    * inverted lists packed into primitive (ids, row-major matrix, norms)
-    * blocks, queries routed to their probed cells, and a tight fused loop
-    * with one bounded top-k buffer per (query, cell) — ~150M pairs/s, and
-    * the shuffle carries only nProbe query-vector copies in and query·k
-    * partials out (measured 8.4s → ~1.5s on the sf0.1 item-neighbors
-    * serve).
-    *
-    * Scale shape: cell blocks average ~n/√n rows and are HARD-bounded at
-    * 65536 rows each — a skewed k-means assignment (clustered corpus piling
-    * into one cell) produces more blocks for that cell, never a bigger
-    * one, so per-task memory is bounded regardless of skew. Queries stream
-    * through a co-partitioned join (no per-cell materialization of the
-    * query side), partials merge map-side via reduceByKey, and the only
-    * driver state is the codebook + occupancy ids. Arithmetic is pinned by the sim_topk_ivf / sim_topk_mips DuckDB
-    * replays: every dot is left-to-right double accumulation of
-    * float-widened products (the DotProductExpr contract), assignment is
-    * argmax-dot with lowest-cell-id ties (TopCellsExpr), probing ranks
-    * OCCUPIED cells by the same rule, cosine = dot/(qn·cn) with zero-norm
-    * → 0, MIPS augmentation = sqrt(max(maxSq − ‖v‖², 0)) as FLOAT, and
-    * final ranking is (score desc, id asc).
+  /** `(cellId, centroid)` pairs as the ids and row-major matrix
+    * [[probeCellsPrim]] scans.
     */
+  private[ops] def flattenCells(cells: Seq[(Int, Array[Float])]): (Array[Int], Array[Float]) =
+    (cells.map(_._1).toArray, Array.concat(cells.map(_._2): _*))
+
+  /** The argmax-dot cell of `v`, lowest cell id on ties (strict `>`) —
+    * [[graft.functions.TopCellsExpr]] with n = 1. Serves the IVF index
+    * build and the PQ encoder.
+    */
+  private[ops] def assignCell(cells: Array[Array[Float]], v: Array[Float]): Int = {
+    var best = 0.0
+    var bestC = -1
+    var c = 0
+    while (c < cells.length) {
+      val row = cells(c)
+      var s = 0.0
+      var i = 0
+      while (i < v.length) { s += v(i).toDouble * row(i); i += 1 }
+      if (bestC < 0 || s > best) { best = s; bestC = c }
+      c += 1
+    }
+    bestC
+  }
+
   /** A BUILT inverted-list serving index: the per-cell primitive blocks
     * (persisted RDD), driver-side occupancy, and the partitioner the
     * blocks are keyed by. Building one is the expensive half of a probed
@@ -1326,13 +1138,17 @@ object Similarity {
   }
 
   /** Builds the [[CellIndex]] for a corpus under a codebook: assignment
-    * (argmax-dot, lowest-cell-id ties — the TopCellsExpr contract; MIPS
-    * corpora are augmented by `sqrt(max(maxSq − ‖v‖², 0))` first), one
-    * sort-based shuffle into per-cell inverted lists packed as primitive
+    * ([[assignCell]]; MIPS corpora are augmented by
+    * `sqrt(max(maxSq − ‖v‖², 0))` first), one sort-based shuffle into
+    * per-cell inverted lists packed by [[BlockTopK.pack]] as primitive
     * (ids, row-major matrix, norms) blocks HARD-bounded at 65536 rows
     * each — a skewed k-means assignment produces more blocks for a cell,
-    * never a bigger one — and a driver occupancy collect (≤ numCells +
-    * n/65536 ints). The blocks RDD is left persisted (caller-owned).
+    * never a bigger one, and the packer holds one block at a time — and a
+    * driver occupancy collect (≤ numCells + n/65536 ints). Downstream
+    * needs no chunk arithmetic: the join emits one (query, block) pair per
+    * block of a probed cell, and the top-k merge combines partials across
+    * blocks exactly as across cells. The blocks RDD is left persisted
+    * (caller-owned).
     */
   def buildCellIndex(
       corpus: DataFrame,
@@ -1340,29 +1156,6 @@ object Similarity {
       augmentBound: Option[Double]): CellIndex = {
     val sc = corpus.sparkSession.sparkContext
     val bcCells = sc.broadcast(cells)
-    // LOCAL def, not an object method: a closure calling an object method
-    // captures the (non-serializable) Similarity$ singleton
-    def selfDotD(v: Array[Float]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
-      s
-    }
-    // TopCellsExpr with n=1: strict > keeps the LOWEST cell id on ties
-    def assignCell(cs: Array[Array[Float]], rv: Array[Float]): Int = {
-      var best = 0.0
-      var bestC = -1
-      var c = 0
-      while (c < cs.length) {
-        val row = cs(c)
-        var s = 0.0
-        var i = 0
-        while (i < rv.length) { s += rv(i).toDouble * row(i); i += 1 }
-        if (bestC < 0 || s > best) { best = s; bestC = c }
-        c += 1
-      }
-      bestC
-    }
     val corpusRdd = Parallelism.widen(corpus).rdd
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val parts = math.max(corpusRdd.getNumPartitions, 2)
@@ -1374,59 +1167,44 @@ object Similarity {
         val rv = aug match {
           case Some(maxSq) =>
             val out = java.util.Arrays.copyOf(v, v.length + 1)
-            out(v.length) = math.sqrt(math.max(maxSq - selfDotD(v), 0.0)).toFloat
+            out(v.length) = math.sqrt(math.max(maxSq - BlockTopK.selfDot(v), 0.0)).toFloat
             out
           case None => v
         }
         (assignCell(cs, rv), (id, v))
       }
     }
-    // per-cell inverted lists as primitive blocks (ids, row-major mat,
-    // norms), each bounded to `subBlockRows` rows: the sort-based shuffle
-    // streams each cell's rows consecutively and this chunker holds ONE
-    // block at a time, so a skew-dominant cell (clustered corpus piling
-    // most vectors into one k-means cell) costs many bounded blocks, never
-    // one unbounded array (round-7 ADVICE — the groupByKey form
-    // materialized a whole cell per value). Downstream needs no chunk
-    // arithmetic: the RDD join emits one (query, block) pair per block of
-    // a probed cell and the reduceByKey top-k merge combines partials
-    // across blocks exactly as it does across cells.
-    val subBlockRows = 65536
     val cellBlocks = assigned
       .repartitionAndSortWithinPartitions(partitioner)
-      .mapPartitions({ it =>
-        val buf = it.buffered
-        new Iterator[(Int, (Array[Long], Array[Float], Array[Double]))] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (Int, (Array[Long], Array[Float], Array[Double])) = {
-            val cell = buf.head._1
-            val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
-            while (buf.hasNext && buf.head._1 == cell && rows.length < subBlockRows)
-              rows += buf.next()._2
-            val n = rows.length
-            val d = rows(0)._2.length
-            val ids = new Array[Long](n)
-            val mat = new Array[Float](n * d)
-            val norms = new Array[Double](n)
-            var i = 0
-            while (i < n) {
-              ids(i) = rows(i)._1
-              System.arraycopy(rows(i)._2, 0, mat, i * d, d)
-              norms(i) = math.sqrt(selfDotD(rows(i)._2))
-              i += 1
-            }
-            (cell, (ids, mat, norms))
-          }
-        }
-      }, preservesPartitioning = true)
+      .mapPartitions(BlockTopK.pack(_, 65536), preservesPartitioning = true)
       .persist()
     // occupancy on the driver: one key per BLOCK reaches the driver
-    // (≤ numCells + n/subBlockRows ints), deduped to cell ids only
+    // (≤ numCells + n/65536 ints), deduped to cell ids only
     val occSubset: Seq[(Int, Array[Float])] =
       cellBlocks.keys.collect().distinct.sorted.toSeq.map(c => (c, cells(c)))
     CellIndex(cells, augmentBound, cellBlocks, occSubset, partitioner)
   }
 
+  /** Inverted-list blocked kernel shared by [[ivfTopK]] and [[mipsIvfTopK]]
+    * (round 7; was an explode→join→TopKAggregator plan at ~3M pairs/s):
+    * per-cell corpus blocks from a [[CellIndex]], queries routed to their
+    * probed cells and packed into per-cell query blocks, and a fused
+    * block × block loop with one [[BlockTopK.Buffer]] per (query, block) —
+    * ~150M pairs/s; the shuffle carries only nProbe query-vector copies in
+    * and query·k partials out.
+    *
+    * Scale shape: queries stream through a co-partitioned join (no
+    * per-cell materialization of the query side), partials merge map-side
+    * in [[BlockTopK.topKRows]], and the only driver state is the codebook
+    * and occupancy ids. Arithmetic is pinned by the sim_topk_ivf /
+    * sim_topk_mips DuckDB replays: every dot is left-to-right double
+    * accumulation of float-widened products (the DotProductExpr
+    * contract), assignment is argmax-dot with lowest-cell-id ties
+    * (TopCellsExpr), probing ranks OCCUPIED cells by the same rule, cosine
+    * = dot/(qn·cn) with zero-norm → 0, MIPS augmentation =
+    * sqrt(max(maxSq − ‖v‖², 0)) as FLOAT, and the final ranking is
+    * [[BlockTopK]]'s (score desc, id asc) total order.
+    */
   private def probedTopKKernel(
       queries: DataFrame,
       corpus: DataFrame,
@@ -1460,32 +1238,10 @@ object Similarity {
     val partitioner = idx.partitioner
     val aug = augmentBound
 
-    def selfDot(v: Array[Float]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
-      s
-    }
-    // PRIMITIVE probe selection (round 14): probeCellsSubset allocates a
-    // boxed (cellId, score) tuple per occupied cell plus a full sort per
-    // QUERY — at ×100 (2M queries × ~1.4k occupied cells) that object
-    // churn, not the scoring flops, dominated the serve rows. The
-    // occupancy is flattened once into primitive (ids, row-major centroid
-    // matrix) arrays and each query runs a fused dot + bounded
-    // top-nProbe insertion — same contract as probeCellsSubset
-    // (left-to-right double dots, −0.0 collapse, score desc / cell-id asc;
-    // parity spec-pinned in SimilaritySpec).
-    val occIds: Array[Int] = idx.occupied.map(_._1).toArray
-    val occD = if (idx.occupied.isEmpty) 0 else idx.occupied.head._2.length
-    val occMat: Array[Float] = {
-      val m = new Array[Float](occIds.length * occD)
-      var c = 0
-      while (c < occIds.length) {
-        System.arraycopy(idx.occupied(c)._2, 0, m, c * occD, occD)
-        c += 1
-      }
-      m
-    }
+    // occupancy flattened once into primitive arrays (round 14: a boxed
+    // (cellId, score) tuple per occupied cell plus a sort per QUERY
+    // dominated the ×100 serve rows)
+    val (occIds, occMat) = flattenCells(idx.occupied)
     val bcOccIds = sc.broadcast(occIds)
     val bcOccMat = sc.broadcast(occMat)
 
@@ -1505,108 +1261,42 @@ object Similarity {
 
     val useCos = cosine
     val excl = excludeSelf
-    // QUERY-SIDE BLOCKING (round 14): the row-level probed join handed the
-    // scorer one (query, corpusBlock) pair per probe — at ×100 the serve
-    // spent ~33 µs/query against a ~1.4k-candidate scan whose flops cost
-    // ~11 µs, i.e. join/tuple machinery dominated. Queries are packed into
-    // per-cell primitive blocks too, so the join degree drops from
-    // (queries × nProbe) rows to (cells × blocks) pairs and scoring runs a
-    // block × block microkernel, the same transformation blockedCrossTopK
-    // applies to the exact kernel. Results are BIT-identical: each query
-    // meets the same candidate set with the same dot arithmetic, and the
-    // (score desc, id asc) comparator is total, so scan order cannot
-    // change the outcome (the hash oracles replay it unchanged).
-    val qSubBlockRows = 8192
+    // QUERY-SIDE BLOCKING (round 14): queries are packed into per-cell
+    // primitive blocks of at most 8192 rows too, so the join degree is
+    // (cells × blocks) pairs, not (queries × nProbe) rows, and scoring
+    // runs a block × block loop. Each query meets the same candidates with
+    // the same arithmetic, and the total order makes scan order irrelevant.
     val qBlocks = probed
       .repartitionAndSortWithinPartitions(partitioner)
-      .mapPartitions({ it =>
-        val buf = it.buffered
-        new Iterator[(Int, (Array[Long], Array[Float]))] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (Int, (Array[Long], Array[Float])) = {
-            val cell = buf.head._1
-            val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
-            while (buf.hasNext && buf.head._1 == cell && rows.length < qSubBlockRows)
-              rows += buf.next()._2
-            val n = rows.length
-            val d = rows(0)._2.length
-            val qids = new Array[Long](n)
-            val qmat = new Array[Float](n * d)
-            var i = 0
-            while (i < n) {
-              qids(i) = rows(i)._1
-              System.arraycopy(rows(i)._2, 0, qmat, i * d, d)
-              i += 1
-            }
-            (cell, (qids, qmat))
-          }
-        }
-      }, preservesPartitioning = true)
+      .mapPartitions(BlockTopK.pack(_, 8192), preservesPartitioning = true)
 
     val partial = qBlocks.join(cellBlocks, partitioner).flatMap {
-      case (_, ((qids, qmat), (ids, mat, norms))) =>
-        val nQ = qids.length
-        val d = qmat.length / nQ
-        val nI = ids.length
-        val out = new Array[(Long, (Array[Long], Array[Double]))](nQ)
-        var qi = 0
-        while (qi < nQ) {
+      case (_, ((qids, qmat, qnorms), (ids, mat, norms))) =>
+        val d = qmat.length / qids.length
+        val top = new BlockTopK.Buffer(k)
+        Iterator.tabulate(qids.length) { qi =>
           val qid = qids(qi)
           val qOff = qi * d
-          var qn = 0.0
-          if (useCos) {
-            var dd = 0
-            var s = 0.0
-            while (dd < d) { s += qmat(qOff + dd).toDouble * qmat(qOff + dd); dd += 1 }
-            qn = math.sqrt(s)
-          }
-          val topIds = new Array[Long](k)
-          val topScores = Array.fill(k)(Double.NegativeInfinity)
-          var size = 0
+          val qn = qnorms(qi)
+          top.reset()
           var i = 0
-          while (i < nI) {
+          while (i < ids.length) {
             if (!(excl && ids(i) == qid)) {
               var s = 0.0
               var dd = 0
               val off = i * d
               while (dd < d) { s += qmat(qOff + dd).toDouble * mat(off + dd); dd += 1 }
               if (useCos) s = if (qn == 0.0 || norms(i) == 0.0) 0.0 else s / (qn * norms(i))
-              val isWorseThanLast = size == k &&
-                (s < topScores(k - 1) || (s == topScores(k - 1) && ids(i) > topIds(k - 1)))
-              if (!isWorseThanLast) {
-                var pos = if (size < k) size else k - 1
-                while (pos > 0 && (topScores(pos - 1) < s ||
-                       (topScores(pos - 1) == s && topIds(pos - 1) > ids(i)))) {
-                  topScores(pos) = topScores(pos - 1)
-                  topIds(pos) = topIds(pos - 1)
-                  pos -= 1
-                }
-                topScores(pos) = s
-                topIds(pos) = ids(i)
-                if (size < k) size += 1
-              }
+              top.offer(ids(i), s)
             }
             i += 1
           }
-          out(qi) = (qid, (topIds.take(size), topScores.take(size)))
-          qi += 1
+          (qid, top.result())
         }
-        out
-    }
-
-    // merge per-query buffers across probed cells — (score desc, id asc)
-    val merged = partial.reduceByKey {
-      (a: (Array[Long], Array[Double]), b: (Array[Long], Array[Double])) =>
-        val pairs = (a._1.zip(a._2) ++ b._1.zip(b._2))
-          .sortBy { case (id, s) => (-s, id) }
-          .take(k)
-        (pairs.map(_._1), pairs.map(_._2))
     }
 
     import spark.implicits._
-    val result = merged.flatMap { case (qid, (ids, scores)) =>
-      ids.indices.map(i => (qid, ids(i), i + 1, scores(i)))
-    }.toDF(outCols: _*)
+    val result = BlockTopK.topKRows(partial, k).toDF(outCols: _*)
       // bounded result materialized, corpus-sized block cache released —
       // the per-call persist must not outlive the call (round-6 ADVICE).
       // A PREBUILT index is caller-owned session state and stays persisted.
@@ -1647,6 +1337,20 @@ object Similarity {
       numCells = numCells, seed = seed))
   }
 
+  /** Approximate maximum-inner-product top-k (MIPS) through the IVF
+    * router, for scoring-shaped serving (recommendations rank by raw dot,
+    * where a longer corpus vector legitimately outranks a more-aligned
+    * short one — cosine routing alone would mis-route). Uses the standard
+    * order-preserving reduction (Bachrach et al., RecSys 2014; public
+    * technique): corpus vectors are augmented with one extra coordinate
+    * `sqrt(maxNorm² − ‖v‖²)` so every augmented vector has identical norm,
+    * and queries are padded with 0 — cosine ordering in the augmented
+    * space then equals dot ordering in the original space, so the
+    * spherical-k-means codebook and cell probing machinery route MIPS
+    * correctly. Candidates are finally ranked by the TRUE dot product.
+    * Query and corpus ids live in different entity spaces, so (unlike
+    * [[ivfTopK]]) no self-exclusion applies.
+    */
   def mipsIvfTopK(
       queries: DataFrame,
       corpus: DataFrame,
@@ -1677,6 +1381,12 @@ object Similarity {
       prebuilt = prebuiltCells)
   }
 
+  /** IVF-style ANN: every corpus vector is assigned to its nearest centroid
+    * cell (one narrow pass); each query probes its `nProbe` nearest cells
+    * and re-ranks exactly inside them. The cell column is the partition-
+    * pruning key at scale — a 100 TB corpus stored partitioned by cell only
+    * scans `nProbe/numCells` of the data per query batch.
+    */
   def ivfTopK(
       queries: DataFrame,
       corpus: DataFrame,

@@ -1,9 +1,11 @@
 package graft.als
 
 import graft.SparkFixture
+import graft.ops.Similarity
 import org.apache.spark.GraftSparkInternals
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.SparkPlan
@@ -152,5 +154,87 @@ class ServingJobBudgetSpec extends AnyFunSuite with SparkFixture with AdaptiveSp
     // fit: the INT-key decision reads the id ranges measured while the
     // factors materialized, so it runs no aggregate of its own
     assert((fitJobs, fitStages) == ((8, 17)))
+  }
+
+  private def rows(df: DataFrame): Map[(Long, Int), (Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getInt(2)) ->
+      (r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(3)))).toMap
+
+  private def factors(df: DataFrame): Seq[(Long, Array[Float])] =
+    df.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+
+  /** Plain-Scala raw-dot top-k of every query over the whole corpus: dots
+    * left to right in double, ranked by the total order (Double.compare on
+    * −score, then id).
+    */
+  private def rawDotTopK(
+      queries: Seq[(Long, Array[Float])],
+      corpus: Seq[(Long, Array[Float])],
+      k: Int): Map[(Long, Int), (Long, Long)] =
+    queries.flatMap { case (q, qv) =>
+      corpus.map { case (c, cv) =>
+        var s = 0.0
+        var i = 0
+        while (i < qv.length) { s += qv(i).toDouble * cv(i); i += 1 }
+        (c, s)
+      }.sortBy { case (c, sc) => (-sc, c) }(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+        .take(k).zipWithIndex
+        .map { case ((c, sc), i) => (q, i + 1) -> (c, java.lang.Double.doubleToLongBits(sc)) }
+    }.toMap
+
+  test("recommendForAllUsers equals a plain raw-dot top-k across several blocks") {
+    val want = rawDotTopK(factors(model.userFactors), factors(model.itemFactors), 5)
+    // 7-row blocks: every user's top-k merges partials from 5 item blocks
+    assert(rows(model.recommendForAllUsers(5, blockSize = 7)) == want)
+    assert(rows(model.recommendForAllUsers(5)) == want)
+  }
+
+  test("mipsIvfTopK with every cell probed equals a plain raw-dot top-k") {
+    val got = rows(Similarity.mipsIvfTopK(model.userFactors, model.itemFactors, k = 5,
+      nProbe = 4, numCells = 4, queryIdCol = "id", corpusIdCol = "id",
+      vecCol = "features", dim = als.rank))
+    assert(got == rawDotTopK(factors(model.userFactors), factors(model.itemFactors), 5))
+  }
+
+  test("ANN and exact top-k calls stay inside their job and stage budgets") {
+    val items = model.itemFactors
+    val users = model.userFactors
+    val mips = Similarity.trainMipsIndex(items, vecCol = "features", dim = als.rank, numCells = 4)
+    val cellIndex = Similarity.buildCellIndex(
+      items.select(col("id").cast("long"), col("features")), mips.cells, Some(mips.maxSq))
+      .materialize()
+    def mipsCall(prebuilt: Boolean) = Similarity.mipsIvfTopK(users, items, k = 3, nProbe = 2,
+      numCells = 4, queryIdCol = "id", corpusIdCol = "id", vecCol = "features",
+      dim = als.rank, trainedIndex = if (prebuilt) Some(mips) else None,
+      prebuiltCells = if (prebuilt) Some(cellIndex) else None)
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "lshTopK" -> (() => Similarity.lshTopK(items, k = 3, idCol = "id", vecCol = "features",
+        dim = als.rank, numPlanes = 2, numTables = 3)),
+      "ivfTopK" -> (() => Similarity.ivfTopK(items, items, k = 3, nProbe = 2, numCells = 4,
+        idCol = "id", vecCol = "features", dim = als.rank)),
+      "mipsIvfTopK" -> (() => mipsCall(prebuilt = false)),
+      "mipsIvfTopK prebuilt" -> (() => mipsCall(prebuilt = true)),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(items, items, k = 3, rerank = 5, nProbe = 2,
+        numCells = 4, numSubspaces = 2, numCentroids = 4, idCol = "id", vecCol = "features",
+        dim = als.rank)),
+      "itemNeighbors" -> (() => model.itemNeighbors(3)),
+      "recommendForAllUsers" -> (() => model.recommendForAllUsers(3)))
+    val measured = calls.map { case (name, call) =>
+      val (_, jobs, stages) = budget(call().collect())
+      name -> ((jobs, stages))
+    }
+    cellIndex.unpersist()
+    info(measured.map { case (n, (j, st)) => s"$n $j/$st" }.mkString(", "))
+    // the prebuilt MIPS index leaves only the probe join and the merge;
+    // the exact kernel is one cartesian and one merge
+    assert(measured == Seq(
+      "lshTopK" -> ((8, 11)),
+      "ivfTopK" -> ((3, 6)),
+      "mipsIvfTopK" -> ((9, 12)),
+      "mipsIvfTopK prebuilt" -> ((2, 4)),
+      "ivfPqTopK" -> ((3, 6)),
+      "itemNeighbors" -> ((1, 2)),
+      "recommendForAllUsers" -> ((1, 2))))
   }
 }

@@ -180,45 +180,23 @@ class SolverSpec extends AnyFunSuite {
   test("single-owner assert trips on cross-thread solve when enabled") {
     def freshNe(): NormalEquation =
       new NormalEquation(3).add(Array(1f, 0f, 0f), 1.0).add(Array(0f, 1f, 1f), 2.0)
-    val prior = LeastSquaresNESolver.assertEnabled
-    LeastSquaresNESolver.assertEnabled = true
-    try {
-      val solver = new CholeskySolver
-      solver.solve(freshNe(), 0.5) // binds the owner to this thread
-      @volatile var caught: Throwable = null
-      val t = new Thread(() => {
-        try solver.solve(freshNe(), 0.5)
-        catch { case e: Throwable => caught = e }
-      })
-      t.start(); t.join()
-      assert(caught != null && caught.isInstanceOf[IllegalStateException],
-        s"expected IllegalStateException from second thread, got $caught")
-      // same thread keeps working
-      solver.solve(freshNe(), 0.5)
-      // a fresh instance on the other thread is fine (one instance per thread)
-      @volatile var ok = false
-      val t2 = new Thread(() => { new NNLSSolver().solve(freshNe(), 0.5); ok = true })
-      t2.start(); t2.join()
-      assert(ok)
-    } finally LeastSquaresNESolver.assertEnabled = prior
-  }
-
-  test("single-owner assert is inert when disabled") {
-    val prior = LeastSquaresNESolver.assertEnabled
-    LeastSquaresNESolver.assertEnabled = false
-    try {
-      val solver = new CholeskySolver
-      def freshNe(): NormalEquation =
-        new NormalEquation(2).add(Array(1f, 0f), 1.0).add(Array(0f, 1f), 1.0)
-      solver.solve(freshNe(), 0.1)
-      @volatile var err: Throwable = null
-      val t = new Thread(() => {
-        try solver.solve(freshNe(), 0.1)
-        catch { case e: Throwable => err = e }
-      })
-      t.start(); t.join()
-      assert(err == null, s"disabled assert must not throw, got $err")
-    } finally LeastSquaresNESolver.assertEnabled = prior
+    val solver = new CholeskySolver
+    solver.solve(freshNe(), 0.5) // binds the owner to this thread
+    @volatile var caught: Throwable = null
+    val t = new Thread(() => {
+      try solver.solve(freshNe(), 0.5)
+      catch { case e: Throwable => caught = e }
+    })
+    t.start(); t.join()
+    assert(caught != null && caught.isInstanceOf[IllegalStateException],
+      s"expected IllegalStateException from second thread, got $caught")
+    // same thread keeps working
+    solver.solve(freshNe(), 0.5)
+    // a fresh instance on the other thread is fine (one instance per thread)
+    @volatile var ok = false
+    val t2 = new Thread(() => { new NNLSSolver().solve(freshNe(), 0.5); ok = true })
+    t2.start(); t2.join()
+    assert(ok)
   }
 
   private def gaussianSolve(m0: Array[Array[Double]], b0: Array[Double]): Array[Double] = {

@@ -512,4 +512,13 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     assert(out(2L) == ((0L, "")))
     assert(out(3L) == ((1L, "unique tail words here")))
   }
+
+  test("PairPartitioner spreads consecutive-id pairs across 4, 8 and 32 partitions") {
+    for (parts <- Seq(4, 8, 32)) {
+      val p = new Dedup.PairPartitioner(parts)
+      val load = (0L until 1024L).groupBy(u => p.getPartition((u, u + 1))).map(_._2.size)
+      assert(load.size == parts, s"$parts partitions: only ${load.size} receive (u, u + 1) keys")
+      assert(load.max <= 2 * 1024 / parts, s"$parts partitions: max load ${load.max}")
+    }
+  }
 }

@@ -241,6 +241,95 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert(a.toSeq == b.toSeq)
   }
 
+  /** Cosine as the kernels score it: left-to-right double dot and norms,
+    * 0.0 when either norm is zero.
+    */
+  private def kernelCosine(a: Array[Float], b: Array[Float]): Double = {
+    def dot(x: Array[Float], y: Array[Float]): Double = {
+      var s = 0.0
+      var i = 0
+      while (i < x.length) { s += x(i).toDouble * y(i); i += 1 }
+      s
+    }
+    val (na, nb) = (math.sqrt(dot(a, a)), math.sqrt(dot(b, b)))
+    if (na == 0.0 || nb == 0.0) 0.0 else dot(a, b) / (na * nb)
+  }
+
+  /** Plain-Scala top-k of `q` over `candidates` ranked by the total order
+    * (Double.compare on −score, then id), as `(query, rank) -> (neighbor,
+    * score bits)`.
+    */
+  private def totalOrderTopK(
+      q: (Long, Array[Float]),
+      candidates: Seq[(Long, Array[Float])],
+      k: Int): Seq[((Long, Int), (Long, Long))] =
+    candidates.map { case (c, cv) => (c, kernelCosine(q._2, cv)) }
+      .sortBy { case (c, sc) => (-sc, c) }(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+      .take(k).zipWithIndex
+      .map { case ((c, sc), i) => (q._1, i + 1) -> (c, java.lang.Double.doubleToLongBits(sc)) }
+
+  private def topKRows(df: DataFrame): Map[(Long, Int), (Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getInt(2)) ->
+      (r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(3)))).toMap
+
+  /** Random vectors with two all-NaN and one half-NaN member. */
+  private def withNaNs(n: Int, seed: Int): Seq[(Long, Array[Float])] =
+    randomVecs(n, seed).map {
+      case (id, _) if id == 3L || id == n - 5L => (id, Array.fill(dim)(Float.NaN))
+      case (id, v) if id == n / 2L => (id, v.indices.map(i => if (i % 2 == 0) Float.NaN else v(i)).toArray)
+      case other => other
+    }
+
+  test("NaN vectors rank last in ivfTopK: every cell probed equals a total-order top-k") {
+    val vs = withNaNs(60, 41)
+    val df = embDF(vs)
+    val k = 5
+    val got = topKRows(Similarity.ivfTopK(df, df, k = k, nProbe = 8, numCells = 8, dim = dim))
+    val want = vs.flatMap(q => totalOrderTopK(q, vs.filter(_._1 != q._1), k)).toMap
+    assert(got == want, (want.toSet diff got.toSet).take(5).mkString("missing: ", ", ", ""))
+  }
+
+  test("NaN vectors rank last in lshTopK: equals a total-order top-k over its buckets") {
+    val vs = withNaNs(60, 43)
+    val df = embDF(vs)
+    val (k, planes, tables) = (5, 2, 3)
+    // the candidate set: ids sharing a (table, signature) bucket with the
+    // query; maxBucket above the corpus size disables the cap
+    val buckets: Map[Long, Set[(Int, Long)]] = Similarity
+      .withHyperplaneSignatures(df.select(col("vec_id").as("id"), col("embedding").as("v")),
+        "v", dim, planes, tables, 42L)
+      .select("id", "sigs").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Row](1).map(b => (b.getInt(0), b.getLong(1))).toSet)
+      .toMap
+    def candidates(q: Long) =
+      vs.filter(c => c._1 != q && (buckets(c._1) & buckets(q)).nonEmpty)
+    assert(vs.exists(q => candidates(q._1).exists(_._1 == 3L) && candidates(q._1).size > k),
+      "fixture must put a NaN vector in a bucket with more than k candidates")
+    val got = topKRows(Similarity.lshTopK(df, k = k, dim = dim, numPlanes = planes,
+      numTables = tables, maxBucket = 1000))
+    val want = vs.flatMap(q => totalOrderTopK(q, candidates(q._1), k)).toMap
+    assert(got == want, (want.toSet diff got.toSet).take(5).mkString("missing: ", ", ", ""))
+  }
+
+  /** Reference probe selector: boxed (cell, dot) pairs sorted by the
+    * total order on (−(dot + 0.0), cell id), as TopCellsExpr ranks them.
+    */
+  private def probeCellsSubset(
+      v: Array[Float],
+      cells: Seq[(Int, Array[Float])],
+      nProbe: Int): Seq[Int] =
+    cells.map { case (cid, c) =>
+      var s = 0.0
+      var i = 0
+      while (i < v.length) { s += v(i).toDouble * c(i); i += 1 }
+      (cid, s)
+    }
+      .sortBy { case (i, d) => (-(d + 0.0), i) }(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      .take(nProbe)
+      .map(_._1)
+
   test("probeCellsPrim equals probeCellsSubset on random and adversarial tie inputs") {
     val rnd = new scala.util.Random(17)
     def vec(d: Int): Array[Float] = Array.fill(d)((rnd.nextInt(7) - 3).toFloat)
@@ -254,7 +343,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
           .distinctBy(_._1).sortBy(_._1)
       val q = vec(d)
       val nProbe = 1 + rnd.nextInt(5)
-      val boxed = Similarity.probeCellsSubset(q, occ, nProbe)
+      val boxed = probeCellsSubset(q, occ, nProbe)
       val ids = occ.map(_._1).toArray
       val mat = occ.flatMap(_._2).toArray
       val prim = Similarity.probeCellsPrim(q, ids, mat, nProbe).toSeq
@@ -266,7 +355,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     val z = Array(0f, 0f)
     assert(Similarity.probeCellsPrim(z, occZ.map(_._1).toArray,
       occZ.flatMap(_._2).toArray, 2).toSeq ==
-      Similarity.probeCellsSubset(z, occZ, 2))
+      probeCellsSubset(z, occZ, 2))
     // NaN/Inf scores (round-14 ADVICE): primitive <,== are false for NaN,
     // which let a NaN-scored cell OVERWRITE the last slot; the boxed total
     // ordering ranks NaN last. Mix NaN, ±Inf and real centroids at every
@@ -280,7 +369,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       (9, Array(-2f, 1f)))                 // real negative score
     val qNaN = Array(1f, 1f)
     for (nProbe <- 1 to occNaN.size) {
-      val boxed = Similarity.probeCellsSubset(qNaN, occNaN, nProbe)
+      val boxed = probeCellsSubset(qNaN, occNaN, nProbe)
       val prim = Similarity.probeCellsPrim(qNaN, occNaN.map(_._1).toArray,
         occNaN.flatMap(_._2).toArray, nProbe).toSeq
       assert(prim == boxed, s"nProbe $nProbe: prim $prim != boxed $boxed")
