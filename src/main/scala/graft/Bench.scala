@@ -256,40 +256,10 @@ object Bench {
           graft.queries.SessionArtifacts.clear()
           spark.catalog.clearCache()
           System.gc()
-          var graftModel: graft.als.GraftALSModel = null
-          timed("als_train_graft") {
-            graftModel = graft.als.GraftALS(
-              rank = 8, maxIter = 5, regParam = 0.1,
-              numUserBlocks = 8, numItemBlocks = 8,
-              userCol = "user_id", itemCol = "item_id", ratingCol = "rating",
-              seed = 7L)
-              .fit(graft.queries.Queries.ratingsDF(spark, sfDir))
-            graftModel.userFactors.write.format("noop").mode("overwrite").save()
-          }
-          spark.catalog.clearCache()
-          System.gc()
-          var mllibModel: org.apache.spark.ml.recommendation.ALSModel = null
-          timed("als_train_mllib") {
-            import org.apache.spark.ml.recommendation.ALS
-            mllibModel = new ALS()
-              .setRank(8).setMaxIter(5).setRegParam(0.1)
-              .setNumUserBlocks(8).setNumItemBlocks(8)
-              .setUserCol("user_id").setItemCol("item_id").setRatingCol("rating")
-              .setSeed(7L)
-              .fit(graft.queries.Queries.ratingsDF(spark, sfDir))
-            mllibModel.userFactors.write.format("noop").mode("overwrite").save()
-          }
-          spark.catalog.clearCache()
-          System.gc()
-          if (graftModel != null) timed("als_transform_graft") {
-            graftModel.transform(graft.queries.Queries.ratingsDF(spark, sfDir))
-              .write.format("noop").mode("overwrite").save()
-          }
-          spark.catalog.clearCache()
-          System.gc()
-          if (mllibModel != null) timed("als_transform_mllib") {
-            mllibModel.transform(graft.queries.Queries.ratingsDF(spark, sfDir))
-              .write.format("noop").mode("overwrite").save()
+          try timings ++= HeadToHead.protocol(spark, sfDir)
+          catch { case e2: Throwable =>
+            errors("als_head_to_head_in_process") =
+              Option(e2.getMessage).getOrElse(e2.getClass.getName).take(200)
           }
       }
     }

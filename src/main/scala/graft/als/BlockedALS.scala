@@ -976,17 +976,20 @@ object BlockedALS {
 
   /** Global Gramian YᵀY of all factors for the implicit path. The
     * reference's version is broken (Python tuple-unpack lambdas + a
-    * generator seqOp, `ALS.py:562-578`); this is the straightforward
-    * `treeAggregate` it intended.
+    * generator seqOp, `ALS.py:562-578`); this is the aggregate it
+    * intended, as one job whose per-block partials merge in block order
+    * ([[graft.ops.OrderedMerge]]), so the Gramian — and every implicit
+    * factor solved against it — is the same to the last bit on every run.
     */
-  def computeYtY(factorBlocks: FactorBlocks, rank: Int): NormalEquation = {
-    factorBlocks.values.treeAggregate(new NormalEquation(rank))(
-      seqOp = (ne, factors) => {
-        var i = 0
-        while (i < factors.length) { ne.add(factors(i), 0.0); i += 1 }
+  def computeYtY(factorBlocks: FactorBlocks, rank: Int): NormalEquation =
+    graft.ops.OrderedMerge.aggregate(factorBlocks.values, new NormalEquation(rank))(
+      it => {
+        val ne = new NormalEquation(rank)
+        it.foreach { factors =>
+          var i = 0
+          while (i < factors.length) { ne.add(factors(i), 0.0); i += 1 }
+        }
         ne
       },
-      combOp = (ne1, ne2) => ne1.merge(ne2)
-    )
-  }
+      (a, b) => a.merge(b))
 }

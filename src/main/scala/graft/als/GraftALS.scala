@@ -264,7 +264,7 @@ case class GraftALSModel(
   /** Implicit-feedback twin of [[foldInUsers]] (Hu-Koren-Volinsky): a new
     * user's normal equations are `YᵀY + Σ c₁·yᵢyᵢᵀ` over just their own
     * interactions, so the solve needs the global item Gramian — computed
-    * here with one `treeAggregate` over the item factors (k²/2 doubles,
+    * here with one ordered-merge job over the item factors (k²/2 doubles,
     * the serving twin of the training kernel's `computeYtY`) and
     * broadcast into the per-user solves. Confidence weighting and the
     * λ·n_explicits regularization match the training kernel exactly, so
@@ -296,10 +296,11 @@ case class GraftALSModel(
     import spark.implicits._
     val k = rank
     val ytyAta = implicitAlpha.map { _ =>
-      val yty = itemFactors.select("features").rdd
-        .treeAggregate(new NormalEquation(k))(
-          (ne, row) => ne.add(row.getAs[scala.collection.Seq[Float]](0).toArray, 0.0),
-          (a, b) => a.merge(b))
+      val yty = graft.ops.OrderedMerge.aggregate(
+        itemFactors.select("features").rdd, new NormalEquation(k))(
+        _.foldLeft(new NormalEquation(k))((ne, row) =>
+          ne.add(row.getAs[scala.collection.Seq[Float]](0).toArray, 0.0)),
+        (a, b) => a.merge(b))
       spark.sparkContext.broadcast(yty.ata)
     }
     val itf = itemFactors.select(col("id").as("__iid"), col("features").as("__ifeat"))

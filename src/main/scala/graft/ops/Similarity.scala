@@ -392,20 +392,16 @@ object Similarity {
     * partitions merged in partition-index order — which is what keeps the
     * trained floats stable (and byte-identical to the dumps the replaying
     * oracles pin). Each partition ships one `groups × width` partial, and
-    * [[LloydMerge]] adds it as it arrives, so the driver holds the total
+    * [[OrderedMerge]] adds it as it arrives, so the driver holds the total
     * plus only the partials that finish ahead of a lower-indexed one.
     */
   private def lloydMeans(
       assigned: DataFrame,
       groups: Int,
-      width: Int): (Array[Long], Array[Array[Double]]) = {
-    val rdd = assigned.queryExecution.toRdd
-    val merge = new LloydMerge(groups, width)
-    assigned.sparkSession.sparkContext.runJob(
-      rdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        val counts = new Array[Long](groups)
-        val sums = Array.ofDim[Double](groups, width)
+      width: Int): (Array[Long], Array[Array[Double]]) =
+    OrderedMerge.aggregate(assigned.queryExecution.toRdd, lloydZero(groups, width))(
+      it => {
+        val (counts, sums) = lloydZero(groups, width)
         while (it.hasNext) {
           val r = it.next()
           val g = r.getInt(0)
@@ -417,46 +413,27 @@ object Similarity {
         }
         (counts, sums)
       },
-      merge.add _)
-    merge.result(rdd.getNumPartitions)
-  }
+      lloydAdd)
 
-  /** Sums per-partition Lloyd partials `(counts, sums)` in partition-index
-    * order, whatever order they arrive in: partial `p` is added once every
-    * partial before it has been, and only partials that arrive early are
-    * held until then. The additions are therefore the same, in the same
-    * order, as a collect-then-merge — bit-identical totals.
-    */
-  private[ops] final class LloydMerge(groups: Int, width: Int) {
-    private val counts = new Array[Long](groups)
-    private val sums = Array.ofDim[Double](groups, width)
-    private val early =
-      scala.collection.mutable.HashMap.empty[Int, (Array[Long], Array[Array[Double]])]
-    private var next = 0
+  private[ops] def lloydZero(groups: Int, width: Int): (Array[Long], Array[Array[Double]]) =
+    (new Array[Long](groups), Array.ofDim[Double](groups, width))
 
-    def add(p: Int, partial: (Array[Long], Array[Array[Double]])): Unit = synchronized {
-      early(p) = partial
-      while (early.contains(next)) {
-        val (c, ss) = early.remove(next).get
-        var g = 0
-        while (g < groups) {
-          counts(g) += c(g)
-          val s = sums(g)
-          val t = ss(g)
-          var i = 0
-          while (i < width) { s(i) += t(i); i += 1 }
-          g += 1
-        }
-        next += 1
-      }
+  /** Adds Lloyd partial `b` into `a` (in place) and returns `a`. */
+  private[ops] def lloydAdd(
+      a: (Array[Long], Array[Array[Double]]),
+      b: (Array[Long], Array[Array[Double]])): (Array[Long], Array[Array[Double]]) = {
+    val (counts, sums) = a
+    val (c, ss) = b
+    var g = 0
+    while (g < counts.length) {
+      counts(g) += c(g)
+      val s = sums(g)
+      val t = ss(g)
+      var i = 0
+      while (i < s.length) { s(i) += t(i); i += 1 }
+      g += 1
     }
-
-    /** The totals, once partials `0 until numPartitions` have all arrived. */
-    def result(numPartitions: Int): (Array[Long], Array[Array[Double]]) = synchronized {
-      require(next == numPartitions && early.isEmpty,
-        s"merged $next of $numPartitions partitions, ${early.size} held")
-      (counts, sums)
-    }
+    a
   }
 
   /** Adds the IVF `cell` assignment (argmax-dot centroid) to a corpus —

@@ -1,17 +1,25 @@
 package graft.queries
 
 import graft.Tables
-import graft.als.{GraftALS, GraftALSModel}
-import graft.functions.VectorFunctions
-import graft.ops.{Bucketing, Dedup, Multimodal, Parallelism, PipelineOps, Similarity, TextOps}
-import graft.streaming.EventsStream
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.als.{GraftALS, GraftALSModel, RankingMetrics}
+import graft.ops.Similarity
+import graft.queries.AlsQueries._
+import graft.queries.DedupQueries._
+import graft.queries.PipelineQueries._
+import graft.queries.RelationalQueries._
+import graft.queries.SimilarityQueries._
+import graft.queries.StreamingQueries._
+import graft.queries.TextQueries._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The verifiable query surface: every operator family from SURVEY.md §2
   * plus the LLM-data-pipeline extensions, each as a (Spark plan, optional
-  * DuckDB oracle SQL) pair.
+  * DuckDB oracle SQL) pair. The [[QueryDef]]s live in one object per
+  * family (RelationalQueries, AlsQueries, DedupQueries, SimilarityQueries,
+  * TextQueries, StreamingQueries, PipelineQueries), their oracles' shared
+  * arithmetic in [[OracleSql]]; this object holds the registry [[all]] and
+  * the accessors the families and the harness mains share.
   *
   * Determinism conventions (the driver hash-compares a parquet dump of the
   * Spark result against DuckDB's result for the same SQL):
@@ -22,688 +30,15 @@ import org.apache.spark.sql.functions._
   *   - every result ORDER BY a unique key on both sides;
   *   - integer-ish outputs cast to BIGINT on both sides (Spark `size()` is
   *     INT, DuckDB `len()` is BIGINT — never compare those raw).
+  *
+  * A family object must not read this object's state while it initializes
+  * (its oracle strings are built then): [[all]] initializes every family,
+  * so only query bodies — which run later — may call back here.
   */
 object Queries {
 
-  private def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  private[queries] def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     Tables.load(spark, sfDir, name)
-
-  // ------------------------------------------------------------------
-  // Relational surface (scans, filters, joins, aggs, windows, set ops)
-  // ------------------------------------------------------------------
-
-  /** TPC-H Q1-shaped pricing summary: scan + filter + hash aggregate.
-    * Exercises S1 (parquet scan with pushdown), A-family aggregation.
-    */
-  val q01PricingSummary: QueryDef = QueryDef.withOracle(
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-      |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS DOUBLE) AS avg_qty,
-      |  COUNT(*) AS count_order
-      |FROM lineitem
-      |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-      |GROUP BY l_returnflag, l_linestatus
-      |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem")
-      .where(col("l_shipdate") <= lit("1998-09-02 00:00:00").cast("timestamp"))
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-        sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_base_price"),
-        sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)"))).cast("double").as("sum_disc_price"),
-        (sum(col("l_quantity").cast("decimal(18,2)")).cast("double") / count(lit(1)))
-          .cast("double").as("avg_qty"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  /** Equi-join + aggregate: orders per market segment (J4-family join). */
-  val q02SegmentSales: QueryDef = QueryDef.withOracle(
-    """SELECT c_mktsegment,
-      |  COUNT(*) AS n_orders,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_totalprice
-      |FROM orders JOIN customer ON o_custkey = c_custkey
-      |GROUP BY c_mktsegment
-      |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
-    t(s, dir, "orders")
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .groupBy("c_mktsegment")
-      .agg(
-        count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("sum_totalprice"))
-      .orderBy("c_mktsegment")
-  }
-
-  /** Multi-way dimension join chain up the region snowflake; the small dims
-    * broadcast (customer/nation/region ≪ orders).
-    */
-  val q03RegionRevenue: QueryDef = QueryDef.withOracle(
-    """SELECT r_name,
-      |  COUNT(*) AS n_orders,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      |FROM orders
-      |JOIN customer ON o_custkey = c_custkey
-      |JOIN nation ON c_nationkey = n_nationkey
-      |JOIN region ON n_regionkey = r_regionkey
-      |GROUP BY r_name
-      |ORDER BY r_name""".stripMargin) { (s, dir) =>
-    t(s, dir, "orders")
-      .join(broadcast(t(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-      .groupBy("r_name")
-      .agg(
-        count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
-      .orderBy("r_name")
-  }
-
-  /** Selective filter + projection — the predicate/column-pushdown probe. */
-  val q04ShipdateFilter: QueryDef = QueryDef.withOracle(
-    """SELECT l_orderkey, l_linenumber, l_partkey, CAST(l_quantity AS DOUBLE) AS quantity
-      |FROM lineitem
-      |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-      |  AND l_quantity >= 45
-      |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem")
-      .where(col("l_shipdate") >= lit("1997-01-01 00:00:00").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01 00:00:00").cast("timestamp") &&
-        col("l_quantity") >= 45)
-      .select(
-        col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_quantity").cast("double").as("quantity"))
-      .orderBy("l_orderkey", "l_linenumber")
-  }
-
-  /** Global top-k: total-order sort + limit (the engine's TopK operator). */
-  val q05TopkOrders: QueryDef = QueryDef.withOracle(
-    """SELECT o_orderkey, o_custkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice
-      |FROM orders
-      |ORDER BY o_totalprice DESC, o_orderkey
-      |LIMIT 10""".stripMargin) { (s, dir) =>
-    t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice").cast("double"))
-      .orderBy(desc("o_totalprice"), asc("o_orderkey"))
-      .limit(10)
-  }
-
-  /** Distinct aggregation over two keys in one pass. */
-  val q06DistinctCounts: QueryDef = QueryDef.withOracle(
-    """SELECT COUNT(DISTINCT l_partkey) AS n_parts,
-      |  COUNT(DISTINCT l_suppkey) AS n_supps,
-      |  COUNT(*) AS n_rows
-      |FROM lineitem""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem")
-      .agg(
-        countDistinct(col("l_partkey")).as("n_parts"),
-        countDistinct(col("l_suppkey")).as("n_supps"),
-        count(lit(1)).as("n_rows"))
-  }
-
-  /** Ranking window function: top-3 orders per customer. */
-  val q07WindowTop3: QueryDef = QueryDef.withOracle(
-    """SELECT o_custkey, o_orderkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice, rn
-      |FROM (
-      |  SELECT o_custkey, o_orderkey, o_totalprice,
-      |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      |  FROM orders) x
-      |WHERE rn <= 3
-      |ORDER BY o_custkey, rn""".stripMargin) { (s, dir) =>
-    val w = Window.partitionBy("o_custkey").orderBy(desc("o_totalprice"), asc("o_orderkey"))
-    t(s, dir, "orders")
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 3)
-      .select(col("o_custkey"), col("o_orderkey"),
-        col("o_totalprice").cast("double").as("o_totalprice"), col("rn"))
-  }.sortedDump("o_custkey", "rn")
-
-  /** Semi join: customers having at least one big order. */
-  val q08SemiJoin: QueryDef = QueryDef.withOracle(
-    """SELECT c_custkey, c_name
-      |FROM customer
-      |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 450000)
-      |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
-    t(s, dir, "customer")
-      .join(
-        t(s, dir, "orders").where(col("o_totalprice") > 450000),
-        col("c_custkey") === col("o_custkey"), "left_semi")
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-  }
-
-  /** Anti join: customers with no large order (every customer has SOME
-    * order in the fixtures, so the filter keeps the result non-empty — an
-    * all-empty match would be weak evidence).
-    */
-  val q09AntiJoin: QueryDef = QueryDef.withOracle(
-    """SELECT c_custkey, c_name
-      |FROM customer
-      |WHERE NOT EXISTS (
-      |  SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400000)
-      |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
-    t(s, dir, "customer")
-      .join(
-        t(s, dir, "orders").where(col("o_totalprice") > 400000),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-  }
-
-  /** Set operation: referenced part keys absent from the large-size parts. */
-  val q10SetOps: QueryDef = QueryDef.withOracle(
-    """SELECT l_partkey FROM lineitem
-      |EXCEPT
-      |SELECT p_partkey FROM part WHERE p_size > 25
-      |ORDER BY l_partkey""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem").select("l_partkey")
-      .except(t(s, dir, "part").where(col("p_size") > 25)
-        .select(col("p_partkey").as("l_partkey")))
-  }.sortedDump("l_partkey")
-
-  /** Grouping sets / ROLLUP with NULL-safe sentinel labels. */
-  val q11Rollup: QueryDef = QueryDef.withOracle(
-    """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-      |  COALESCE(l_linestatus, 'ALL') AS linestatus,
-      |  COUNT(*) AS n,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-      |FROM lineitem
-      |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-      |ORDER BY returnflag, linestatus""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem")
-      .rollup("l_returnflag", "l_linestatus")
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))
-      .select(
-        coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-        coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-        col("n"), col("sum_qty"))
-      .orderBy("returnflag", "linestatus")
-  }
-
-  /** Events per type: counts, exact value sums, distinct users. */
-  val q12EventsByType: QueryDef = QueryDef.withOracle(
-    """SELECT event_type,
-      |  COUNT(*) AS n_events,
-      |  COUNT(DISTINCT user_id) AS n_users,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      |FROM events
-      |GROUP BY event_type
-      |ORDER BY event_type""".stripMargin) { (s, dir) =>
-    t(s, dir, "events")
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n_events"),
-        countDistinct(col("user_id")).as("n_users"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .orderBy("event_type")
-  }
-
-  /** Daily tumbling-window aggregation (batch form of the streaming agg):
-    * Spark's `window()` on a UTC session = DuckDB `date_trunc('day', ts)`.
-    */
-  val q13EventsDaily: QueryDef = QueryDef.withOracle(
-    """SELECT CAST(FLOOR(epoch(date_trunc('day', ts))) AS BIGINT) AS window_start,
-      |  event_type,
-      |  COUNT(*) AS n_events,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      |FROM events
-      |GROUP BY 1, 2
-      |ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-    t(s, dir, "events")
-      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .select(
-        unix_timestamp(col("w.start")).as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-      .orderBy("window_start", "event_type")
-  }
-
-  /** Documents per (lang, source): counts and exact char sums. */
-  val q14DocsByLang: QueryDef = QueryDef.withOracle(
-    """SELECT lang, source,
-      |  COUNT(*) AS n_docs,
-      |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-      |  CAST(CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS DOUBLE) AS avg_chars
-      |FROM documents
-      |GROUP BY lang, source
-      |ORDER BY lang, source""".stripMargin) { (s, dir) =>
-    t(s, dir, "documents")
-      .groupBy("lang", "source")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("sum_chars"),
-        (sum(col("n_chars")).cast("double") / count(lit(1))).cast("double").as("avg_chars"))
-      .orderBy("lang", "source")
-  }
-
-  /** Per-document token/char counting (whitespace tokenizer; counts as
-    * BIGINT on both sides).
-    */
-  val q15TokenStats: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id,
-      |  CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tokens,
-      |  CAST(length(text) AS BIGINT) AS n_chars_computed
-      |FROM documents
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    t(s, dir, "documents")
-      .select(
-        col("doc_id"),
-        size(split(col("text"), " ")).cast("bigint").as("n_tokens"),
-        length(col("text")).cast("bigint").as("n_chars_computed"))
-  }.sortedDump("doc_id")
-
-  /** Exact-dedup hash groups over documents (md5 hex is identical in both
-    * engines): one row per distinct content with keeper id + copy count.
-    */
-  val q16DedupExact: QueryDef = QueryDef.withOracle(
-    """SELECT md5(text) AS content_hash,
-      |  COUNT(*) AS n_copies,
-      |  MIN(doc_id) AS keeper_id
-      |FROM documents
-      |GROUP BY md5(text)
-      |ORDER BY content_hash""".stripMargin) { (s, dir) =>
-    t(s, dir, "documents")
-      .groupBy(md5(col("text")).as("content_hash"))
-      .agg(
-        count(lit(1)).as("n_copies"),
-        min(col("doc_id")).as("keeper_id"))
-  }.sortedDump("content_hash")
-
-  /** Text-quality feature extraction, cross-engine form: stopword counts via
-    * list filtering, portable token arithmetic.
-    */
-  val q17QualityFeatures: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id,
-      |  CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tokens,
-      |  CAST(len(list_filter(str_split(text, ' '),
-      |       x -> x IN ('the','a','an','and','or','of','to','in','is','it','on','for'))) AS BIGINT)
-      |    AS n_stopwords
-      |FROM documents
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val toks = split(col("text"), " ")
-    t(s, dir, "documents")
-      .select(
-        col("doc_id"),
-        size(toks).cast("bigint").as("n_tokens"),
-        size(filter(toks, w => w.isInCollection(
-          Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "on", "for"))))
-          .cast("bigint").as("n_stopwords"))
-      .orderBy("doc_id")
-  }
-
-  /** Scalar subquery: orders above the global mean price (mean computed
-    * exactly in DECIMAL, compared once in DOUBLE).
-    */
-  val q18AboveAvgOrders: QueryDef = QueryDef.withOracle(
-    """SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice
-      |FROM orders
-      |WHERE o_totalprice > (
-      |  SELECT CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS DOUBLE)
-      |  FROM orders)
-      |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-    val orders = t(s, dir, "orders")
-    val avgRow = orders.agg(
-      (sum(col("o_totalprice").cast("decimal(18,2)")).cast("double") / count(lit(1)))
-        .cast("double").as("a"))
-    orders.join(avgRow)
-      .where(col("o_totalprice") > col("a"))
-      .select(col("o_orderkey"), col("o_totalprice").cast("double").as("o_totalprice"))
-      .orderBy("o_orderkey")
-  }
-
-  /** Conditional (pivot-style) aggregation per user. */
-  val q19UserTypePivot: QueryDef = QueryDef.withOracle(
-    """SELECT user_id,
-      |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase_value,
-      |  CAST(SUM(CASE WHEN event_type = 'view' THEN CAST(value AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS view_value,
-      |  COUNT(*) AS n_events
-      |FROM events
-      |GROUP BY user_id
-      |ORDER BY user_id""".stripMargin) { (s, dir) =>
-    t(s, dir, "events")
-      .groupBy("user_id")
-      .agg(
-        sum(when(col("event_type") === "purchase", col("value").cast("decimal(18,2)"))
-          .otherwise(lit(0).cast("decimal(18,2)"))).cast("double").as("purchase_value"),
-        sum(when(col("event_type") === "view", col("value").cast("decimal(18,2)"))
-          .otherwise(lit(0).cast("decimal(18,2)"))).cast("double").as("view_value"),
-        count(lit(1)).as("n_events"))
-      .orderBy("user_id")
-  }
-
-  /** Fact-to-dim join + aggregate at the part grain. */
-  val q20BrandRevenue: QueryDef = QueryDef.withOracle(
-    """SELECT p_brand,
-      |  COUNT(*) AS n_lines,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-      |FROM lineitem JOIN part ON l_partkey = p_partkey
-      |GROUP BY p_brand
-      |ORDER BY p_brand""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
-      .groupBy("p_brand")
-      .agg(
-        count(lit(1)).as("n_lines"),
-        sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)"))).cast("double").as("revenue"))
-      .orderBy("p_brand")
-  }
-
-  /** Min/max over timestamps surfaced as DATE (cross-engine-safe). */
-  val q21DateBounds: QueryDef = QueryDef.withOracle(
-    """SELECT l_returnflag,
-      |  strftime(CAST(MIN(l_shipdate) AS DATE), '%Y-%m-%d') AS min_ship,
-      |  strftime(CAST(MAX(l_shipdate) AS DATE), '%Y-%m-%d') AS max_ship
-      |FROM lineitem
-      |GROUP BY l_returnflag
-      |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem")
-      .groupBy("l_returnflag")
-      .agg(
-        date_format(min(col("l_shipdate")), "yyyy-MM-dd").as("min_ship"),
-        date_format(max(col("l_shipdate")), "yyyy-MM-dd").as("max_ship"))
-      .orderBy("l_returnflag")
-  }
-
-  /** Two-level aggregation: average order count per customer nation. */
-  val q22NestedAgg: QueryDef = QueryDef.withOracle(
-    """SELECT n_name,
-      |  COUNT(*) AS n_customers,
-      |  CAST(SUM(n_orders) AS BIGINT) AS total_orders,
-      |  CAST(CAST(SUM(n_orders) AS DOUBLE) / COUNT(*) AS DOUBLE) AS avg_orders_per_cust
-      |FROM (
-      |  SELECT c_custkey, c_nationkey, (
-      |    SELECT COUNT(*) FROM orders WHERE o_custkey = c_custkey) AS n_orders
-      |  FROM customer) x
-      |JOIN nation ON c_nationkey = n_nationkey
-      |GROUP BY n_name
-      |ORDER BY n_name""".stripMargin) { (s, dir) =>
-    val perCust = t(s, dir, "customer")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left")
-      .groupBy("c_custkey", "c_nationkey")
-      .agg(count(col("o_orderkey")).as("n_orders"))
-    perCust
-      .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .groupBy("n_name")
-      .agg(
-        count(lit(1)).as("n_customers"),
-        sum(col("n_orders")).as("total_orders"),
-        (sum(col("n_orders")).cast("double") / count(lit(1))).cast("double")
-          .as("avg_orders_per_cust"))
-      .orderBy("n_name")
-  }
-
-  /** SQL-string interface over registered views — same engine, textual
-    * entry point (TPC-H Q3 shape). Demonstrates the spark.sql surface the
-    * reference lacks entirely (SURVEY.md §2.11).
-    */
-  val q23SqlInterface: QueryDef = QueryDef.withOracle(
-    """SELECT o_orderkey,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-      |  strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS orderdate
-      |FROM customer JOIN orders ON c_custkey = o_custkey
-      |JOIN lineitem ON l_orderkey = o_orderkey
-      |WHERE c_mktsegment = 'BUILDING'
-      |GROUP BY o_orderkey, o_orderdate
-      |ORDER BY revenue DESC, o_orderkey
-      |LIMIT 20""".stripMargin) { (s, dir) =>
-    graft.Tables.registerAll(s, dir)
-    s.sql(
-      """SELECT o_orderkey,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  date_format(o_orderdate, 'yyyy-MM-dd') AS orderdate
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue DESC, o_orderkey
-        |LIMIT 20""".stripMargin)
-  }
-
-  /** CUBE grouping sets (all 4 combinations) with sentinel labels. */
-  val q24Cube: QueryDef = QueryDef.withOracle(
-    """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-      |  COALESCE(l_linestatus, 'ALL') AS linestatus,
-      |  COUNT(*) AS n
-      |FROM lineitem
-      |GROUP BY CUBE(l_returnflag, l_linestatus)
-      |ORDER BY returnflag, linestatus""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem")
-      .cube("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("n"))
-      .select(
-        coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-        coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-        col("n"))
-      .orderBy("returnflag", "linestatus")
-  }
-
-  /** Skew-aware salted join: result must be EXACTLY the plain equi-join
-    * (the oracle is the plain SQL join) while the physical plan spreads
-    * sampled-hot keys over `saltFactor` buckets. Hot-key-ONLY salting
-    * (`SkewJoin.skewAwareInnerJoin`): the blanket form replicates the
-    * whole right side ×saltFactor — measured 51.2 s vs 13.9 s at ×100 on
-    * this uniform-key join, and a non-starter at 100 TB. The blanket form
-    * remains exercised by SkewJoinSpec.
-    */
-  val q25SkewSaltedJoin: QueryDef = QueryDef.withOracle(
-    """SELECT l_orderkey, l_linenumber, o_custkey,
-      |  CAST(l_quantity AS DOUBLE) AS quantity,
-      |  CAST(o_totalprice AS DOUBLE) AS totalprice
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
-    graft.ops.SkewJoin.skewAwareInnerJoin(
-      t(s, dir, "lineitem").withColumn("k", col("l_orderkey")),
-      t(s, dir, "orders").withColumn("k", col("o_orderkey")),
-      "k", saltFactor = 8)
-      .select(
-        col("l_orderkey"), col("l_linenumber"), col("o_custkey"),
-        col("l_quantity").cast("double").as("quantity"),
-        col("o_totalprice").cast("double").as("totalprice"))
-  }.sortedDump("l_orderkey", "l_linenumber")
-
-  /** AS-OF join (point-in-time lookup): each event gets the latest
-    * at-or-before 'purchase' event of the same user. Spark lacks a native
-    * as-of join — composed from union + one window pass (see
-    * `graft/ops/AsofJoin.scala`); DuckDB's native ASOF JOIN is the oracle.
-    */
-  val q26AsofJoin: QueryDef = QueryDef.withOracle(
-    """WITH p AS (
-      |  SELECT user_id, ts,
-      |    arg_max(event_id, event_id) AS prev_purchase_id,
-      |    arg_max(value, event_id) AS prev_purchase_value
-      |  FROM events WHERE event_type = 'purchase'
-      |  GROUP BY user_id, ts)
-      |SELECT e.event_id, e.user_id,
-      |  p.prev_purchase_id,
-      |  CAST(p.prev_purchase_value AS DOUBLE) AS prev_purchase_value
-      |FROM events e ASOF LEFT JOIN p
-      |  ON e.user_id = p.user_id AND e.ts >= p.ts
-      |ORDER BY e.event_id""".stripMargin) { (s, dir) =>
-    val events = t(s, dir, "events")
-    val purchases = events.where(col("event_type") === "purchase")
-      .groupBy("user_id", "ts")
-      .agg(
-        max("event_id").as("prev_purchase_id"),
-        max_by(col("value"), col("event_id")).as("prev_purchase_value"))
-    graft.ops.AsofJoin.asofJoin(
-      events.select("event_id", "user_id", "ts"),
-      purchases,
-      leftKey = "user_id", rightKey = "user_id",
-      leftTime = "ts", rightTime = "ts",
-      rightCols = Seq("prev_purchase_id", "prev_purchase_value"))
-      .select(
-        col("event_id"), col("user_id"),
-        col("prev_purchase_id"),
-        col("prev_purchase_value").cast("double").as("prev_purchase_value"))
-  }.sortedDump("event_id")
-
-  /** Batch sessionization (gaps-and-islands): per-user sessions split at
-    * >30-minute gaps — lag + running sum of session-break markers, then one
-    * aggregate per session. The relational form of the streaming
-    * sessionizers (stream_sessions / EventsStream.sessionizeStateful).
-    */
-  val q27Sessionization: QueryDef = QueryDef.withOracle(
-    """WITH marked AS (
-      |  SELECT user_id, ts, value, event_id,
-      |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-      |           OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-      |         THEN 1 ELSE 0 END AS new_sess
-      |  FROM events),
-      |sess AS (
-      |  SELECT *, CAST(SUM(new_sess) OVER (
-      |    PARTITION BY user_id ORDER BY ts, event_id
-      |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_id
-      |  FROM marked)
-      |SELECT user_id, sess_id,
-      |  CAST(FLOOR(epoch(MIN(ts))) AS BIGINT) AS session_start,
-      |  COUNT(*) AS n_events,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      |FROM sess
-      |GROUP BY user_id, sess_id
-      |ORDER BY user_id, sess_id""".stripMargin) { (s, dir) =>
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val marked = t(s, dir, "events")
-      .withColumn("prev_sec", lag(col("ts").cast("double"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_sec").isNull ||
-          col("ts").cast("double") - col("prev_sec") > 1800, 1).otherwise(0))
-    marked
-      .withColumn("sess_id",
-        sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("bigint"))
-      .groupBy("user_id", "sess_id")
-      .agg(
-        unix_timestamp(min(col("ts"))).as("session_start"),
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .orderBy("user_id", "sess_id")
-  }
-
-  /** Custom-state streaming sessionization (flatMapGroupsWithState with
-    * event-time timeout). The emitted set IS SQL-expressible for an
-    * AvailableNow run: every gap-closed session, plus trailing sessions
-    * whose event-time timeout (`last_ts + gap`) the FINAL watermark
-    * (`max(ts) - 1 hour`) strictly passed — only sessions still open
-    * against the final watermark stay in state, unemitted. The oracle
-    * replays the q27 islands form and applies exactly that emission rule.
-    * `sum_value` is rounded to 2 decimals on both sides: the stream folds
-    * raw doubles in event order, the oracle sums in DuckDB's order, and the
-    * fixture's 2-decimal values make the rounded sums identical while the
-    * raw last-bits need not be. Open-state semantics (what is NOT emitted)
-    * are additionally asserted in StreamingSpec.
-    */
-  val streamSessions: QueryDef = QueryDef.withOracle(
-    """WITH marked AS (
-      |  SELECT user_id, ts, value, event_id,
-      |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-      |           OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-      |         THEN 1 ELSE 0 END AS new_sess
-      |  FROM events),
-      |sess AS (
-      |  SELECT *, CAST(SUM(new_sess) OVER (
-      |    PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_id
-      |  FROM marked),
-      |agg AS (
-      |  SELECT user_id, sess_id,
-      |    CAST(FLOOR(epoch(MIN(ts))) AS BIGINT) AS session_start,
-      |    COUNT(*) AS n_events,
-      |    CAST(ROUND(SUM(value), 2) AS DOUBLE) AS sum_value,
-      |    MAX(epoch(ts)) AS end_sec
-      |  FROM sess GROUP BY user_id, sess_id),
-      |last AS (SELECT user_id, MAX(sess_id) AS last_sess FROM agg GROUP BY user_id),
-      |wm AS (SELECT MAX(epoch(ts)) - 3600 AS w FROM events)
-      |SELECT a.user_id, a.session_start, a.n_events, a.sum_value
-      |FROM agg a JOIN last l ON a.user_id = l.user_id, wm
-      |WHERE a.sess_id < l.last_sess OR a.end_sec + 1800 < wm.w
-      |ORDER BY a.user_id, a.session_start""".stripMargin) { (s, dir) =>
-    EventsStream.runToBatch(s, dir, EventsStream.sessionizeStateful(_),
-      s"stream_sessions_${math.abs(dir.hashCode)}")
-      .withColumn("sum_value", round(col("sum_value"), 2))
-      .orderBy("user_id", "session_start")
-  }
-
-  /** Range (interval) join: events falling inside daily 10:00-11:00
-    * maintenance windows derived from the same table. Spark has no native
-    * range join (a raw BETWEEN condition plans as a nested-loop join) —
-    * composed as explode-intervals-to-buckets + equi-join + residual filter
-    * (`graft/ops/RangeJoin.scala`); DuckDB's plain BETWEEN join is the
-    * oracle. Windows are disjoint → one output row per matching event.
-    */
-  val q29RangeJoin: QueryDef = QueryDef.withOracle(
-    """WITH windows AS (
-      |  SELECT CAST(FLOOR(epoch(d)) AS BIGINT) AS win_id,
-      |    d + INTERVAL 10 HOUR AS win_start,
-      |    d + INTERVAL 11 HOUR AS win_end
-      |  FROM (SELECT DISTINCT date_trunc('day', ts) AS d FROM events))
-      |SELECT e.event_id, w.win_id, e.user_id,
-      |  CAST(e.value AS DOUBLE) AS value
-      |FROM events e JOIN windows w
-      |  ON e.ts >= w.win_start AND e.ts <= w.win_end
-      |ORDER BY e.event_id""".stripMargin) { (s, dir) =>
-    val events = t(s, dir, "events")
-    val windows = events
-      .select(date_trunc("day", col("ts")).as("d")).distinct()
-      .select(
-        unix_timestamp(col("d")).as("win_id"),
-        (col("d") + expr("INTERVAL 10 HOURS")).as("win_start"),
-        (col("d") + expr("INTERVAL 11 HOURS")).as("win_end"))
-    graft.ops.RangeJoin.bucketedRangeJoin(
-      events, windows, leftTime = "ts",
-      rightStart = "win_start", rightEnd = "win_end", bucketWidth = 3600L)
-      .select(col("event_id"), col("win_id"), col("user_id"),
-        col("value").cast("double").as("value"))
-      .orderBy("event_id")
-  }
-
-  /** Custom UDAF surface: bounded top-k aggregator (O(k) buffer, map-side
-    * merged) vs the full-sort window form as oracle — same answer, very
-    * different scaling on huge groups.
-    */
-  val q28TopkUdaf: QueryDef = QueryDef.withOracle(
-    """SELECT o_custkey, o_orderkey, rn,
-      |  CAST(o_totalprice AS DOUBLE) AS o_totalprice
-      |FROM (
-      |  SELECT o_custkey, o_orderkey, o_totalprice,
-      |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      |  FROM orders) x
-      |WHERE rn <= 3
-      |ORDER BY o_custkey, rn""".stripMargin) { (s, dir) =>
-    t(s, dir, "orders")
-      .groupBy("o_custkey")
-      .agg(graft.functions.TopKAggregator.topK(3)(
-        col("o_orderkey"), col("o_totalprice").cast("double")).as("top"))
-      .select(col("o_custkey"),
-        posexplode(arrays_zip(col("top.ids"), col("top.scores"))).as(Seq("pos", "pair")))
-      .select(
-        col("o_custkey"),
-        col("pair.ids").as("o_orderkey"),
-        (col("pos") + 1).cast("int").as("rn"),
-        col("pair.scores").as("o_totalprice"))
-  }.sortedDump("o_custkey", "rn")
-
-  // ------------------------------------------------------------------
-  // ALS surface (the reference's own capability)
-  // ------------------------------------------------------------------
-
-  /** Ratings derivation shared by all ALS queries: customer×part interaction
-    * strength from the fact table (`user = o_custkey, item = l_partkey,
-    * rating = Σ quantity`).
-    */
-  val alsRatings: QueryDef = QueryDef.withOracle(
-    """SELECT o_custkey AS user_id, l_partkey AS item_id,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS rating
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |GROUP BY 1, 2
-      |ORDER BY 1, 2""".stripMargin) { (s, dir) => ratingsDF(s, dir) }
-    .sortedDump("user_id", "item_id")
 
   /** Unordered — training consumers don't pay a global sort; the oracle
     * query (als_ratings) adds its own ORDER BY.
@@ -714,7 +49,7 @@ object Queries {
   /** Sink dirs already (re)written by THIS JVM — see alsCsvRatings /
     * docsPartitionedScan.
     */
-  private val csvWritten =
+  private[queries] val csvWritten =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Collision-resistant key for scratch paths derived from a data dir.
@@ -724,7 +59,7 @@ object Queries {
     * md5 of the full dir matches the granularity of [[SessionArtifacts]],
     * which keys by the dir string itself.
     */
-  private def dirKey(dir: String): String =
+  private[queries] def dirKey(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString.take(16)
@@ -747,7 +82,7 @@ object Queries {
     * (the IVF-PQ contract; see Similarity.withCellResiduals), so the two
     * entries always describe the same composed index.
     */
-  private def trainedPq(s: SparkSession, dir: String): Array[Array[Array[Float]]] =
+  private[queries] def trainedPq(s: SparkSession, dir: String): Array[Array[Array[Float]]] =
     SessionArtifacts.getOrBuild(s, dir, "pq")(Similarity.trainPqCodebooks(
       Similarity.withCellResiduals(t(s, dir, "embeddings"), trainedCodebook(s, dir)),
       vecCol = "residual"))
@@ -759,7 +94,7 @@ object Queries {
     * trained floats, rather than two k-means runs whose
     * double-accumulation order could differ at the last bit.
     */
-  private def trainedMipsIdx(s: SparkSession, dir: String): Similarity.MipsIndex =
+  private[queries] def trainedMipsIdx(s: SparkSession, dir: String): Similarity.MipsIndex =
     SessionArtifacts.getOrBuild(s, dir, "mipsIndex") {
       val e = t(s, dir, "embeddings")
       Similarity.trainMipsIndex(e, vecCol = "embedding", dim = 64,
@@ -796,97 +131,12 @@ object Queries {
   private[graft] def model(s: SparkSession, dir: String): GraftALSModel =
     sessionModel(s, dir, "model", sessionAls)
 
-  /** MEMBERSHIP oracle for an exploded trained-float dump `(id, pos,
-    * value)` (round-7 verdict #7): DuckDB cannot train ALS/k-means, so the
-    * float VALUES pass through the engine's own dump via a left join —
-    * self-referential by design, spec-checked on the engine side — while
-    * the (id, pos) GRID is derived independently (`idsSql` × pos
-    * 0..dim−1). The gate then pins row membership, row count, and schema:
-    * a factor row for an id outside the derivation, a missing id, or a
-    * missing position fails rows/hash; only the float magnitudes stay
-    * engine-specific. This is the partial-green form the round-7 verdict
-    * prescribed for the trained-float surfaces.
-    */
-  private def duckMembershipOracle(
-      dump: String,
-      idsSql: String,
-      dim: Int,
-      idCol: String = "id",
-      posCol: String = "pos"): String =
-    s"""WITH ids AS ($idsSql),
-       |grid AS (
-       |  SELECT ids.id, CAST(pp.p AS INT) AS pos
-       |  FROM ids CROSS JOIN (SELECT unnest(generate_series(0, ${dim - 1})) AS p) pp)
-       |SELECT g.id AS $idCol, g.pos AS $posCol, f.value
-       |FROM grid g LEFT JOIN read_parquet('{{OUT}}/$dump/*.parquet') f
-       |  ON f.$idCol = g.id AND f.$posCol = g.pos
-       |ORDER BY g.id, g.pos""".stripMargin
-
-  /** The ratings derivation's distinct user / item id sets — the exact id
-    * universes blocked-ALS factors must cover, as oracle-side SQL.
-    */
-  private val duckRatingsUserIds =
-    "SELECT DISTINCT o_custkey AS id FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-  private val duckRatingsItemIds =
-    "SELECT DISTINCT l_partkey AS id FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-
-  /** Trained user factors, dumped as exploded `(id, pos, value)` scalar
-    * rows (the driver harness sorts the dump with pandas, which cannot
-    * order raw ARRAY cells). Membership-checked: exactly one factor row
-    * per (ratings user × rank position) — see [[duckMembershipOracle]];
-    * values are spec-checked (determinism/parity/recovery suites).
-    */
-  val alsUserFactors: QueryDef = QueryDef.withOracle(
-    duckMembershipOracle("als_user_factors", duckRatingsUserIds, 8)) { (s, dir) =>
-    model(s, dir).userFactors
-      .select(col("id"), posexplode(col("features")).as(Seq("pos", "value")))
-  }.sortedDump("id", "pos")
-
-  val alsItemFactors: QueryDef = QueryDef.withOracle(
-    duckMembershipOracle("als_item_factors", duckRatingsItemIds, 8)) { (s, dir) =>
-    model(s, dir).itemFactors
-      .select(col("id"), posexplode(col("features")).as(Seq("pos", "value")))
-  }.sortedDump("id", "pos")
-
   /** NNLS-trained model (nonnegative = true) — the projected-gradient
     * NNLS solver was spec-only (SolverSpec KKT) until round 9; this model
     * routes it through the gate.
     */
   private[graft] def nnModel(s: SparkSession, dir: String): GraftALSModel =
     sessionModel(s, dir, "nnModel", sessionAls.copy(nonnegative = true))
-
-  /** Both factor halves of a `nonnegative = true` training run
-    * (round-8 verdict #8: NNLS existed only behind SolverSpec; no gate
-    * query trained with it). Membership-checked over the full
-    * (side × ids × rank) grid AND nonnegativity-ENFORCING: the oracle
-    * returns rows only while `MIN(value) >= 0` across the whole dump, so
-    * a single negative coordinate from the NNLS path empties the oracle
-    * side and fails the gate as a rows mismatch (the solved magnitudes
-    * themselves stay engine-specific, as for every trained-float surface).
-    */
-  val alsNonnegativeFactors: QueryDef = QueryDef.withOracle(
-    s"""WITH uids AS ($duckRatingsUserIds),
-       |iids AS ($duckRatingsItemIds),
-       |pp AS (SELECT CAST(unnest(generate_series(0, 7)) AS INT) AS pos),
-       |grid AS (
-       |  SELECT 'u' AS side, uids.id, pp.pos FROM uids CROSS JOIN pp
-       |  UNION ALL
-       |  SELECT 'i' AS side, iids.id, pp.pos FROM iids CROSS JOIN pp)
-       |SELECT g.side, g.id, g.pos, f.value
-       |FROM grid g LEFT JOIN
-       |  read_parquet('{{OUT}}/als_nonnegative_factors/*.parquet') f
-       |  ON f.side = g.side AND f.id = g.id AND f.pos = g.pos
-       |WHERE (SELECT MIN(value)
-       |       FROM read_parquet('{{OUT}}/als_nonnegative_factors/*.parquet')) >= 0
-       |ORDER BY g.side, g.id, g.pos""".stripMargin) { (s, dir) =>
-    val m = nnModel(s, dir)
-    m.userFactors
-      .select(lit("u").as("side"), col("id"),
-        posexplode(col("features")).as(Seq("pos", "value")))
-      .unionByName(m.itemFactors
-        .select(lit("i").as("side"), col("id"),
-          posexplode(col("features")).as(Seq("pos", "value"))))
-  }.sortedDump("side", "id", "pos")
 
   /** Rank-32 training run. The round-15 rank sweep
     * found a 1.47×-MLlib regression at rank 64 (per-entity solver scratch
@@ -898,65 +148,6 @@ object Queries {
   private[graft] def rank32Model(s: SparkSession, dir: String): GraftALSModel =
     sessionModel(s, dir, "rank32Model", sessionAls.copy(rank = 32))
 
-  /** Both factor halves of the rank-32 run, membership-checked over the
-    * full (side × ids × 32 positions) grid AND capacity-ENFORCING: the
-    * oracle replays the rank-32 training-set MSE from this dump (pivoted
-    * 32-wide factor CTEs, same left-to-right double dot as the rank-8
-    * replay) and the rank-8 MSE from the als_user/item_factors dumps, and
-    * returns rows only while rank-32 fits the training set at least as
-    * well — 4× the capacity under the same λ must not fit WORSE; a
-    * rank-axis solver bug (wrong scratch reuse, wrong λ·n scaling at
-    * k=32) empties the oracle side and fails the gate as a rows mismatch.
-    * A NaN/Inf guard rides the same clause (NaN MSE fails the <=).
-    *
-    * The clause carries 5% slack (mse32 ≤ 1.05·mse8): 5-iteration
-    * non-convex ALS doesn't GUARANTEE more capacity fits better — it
-    * holds comfortably on the pinned seed/data (r16: mse32 well under
-    * mse8), but a protocol change (seed, maxIter, tier) could flip a
-    * knife-edge ≤ and surface as an opaque full-rows mismatch. With the
-    * slack, a trip means a real rank-axis solver regression (those are
-    * multiples, not percents — the r15 bug was 1.47×), not a capacity
-    * coin-flip (round-16 advice).
-    */
-  val alsRank32Factors: QueryDef = QueryDef.withOracle(
-    s"""WITH uids AS ($duckRatingsUserIds),
-       |iids AS ($duckRatingsItemIds),
-       |pp AS (SELECT CAST(unnest(generate_series(0, 31)) AS INT) AS pos),
-       |grid AS (
-       |  SELECT 'u' AS side, uids.id, pp.pos FROM uids CROSS JOIN pp
-       |  UNION ALL
-       |  SELECT 'i' AS side, iids.id, pp.pos FROM iids CROSS JOIN pp),
-       |ratings AS (
-       |  SELECT o_custkey AS user_id, l_partkey AS item_id,
-       |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS rating
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1, 2),
-       |${duckFactorCte("uf32", "als_rank32_factors", "u", 32, "WHERE side = 'u'")},
-       |${duckFactorCte("if32", "als_rank32_factors", "i", 32, "WHERE side = 'i'")},
-       |${duckFactorCte("uf8", "als_user_factors", "u")},
-       |${duckFactorCte("if8", "als_item_factors", "i")},
-       |mse32 AS (
-       |  SELECT AVG(POW(${duckFactorDot("u", "i", 32)} - r.rating, 2)) AS m
-       |  FROM ratings r JOIN uf32 ON r.user_id = uf32.id
-       |    JOIN if32 ON r.item_id = if32.id),
-       |mse8 AS (
-       |  SELECT AVG(POW(${duckFactorDot("u", "i")} - r.rating, 2)) AS m
-       |  FROM ratings r JOIN uf8 ON r.user_id = uf8.id
-       |    JOIN if8 ON r.item_id = if8.id)
-       |SELECT g.side, g.id, g.pos, f.value
-       |FROM grid g LEFT JOIN
-       |  read_parquet('{{OUT}}/als_rank32_factors/*.parquet') f
-       |  ON f.side = g.side AND f.id = g.id AND f.pos = g.pos
-       |WHERE (SELECT m FROM mse32) <= (SELECT m FROM mse8) * 1.05
-       |ORDER BY g.side, g.id, g.pos""".stripMargin) { (s, dir) =>
-    val m = rank32Model(s, dir)
-    m.userFactors
-      .select(lit("u").as("side"), col("id"),
-        posexplode(col("features")).as(Seq("pos", "value")))
-      .unionByName(m.itemFactors
-        .select(lit("i").as("side"), col("id"),
-          posexplode(col("features")).as(Seq("pos", "value"))))
-  }.sortedDump("side", "id", "pos")
-
   /** Rank-64 training run. Rank 64 is where
     * the round-15 solver-scratch regression actually bit (1.47×-MLlib wall
     * time, invisible below rank 32 because the Gramian/solve term only
@@ -966,840 +157,16 @@ object Queries {
   private[graft] def rank64Model(s: SparkSession, dir: String): GraftALSModel =
     sessionModel(s, dir, "rank64Model", sessionAls.copy(rank = 64))
 
-  /** Both factor halves of the rank-64 run — the same membership +
-    * capacity-ENFORCING oracle shape as [[alsRank32Factors]], one rank
-    * tier up: the (side × ids × 64 positions) grid is derived
-    * independently, and the oracle replays the rank-64 training-set MSE
-    * from this dump and returns rows only while it fits at least as well
-    * as the rank-8 run (same 5% non-convexity slack, same rationale — a
-    * trip is a rank-axis solver regression, which historically shows up
-    * as a multiple, not a percent). The r15 scratch-churn class of bug
-    * regressed AT rank 64 specifically; this row makes that class
-    * gate-visible at the rank where it bit.
-    */
-  val alsRank64Factors: QueryDef = QueryDef.withOracle(
-    s"""WITH uids AS ($duckRatingsUserIds),
-       |iids AS ($duckRatingsItemIds),
-       |pp AS (SELECT CAST(unnest(generate_series(0, 63)) AS INT) AS pos),
-       |grid AS (
-       |  SELECT 'u' AS side, uids.id, pp.pos FROM uids CROSS JOIN pp
-       |  UNION ALL
-       |  SELECT 'i' AS side, iids.id, pp.pos FROM iids CROSS JOIN pp),
-       |ratings AS (
-       |  SELECT o_custkey AS user_id, l_partkey AS item_id,
-       |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS rating
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1, 2),
-       |${duckFactorCte("uf64", "als_rank64_factors", "u", 64, "WHERE side = 'u'")},
-       |${duckFactorCte("if64", "als_rank64_factors", "i", 64, "WHERE side = 'i'")},
-       |${duckFactorCte("uf8", "als_user_factors", "u")},
-       |${duckFactorCte("if8", "als_item_factors", "i")},
-       |mse64 AS (
-       |  SELECT AVG(POW(${duckFactorDot("u", "i", 64)} - r.rating, 2)) AS m
-       |  FROM ratings r JOIN uf64 ON r.user_id = uf64.id
-       |    JOIN if64 ON r.item_id = if64.id),
-       |mse8 AS (
-       |  SELECT AVG(POW(${duckFactorDot("u", "i")} - r.rating, 2)) AS m
-       |  FROM ratings r JOIN uf8 ON r.user_id = uf8.id
-       |    JOIN if8 ON r.item_id = if8.id)
-       |SELECT g.side, g.id, g.pos, f.value
-       |FROM grid g LEFT JOIN
-       |  read_parquet('{{OUT}}/als_rank64_factors/*.parquet') f
-       |  ON f.side = g.side AND f.id = g.id AND f.pos = g.pos
-       |WHERE (SELECT m FROM mse64) <= (SELECT m FROM mse8) * 1.05
-       |ORDER BY g.side, g.id, g.pos""".stripMargin) { (s, dir) =>
-    val m = rank64Model(s, dir)
-    m.userFactors
-      .select(lit("u").as("side"), col("id"),
-        posexplode(col("features")).as(Seq("pos", "value")))
-      .unionByName(m.itemFactors
-        .select(lit("i").as("side"), col("id"),
-          posexplode(col("features")).as(Seq("pos", "value"))))
-  }.sortedDump("side", "id", "pos")
-
-  /** Serving-time user fold-in (one exact ALS-WR user half-step against
-    * the fixed item factors — the cold-start answer the reference lacks)
-    * for a hash-slice of users, dumped as scalar rows. Membership-checked
-    * (slice users × rank grid — the solved floats pass through, exact
-    * parity with trained factors proven in GraftALSServingSpec).
-    */
-  val alsFoldin: QueryDef = QueryDef.withOracle(
-    duckMembershipOracle("als_foldin",
-      s"$duckRatingsUserIds WHERE o_custkey % 7 = 3", 8)) { (s, dir) =>
-    val slice = ratingsDF(s, dir).where(pmod(col("user_id"), lit(7L)) === 3)
-    model(s, dir).foldInUsers(slice, regParam = 0.1)
-      .select(col("id"), posexplode(col("features")).as(Seq("pos", "value")))
-  }.sortedDump("id", "pos")
-
-  /** Online user-factor refresh: the ratings derivation re-played as a
-    * file stream (4 parquet shards, one micro-batch each) folds its users
-    * into the trained model incrementally — last micro-batch wins per
-    * user; the final table equals a batch fold-in because each user's
-    * ratings live in exactly one hash shard. Membership-checked (the
-    * refreshed table must cover exactly the slice's users × rank grid);
-    * StreamingSpec asserts the last-writer-wins semantics directly.
-    */
-  val alsOnlineRefresh: QueryDef = QueryDef.withOracle(
-    duckMembershipOracle("als_online_refresh",
-      s"$duckRatingsUserIds WHERE o_custkey % 7 = 3", 8)) { (s, dir) =>
-    val root = s"/tmp/graft_online_refresh_${dirKey(dir)}"
-    if (!csvWritten.contains(root)) {
-      EventsStream.deleteRecursively(new java.io.File(root))
-      // a user hash-slice (the "recently active" cohort), sharded by user
-      // hash so a user's ratings arrive in ONE micro-batch; one file per
-      // shard -> exactly 2 micro-batches regardless of sf (per-micro-batch
-      // planning/commit overhead is fixed cost, so the bench pays for two)
-      ratingsDF(s, dir)
-        .where(pmod(col("user_id"), lit(7L)) === 3)
-        .withColumn("shard", pmod(xxhash64(col("user_id")), lit(2L)))
-        .repartition(2, col("shard"))
-        .write.partitionBy("shard").parquet(s"$root/src")
-      val stream = s.readStream
-        .schema("user_id BIGINT, item_id BIGINT, rating DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$root/src/*")
-      EventsStream.onlineUserRefresh(stream, model(s, dir), regParam = 0.1,
-        s"$root/factors", s"$root/ck")
-      csvWritten.add(root)
-    }
-    EventsStream.latestIndex(s, s"$root/factors")
-      .select(col("id"), posexplode(col("features")).as(Seq("pos", "value")))
-  }.sortedDump("id", "pos")
-
-  /** Item fold-in twin (new catalog entries against fixed user factors),
-    * for a hash-slice of items. Rows-only: floats; spec checks the exact
-    * least-squares solve against a closed-form local oracle.
-    */
-  val alsFoldinItems: QueryDef = QueryDef.withOracle(
-    duckMembershipOracle("als_foldin_items",
-      s"$duckRatingsItemIds WHERE l_partkey % 11 = 5", 8)) { (s, dir) =>
-    val slice = ratingsDF(s, dir).where(pmod(col("item_id"), lit(11L)) === 5)
-    model(s, dir).foldInItems(slice, regParam = 0.1)
-      .select(col("id"), posexplode(col("features")).as(Seq("pos", "value")))
-  }.sortedDump("id", "pos")
-
-  /** Factor-table pivot CTEs for the composed scoring oracles: the dumped
-    * `(id, pos, value)` scalar rows pivot back to one row per id with
-    * columns `<p>0..<p>7` (rank=8 — [[model]]'s fixed rank).
-    */
-  private def duckFactorCte(alias: String, dump: String, p: String,
-      dim: Int = 8, where: String = ""): String = {
-    val cols = (0 until dim)
-      .map(i => s"MAX(CASE WHEN pos = $i THEN value END) AS $p$i").mkString(", ")
-    s"$alias AS (SELECT id, $cols FROM read_parquet('{{OUT}}/$dump/*.parquet') $where GROUP BY id)"
-  }
-
-  /** The portable dot product of two pivoted factor rows: left-to-right
-    * double accumulation of float products — DuckDB's left-associative `+`
-    * over explicit DOUBLE casts is bit-identical to DotProductExpr's
-    * `sum += (double)a[i] * (double)b[i]` loop (and 0.0 + x == x exactly,
-    * so the seed term changes nothing).
-    */
-  private def duckFactorDot(u: String, i: String, dim: Int = 8): String =
-    (0 until dim).map(p => s"CAST($u$p AS DOUBLE) * CAST($i$p AS DOUBLE)").mkString(" + ")
-
-  /** Scoring join-chain + dot product over the training set (O2) —
-    * hash-checked (round-6 verdict #1): the oracle replays the reference's
-    * own end-to-end query (`ALS.py:622-625`) in DuckDB over the factor
-    * tables dumped by als_user_factors/als_item_factors — same ratings
-    * derivation (the als_ratings oracle), same join, same left-to-right
-    * double dot, same final FLOAT cast, so every value is bit-identical.
-    * The factors themselves stay spec-checked (parity/recovery suites);
-    * this pins the SCORING surface on top of them.
-    */
-  val alsPredictions: QueryDef = QueryDef.withOracle(
-    s"""WITH ratings AS (
-       |  SELECT o_custkey AS user_id, l_partkey AS item_id,
-       |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS rating
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1, 2),
-       |${duckFactorCte("uf", "als_user_factors", "u")},
-       |${duckFactorCte("itf", "als_item_factors", "i")}
-       |SELECT r.user_id, r.item_id, r.rating,
-       |  CAST(${duckFactorDot("u", "i")} AS FLOAT) AS prediction
-       |FROM ratings r JOIN uf ON r.user_id = uf.id JOIN itf ON r.item_id = itf.id
-       |ORDER BY r.user_id, r.item_id""".stripMargin) { (s, dir) =>
-    model(s, dir).transform(ratingsDF(s, dir))
-  }.sortedDump("user_id", "item_id")
-
-  /** Training-set MSE (O3/A5) as a single-row result — hash-checked as a
-    * TOLERANCE gate: the oracle recomputes the average over the dumped
-    * als_predictions table (itself hash-checked against the factor replay,
-    * so the composition is pinned end-to-end) and emits the ENGINE's
-    * dumped value only when it sits within 1e-9 relative of the
-    * recomputation — reordered double addition drifts ~1e-15 relative, so
-    * the gate passes bit-exactly, while a real MSE bug exceeds the band
-    * and surfaces as a rows mismatch. (Round-7 ADVICE: the previous
-    * both-sides-ROUND(6) form hinged on Spark's BigDecimal HALF_UP and
-    * DuckDB's binary-double rounding agreeing at every 7th-digit boundary
-    * — true almost always, but flaky in principle; the tolerance form has
-    * no boundary.)
-    */
-  val alsMse: QueryDef = QueryDef.withOracle(
-    """WITH r AS (
-      |  SELECT AVG(POW(CAST(prediction AS DOUBLE) - rating, 2)) AS m
-      |  FROM read_parquet('{{OUT}}/als_predictions/*.parquet'))
-      |SELECT d.mse FROM read_parquet('{{OUT}}/als_mse/*.parquet') d, r
-      |WHERE ABS(d.mse - r.m) <= 1e-9 * GREATEST(ABS(r.m), 1.0)""".stripMargin) { (s, dir) =>
-    val m = model(s, dir)
-    val spark = s
-    import spark.implicits._
-    Seq(m.mse(ratingsDF(s, dir), "rating")).toDF("mse")
-  }
-
-  /** Top-3 item recommendations per user via the blocked cross-score kernel
-    * (recommendForAllUsers analogue — no per-pair materialization) —
-    * hash-checked: the kernel's contract is exactly "rank ALL user×item
-    * dots by (score DESC, item ASC), keep 3", and its per-pair arithmetic
-    * is the same left-to-right double loop as DotProductExpr, so DuckDB
-    * can replay it as a cross join + window over the dumped factor pivots
-    * (the oracle pays O(users·items) — fine at oracle scale; the engine
-    * kernel exists precisely so production doesn't).
-    */
-  val alsRecommend: QueryDef = QueryDef.withOracle(
-    s"""WITH ${duckFactorCte("uf", "als_user_factors", "u")},
-       |${duckFactorCte("itf", "als_item_factors", "i")},
-       |scored AS (
-       |  SELECT uf.id AS user_id, itf.id AS item_id,
-       |    ${duckFactorDot("u", "i")} AS score
-       |  FROM uf CROSS JOIN itf),
-       |ranked AS (
-       |  SELECT user_id, item_id, score,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-       |      ORDER BY score DESC, item_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT user_id, item_id, rank, score FROM ranked WHERE rank <= 3
-       |ORDER BY user_id, rank""".stripMargin) { (s, dir) =>
-    model(s, dir).recommendForAllUsers(3)
-  }.sortedDump("user_id", "rank")
-
-  /** Related-items surface: cosine top-3 neighbors in factor space —
-    * hash-checked (round-7 verdict #2, the exact-tier twin of the
-    * als_recommend graduation): the blocked kernel's contract is "L2-
-    * normalize every factor to FLOAT at block build, rank all non-self
-    * pairs by the normalized dot (desc, id asc), keep 3", and each step is
-    * bit-replayable over the dumped factor pivot — norm² as the
-    * left-to-right double sum of float squares, the unit vector as
-    * float(value · (1/√norm²)) (multiply by the reciprocal, exactly as the
-    * kernel does — NOT division, which rounds differently), zero vectors
-    * passed through unnormalized (cosine 0 by construction), and the dot
-    * as the same left-to-right double loop as [[duckFactorDot]].
-    */
-  val alsItemNeighbors: QueryDef = QueryDef.withOracle {
-    val rawSq = (0 until 8)
-      .map(i => s"CAST(f$i AS DOUBLE) * CAST(f$i AS DOUBLE)").mkString(" + ")
-    val unitCols = (0 until 8)
-      .map(i => s"CASE WHEN n.s > 0 THEN CAST(CAST(itf.f$i AS DOUBLE) * (1.0 / SQRT(n.s)) AS FLOAT) ELSE itf.f$i END AS u$i")
-      .mkString(",\n       |    ")
-    val unitDot = (0 until 8)
-      .map(i => s"CAST(a.u$i AS DOUBLE) * CAST(b.u$i AS DOUBLE)").mkString(" + ")
-    s"""WITH ${duckFactorCte("itf", "als_item_factors", "f")},
-       |nrm AS (SELECT id, $rawSq AS s FROM itf),
-       |unit AS (
-       |  SELECT itf.id,
-       |    $unitCols
-       |  FROM itf JOIN nrm n USING (id)),
-       |cos AS (
-       |  SELECT a.id AS item_id, b.id AS neighbor_item_id,
-       |    $unitDot AS cosine
-       |  FROM unit a JOIN unit b ON a.id <> b.id),
-       |ranked AS (
-       |  SELECT item_id, neighbor_item_id, cosine,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY item_id
-       |      ORDER BY cosine DESC, neighbor_item_id ASC) AS INT) AS rank
-       |  FROM cos)
-       |SELECT item_id, neighbor_item_id, rank, cosine FROM ranked WHERE rank <= 3
-       |ORDER BY item_id, rank""".stripMargin
-  } { (s, dir) =>
-    model(s, dir).itemNeighbors(3)
-  }.sortedDump("item_id", "rank")
-
-  /** Serving-codebook pivot from the als_index_build dump (space-filtered;
-    * `dim` = 8 for the cosine space, 9 for the MIPS augmented space).
-    */
-  private def duckServingCbCte(alias: String, space: String, dim: Int): String = {
-    val cols = (0 until dim)
-      .map(i => s"MAX(CASE WHEN pos = $i THEN value END) AS c$i").mkString(", ")
-    s"""$alias AS (SELECT cell, $cols
-       |  FROM read_parquet('{{OUT}}/als_index_build/*.parquet')
-       |  WHERE space = '$space' GROUP BY cell)""".stripMargin
-  }
-
-  /** factor·centroid dot over a pivoted factor row and serving-codebook
-    * row, same left-to-right double contract as [[duckFactorDot]].
-    */
-  private def duckFactorCellDot(p: String, cb: String): String =
-    (0 until 8).map(i => s"CAST($p$i AS DOUBLE) * CAST($cb.c$i AS DOUBLE)").mkString(" + ")
-
-  /** Related-items via the IVF ANN route — the serving path that stays
-    * sub-quadratic at catalog scale. Hash-checked (round 7): given the
-    * dumped item factors and the dumped serving codebook (als_index_build,
-    * cosine space), every kernel stage is deterministic — assignment,
-    * occupied-cell probing with the constant probe count (4, the
-    * ivfSizing rule: probing a cells/16 FRACTION was the r7 quadratic —
-    * see GraftALS.ivfSizing), exact cosine, (cosine
-    * desc, id asc) top-3 — so the oracle replays the trained-model serving
-    * path end-to-end. Recall vs the exact kernel stays spec-asserted in
-    * GraftALSServingSpec.
-    */
-  private def duckItemNeighborsApproxSql(queryPred: String): String =
-    s"""WITH ${duckFactorCte("itf", "als_item_factors", "f")},
-       |${duckServingCbCte("cb", "cosine", 8)},
-       |nc AS (SELECT COUNT(*) AS n FROM cb),
-       |norms AS (SELECT id, SQRT(${(0 until 8).map(i => s"CAST(f$i AS DOUBLE) * CAST(f$i AS DOUBLE)").mkString(" + ")}) AS nrm FROM itf),
-       |scores AS (
-       |  SELECT itf.id, cb.cell, ${duckFactorCellDot("f", "cb")} AS s
-       |  FROM itf CROSS JOIN cb),
-       |assign AS (
-       |  SELECT id, cell FROM (
-       |    SELECT id, cell,
-       |      ROW_NUMBER() OVER (PARTITION BY id ORDER BY s DESC, cell ASC) AS r
-       |    FROM scores) z WHERE r = 1),
-       |occ AS (SELECT DISTINCT cell FROM assign),
-       |probes AS (
-       |  SELECT id AS query_id, cell FROM (
-       |    SELECT sc.id, sc.cell,
-       |      ROW_NUMBER() OVER (PARTITION BY sc.id ORDER BY sc.s DESC, sc.cell ASC) AS r
-       |    FROM scores sc JOIN occ USING (cell)
-       |    WHERE $queryPred) z
-       |  WHERE r <= 4),
-       |cos AS (
-       |  SELECT p.query_id, a.id AS neighbor_id,
-       |    CASE WHEN nq.nrm = 0 OR nn.nrm = 0 THEN 0.0
-       |         ELSE (${(0 until 8).map(i => s"CAST(q.f$i AS DOUBLE) * CAST(b.f$i AS DOUBLE)").mkString(" + ")}) / (nq.nrm * nn.nrm)
-       |    END AS cosine
-       |  FROM probes p JOIN assign a USING (cell)
-       |  JOIN itf q ON q.id = p.query_id
-       |  JOIN itf b ON b.id = a.id
-       |  JOIN norms nq ON nq.id = p.query_id
-       |  JOIN norms nn ON nn.id = a.id
-       |  WHERE a.id <> p.query_id),
-       |ranked AS (
-       |  SELECT query_id AS item_id, neighbor_id AS neighbor_item_id, cosine,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM cos)
-       |SELECT item_id, neighbor_item_id, rank, cosine FROM ranked WHERE rank <= 3
-       |ORDER BY item_id, rank""".stripMargin
-
-  val alsItemNeighborsApprox: QueryDef = QueryDef.withOracle(
-    duckItemNeighborsApproxSql("TRUE")) { (s, dir) =>
-    model(s, dir).itemNeighborsApprox(3)
-  }.sortedDump("item_id", "rank")
-
-  /** One deterministic item shard (1 of 4, id % 4) of the IVF-routed
-    * related-items serve — the horizontal scale-out twin of
-    * als_recommend_sharded for the OTHER whole-catalog i·√i pass: the
-    * corpus, assignment and codebook are shared across shards, only the
-    * query side is partitioned, so N shard jobs each cost ~1/N of the
-    * full serve and their union equals it row-for-row
-    * (GraftALSServingSpec pins the union identity; the oracle replays
-    * the same IVF path with the probe CTE filtered to the shard).
-    */
-  val alsItemNeighborsSharded: QueryDef = QueryDef.withOracle(
-    duckItemNeighborsApproxSql("sc.id % 4 = 1")) { (s, dir) =>
-    model(s, dir).itemNeighborsApprox(3, itemShard = Some((1, 4)))
-  }.sortedDump("item_id", "rank")
-
-  /** Recommendations via MIPS-routed IVF — the sub-quadratic twin of
-    * als_recommend. Hash-checked (round 7): the oracle replays the MIPS
-    * serving path from the factor dumps and the dumped augmented-space
-    * codebook — the augmentation bound is the order-independent MAX it
-    * recomputes, item assignment runs over augmented vectors, users probe
-    * occupied cells with zero-padded vectors, and candidates rank by the
-    * TRUE raw dot (score desc, item asc, top-3, self-matches kept by MIPS
-    * semantics). Recall vs the exact kernel stays spec-asserted.
-    */
-  private def duckRecommendApproxSql(ufCte: String): String =
-    s"""WITH $ufCte,
-       |${duckFactorCte("itf", "als_item_factors", "f")},
-       |${duckServingCbCte("cb", "mips", 9)},
-       |nc AS (SELECT COUNT(*) AS n FROM cb),
-       |sd AS (SELECT id, ${(0 until 8).map(i => s"CAST(f$i AS DOUBLE) * CAST(f$i AS DOUBLE)").mkString(" + ")} AS selfdot FROM itf),
-       |mx AS (SELECT MAX(selfdot) AS maxsq FROM sd),
-       |aug AS (
-       |  SELECT itf.id, CAST(SQRT(GREATEST(mx.maxsq - sd.selfdot, 0.0)) AS FLOAT) AS a8
-       |  FROM itf JOIN sd USING (id) CROSS JOIN mx),
-       |cscore AS (
-       |  SELECT itf.id, cb.cell,
-       |    ${duckFactorCellDot("f", "cb")} + CAST(g.a8 AS DOUBLE) * CAST(cb.c8 AS DOUBLE) AS s
-       |  FROM itf JOIN aug g USING (id) CROSS JOIN cb),
-       |assign AS (
-       |  SELECT id, cell FROM (
-       |    SELECT id, cell,
-       |      ROW_NUMBER() OVER (PARTITION BY id ORDER BY s DESC, cell ASC) AS r
-       |    FROM cscore) z WHERE r = 1),
-       |occ AS (SELECT DISTINCT cell FROM assign),
-       |qscore AS (
-       |  SELECT uf.id, cb.cell,
-       |    ${duckFactorCellDot("u", "cb")} + CAST(0.0 AS DOUBLE) * CAST(cb.c8 AS DOUBLE) AS s
-       |  FROM uf CROSS JOIN cb),
-       |probes AS (
-       |  SELECT id AS query_id, cell FROM (
-       |    SELECT q.id, q.cell,
-       |      ROW_NUMBER() OVER (PARTITION BY q.id ORDER BY q.s DESC, q.cell ASC) AS r
-       |    FROM qscore q JOIN occ USING (cell)) z
-       |  WHERE r <= 4),
-       |sc AS (
-       |  SELECT p.query_id, a.id AS item_id,
-       |    ${(0 until 8).map(i => s"CAST(q.u$i AS DOUBLE) * CAST(b.f$i AS DOUBLE)").mkString(" + ")} AS score
-       |  FROM probes p JOIN assign a USING (cell)
-       |  JOIN uf q ON q.id = p.query_id
-       |  JOIN itf b ON b.id = a.id),
-       |ranked AS (
-       |  SELECT query_id AS user_id, item_id, score,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY score DESC, item_id ASC) AS INT) AS rank
-       |  FROM sc)
-       |SELECT user_id, item_id, rank, score FROM ranked WHERE rank <= 3
-       |ORDER BY user_id, rank""".stripMargin
-
-  val alsRecommendApprox: QueryDef = QueryDef.withOracle(
-    duckRecommendApproxSql(duckFactorCte("uf", "als_user_factors", "u"))) { (s, dir) =>
-    model(s, dir).recommendForAllUsersApprox(3)
-  }.sortedDump("user_id", "rank")
-
-  /** One deterministic user shard (1 of 4, id % 4) of the MIPS-routed
-    * recommend — the horizontal scale-out of the whole-catalog serve: at
-    * 100 TB the i·√i batch serve runs as N independent shard jobs against
-    * the SHARED trained index, each O(full/N), and the shard union equals
-    * the full serve row-for-row because per-user results are independent
-    * (GraftALSServingSpec pins the union identity; the oracle replays the
-    * same MIPS path with the user CTE filtered to the shard).
-    */
-  val alsRecommendSharded: QueryDef = QueryDef.withOracle(
-    duckRecommendApproxSql(
-      s"""${duckFactorCte("uf_all", "als_user_factors", "u")},
-         |uf AS (SELECT * FROM uf_all WHERE id % 4 = 1)""".stripMargin)) { (s, dir) =>
-    model(s, dir).recommendForAllUsersApprox(3, userShard = Some((1, 4)))
-  }.sortedDump("user_id", "rank")
-
-  /** Serving-index BUILD step: trains the model's item-factor ANN indexes
-    * (cosine codebook for als_item_neighbors_approx, MIPS index for
-    * als_recommend_approx) once per model — the offline index-construction
-    * half of the build/serve split, surfaced as its own driver row so the
-    * two approx SERVING rows measure serving, not k-means (round-6 verdict
-    * "What's wrong" #1). Memoized on the cached model: running this first
-    * makes every later approx call a driver-memory codebook lookup.
-    * Dumped as the codebooks' scalar rows; grid-checked — the oracle
-    * re-derives the ivfSizing cell count (clamp(16, 4096, round(√items)))
-    * from the ratings item universe and asserts both spaces' grids
-    * (cosine 8-dim, MIPS 9-dim) are complete; k-means floats pass through.
-    */
-  val alsIndexBuild: QueryDef = QueryDef.withOracle(
-    """WITH ni AS (
-      |  SELECT COUNT(*) AS n FROM (
-      |    SELECT DISTINCT l_partkey FROM lineitem
-      |    JOIN orders ON l_orderkey = o_orderkey) t),
-      |nc AS (SELECT GREATEST(16, LEAST(4096,
-      |  CAST(ROUND(SQRT(CAST(n AS DOUBLE))) AS BIGINT))) AS c FROM ni),
-      |cells AS (SELECT CAST(unnest(generate_series(0, (SELECT c FROM nc) - 1)) AS INT) AS cell),
-      |grid AS (
-      |  SELECT 'cosine' AS space, cell, CAST(pp.p AS INT) AS pos
-      |  FROM cells CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS p) pp
-      |  UNION ALL
-      |  SELECT 'mips' AS space, cell, CAST(pp.p AS INT) AS pos
-      |  FROM cells CROSS JOIN (SELECT unnest(generate_series(0, 8)) AS p) pp)
-      |SELECT g.space, g.cell, g.pos, f.value
-      |FROM grid g LEFT JOIN read_parquet('{{OUT}}/als_index_build/*.parquet') f
-      |  ON f.space = g.space AND f.cell = g.cell AND f.pos = g.pos
-      |ORDER BY g.space, g.cell, g.pos""".stripMargin) { (s, dir) =>
-    val m = model(s, dir)
-    // The cosine chain (codebook → inverted lists) and the MIPS chain
-    // (augmented index → inverted lists) are independent end to end; each
-    // is a string of small k-means/assignment stages that alone leaves
-    // most cores idle (measured 60 sequential jobs / 6.8 s in-suite).
-    // Overlap the two chains (opt guide §2.6) — also BUILD the inverted
-    // lists (assignment + corpus shuffle), the bigger half of index
-    // construction (round-13 verdict #7): serve rows after this row are
-    // pure serving — probe, candidate scan, top-k. Training is per-chain
-    // sequential as before, so every float is unchanged.
-    val Seq(cosRes, mipsRes) = Parallelism.inParallel[AnyRef](Seq(
-      () => {
-        val cb = m.servingItemCodebook()
-        m.servingItemCellIndex().materialize()
-        cb
-      },
-      () => {
-        val idx = m.servingMipsIndex()
-        m.servingMipsCellIndex().materialize()
-        idx
-      }))
-    val cos = cosRes.asInstanceOf[Array[Array[Float]]]
-    val mips = mipsRes.asInstanceOf[graft.ops.Similarity.MipsIndex]
-    val spark = s
-    import spark.implicits._
-    val rows =
-      cos.zipWithIndex.flatMap { case (c, i) =>
-        c.zipWithIndex.map { case (v, p) => ("cosine", i, p, v.toDouble) } } ++
-      mips.cells.zipWithIndex.flatMap { case (c, i) =>
-        c.zipWithIndex.map { case (v, p) => ("mips", i, p, v.toDouble) } }
-    rows.toSeq.toDF("space", "cell", "pos", "value")
-      .orderBy("space", "cell", "pos")
-  }
-
   /** Implicit-feedback training (M4/M7/M8): event-count confidences through
     * the Hu-Koren-Volinsky path, NNLS-free. Factors are rows-only; the
     * derivation itself is oracle-checked via als_implicit_ratings.
     */
-  private def implicitModel(s: SparkSession, dir: String): GraftALSModel =
+  private[queries] def implicitModel(s: SparkSession, dir: String): GraftALSModel =
     sessionModel(s, dir, "implicitModel",
       sessionAls.copy(implicitPrefs = true, alpha = 10.0,
         numUserBlocks = 4, numItemBlocks = 4, checkpointInterval = 10),
       graft.sources.RatingsSource.implicitFromEvents)
 
-  val alsImplicitFactors: QueryDef = QueryDef.withOracle(
-    duckMembershipOracle("als_implicit_factors",
-      "SELECT DISTINCT user_id AS id FROM events", 8)) { (s, dir) =>
-    implicitModel(s, dir).userFactors
-      .select(col("id"), posexplode(col("features")).as(Seq("pos", "value")))
-  }.sortedDump("id", "pos")
-
-  /** Implicit-feedback fold-in for a hash-slice of users: YᵀY + per-user
-    * confidence-weighted normal equations against the fixed item factors
-    * (Hu-Koren-Volinsky at serving time). Membership-checked (slice users
-    * × rank grid); GraftALSServingSpec proves exact parity with trained
-    * factors.
-    */
-  val alsFoldinImplicit: QueryDef = QueryDef.withOracle(
-    duckMembershipOracle("als_foldin_implicit",
-      "SELECT DISTINCT user_id AS id FROM events WHERE user_id % 7 = 3", 8)) { (s, dir) =>
-    val slice = graft.sources.RatingsSource.implicitFromEvents(s, dir)
-      .where(pmod(col("user_id"), lit(7L)) === 3)
-    implicitModel(s, dir).foldInUsersImplicit(slice, regParam = 0.1, alpha = 10.0)
-      .select(col("id"), posexplode(col("features")).as(Seq("pos", "value")))
-      .orderBy("id", "pos")
-  }
-
-  /** Dynamic partition overwrite — the incremental corpus-refresh write:
-    * a lang-partitioned layout gets ONE partition's documents replaced
-    * (re-crawled text, uppercased here as the stand-in) while every other
-    * partition's files stay untouched, via
-    * `partitionOverwriteMode=dynamic` (STATIC would drop them all). The
-    * oracle replays the merge: lang='de' rows transformed, others as
-    * ingested.
-    */
-  val docsPartitionOverwrite: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id, lang,
-      |  md5(CASE WHEN lang = 'de' THEN upper(text) ELSE text END) AS text_md5
-      |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val root = s"/tmp/graft_docs_dpo_${dirKey(dir)}"
-    if (!csvWritten.contains(root)) {
-      EventsStream.deleteRecursively(new java.io.File(root))
-      val docs = t(s, dir, "documents").select("doc_id", "text", "lang")
-      docs.write.partitionBy("lang").parquet(root)
-      // the "re-crawl" of one partition: only lang=de is rewritten
-      val refreshed = docs.where(col("lang") === "de")
-        .withColumn("text", upper(col("text")))
-      refreshed.write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("lang")
-        .parquet(root)
-      csvWritten.add(root)
-    }
-    s.read.parquet(root)
-      .select(col("doc_id"), col("lang"), md5(col("text")).as("text_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Custom DataSource V2 scan: the synthetic-docs connector read with a
-    * pushed doc_id range (narrows partition planning inside the source)
-    * and row-level projection. Content is pure md5 arithmetic on doc_id,
-    * so DuckDB replays the entire table from range() — hash-checking a
-    * source that owns its own data, plus its pushdown and pruning paths.
-    */
-  val syntheticSourceScan: QueryDef = QueryDef.withOracle(
-    """WITH d AS (
-      |  SELECT r AS doc_id,
-      |    md5(r || '|syn') AS body_hash,
-      |    10 + ('0x'||substr(md5(r || '|syn'),1,14))::BIGINT % 90 AS n_tokens
-      |  FROM range(0, 5000) t(r)
-      |  WHERE r BETWEEN 1000 AND 3999)
-      |SELECT doc_id, body_hash, CAST(n_tokens AS BIGINT) AS n_tokens
-      |FROM d ORDER BY doc_id""".stripMargin) { (s, _) =>
-    s.read.format("graft.sources.SyntheticDocs")
-      .option("rows", "5000").option("partitions", "8").option("salt", "syn")
-      .load()
-      .where(col("doc_id").between(1000L, 3999L))
-      .orderBy("doc_id")
-  }
-
-  /** Dynamic partition pruning: the lang-partitioned corpus joined to a
-    * tiny script dimension filtered AT RUNTIME — the partition filter is
-    * not known statically (it comes out of the dim's broadcast), so the
-    * planner injects a `dynamicpruning` subquery into the scan's
-    * PartitionFilters and only the matching lang directories are read
-    * (asserted in DppSpec). At 100 TB this is the difference between
-    * scanning the corpus and scanning two partitions when the dim filter
-    * is only decidable at run time. Oracle replays the join statically.
-    */
-  val docsDppJoin: QueryDef = QueryDef.withOracle(
-    """WITH dim(lang, script) AS (VALUES
-      |  ('en','latin'), ('es','latin'), ('fr','latin'),
-      |  ('de','latin'), ('zh','han'))
-      |SELECT d.doc_id, d.lang, dim.script
-      |FROM documents d JOIN dim ON d.lang = dim.lang
-      |WHERE dim.script = 'han'
-      |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
-    val path = s"/tmp/graft_docs_part_${dirKey(dir)}"
-    if (!csvWritten.contains(path)) {
-      t(s, dir, "documents").write.partitionBy("lang").mode("overwrite").parquet(path)
-      csvWritten.add(path)
-    }
-    val spark = s
-    import spark.implicits._
-    val dim = Seq(
-      ("en", "latin"), ("es", "latin"), ("fr", "latin"),
-      ("de", "latin"), ("zh", "han")).toDF("lang", "script")
-    s.read.parquet(path)
-      .join(dim.where(col("script") === "han"), "lang")
-      .select(col("doc_id"), col("lang"), col("script"))
-      .orderBy("doc_id")
-  }
-
-  /** The pretraining pipeline composed end-to-end — quality rule gate →
-    * cross-document boilerplate removal (frequency counted over the
-    * quality-kept corpus) → exact dedup on the CLEANED text → salted-hash
-    * split assignment — as one oracle-checked query. Every stage is
-    * individually oracled elsewhere; this row proves they COMPOSE: the
-    * DuckDB CTE chain replays the whole pipeline and must hash-match.
-    */
-  val pipelineEndToEnd: QueryDef = QueryDef.withOracle(
-    """WITH base AS (
-      |  SELECT doc_id, text,
-      |    CAST(len(str_split(text, ' ')) AS BIGINT) AS n,
-      |    str_split(text, ' ') AS toks
-      |  FROM documents),
-      |q AS (
-      |  SELECT doc_id, text FROM base
-      |  WHERE NOT (n < 10 OR n > 1000)
-      |    AND NOT (CAST(length(text) - n + 1 AS DOUBLE) / n < 2.0
-      |             OR CAST(length(text) - n + 1 AS DOUBLE) / n > 12.0)
-      |    AND list_max(list_transform(toks, x -> length(x))) <= 30
-      |    AND CAST(len(list_filter(toks,
-      |        x -> x IN ('the','a','an','and','or','of','to','in','is','it','on','for'))) AS DOUBLE)
-      |      / n >= 0.02),
-      |w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM q),
-      |c AS (
-      |  SELECT doc_id, i AS idx, array_to_string(ws[(i*8+1):(i*8+8)], ' ') AS chunk
-      |  FROM w, unnest(range(0, CAST(ceil(len(ws)/8.0) AS BIGINT))) AS t(i)),
-      |freq AS (SELECT chunk FROM c GROUP BY chunk HAVING count(DISTINCT doc_id) >= 2),
-      |keptc AS (SELECT doc_id, idx, chunk FROM c WHERE chunk NOT IN (SELECT chunk FROM freq)),
-      |cleaned AS (
-      |  SELECT doc_id, string_agg(chunk, ' ' ORDER BY idx) AS clean
-      |  FROM keptc GROUP BY doc_id),
-      |keepers AS (
-      |  SELECT md5(clean) AS clean_md5, min(doc_id) AS doc_id
-      |  FROM cleaned GROUP BY 1)
-      |SELECT doc_id, clean_md5,
-      |  CASE WHEN ('0x'||substr(md5(CAST(doc_id AS VARCHAR)||'|split'),1,14))::BIGINT % 100 < 90
-      |         THEN 'train'
-      |       WHEN ('0x'||substr(md5(CAST(doc_id AS VARCHAR)||'|split'),1,14))::BIGINT % 100 < 95
-      |         THEN 'val'
-      |       ELSE 'test' END AS split
-      |FROM keepers ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val docs = t(s, dir, "documents")
-    val quality = TextOps.qualityFlags(docs).where(col("keep")).select("doc_id")
-    val kept = docs.join(quality, "doc_id")
-    val cleaned = Dedup.removeBoilerplate(kept, chunkSize = 8, minDocs = 2)
-      .where(col("n_kept") > 0)
-      .select(col("id").as("doc_id"), col("clean_text"))
-    val keepers = cleaned
-      .groupBy(md5(col("clean_text")).as("clean_md5"))
-      .agg(min(col("doc_id")).as("doc_id"))
-    PipelineOps.splitAssignments(keepers)
-      .select("doc_id", "clean_md5", "split")
-      .orderBy("doc_id")
-  }
-
-  /** DataSource V2 WRITE path: documents written through the audit sink
-    * (per-partition DataWriters → commit messages → driver-side commit),
-    * surfaced as the committed audit. The oracle knows what a correct
-    * two-phase commit must report: one message per partition and every
-    * input row accounted for.
-    */
-  val sinkWriteAudit: QueryDef = QueryDef.withOracle(
-    """SELECT true AS committed, CAST(8 AS BIGINT) AS num_partitions,
-      |  count(*) AS total_rows
-      |FROM documents""".stripMargin) { (s, dir) =>
-    val runId = s"gate_${dirKey(dir)}"
-    t(s, dir, "documents").repartition(8)
-      .write.format("graft.sources.AuditSink")
-      .option("runId", runId).mode("append").save()
-    val audit = graft.sources.AuditSink.results(runId)
-    val spark = s
-    import spark.implicits._
-    Seq((audit.committed, audit.partitionRows.size.toLong, audit.totalRows))
-      .toDF("committed", "num_partitions", "total_rows")
-  }
-
-  /** Semi-structured ingestion through Spark 4's VARIANT type, shredded
-    * AT INGEST: `parse_json(props)` runs ONCE when the ingest layout is
-    * materialized (binary VARIANT column in parquet), and every query
-    * reads the stored variant with `variant_get` — no re-parse per read.
-    * Round-11 measurement showed the per-query `parse_json` over 10M raw
-    * strings WAS the operator's whole ×100 cost (20.1 s for a 5-row
-    * output); parse-at-ingest is the fix the plan audit prescribed —
-    * crawl metadata is written once and queried many times, so the parse
-    * belongs on the write path. The raw-JSON parse remains the oracle
-    * tier: DuckDB re-extracts the same path from the raw `props` strings,
-    * so a shredding bug (wrong field, lossy encode) hash-fails the gate.
-    */
-  val eventsJsonVariant: QueryDef = QueryDef.withOracle(
-    """SELECT event_type,
-      |  count(*) AS n,
-      |  CAST(sum(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
-      |  CAST(min(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS min_k,
-      |  CAST(max(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS max_k
-      |FROM events
-      |GROUP BY event_type
-      |ORDER BY event_type""".stripMargin) { (s, dir) =>
-    shreddedEvents(s, dir)
-      .select(
-        col("event_type"),
-        variant_get(col("props_var"), "$.k", "bigint").as("k"))
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("k")).cast("bigint").as("sum_k"),
-        min(col("k")).cast("bigint").as("min_k"),
-        max(col("k")).cast("bigint").as("max_k"))
-  }.sortedDump("event_type")
-
-  /** The shredded-at-ingest events layout: full events schema with the
-    * `props` JSON parsed once into a stored VARIANT column. Unlike the
-    * per-JVM scratch layouts, this one PERSISTS across JVMs — parsing at
-    * ingest means the parse is paid when the data lands, not once per
-    * process that later reads it — guarded by a staleness marker (source
-    * events dir size + newest mtime): a changed fixture rebuilds, a
-    * matching marker reuses the layout as-is.
-    */
-  private def shreddedEvents(s: SparkSession, dir: String): DataFrame = {
-    val root = s"/tmp/graft_events_shredded_${dirKey(dir)}"
-    def stampOf: String = {
-      val files = EventsStream.walkFiles(new java.io.File(dir, "events.parquet"))
-      s"${files.map(_.length()).sum}|${files.map(_.lastModified()).max}"
-    }
-    def isFresh(stamp: String): Boolean = {
-      val marker = new java.io.File(root, "_graft_source_stamp")
-      marker.isFile && new String(
-        java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    }
-    val stamp = stampOf
-    if (!isFresh(stamp)) {
-      // build pid-scoped, stamp inside, then RENAME into place: a
-      // concurrent JVM building the same layout never deletes a directory
-      // another process is mid-write in — whoever renames first wins and
-      // the loser discards its build (the shared-path hazard the
-      // per-JVM scratch layouts avoid by construction)
-      val build = new java.io.File(
-        s"$root.build_${ProcessHandle.current().pid()}")
-      EventsStream.deleteRecursively(build)
-      t(s, dir, "events")
-        .withColumn("props_var", parse_json(col("props")))
-        .drop("props")
-        .write.parquet(build.getPath)
-      java.nio.file.Files.write(
-        new java.io.File(build, "_graft_source_stamp").toPath,
-        stamp.getBytes("UTF-8")): Unit
-      if (isFresh(stamp)) EventsStream.deleteRecursively(build)
-      else {
-        EventsStream.deleteRecursively(new java.io.File(root))
-        require(build.renameTo(new java.io.File(root)),
-          s"shredded-layout rename failed: $build -> $root")
-      }
-    }
-    s.read.parquet(root)
-  }
-
-  /** Per-user temporal holdout over events (leave-last-2-out by event
-    * time, event_id tie-break): the causality-respecting eval split.
-    * Oracle replays the descending rank and the cut.
-    */
-  val temporalSplitQ: QueryDef = QueryDef.withOracle(
-    """SELECT event_id, user_id,
-      |  CASE WHEN rk <= 2 THEN 'test' ELSE 'train' END AS split
-      |FROM (
-      |  SELECT event_id, user_id,
-      |    row_number() OVER (PARTITION BY user_id
-      |      ORDER BY ts DESC, event_id DESC) AS rk
-      |  FROM events) x
-      |ORDER BY event_id""".stripMargin) { (s, dir) =>
-    PipelineOps.temporalSplit(
-      t(s, dir, "events"), entityCol = "user_id", tsCol = "ts",
-      tieBreakCol = "event_id", holdout = 2)
-      .select("event_id", "user_id", "split")
-  }.sortedDump("event_id")
-
-  /** Deterministic negative sampling over the ratings derivation: 4
-    * hash-drawn unrated items per user from 12 candidate draws — the
-    * implicit-training label-construction pass, reproducible without
-    * rand(). The oracle replays the salted md5 draw, the per-(user,item)
-    * earliest-draw dedup, the positives anti-join, and the ranked cut.
-    */
-  val alsNegativeSamples: QueryDef = QueryDef.withOracle(
-    """WITH pos AS (
-      |  SELECT DISTINCT o_custkey AS user_id, l_partkey AS item_id
-      |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-      |users AS (SELECT DISTINCT user_id FROM pos),
-      |c0 AS (
-      |  SELECT user_id, j,
-      |    ('0x'||substr(md5(concat_ws('|', user_id, j, 'neg')),1,14))::BIGINT
-      |      % (SELECT count(*) FROM part) AS item_idx
-      |  FROM users, unnest(range(1, 13)) AS t(j)),
-      |cand AS (SELECT user_id, item_idx, min(j) AS j FROM c0 GROUP BY 1, 2),
-      |neg AS (
-      |  SELECT c.user_id, c.item_idx AS item_id, c.j
-      |  FROM cand c LEFT JOIN pos p
-      |    ON p.user_id = c.user_id AND p.item_id = c.item_idx
-      |  WHERE p.user_id IS NULL),
-      |rk AS (
-      |  SELECT user_id, item_id,
-      |    row_number() OVER (PARTITION BY user_id ORDER BY j, item_id) AS rk
-      |  FROM neg)
-      |SELECT user_id, item_id, CAST(rk AS BIGINT) AS rk
-      |FROM rk WHERE rk <= 4
-      |ORDER BY user_id, rk""".stripMargin) { (s, dir) =>
-    val positives = ratingsDF(s, dir).select("user_id", "item_id")
-    val items = t(s, dir, "part")
-      .select(col("p_partkey").as("item_idx"), col("p_partkey").as("item_id"))
-    PipelineOps.negativeSamples(
-      positives, items, numItems = items.count(), k = 4, candidatesPerUser = 12)
-  }.sortedDump("user_id", "rk")
-
-  /** CSV ingestion round-trip (S2): the ratings derivation is dumped to a
-    * headerless `user,item,rating` CSV (the reference's input format,
-    * `ALS.py:590-592`) and read back through RatingsSource.fromCsv's typed
-    * scan. Java double↔string conversion round-trips exactly, so the result
-    * must hash-match the relational derivation's oracle.
-    */
-  val alsCsvRatings: QueryDef = QueryDef.withOracle(
-    """SELECT o_custkey AS user_id, l_partkey AS item_id,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS rating
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |GROUP BY 1, 2
-      |ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-    val csvDir = s"/tmp/graft_csv_ratings_${dirKey(dir)}"
-    // rewritten once per JVM (never trusted across processes — a stale dump
-    // from an earlier round's fixtures would silently diverge from the
-    // oracle, which reads the CURRENT relational tables)
-    if (!csvWritten.contains(csvDir)) {
-      ratingsDF(s, dir).write.mode("overwrite").option("header", "false").csv(csvDir)
-      csvWritten.add(csvDir)
-    }
-    graft.sources.RatingsSource.fromCsv(s, csvDir)
-  }.sortedDump("user_id", "item_id")
-
-  /** BASELINE.md's correctness floor (graft RMSE ≤ MLlib RMSE + tolerance)
-    * surfaced as a driver-visible row, so fit-quality regressions show in
-    * CORRECTNESS, not only in MLlibParitySpec. Values are run-specific
-    * (two trainings) → rows-only; `within_floor` is the assertion bit.
-    */
-  /** MLlib's RMSE on the dir's ratings, memoized per (session, dir). The
-    * competitor training runs ONCE and only the scalar survives (the model
-    * itself is released), so the timed als_rmse_vs_mllib bench entry measures
-    * our own scoring, not MLlib's fit — Bench pre-warms this untimed
-    * (round-5 verdict "What's wrong" #3).
-    */
   /** Trains the SHARED session model (the one-per-(session, dir) cache
     * every explicit-ALS query reads) and materializes both factor halves.
     * Bench runs this as its own labeled row (`als_session_train`) so the
@@ -1824,6 +191,12 @@ object Queries {
   private[graft] def prewarmShreddedEvents(s: SparkSession, dir: String): Unit =
     shreddedEvents(s, dir).write.format("noop").mode("overwrite").save()
 
+  /** MLlib's RMSE on the dir's ratings, memoized per (session, dir). The
+    * competitor training runs ONCE and only the scalar survives (the model
+    * itself is released), so the timed als_rmse_vs_mllib bench entry measures
+    * our own scoring, not MLlib's fit — Bench pre-warms this untimed
+    * (round-5 verdict "What's wrong" #3).
+    */
   private[graft] def prewarmMllibRmse(s: SparkSession, dir: String): Double =
     SessionArtifacts.getOrBuild(s, dir, "mllibRmse") {
       val ratings = ratingsDF(s, dir)
@@ -1847,139 +220,6 @@ object Queries {
       } finally ratings.unpersist()
     }
 
-  /** Explicit-path MLlib parity floor. The two RMSE floats are trained-
-    * model outputs and pass through the dump, but the oracle now ENFORCES
-    * the floor: it re-derives `within_floor` from the dumped floats and
-    * returns the row only when the floor holds — a parity regression
-    * (graft > 1.05×MLlib) empties the oracle side and fails the gate as a
-    * rows mismatch, turning the former display-only row into an asserted
-    * quality gate.
-    */
-  val alsRmseVsMllib: QueryDef = QueryDef.withOracle(
-    """SELECT graft_rmse, mllib_rmse, within_floor
-      |FROM read_parquet('{{OUT}}/als_rmse_vs_mllib/*.parquet')
-      |WHERE within_floor
-      |  AND within_floor = (graft_rmse <= mllib_rmse * 1.05 + 1e-9)""".stripMargin) { (s, dir) =>
-    val graftRmse = model(s, dir).rmse(ratingsDF(s, dir), "rating")
-    val mllibRmse = prewarmMllibRmse(s, dir)
-    val spark = s
-    import spark.implicits._
-    Seq((graftRmse, mllibRmse, graftRmse <= mllibRmse * 1.05 + 1e-9))
-      .toDF("graft_rmse", "mllib_rmse", "within_floor")
-  }
-
-  /** Mean Percentile Rank (Hu-Koren-Volinsky's own evaluation metric,
-    * "Collaborative Filtering for Implicit Feedback Datasets" §6): every
-    * observed interaction's item is located in its user's full predicted
-    * ranking, percentile-scaled to [0,1] (0 = ranked first), and averaged
-    * weighted by interaction strength — lower is better, 0.5 ≈ random.
-    * The item side is broadcast (the implicit catalog here is the tiny
-    * event-type space).
-    *
-    * `sampleDenom > 1` bounds the metric for REAL catalogs (round-7
-    * verdict #4 — the full-catalog window is users×items rows and would
-    * dominate the suite at a 100× catalog): each user ranks only
-    * ≈ items/sampleDenom GENERATED candidates PLUS their own observed
-    * items, and the percentile is taken within that sample — a seeded-hash
-    * draw is a uniform sample of the catalog, so the within-sample
-    * percentile is a consistent estimator of the catalog percentile, and
-    * the metric's cost law becomes O(users·sample).
-    *
-    * Candidate GENERATION, not filtering (round-8 verdict #3): the former
-    * form streamed every (u,i) pair through a hash predicate inside a
-    * BroadcastNestedLoopJoin — output-sparse but still an O(users·items)
-    * enumeration at the join. Now each user explodes a k-length seeded
-    * hash sequence into catalog POSITIONS, equi-joined (broadcast hash
-    * join) to a dense positional index of the catalog — no user×catalog
-    * pair is ever enumerated. The positional index costs one catalog-sized
-    * global sort; the catalog is the broadcast-small side of this problem
-    * by construction.
-    *
-    * `sampleDenom <= 1` is the exact full-catalog form (the small-catalog
-    * oracle; MprSamplingSpec asserts the sampled estimator brackets it).
-    */
-  private[graft] def meanPercentileRank(
-      userFactors: DataFrame,
-      itemFactors: DataFrame,
-      interactions: DataFrame,
-      sampleDenom: Int = 1): Double =
-    mprWeightedPercentiles(userFactors, itemFactors, interactions, sampleDenom)
-      .agg((sum(col("r") * col("pct")) / sum(col("r"))).as("mpr"))
-      .head().getDouble(0)
-
-  /** The (u, i, r, pct) frame [[meanPercentileRank]] averages — exposed so
-    * MprSamplingSpec can audit the sampled branch's physical plan (no
-    * user×catalog BroadcastNestedLoopJoin) as well as its values.
-    */
-  private[graft] def mprWeightedPercentiles(
-      userFactors: DataFrame,
-      itemFactors: DataFrame,
-      interactions: DataFrame,
-      sampleDenom: Int): DataFrame = {
-    val obs = interactions
-      .select(col("user_id").cast("long").as("u"),
-        col("item_id").cast("long").as("i"), col("rating").cast("double").as("r"))
-      .where(col("r") > 0)
-    val users = userFactors.select(col("id").cast("long").as("u"), col("features").as("ufeat"))
-    val items = itemFactors.select(col("id").cast("long").as("i"), col("features").as("ifeat"))
-    val pct =
-      if (sampleDenom <= 1) {
-        val nItems = itemFactors.count()
-        val w = Window.partitionBy("u").orderBy(desc("score"), asc("i"))
-        users.crossJoin(broadcast(items))
-          .withColumn("score", VectorFunctions.dot(col("ufeat"), col("ifeat")))
-          .withColumn("rk", row_number().over(w))
-          .withColumn("pct",
-            if (nItems <= 1) lit(0.0)
-            else (col("rk") - 1).cast("double") / (nItems - 1).toDouble)
-          .select("u", "i", "pct")
-      } else {
-        val nItems = math.max(1L, items.count())
-        val k = math.max(1L, nItems / sampleDenom)
-        // dense positional index: position → (item id, factors); drawn
-        // positions resolve to real items through an equi-join. The
-        // global window is BOUNDED by this branch's own contract — the
-        // indexed catalog is broadcast two lines down, so it is at most
-        // broadcast-sized by construction (a catalog too big for one
-        // window task would already be too big to broadcast)
-        val indexed = items.withColumn("pos",
-          row_number().over(Window.orderBy("i")).cast("long") - 1)
-        val sampledCand = users
-          .select(col("u"), col("ufeat"),
-            explode(sequence(lit(0L), lit(k - 1L))).as("j"))
-          .select(col("u"), col("ufeat"),
-            pmod(xxhash64(col("u"), col("j"), lit(97L)), lit(nItems)).as("pos"))
-          // the draw is with replacement; collapse repeated positions
-          .dropDuplicates("u", "pos")
-          .join(broadcast(indexed), "pos")
-          .select("u", "ufeat", "i", "ifeat")
-        val observedCand = obs.select("u", "i").distinct()
-          .join(users, "u")
-          .join(broadcast(items), "i")
-          .select("u", "ufeat", "i", "ifeat")
-        val w = Window.partitionBy("u").orderBy(desc("score"), asc("i"))
-        val wc = Window.partitionBy("u")
-        sampledCand.union(observedCand)
-          // an observed item may also be drawn — rank each (u,i) once
-          .dropDuplicates("u", "i")
-          .withColumn("score", VectorFunctions.dot(col("ufeat"), col("ifeat")))
-          .withColumn("rk", row_number().over(w))
-          .withColumn("nc", count(lit(1)).over(wc))
-          .withColumn("pct",
-            when(col("nc") <= 1, lit(0.0))
-              .otherwise((col("rk") - 1).cast("double") / (col("nc") - 1).cast("double")))
-          .select("u", "i", "pct")
-      }
-    obs.join(pct, Seq("u", "i"))
-  }
-
-  /** MPR sample denominator for a catalog of `nItems`: full-exact below
-    * 64 items (the fixture regime — keeps the committed row's values
-    * identical to the exact metric), ≈64 candidates per user above it.
-    */
-  private[graft] def mprSampleDenom(nItems: Long): Int =
-    math.max(1L, nItems / 64L).toInt
-
   /** MLlib's implicit-ALS MPR on the dir's interactions, memoized per
     * (session, dir) — the competitor trains once untimed (Bench pre-warms
     * this like [[prewarmMllibRmse]]) and only the scalar survives.
@@ -1998,2915 +238,14 @@ object Queries {
           .setUserCol("user_int").setItemCol("item_int").setRatingCol("rating")
           .setSeed(42L)
           .fit(inter)
-        val mpr = meanPercentileRank(mllib.userFactors, mllib.itemFactors,
+        val mpr = RankingMetrics.meanPercentileRank(mllib.userFactors, mllib.itemFactors,
           inter.select(col("user_id"), col("item_id"), col("rating")),
-          sampleDenom = mprSampleDenom(inter.select("item_id").distinct().count()))
+          sampleDenom = RankingMetrics.mprSampleDenom(inter.select("item_id").distinct().count()))
         mllib.userFactors.unpersist()
         mllib.itemFactors.unpersist()
         mpr
       } finally inter.unpersist()
     }
-
-  /** Implicit-path MLlib parity floor (round-6 verdict #8): the
-    * Hu-Koren-Volinsky branch gets the same driver-visible quality row the
-    * explicit path has — graft's implicit MPR vs MLlib implicitPrefs on
-    * identical data/hyperparameters/seed, `within_floor` as the assertion
-    * bit (graft ≤ 1.05×MLlib + 0.02 absolute: ranking metrics on the tiny
-    * event-type catalog are quantized to coarse percentile steps, so a
-    * one-position flip moves MPR by ~1/(nItems-1) — the absolute term
-    * absorbs exactly one such flip, and MPR ≈ 0.5 would still fail).
-    * Both MPRs run through the sampled estimator at [[mprSampleDenom]]
-    * (exact at the fixture's tiny catalog, O(users·64) at any real one).
-    * The trained floats pass through the dump, but the oracle ENFORCES
-    * the floor: it re-derives within_floor from the dumped values and
-    * returns the row only when the floor holds, so a parity regression
-    * fails the gate as a rows mismatch.
-    */
-  val alsImplicitVsMllib: QueryDef = QueryDef.withOracle(
-    """SELECT graft_mpr, mllib_mpr, ideal_mpr, random_mpr, within_floor
-      |FROM read_parquet('{{OUT}}/als_implicit_vs_mllib/*.parquet')
-      |WHERE within_floor
-      |  AND within_floor = (graft_mpr <= mllib_mpr * 1.05 + 0.02)
-      |  AND random_mpr = 0.5""".stripMargin) { (s, dir) =>
-    val inter = graft.sources.RatingsSource.implicitFromEvents(s, dir)
-    val m = implicitModel(s, dir)
-    val denom = mprSampleDenom(inter.select("item_id").distinct().count())
-    val graftMpr =
-      meanPercentileRank(m.userFactors, m.itemFactors, inter, sampleDenom = denom)
-    val mllibMpr = prewarmMllibImplicitMpr(s, dir)
-    // context columns: the best MPR ANY model could reach on this data
-    // (rank each user's items by their true counts) and the 0.5 random
-    // level — the fixture's events are near-uniform (density 1.0 over the
-    // event-type catalog), so both engines necessarily land near 0.5;
-    // the row asserts PARITY, the bracketing columns show why the
-    // absolute values sit where they do
-    val nItems = inter.select("item_id").distinct().count()
-    val wIdeal = Window.partitionBy("user_id").orderBy(desc("rating"), asc("item_id"))
-    val idealMpr = inter
-      .withColumn("pct",
-        if (nItems <= 1) lit(0.0)
-        else (row_number().over(wIdeal) - 1).cast("double") / (nItems - 1).toDouble)
-      .agg((sum(col("rating") * col("pct")) / sum(col("rating"))).as("m"))
-      .head().getDouble(0)
-    val spark = s
-    import spark.implicits._
-    Seq((graftMpr, mllibMpr, idealMpr, 0.5, graftMpr <= mllibMpr * 1.05 + 0.02))
-      .toDF("graft_mpr", "mllib_mpr", "ideal_mpr", "random_mpr", "within_floor")
-  }
-
-  val alsImplicitRatings: QueryDef = QueryDef.withOracle(
-    """WITH items AS (
-      |  SELECT event_type, CAST(DENSE_RANK() OVER (ORDER BY event_type) AS BIGINT) AS item_id
-      |  FROM (SELECT DISTINCT event_type FROM events))
-      |SELECT e.user_id, i.item_id, CAST(COUNT(*) AS DOUBLE) AS rating
-      |FROM events e JOIN items i ON e.event_type = i.event_type
-      |GROUP BY e.user_id, i.item_id
-      |ORDER BY e.user_id, i.item_id""".stripMargin) { (s, dir) =>
-    graft.sources.RatingsSource.implicitFromEvents(s, dir)
-      .orderBy("user_id", "item_id")
-  }
-
-  // ------------------------------------------------------------------
-  // LLM-data-pipeline surface
-  // ------------------------------------------------------------------
-
-  /** Word-3-gram shingle generation (pos 0-based; a doc shorter than the
-    * shingle width contributes its whole text) as DuckDB CTEs — the oracle
-    * twin of TextOps.shingles, shared by the dedup oracles below.
-    */
-  private val duckShingleCtes: String =
-    """toks AS (
-      |  SELECT doc_id AS id, text, str_split(text, ' ') AS ts FROM documents),
-      |pos AS (
-      |  SELECT id, text, ts, unnest(generate_series(1, greatest(len(ts) - 2, 1))) AS p
-      |  FROM toks),
-      |sh0 AS (
-      |  SELECT id,
-      |    CASE WHEN len(ts) < 3 THEN text
-      |         ELSE concat_ws(' ', ts[p], ts[p+1], ts[p+2]) END AS s
-      |  FROM pos)""".stripMargin
-
-  /** MinHash-LSH near-dedup keep-list, hash-checked end-to-end: the oracle
-    * replays signature minima (portable Broder-style family
-    * `h_i = (h1 + i·h2) mod 2^56` over md5-prefix base hashes), the
-    * 16×4 banding, bucket-collision candidate generation, and the exact
-    * shingle-Jaccard verify, then derives the same keeper set. (Band
-    * buckets compare by value on both sides — Spark hashes the band slice,
-    * the oracle concatenates it; identical pair sets either way.)
-    */
-  /** Shared by `dedup_minhash_keepers` and the forced-grouped-candidates
-    * twin `dedup_minhash_grouped`: the two Spark paths are
-    * pair-set-identical by construction, so one DuckDB replay oracles
-    * both (the same relationship the ngram tier's adaptive/kernel rows
-    * have).
-    */
-  private def minhashKeepersOracleSql: String = {
-    val P = PortableMinhash.Modulus
-    val mins = (1 to 64).map(i => s"MIN((h1 + ${i - 1} * h2) % $P) AS m$i").mkString(",\n  ")
-    val bandSelects = (0 until 16).map { b =>
-      val cols = (1 to 4).map(r => s"m${b * 4 + r}").mkString(", ")
-      s"SELECT id, $b AS band, concat_ws('|', $cols) AS bucket FROM sigs"
-    }.mkString("\n  UNION ALL\n  ")
-    s"""WITH $duckShingleCtes,
-       |hs AS (
-       |  SELECT id,
-       |    ('0x' || substr(md5(s), 1, 14))::BIGINT AS h1,
-       |    ('0x' || substr(md5(s || '#'), 1, 14))::BIGINT AS h2
-       |  FROM sh0),
-       |sigs AS (SELECT id,
-       |  $mins
-       |  FROM hs GROUP BY id),
-       |bands AS (
-       |  $bandSelects),
-       |cands AS (
-       |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.bucket = y.bucket AND x.id < y.id),
-       |shd AS (SELECT id, list_distinct(list(s)) AS sh FROM sh0 GROUP BY id),
-       |pairs AS (
-       |  SELECT id_b FROM (
-       |    SELECT c.id_b,
-       |      len(list_intersect(a.sh, b.sh))::DOUBLE /
-       |        len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS j
-       |    FROM cands c JOIN shd a ON a.id = c.id_a JOIN shd b ON b.id = c.id_b) z
-       |  WHERE j >= 0.5)
-       |SELECT doc_id, lang, source FROM documents
-       |WHERE doc_id NOT IN (SELECT id_b FROM pairs)
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  val dedupMinhashKeepers: QueryDef = QueryDef.withOracle {
-    minhashKeepersOracleSql
-  } { (s, dir) =>
-    val docs = t(s, dir, "documents")
-    val pairs = Dedup.minhashNearDups(docs, threshold = 0.5, family = PortableMinhash)
-    Dedup.nearDedupKeepers(docs, pairs).select("doc_id", "lang", "source").orderBy("doc_id")
-  }
-
-  /** Forced-grouped-candidates twin of `dedup_minhash_keepers`
-    * (`candidatesMinBytes = 0` pins the one-exchange grouped candidate
-    * path the ≥256 MB tiers take by default), so the above-pivot path
-    * stays hash-checked and timed at the sf gate every round — exactly
-    * the `dedup_ngram_kernel` discipline for the minhash tier.
-    */
-  val dedupMinhashGrouped: QueryDef = QueryDef.withOracle {
-    minhashKeepersOracleSql
-  } { (s, dir) =>
-    val docs = t(s, dir, "documents")
-    val pairs = Dedup.minhashNearDups(docs, threshold = 0.5, family = PortableMinhash,
-      candidatesMinBytes = 0L)
-    Dedup.nearDedupKeepers(docs, pairs).select("doc_id", "lang", "source").orderBy("doc_id")
-  }
-
-  /** SimHash signatures per document, hash-checked against a DuckDB oracle
-    * that replays the full vote/sign-fold pipeline. Uses the cross-engine
-    * portable 56-bit md5 hash ([[TextOps.portableHash56]]) so both engines
-    * see identical per-token hashes; the production default stays xxhash64
-    * (value-parity between the two forms is the same algorithm, asserted by
-    * DedupSpec on the expression form).
-    */
-  val dedupSimhashSignatures: QueryDef = QueryDef.withOracle {
-    val votes = (0 until 56)
-      .map(i => s"SUM(CASE WHEN ((h >> $i) & 1) = 1 THEN 1 ELSE -1 END) AS v$i")
-      .mkString(",\n  ")
-    val sig = (0 until 56)
-      .map(i => s"(CASE WHEN v$i > 0 THEN (1::BIGINT << $i) ELSE 0::BIGINT END)")
-      .mkString(" | ")
-    s"""WITH toks AS (
-       |  SELECT doc_id AS id, unnest(str_split(text, ' ')) AS t FROM documents),
-       |hs AS (
-       |  SELECT id, ('0x' || substr(md5(t), 1, 14))::BIGINT AS h FROM toks),
-       |votes AS (
-       |  SELECT id,
-       |  $votes
-       |  FROM hs GROUP BY id)
-       |SELECT id, $sig AS sig
-       |FROM votes
-       |ORDER BY id""".stripMargin
-  } { (s, dir) =>
-    Dedup.simhashSignatures(t(s, dir, "documents"),
-      numBits = 56, hashFn = TextOps.portableHash56)
-      .orderBy("id")
-  }
-
-  /** n-gram Jaccard similar pairs via the inverted-index candidate join
-    * (df-capped postings: this synthetic corpus is low-entropy, so common
-    * shingles are aggressively dropped from candidate generation).
-    * Hash-checked: the oracle replays the same df-cap, shared-rare≥2
-    * pruning, and exact-Jaccard verify on raw shingle strings (Spark joins
-    * on xxhash64 of the shingle — an equality-preserving optimization).
-    */
-  val dedupNgramJaccard: QueryDef = QueryDef.withOracle(
-    s"""WITH $duckShingleCtes,
-       |shd AS (SELECT id, list_distinct(list(s)) AS sh FROM sh0 GROUP BY id),
-       |inv AS (SELECT DISTINCT id, s FROM sh0),
-       |rare AS (SELECT s FROM inv GROUP BY s HAVING count(*) <= 20),
-       |posts AS (SELECT inv.id, inv.s FROM inv JOIN rare USING (s)),
-       |cand AS (
-       |  SELECT x.id AS id_a, y.id AS id_b
-       |  FROM posts x JOIN posts y ON x.s = y.s AND x.id < y.id
-       |  GROUP BY 1, 2 HAVING count(*) >= 2)
-       |SELECT id_a, id_b, jaccard FROM (
-       |  SELECT c.id_a, c.id_b,
-       |    len(list_intersect(a.sh, b.sh))::DOUBLE /
-       |      len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS jaccard
-       |  FROM cand c JOIN shd a ON a.id = c.id_a JOIN shd b ON b.id = c.id_b) z
-       |WHERE jaccard >= 0.05
-       |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
-    Dedup.ngramJaccardPairs(t(s, dir, "documents"), threshold = 0.05, maxDocFrequency = 20)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** The sorted-run pair-generation KERNEL (SCALING §12.9) forced at gate
-    * scale against the identical oracle as [[dedupNgramJaccard]]: the
-    * size-adaptive default gives sf fixtures the one-action join plan, so
-    * without this row the driver's hash gate would never execute the
-    * exchange→radix-sort→bounded-run-emission path that carries the
-    * ≥×100 tiers. Same pair set, bit-identical jaccard doubles.
-    */
-  val dedupNgramKernel: QueryDef = QueryDef.withOracle(
-    s"""WITH $duckShingleCtes,
-       |shd AS (SELECT id, list_distinct(list(s)) AS sh FROM sh0 GROUP BY id),
-       |inv AS (SELECT DISTINCT id, s FROM sh0),
-       |rare AS (SELECT s FROM inv GROUP BY s HAVING count(*) <= 20),
-       |posts AS (SELECT inv.id, inv.s FROM inv JOIN rare USING (s)),
-       |cand AS (
-       |  SELECT x.id AS id_a, y.id AS id_b
-       |  FROM posts x JOIN posts y ON x.s = y.s AND x.id < y.id
-       |  GROUP BY 1, 2 HAVING count(*) >= 2)
-       |SELECT id_a, id_b, jaccard FROM (
-       |  SELECT c.id_a, c.id_b,
-       |    len(list_intersect(a.sh, b.sh))::DOUBLE /
-       |      len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS jaccard
-       |  FROM cand c JOIN shd a ON a.id = c.id_a JOIN shd b ON b.id = c.id_b) z
-       |WHERE jaccard >= 0.05
-       |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
-    Dedup.ngramJaccardPairs(t(s, dir, "documents"), threshold = 0.05, maxDocFrequency = 20,
-        kernelMinBytes = 0L)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** The hyperplane set dedup_embedding signs against (4 tables × 12
-    * planes × 64 dims), dumped as scalar rows so the oracle can replay
-    * signature computation. Grid-checked (the fixed 4×12×64 key grid —
-    * seeded pseudo-random floats pass through: java.util.Random is not
-    * replayable in SQL, which is exactly why the planes travel by dump).
-    */
-  val dedupEmbeddingPlanes: QueryDef = QueryDef.withOracle(
-    duckGridOracle("dedup_embedding_planes",
-      Seq("t" -> "4", "plane" -> "12", "pos" -> "64"))) { (s, dir) =>
-    val spark = s
-    import spark.implicits._
-    Similarity.lshPlanes(dim = 64, planesPerTable = 12, numTables = 4, seed = 42L)
-      .zipWithIndex.flatMap { case (planes, tbl) =>
-        planes.zipWithIndex.flatMap { case (pl, p) =>
-          pl.zipWithIndex.map { case (v, pos) => (tbl, p, pos, v) }
-        }
-      }.toSeq.toDF("t", "plane", "pos", "value").orderBy("t", "plane", "pos")
-  }
-
-  /** Embedding-cosine near-dup pairs through hyperplane LSH buckets —
-    * hash-checked (round 7): given the dumped plane set, the whole
-    * pipeline is deterministic and the oracle replays it — per-table
-    * packed sign signatures (bit p set iff the left-to-right double dot
-    * against plane p is ≥ 0, identical arithmetic), intra-bucket pairs
-    * with id_a < id_b, distinct, exact cosine ≥ threshold. A hash match
-    * pins bucketing AND verification bit-for-bit.
-    */
-  val dedupEmbedding: QueryDef = QueryDef.withOracle {
-    val planePivot = (0 until 64)
-      .map(i => s"MAX(CASE WHEN pos = $i THEN value END) AS q$i").mkString(", ")
-    val planeDot = (0 until 64)
-      .map(i => s"CAST(e.embedding[${i + 1}] AS DOUBLE) * CAST(pl.q$i AS DOUBLE)")
-      .mkString(" + ")
-    s"""WITH plp AS (
-       |  SELECT t, plane, $planePivot
-       |  FROM read_parquet('{{OUT}}/dedup_embedding_planes/*.parquet')
-       |  GROUP BY t, plane),
-       |emb AS (SELECT vec_id, embedding FROM embeddings),
-       |norms AS (SELECT vec_id, SQRT(${duckEmbEmbDot("e.embedding", "e.embedding")}) AS nrm
-       |  FROM emb e),
-       |sigs AS (
-       |  SELECT e.vec_id, pl.t,
-       |    SUM(CASE WHEN ($planeDot) >= 0.0
-       |        THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END) AS sig
-       |  FROM emb e CROSS JOIN plp pl
-       |  GROUP BY e.vec_id, pl.t),
-       |pairs AS (
-       |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-       |  FROM sigs x JOIN sigs y
-       |    ON x.t = y.t AND x.sig = y.sig AND x.vec_id < y.vec_id)
-       |SELECT p.id_a, p.id_b,
-       |  CASE WHEN na.nrm = 0 OR nb.nrm = 0 THEN 0.0
-       |       ELSE (${duckEmbEmbDot("a.embedding", "b.embedding")}) / (na.nrm * nb.nrm)
-       |  END AS cosine
-       |FROM pairs p
-       |JOIN emb a ON a.vec_id = p.id_a
-       |JOIN emb b ON b.vec_id = p.id_b
-       |JOIN norms na ON na.vec_id = p.id_a
-       |JOIN norms nb ON nb.vec_id = p.id_b
-       |WHERE CASE WHEN na.nrm = 0 OR nb.nrm = 0 THEN 0.0
-       |       ELSE (${duckEmbEmbDot("a.embedding", "b.embedding")}) / (na.nrm * nb.nrm)
-       |  END >= 0.3
-       |ORDER BY id_a, id_b""".stripMargin
-  } { (s, dir) =>
-    Dedup.embeddingNearDups(t(s, dir, "embeddings"), threshold = 0.3)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** Anchor-linked embedding near-dups — the O(n·tables) scale twin of
-    * dedup_embedding (see [[Dedup.embeddingNearDupAnchors]]: pair listing
-    * is output-bound quadratic on dup-dense corpora; a dedup pipeline
-    * needs connectivity, not the full pair set). Hash-checked: the oracle
-    * replays signatures from the same dumped plane set, takes MIN(vec_id)
-    * per (table, bucket) as the anchor, links every other member to it,
-    * and verifies exact cosine — bucketing, anchor election, and
-    * verification all pinned bit-for-bit.
-    */
-  val dedupEmbeddingAnchors: QueryDef = QueryDef.withOracle {
-    val planePivot = (0 until 64)
-      .map(i => s"MAX(CASE WHEN pos = $i THEN value END) AS q$i").mkString(", ")
-    val planeDot = (0 until 64)
-      .map(i => s"CAST(e.embedding[${i + 1}] AS DOUBLE) * CAST(pl.q$i AS DOUBLE)")
-      .mkString(" + ")
-    s"""WITH plp AS (
-       |  SELECT t, plane, $planePivot
-       |  FROM read_parquet('{{OUT}}/dedup_embedding_planes/*.parquet')
-       |  GROUP BY t, plane),
-       |emb AS (SELECT vec_id, embedding FROM embeddings),
-       |norms AS (SELECT vec_id, SQRT(${duckEmbEmbDot("e.embedding", "e.embedding")}) AS nrm
-       |  FROM emb e),
-       |sigs AS (
-       |  SELECT e.vec_id, pl.t,
-       |    SUM(CASE WHEN ($planeDot) >= 0.0
-       |        THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END) AS sig
-       |  FROM emb e CROSS JOIN plp pl
-       |  GROUP BY e.vec_id, pl.t),
-       |anchors AS (SELECT t, sig, MIN(vec_id) AS id_b FROM sigs GROUP BY t, sig),
-       |links AS (
-       |  SELECT DISTINCT s.vec_id AS id_a, a.id_b
-       |  FROM sigs s JOIN anchors a ON a.t = s.t AND a.sig = s.sig
-       |  WHERE s.vec_id <> a.id_b)
-       |SELECT p.id_a, p.id_b,
-       |  CASE WHEN na.nrm = 0 OR nb.nrm = 0 THEN 0.0
-       |       ELSE (${duckEmbEmbDot("a.embedding", "b.embedding")}) / (na.nrm * nb.nrm)
-       |  END AS cosine
-       |FROM links p
-       |JOIN emb a ON a.vec_id = p.id_a
-       |JOIN emb b ON b.vec_id = p.id_b
-       |JOIN norms na ON na.vec_id = p.id_a
-       |JOIN norms nb ON nb.vec_id = p.id_b
-       |WHERE CASE WHEN na.nrm = 0 OR nb.nrm = 0 THEN 0.0
-       |       ELSE (${duckEmbEmbDot("a.embedding", "b.embedding")}) / (na.nrm * nb.nrm)
-       |  END >= 0.3
-       |ORDER BY id_a, id_b""".stripMargin
-  } { (s, dir) =>
-    Dedup.embeddingNearDupAnchors(t(s, dir, "embeddings"), threshold = 0.3)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** Dedup-tier quality surface: recall of the MinHash-LSH near-dup pairs
-    * against the exact inverted-index Jaccard pairs at the same 0.5
-    * threshold — the accuracy/cost trade of the banded tier as driver-
-    * readable numbers (the dedup twin of sim_recall). Rows-only: LSH pair
-    * recall is probabilistic by design; the exact side is itself
-    * oracle-checked via dedup_ngram_jaccard.
-    */
-  /** LSH recall meter, hash-checked as of round 6: both sides of the
-    * metric already have full DuckDB replays (the minhash-LSH pipeline
-    * from dedup_minhash_keepers, the df-capped exact-Jaccard pipeline from
-    * dedup_ngram_jaccard), so the composed recall is oracle-derivable.
-    * The LSH side runs the portable md5 hash family (same algorithm as
-    * production xxhash64 — the sibling queries set the precedent).
-    *
-    * Exact side at the PRODUCTION operating point (df-cap 20, shared≥2 —
-    * same as dedup_ngram_jaccard): a pair at Jaccard ≥ 0.5 shares many
-    * shingles, so the pruning loses ~nothing while keeping the candidate
-    * set bounded (df-cap 100 + shared≥1 measured 36s vs ~6s at sf0.1 on
-    * the low-entropy fixture corpus).
-    */
-  val dedupRecall: QueryDef = QueryDef.withOracle {
-    val P = PortableMinhash.Modulus
-    val mins = (1 to 64).map(i => s"MIN((h1 + ${i - 1} * h2) % $P) AS m$i").mkString(",\n  ")
-    val bandSelects = (0 until 16).map { b =>
-      val cols = (1 to 4).map(r => s"m${b * 4 + r}").mkString(", ")
-      s"SELECT id, $b AS band, concat_ws('|', $cols) AS bucket FROM sigs"
-    }.mkString("\n  UNION ALL\n  ")
-    s"""WITH $duckShingleCtes,
-       |shd AS (SELECT id, list_distinct(list(s)) AS sh FROM sh0 GROUP BY id),
-       |danchors AS (SELECT doc_id AS id FROM documents
-       |  ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 14))::BIGINT, doc_id
-       |  LIMIT $recallAnchorBudget),
-       |hs AS (
-       |  SELECT id,
-       |    ('0x' || substr(md5(s), 1, 14))::BIGINT AS h1,
-       |    ('0x' || substr(md5(s || '#'), 1, 14))::BIGINT AS h2
-       |  FROM sh0),
-       |sigs AS (SELECT id,
-       |  $mins
-       |  FROM hs GROUP BY id),
-       |bands AS (
-       |  $bandSelects),
-       |cands AS (
-       |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.bucket = y.bucket AND x.id < y.id
-       |  WHERE x.id IN (SELECT id FROM danchors)),
-       |lsh AS (
-       |  SELECT id_a, id_b FROM (
-       |    SELECT c.id_a, c.id_b,
-       |      len(list_intersect(a.sh, b.sh))::DOUBLE /
-       |        len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS j
-       |    FROM cands c JOIN shd a ON a.id = c.id_a JOIN shd b ON b.id = c.id_b) z
-       |  WHERE j >= 0.5),
-       |inv AS (SELECT DISTINCT id, s FROM sh0),
-       |rare AS (SELECT s FROM inv GROUP BY s HAVING count(*) <= 20),
-       |posts AS (SELECT inv.id, inv.s FROM inv JOIN rare USING (s)),
-       |ecand AS (
-       |  SELECT x.id AS id_a, y.id AS id_b
-       |  FROM posts x JOIN posts y ON x.s = y.s AND x.id < y.id
-       |  WHERE x.id IN (SELECT id FROM danchors)
-       |  GROUP BY 1, 2 HAVING count(*) >= 2),
-       |exact AS (
-       |  SELECT id_a, id_b FROM (
-       |    SELECT c.id_a, c.id_b,
-       |      len(list_intersect(a.sh, b.sh))::DOUBLE /
-       |        len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS j
-       |    FROM ecand c JOIN shd a ON a.id = c.id_a JOIN shd b ON b.id = c.id_b) z
-       |  WHERE j >= 0.5),
-       |m AS (
-       |  SELECT
-       |    (SELECT count(*) FROM exact) AS n_exact,
-       |    (SELECT count(*) FROM exact e JOIN lsh l
-       |       ON e.id_a = l.id_a AND e.id_b = l.id_b) AS n_hits)
-       |SELECT CAST(n_exact AS BIGINT) AS n_exact_pairs,
-       |  CAST(n_hits AS BIGINT) AS n_lsh_hits,
-       |  CASE WHEN n_exact = 0 THEN 1.0
-       |       ELSE n_hits::DOUBLE / n_exact END AS lsh_pair_recall
-       |FROM m""".stripMargin
-  } { (s, dir) =>
-    val docs = t(s, dir, "documents")
-    // fixed ANCHOR-COUNT sample of the EXACT truth tier (round-12 verdict
-    // #7: the 1/4 RATE sample still grew the truth tier with the corpus —
-    // 29.8 s at ×100 — where the sim meters' fixed 256-anchor budget is a
-    // population-statistics law, flat per corpus scan at any scale). Pair
-    // recall is estimated over pairs whose smaller id is one of the
-    // [[recallAnchorBudget]] deterministic anchors; the predicate is
-    // pushed into candidate generation so the exact side's join and
-    // verify are O(anchors × postings), not O(corpus²). Below the budget
-    // (sf0.01 and under) the anchor set covers the corpus — full truth.
-    // Oracle replays the identical ORDER BY md5-hash LIMIT anchor set;
-    // RecallAnchorSpec pins the anchored estimate against full truth.
-    val anchorSet = recallAnchorIds(docs, "doc_id")
-    val anchored: Column => Column =
-      id => id.isin(anchorSet.map(Long.box): _*)
-    // ONE shingle pass feeds both tiers (each would otherwise scan and
-    // shingle the corpus itself), and BOTH tiers restrict the pair's
-    // smaller id to the anchors: the hit join only ever consults LSH
-    // pairs with an anchored id_a (exact ⊆ anchored), so the recall
-    // fraction is bit-identical while signatures stay corpus-wide and
-    // candidate/verify work shrinks to O(anchors) — the sim meters'
-    // query-side restriction applied to pair recall.
-    val shingled = Dedup.shingleFrame(docs).persist()
-    // materialize the shared shingle cache ONCE, then overlap the two
-    // independent pair pipelines (exact inverted-index side, minhash-LSH
-    // side — both eager builders) so one side's small-stage tails
-    // back-fill with the other's work (opt guide §2.6; was 35 sequential
-    // jobs / 5.6 s isolated). Pair sets are fully determined, so the
-    // recall fraction is unchanged.
-    shingled.count()
-    val Seq(exactPairs, lshPairs) = Parallelism.inParallel(Seq(
-      () => Dedup.ngramJaccardPairs(
-        docs, threshold = 0.5, maxDocFrequency = 20, minSharedShingles = 2,
-        idAPredicate = Some(anchored), preShingled = Some(shingled)),
-      () => Dedup.minhashNearDups(docs, threshold = 0.5,
-        family = PortableMinhash,
-        idAPredicate = Some(anchored), preShingled = Some(shingled))))
-    val exact = exactPairs.select("id_a", "id_b")
-    val lsh = lshPairs.select("id_a", "id_b")
-    val Seq(nExact, hits) = Parallelism.inParallel(Seq(
-      () => exact.count(),
-      () => exact.join(lsh, Seq("id_a", "id_b")).count()))
-    // both pair frames come back persisted (their builders cache them for
-    // the verify joins) — release them, and the shared shingle frame, so
-    // they don't pressure later queries
-    exactPairs.unpersist(blocking = false)
-    lshPairs.unpersist(blocking = false)
-    shingled.unpersist(blocking = false)
-    val spark = s
-    import spark.implicits._
-    Seq((nExact, hits, if (nExact == 0) 1.0 else hits.toDouble / nExact))
-      .toDF("n_exact_pairs", "n_lsh_hits", "lsh_pair_recall")
-  }
-
-  /** PCA compression of the embedding table (top-8 components via the
-    * composed Spark ML estimator), emitted as (vec_id, pc_idx, value)
-    * scalar rows. Membership-checked (every vec_id × 8 component grid —
-    * eigenvector signs/values are engine-specific floats and pass
-    * through); SimilaritySpec asserts variance ordering and that
-    * full-rank projection preserves pairwise geometry.
-    */
-  val embeddingPca: QueryDef = QueryDef.withOracle(
-    duckMembershipOracle("embedding_pca",
-      "SELECT DISTINCT vec_id AS id FROM embeddings", 8,
-      idCol = "vec_id", posCol = "pc_idx")) { (s, dir) =>
-    Similarity.pca(t(s, dir, "embeddings"), k = 8).projected
-      .select(col("vec_id"), posexplode(col("pc")).as(Seq("pc_idx", "value")))
-      .orderBy("vec_id", "pc_idx")
-  }
-
-  /** Near-dup CLUSTER resolution: the transitive closure of the n-gram
-    * Jaccard pair relation (near-dup similarity is not transitive, so
-    * keep-one-per-cluster needs components, not pairs), every document
-    * labeled with its component's min doc_id and the component size.
-    * Spark side runs alternating large-star/small-star
-    * ([[Dedup.connectedComponents]]); the oracle replays the identical
-    * pair generation and closes it with a recursive CTE — small-data
-    * equivalent of the O(log²n)-round distributed algorithm.
-    *
-    * ORACLE CTE SHAPE IS LOAD-BEARING (characterized in RecursiveCteSpec /
-    * commit c01e93a): the `reach` closure below MUST be the frontier-dedup
-    * `UNION` form, because the doubled edge set `e` is cyclic (u→v and
-    * v→u) and only UNION's dedup terminates the fixpoint. DuckDB accepts
-    * it; Spark 4.1's WITH RECURSIVE rejects exactly this UNION form at
-    * analysis (UNION ALL only, which on a cyclic edge set never
-    * terminates) — that asymmetry is WHY the Spark side runs
-    * large-star/small-star instead of a recursive CTE.
-    */
-  val dedupClusters: QueryDef = QueryDef.withOracle(
-    s"""WITH RECURSIVE $duckShingleCtes,
-       |shd AS (SELECT id, list_distinct(list(s)) AS sh FROM sh0 GROUP BY id),
-       |inv AS (SELECT DISTINCT id, s FROM sh0),
-       |rare AS (SELECT s FROM inv GROUP BY s HAVING count(*) <= 20),
-       |posts AS (SELECT inv.id, inv.s FROM inv JOIN rare USING (s)),
-       |cand AS (
-       |  SELECT x.id AS id_a, y.id AS id_b
-       |  FROM posts x JOIN posts y ON x.s = y.s AND x.id < y.id
-       |  GROUP BY 1, 2 HAVING count(*) >= 2),
-       |pairs AS (
-       |  SELECT id_a, id_b FROM (
-       |    SELECT c.id_a, c.id_b,
-       |      len(list_intersect(a.sh, b.sh))::DOUBLE /
-       |        len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS jaccard
-       |    FROM cand c JOIN shd a ON a.id = c.id_a JOIN shd b ON b.id = c.id_b) z
-       |  WHERE jaccard >= 0.05),
-       |e AS (SELECT id_a AS u, id_b AS v FROM pairs
-       |      UNION SELECT id_b, id_a FROM pairs),
-       |reach AS (
-       |  SELECT u, v FROM e
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u),
-       |comp AS (
-       |  SELECT u AS id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u)
-       |SELECT d.doc_id,
-       |  CAST(coalesce(c.cluster_id, d.doc_id) AS BIGINT) AS cluster_id,
-       |  CAST(count(*) OVER (PARTITION BY coalesce(c.cluster_id, d.doc_id)) AS BIGINT)
-       |    AS cluster_size
-       |FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-       |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
-    val docs = t(s, dir, "documents")
-    val pairs = Dedup.ngramJaccardPairs(docs, threshold = 0.05, maxDocFrequency = 20)
-    val comp = Dedup.connectedComponents(pairs).withColumnRenamed("id", "doc_id")
-    val labeled = docs.select(col("doc_id"))
-      .join(comp, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-    // cluster_size as a window count (the oracle's own formulation): the
-    // former groupBy + join-back spent two exchanges on the same key —
-    // the window needs one (opt guide §2.4: operations keyed the same way
-    // should share one exchange). Same rows, same counts.
-    labeled
-      .withColumn("cluster_size",
-        count(lit(1)).over(Window.partitionBy("cluster_id")))
-      .select("doc_id", "cluster_id", "cluster_size")
-      .orderBy("doc_id")
-  }
-
-  /** Benchmark decontamination gate: per corpus doc, distinct-shingle
-    * overlap against a held-out "benchmark" slice (doc_id % 10 == 0 stands
-    * in for the eval set), with count / fraction / verdict columns. The
-    * benchmark shingle set broadcasts; the corpus side never shuffles.
-    * Hash-checked: DuckDB replays the shingling and overlap joins on raw
-    * shingle strings (Spark joins on xxhash64 of the shingle — an
-    * equality-preserving optimization, as in dedup_ngram_jaccard).
-    */
-  val decontaminate: QueryDef = QueryDef.withOracle(
-    s"""WITH $duckShingleCtes,
-       |shd AS (SELECT DISTINCT id, s FROM sh0),
-       |bench AS (SELECT DISTINCT s FROM shd WHERE id % 10 = 0),
-       |corp AS (SELECT id, s FROM shd WHERE id % 10 <> 0),
-       |tot AS (SELECT id, CAST(count(*) AS BIGINT) AS n_shingles FROM corp GROUP BY id),
-       |hits AS (SELECT c.id, CAST(count(*) AS BIGINT) AS n_overlap
-       |         FROM corp c JOIN bench b USING (s) GROUP BY c.id)
-       |SELECT t.id AS doc_id, t.n_shingles,
-       |  CAST(coalesce(h.n_overlap, 0) AS BIGINT) AS n_overlap,
-       |  CAST(coalesce(h.n_overlap, 0) AS DOUBLE) / CAST(t.n_shingles AS DOUBLE)
-       |    AS overlap_frac,
-       |  (CAST(coalesce(h.n_overlap, 0) AS DOUBLE) / CAST(t.n_shingles AS DOUBLE)) >= 0.5
-       |    AS contaminated
-       |FROM tot t LEFT JOIN hits h ON h.id = t.id
-       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val docs = t(s, dir, "documents")
-    val bench = docs.where(pmod(col("doc_id"), lit(10L)) === 0)
-    val corpus = docs.where(pmod(col("doc_id"), lit(10L)) =!= 0)
-    Dedup.contaminationStats(corpus, bench, threshold = 0.5)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** Full text-analysis projection (token counts, BPE estimate, length /
-    * stopword / punctuation ratios, composite quality, lang-ID,
-    * fingerprint) — hash-checked end-to-end: every feature is integer or
-    * single-division IEEE arithmetic, and the composite score rounds via
-    * the portable floor-half-up form, so DuckDB replays all eight columns
-    * exactly (graduated from rows-only in round 5).
-    */
-  val textAnalyze: QueryDef = QueryDef.withOracle(
-    """WITH base AS (
-      |  SELECT doc_id, text, str_split(text, ' ') AS ts FROM documents),
-      |feat AS (
-      |  SELECT doc_id, text, ts,
-      |    CAST(len(ts) AS BIGINT) AS n_tokens,
-      |    CAST(list_sum(list_transform(ts,
-      |      x -> greatest(1, CAST(ceil(length(x) / 4.0) AS BIGINT)))) AS BIGINT)
-      |      AS n_tokens_bpe,
-      |    CAST(list_sum(list_transform(ts, x -> length(x))) AS DOUBLE)
-      |      / CAST(len(ts) AS DOUBLE) AS avg_token_len,
-      |    CAST(len(list_filter(ts, x -> list_contains(
-      |      ['the','a','an','and','or','of','to','in','is','it','on','for'], x))) AS DOUBLE)
-      |      / CAST(len(ts) AS DOUBLE) AS stopword_ratio,
-      |    CAST(length(text) - length(translate(text, '.,;:!?''"()-', '')) AS DOUBLE)
-      |      / CAST(length(text) AS DOUBLE) AS punct_ratio
-      |  FROM base),
-      |sc AS (
-      |  SELECT *,
-      |    least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) AS length_score,
-      |    1.0 - least(punct_ratio * 5.0, 1.0) AS punct_score,
-      |    least(stopword_ratio * 4.0, 1.0) AS stop_score,
-      |    len(list_intersect(ts, ['the','and','is','of','to','a','in','that','it','for'])) AS s_en,
-      |    len(list_intersect(ts, ['el','la','de','que','y','los','es','una','por','con'])) AS s_es,
-      |    len(list_intersect(ts, ['der','die','und','das','ist','von','mit','den','nicht','ein'])) AS s_de,
-      |    len(list_intersect(ts, ['le','la','les','et','de','un','une','est','pour','que'])) AS s_fr,
-      |    len(list_intersect(ts, ['的','是','了','在','我','有','和','不','人','这'])) AS s_zh
-      |  FROM feat)
-      |SELECT doc_id, n_tokens, n_tokens_bpe, avg_token_len, stopword_ratio, punct_ratio,
-      |  floor((length_score * 0.5 + punct_score * 0.25 + stop_score * 0.25)
-      |    * 1000000.0 + 0.5) / 1000000.0 AS quality,
-      |  CASE WHEN greatest(s_en,s_es,s_de,s_fr,s_zh) <= 0 THEN 'und'
-      |       WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-      |       WHEN s_es >= s_de AND s_es >= s_fr AND s_es >= s_zh THEN 'es'
-      |       WHEN s_de >= s_fr AND s_de >= s_zh THEN 'de'
-      |       WHEN s_fr >= s_zh THEN 'fr'
-      |       ELSE 'zh' END AS lang_pred,
-      |  list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN str_split(text, '')]),
-      |    (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint
-      |FROM sc
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    TextOps.analyze(t(s, dir, "documents"))
-      .select(
-        col("doc_id"),
-        col("n_tokens").cast("bigint").as("n_tokens"),
-        col("n_tokens_bpe"),
-        col("avg_token_len"),
-        col("stopword_ratio"),
-        col("punct_ratio"),
-        col("quality"),
-        col("lang_pred"),
-        col("fingerprint"))
-      .orderBy("doc_id")
-  }
-
-  /** Gopher-style repetition metrics (duplicate 2-/3-gram fractions, top
-    * bigram share) per document — the boilerplate/loop filter features.
-    * Hash-checked: both engines derive the fractions from the same BIGINT
-    * gram counts, so the single IEEE division is bit-identical.
-    */
-  val textRepetition: QueryDef = QueryDef.withOracle(
-    """WITH toks AS (
-      |  SELECT doc_id AS id, text, str_split(text, ' ') AS ts FROM documents),
-      |pos2 AS (
-      |  SELECT id, text, ts, unnest(generate_series(1, greatest(len(ts) - 1, 1))) AS p
-      |  FROM toks),
-      |g2 AS (
-      |  SELECT id, CASE WHEN len(ts) < 2 THEN text
-      |                  ELSE concat_ws(' ', ts[p], ts[p+1]) END AS g
-      |  FROM pos2),
-      |c2 AS (SELECT id, g, count(*) AS c FROM g2 GROUP BY id, g),
-      |s2 AS (SELECT id, CAST(sum(c) AS BIGINT) AS n2, CAST(count(*) AS BIGINT) AS d2,
-      |        CAST(max(c) AS BIGINT) AS m2 FROM c2 GROUP BY id),
-      |pos3 AS (
-      |  SELECT id, text, ts, unnest(generate_series(1, greatest(len(ts) - 2, 1))) AS p
-      |  FROM toks),
-      |g3 AS (
-      |  SELECT id, CASE WHEN len(ts) < 3 THEN text
-      |                  ELSE concat_ws(' ', ts[p], ts[p+1], ts[p+2]) END AS g
-      |  FROM pos3),
-      |c3 AS (SELECT id, g, count(*) AS c FROM g3 GROUP BY id, g),
-      |s3 AS (SELECT id, CAST(sum(c) AS BIGINT) AS n3, CAST(count(*) AS BIGINT) AS d3
-      |       FROM c3 GROUP BY id)
-      |SELECT s2.id AS doc_id, n2 AS n_2grams,
-      |  CAST(n2 - d2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS dup_2gram_frac,
-      |  CAST(m2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS top_2gram_frac,
-      |  CAST(n3 - d3 AS DOUBLE) / CAST(n3 AS DOUBLE) AS dup_3gram_frac
-      |FROM s2 JOIN s3 ON s2.id = s3.id
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    TextOps.repetitionStats(t(s, dir, "documents")).orderBy("doc_id")
-  }
-
-  /** Vocabulary analysis: top-5 terms per source by frequency — the
-    * corpus-composition dashboard a curation run reads before choosing
-    * mixtures/filters. Shape: explode tokens → two-phase hash aggregate on
-    * (source, term) → per-source window top-k; the term-count table (the
-    * only large intermediate) shuffles counts, never text rows.
-    * Deterministic ties (freq desc, term asc) make it hash-checkable.
-    */
-  val textTopTerms: QueryDef = QueryDef.withOracle(
-    """WITH tf AS (
-      |  SELECT source, t AS term, CAST(count(*) AS BIGINT) AS freq FROM (
-      |    SELECT source, unnest(str_split(text, ' ')) AS t FROM documents) z
-      |  GROUP BY source, t),
-      |r AS (
-      |  SELECT source, term, freq,
-      |    CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY freq DESC, term)
-      |      AS BIGINT) AS rank
-      |  FROM tf)
-      |SELECT source, term, freq, rank FROM r WHERE rank <= 5
-      |ORDER BY source, rank""".stripMargin) { (s, dir) =>
-    val tf = graft.ops.Parallelism.widen(t(s, dir, "documents"))
-      .select(col("source"), explode(TextOps.tokens(col("text"))).as("term"))
-      .groupBy("source", "term").agg(count(lit(1)).as("freq"))
-    val w = Window.partitionBy("source").orderBy(desc("freq"), asc("term"))
-    tf.withColumn("rank", row_number().over(w).cast("bigint"))
-      .where(col("rank") <= 5)
-      .select("source", "term", "freq", "rank")
-      .orderBy("source", "rank")
-  }
-
-  /** Language-ID heuristic + rolling-hash document fingerprint, hash-checked
-    * cross-engine: both are pure integer/string arithmetic, so DuckDB can
-    * replay them exactly (marker-set-intersection argmax with the same
-    * fixed tie order; fold `(acc*31 + code) mod 1e9+7` over characters).
-    */
-  val textLangidFingerprint: QueryDef = QueryDef.withOracle(
-    """WITH base AS (
-      |  SELECT doc_id, text, str_split(text, ' ') AS toks FROM documents),
-      |scored AS (
-      |  SELECT doc_id, text,
-      |    len(list_intersect(toks, ['the','and','is','of','to','a','in','that','it','for'])) AS s_en,
-      |    len(list_intersect(toks, ['el','la','de','que','y','los','es','una','por','con'])) AS s_es,
-      |    len(list_intersect(toks, ['der','die','und','das','ist','von','mit','den','nicht','ein'])) AS s_de,
-      |    len(list_intersect(toks, ['le','la','les','et','de','un','une','est','pour','que'])) AS s_fr,
-      |    len(list_intersect(toks, ['的','是','了','在','我','有','和','不','人','这'])) AS s_zh
-      |  FROM base)
-      |SELECT doc_id,
-      |  CASE WHEN greatest(s_en,s_es,s_de,s_fr,s_zh) <= 0 THEN 'und'
-      |       WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-      |       WHEN s_es >= s_de AND s_es >= s_fr AND s_es >= s_zh THEN 'es'
-      |       WHEN s_de >= s_fr AND s_de >= s_zh THEN 'de'
-      |       WHEN s_fr >= s_zh THEN 'fr'
-      |       ELSE 'zh' END AS lang_pred,
-      |  list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN str_split(text, '')]),
-      |    (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint
-      |FROM scored
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    t(s, dir, "documents")
-      .select(col("doc_id"),
-        TextOps.langId(col("text")).as("lang_pred"),
-        TextOps.fingerprint(col("text")).as("fingerprint"))
-      .orderBy("doc_id")
-  }
-
-  /** Deterministic train/val/test split (90/5/5) by salted portable hash of
-    * the row id: reproducible across engines/cluster sizes/retries (no
-    * `rand()`), stateless per row (a codegen'd predicate under the scan —
-    * the only split shape that holds at 100 TB). Hash-checked: DuckDB
-    * replays the identical md5-prefix bucket arithmetic.
-    */
-  val pipelineSplit: QueryDef = QueryDef.withOracle(
-    """WITH b AS (
-      |  SELECT doc_id,
-      |    ('0x'||substr(md5(CAST(doc_id AS VARCHAR)||'|split'),1,14))::BIGINT % 100 AS bucket
-      |  FROM documents)
-      |SELECT doc_id, bucket,
-      |  CASE WHEN bucket < 90 THEN 'train'
-      |       WHEN bucket < 95 THEN 'val'
-      |       ELSE 'test' END AS split
-      |FROM b ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    PipelineOps.splitAssignments(t(s, dir, "documents"))
-      .select("doc_id", "bucket", "split")
-      .orderBy("doc_id")
-  }
-
-  /** Stratified cap-N sample: at most 30 docs per language, picked by
-    * deterministic hash rank (window top-N per stratum; the fractional
-    * no-shuffle variant is `PipelineOps.sampleFraction`). Hash-checked
-    * against DuckDB's ROW_NUMBER over the same hash order.
-    */
-  val sampleStratified: QueryDef = QueryDef.withOracle(
-    """WITH r AS (
-      |  SELECT lang, doc_id,
-      |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY
-      |      ('0x'||substr(md5(CAST(doc_id AS VARCHAR)||'|sample'),1,14))::BIGINT % 1073741824,
-      |      doc_id) AS rn
-      |  FROM documents)
-      |SELECT lang, doc_id, CAST(rn AS BIGINT) AS rn
-      |FROM r WHERE rn <= 30 ORDER BY lang, rn""".stripMargin) { (s, dir) =>
-    PipelineOps.sampleCapPerStratum(t(s, dir, "documents"), "lang", cap = 30)
-      .select("lang", "doc_id", "rn")
-      .orderBy("lang", "rn")
-  }
-
-  /** Domain-mixture sampling: each source stratum sampled at its own rate
-    * (here derived arithmetically from the source index: 100 % / 50 % /
-    * 25 % / 10 % by src-number mod 4) via the stateless salted-hash
-    * predicate — the no-shuffle way a run hits a target domain mix.
-    * Hash-checked: DuckDB replays the md5-bucket arithmetic per
-    * (doc_id, source) exactly.
-    */
-  val mixtureSampleBySource: QueryDef = QueryDef.withOracle(
-    """WITH w AS (
-      |  SELECT doc_id, source,
-      |    CASE CAST(substr(source, 4) AS INT) % 4
-      |      WHEN 0 THEN 1000 WHEN 1 THEN 500 WHEN 2 THEN 250 ELSE 100 END AS thr,
-      |    ('0x'||substr(md5(CAST(doc_id AS VARCHAR)||'|mix|'||source),1,14))::BIGINT % 1000
-      |      AS b
-      |  FROM documents)
-      |SELECT doc_id, source FROM w WHERE b < thr ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val srcNum = substring(col("source"), 4, 10).cast("int")
-    val frac = when(pmod(srcNum, lit(4)) === 0, 1.0)
-      .when(pmod(srcNum, lit(4)) === 1, 0.5)
-      .when(pmod(srcNum, lit(4)) === 2, 0.25)
-      .otherwise(0.1)
-    PipelineOps.mixtureSample(t(s, dir, "documents"), "source", frac)
-      .select("doc_id", "source")
-      .orderBy("doc_id")
-  }
-
-  /** Training-sequence packing: shard → deterministic order → running
-    * token offset → fixed-budget sequence id (chunked concatenation; docs
-    * may cross sequence boundaries, exactly like pretraining packing).
-    * Pure integer window arithmetic, so DuckDB replays it bit-for-bit.
-    */
-  val packSequencesQ: QueryDef = QueryDef.withOracle(
-    """WITH d AS (
-      |  SELECT doc_id, CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tokens,
-      |    ('0x'||substr(md5(CAST(doc_id AS VARCHAR)||'|pack'),1,14))::BIGINT AS h
-      |  FROM documents),
-      |o AS (
-      |  SELECT doc_id, n_tokens, h % 8 AS shard,
-      |    CAST(coalesce(SUM(n_tokens) OVER (PARTITION BY h % 8 ORDER BY h, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-      |      AS start_offset
-      |  FROM d)
-      |SELECT doc_id, n_tokens, CAST(shard AS BIGINT) AS shard, start_offset,
-      |  CAST(floor(start_offset / 256.0) AS BIGINT) AS seq_id
-      |FROM o ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id"), TextOps.tokenCount(col("text")).cast("bigint").as("n_tokens"))
-    PipelineOps.packSequences(docs, "n_tokens", budget = 256, shards = 8)
-      .select("doc_id", "n_tokens", "shard", "start_offset", "seq_id")
-      .orderBy("doc_id")
-  }
-
-  /** DuckDB replay of [[PipelineOps.zOrderKey]]'s magic-number bit
-    * spread: one SELECT-clause step per mask (chained through CTEs —
-    * nesting the whole thing in one expression would duplicate each
-    * sub-expression 16×).
-    */
-  private def duckSpread16Steps(tag: String, src: String): Seq[String] = Seq(
-    s"($src & 65535) AS ${tag}0",
-    s"((${tag}0 | (${tag}0 << 8)) & 16711935) AS ${tag}1",
-    s"((${tag}1 | (${tag}1 << 4)) & 252645135) AS ${tag}2",
-    s"((${tag}2 | (${tag}2 << 2)) & 858993459) AS ${tag}3",
-    s"((${tag}3 | (${tag}3 << 1)) & 1431655765) AS ${tag}4")
-
-  /** Z-order (Morton) layout of the events table on (user bucket, hour
-    * bucket) — `PipelineOps.zOrderKey` composed from built-in shift/mask
-    * functions — summarized as the 32-file layout a z-sorted write would
-    * produce: per file, row count and the user/hour min-max spans that a
-    * min/max-pruned scan would consult. Sorting by the interleaved key
-    * bounds BOTH spans per file (a ts-sorted layout gives every file the
-    * full user range); PipelineOpsSpec measures the bounding-box win
-    * directly. The global rank is computed the way a 100 TB layout job
-    * must: `repartitionByRange(zkey)` + in-partition sort + partition-
-    * LOCAL row_number + broadcast per-partition offsets — rn is the exact
-    * global rank in the (zkey, event_id) total order no matter where the
-    * sampled range boundaries land, and no single task ever holds the
-    * table (the naive `Window.orderBy` global window does exactly that —
-    * "Moving all data to a single partition"). Every bit op replays
-    * exactly in DuckDB.
-    */
-  val eventsZorderLayout: QueryDef = QueryDef.withOracle {
-    val xs = duckSpread16Steps("x", "ub")
-    val ys = duckSpread16Steps("y", "tb")
-    s"""WITH b AS (
-       |  SELECT event_id, user_id,
-       |    user_id & 65535 AS ub,
-       |    (CAST(floor(epoch(ts)) AS BIGINT) // 3600) & 65535 AS tb
-       |  FROM events),
-       |s0 AS (SELECT *, ${xs(0)}, ${ys(0)} FROM b),
-       |s1 AS (SELECT *, ${xs(1)}, ${ys(1)} FROM s0),
-       |s2 AS (SELECT *, ${xs(2)}, ${ys(2)} FROM s1),
-       |s3 AS (SELECT *, ${xs(3)}, ${ys(3)} FROM s2),
-       |s4 AS (SELECT *, ${xs(4)}, ${ys(4)} FROM s3),
-       |z AS (SELECT event_id, user_id, tb, (x4 | (y4 << 1)) AS zkey FROM s4),
-       |r AS (SELECT *, row_number() OVER (ORDER BY zkey, event_id) AS rn,
-       |        COUNT(*) OVER () AS n FROM z)
-       |SELECT CAST((rn - 1) // CAST(CEIL(n / 32.0) AS BIGINT) AS BIGINT) AS file_id,
-       |  COUNT(*) AS n_rows,
-       |  MIN(user_id) AS u_min, MAX(user_id) AS u_max,
-       |  MIN(tb) AS h_min, MAX(tb) AS h_max
-       |FROM r GROUP BY 1 ORDER BY file_id""".stripMargin
-  } { (s, dir) =>
-    val ev = t(s, dir, "events")
-    val keyed = ev.select(
-      col("event_id"), col("user_id"),
-      col("user_id").bitwiseAND(lit(65535L)).as("ub"),
-      expr("unix_timestamp(ts) div 3600").bitwiseAND(lit(65535L)).as("tb"))
-      .withColumn("zkey", PipelineOps.zOrderKey(col("ub"), col("tb")))
-    val n = keyed.count()
-    val chunk = math.ceil(n / 32.0).toLong
-    val width = s.sparkContext.defaultParallelism
-    // distributed global rank: range-partition + sort the total order,
-    // then zipWithIndex (partition-local index + broadcast per-partition
-    // offsets, computed over ONE partitioner instance so the two internal
-    // jobs can never disagree on boundaries — and rn is the rank in the
-    // (zkey, event_id) TOTAL order regardless of where the sampled
-    // boundaries land). One of the rare justified RDD drops: no
-    // DataFrame operator yields a global index without funnelling the
-    // table through a single window task.
-    val sorted = keyed
-      .repartitionByRange(width, col("zkey"), col("event_id"))
-      .sortWithinPartitions("zkey", "event_id")
-      .select("event_id", "user_id", "tb")
-    val spark2 = s
-    import spark2.implicits._
-    sorted.rdd
-      .zipWithIndex()
-      .map { case (r, idx) => (r.getLong(0), r.getLong(1), r.getLong(2), idx + 1L) }
-      .toDF("event_id", "user_id", "tb", "rn")
-      .withColumn("file_id", ((col("rn") - 1) / lit(chunk)).cast("bigint"))
-      .groupBy("file_id")
-      .agg(
-        count(lit(1)).as("n_rows"),
-        min("user_id").as("u_min"), max("user_id").as("u_max"),
-        min("tb").as("h_min"), max("tb").as("h_max"))
-      .orderBy("file_id")
-  }
-
-  /** Size-targeted compaction plan over the partitioned corpus sink
-    * (`PipelineOps.compactionPlan`): per source, row count, estimated
-    * bytes, and `max(1, ceil(bytes/64 KiB))` output files — the layout
-    * audit that keeps a 100 TB partitioned write from fragmenting into
-    * millions of small files. The rewrite itself (`compactTo`: broadcast
-    * plan join → deterministic hash shard → keyed repartition) is
-    * exercised and file-count-bounded in PipelineOpsSpec.
-    */
-  val compactionPlanQ: QueryDef = QueryDef.withOracle(
-    """SELECT source, COUNT(*) AS n_rows,
-      |  CAST(SUM(n_chars) AS BIGINT) AS est_bytes,
-      |  GREATEST(1, CAST(CEIL(SUM(n_chars) / 65536.0) AS BIGINT)) AS target_files
-      |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-    PipelineOps.compactionPlan(
-      t(s, dir, "documents"), Seq("source"), col("n_chars"), 65536L)
-      .withColumnRenamed("rows", "n_rows")
-      .orderBy("source")
-  }
-
-  /** Incremental exact dedup: today's batch (doc_id % 5 == 0 stands in for
-    * the new crawl) anti-joined on content hash against the index of the
-    * existing corpus — the daily-ingest shape where corpus text is never
-    * rescanned. Oracle replays the md5 anti-join.
-    */
-  val dedupIncremental: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id, lang, source FROM documents b
-      |WHERE doc_id % 5 = 0
-      |  AND md5(b.text) NOT IN (SELECT md5(text) FROM documents WHERE doc_id % 5 <> 0)
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val docs = t(s, dir, "documents")
-    val batch = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
-    val index = Dedup.exactHashIndex(docs.where(pmod(col("doc_id"), lit(5L)) =!= 0))
-    Dedup.incrementalKeepers(batch, index)
-      .select("doc_id", "lang", "source")
-      .orderBy("doc_id")
-  }
-
-  /** JSONL source/sink round-trip: documents written as JSON-lines (the
-    * de-facto LLM corpus interchange format), read back with an explicit
-    * schema, and checked against the original table (text integrity via
-    * md5) — JSON string escaping must round-trip every character.
-    */
-  val docsJsonlRoundtrip: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
-      |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val path = s"/tmp/graft_docs_jsonl_${dirKey(dir)}"
-    if (!csvWritten.contains(path)) {
-      t(s, dir, "documents").write.mode("overwrite").json(path)
-      csvWritten.add(path)
-    }
-    s.read
-      .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      .json(path)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-        md5(col("text")).as("text_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Bloom-prefiltered incremental dedup: same semantics (and the same
-    * oracle SQL) as dedup_incremental, but the batch consults a
-    * broadcast-style bloom filter of the corpus hashes first and only
-    * bloom-positive rows reach the exact index join — the shape that
-    * keeps daily-ingest dedup cheap when the corpus index no longer fits
-    * a broadcast join.
-    */
-  val dedupIncrementalBloom: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id, lang, source FROM documents b
-      |WHERE doc_id % 5 = 0
-      |  AND md5(b.text) NOT IN (SELECT md5(text) FROM documents WHERE doc_id % 5 <> 0)
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val docs = t(s, dir, "documents")
-    val batch = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
-    val corpus = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
-    Dedup.incrementalKeepersBloom(batch, corpus)
-      .select("doc_id", "lang", "source")
-      .orderBy("doc_id")
-  }
-
-  /** Incremental NEAR-dup dedup, hash-checked end-to-end: today's batch
-    * (doc_id % 5 == 0) dedups against the `minhashIndex` of the existing
-    * corpus — banded-LSH candidates against the STORED bucket keys, exact
-    * Jaccard against the STORED hashed shingle sets, corpus text never
-    * re-read. The oracle replays signatures/banding/verify restricted to
-    * batch×corpus pairs (signatures are per-doc, so computing them over
-    * all docs and restricting the join sides is identical to the engine's
-    * two-frame split; bucket keys compare by value on both sides, as in
-    * dedup_minhash_keepers). Within-batch near-dups stay — the operator's
-    * contract is batch-vs-corpus only.
-    */
-  val dedupIncrementalMinhash: QueryDef = QueryDef.withOracle {
-    val P = PortableMinhash.Modulus
-    val mins = (1 to 64).map(i => s"MIN((h1 + ${i - 1} * h2) % $P) AS m$i").mkString(",\n  ")
-    val bandSelects = (0 until 16).map { b =>
-      val cols = (1 to 4).map(r => s"m${b * 4 + r}").mkString(", ")
-      s"SELECT id, $b AS band, concat_ws('|', $cols) AS bucket FROM sigs"
-    }.mkString("\n  UNION ALL\n  ")
-    s"""WITH $duckShingleCtes,
-       |hs AS (
-       |  SELECT id,
-       |    ('0x' || substr(md5(s), 1, 14))::BIGINT AS h1,
-       |    ('0x' || substr(md5(s || '#'), 1, 14))::BIGINT AS h2
-       |  FROM sh0),
-       |sigs AS (SELECT id,
-       |  $mins
-       |  FROM hs GROUP BY id),
-       |bands AS (
-       |  $bandSelects),
-       |cands AS (
-       |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.bucket = y.bucket
-       |   AND x.id % 5 = 0 AND y.id % 5 <> 0),
-       |shd AS (SELECT id, list_distinct(list(s)) AS sh FROM sh0 GROUP BY id),
-       |matched AS (
-       |  SELECT DISTINCT id_a FROM (
-       |    SELECT c.id_a,
-       |      len(list_intersect(a.sh, b.sh))::DOUBLE /
-       |        len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS j
-       |    FROM cands c JOIN shd a ON a.id = c.id_a JOIN shd b ON b.id = c.id_b) z
-       |  WHERE j >= 0.5)
-       |SELECT doc_id, lang, source FROM documents
-       |WHERE doc_id % 5 = 0 AND doc_id NOT IN (SELECT id_a FROM matched)
-       |ORDER BY doc_id""".stripMargin
-  } { (s, dir) =>
-    val docs = t(s, dir, "documents")
-    val batch = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
-    // persist the in-query index: incrementalNearDupKeepers reads it twice
-    // (bucket join + shingle verify), and uncached each read re-ran the
-    // full corpus shingle→signature lineage (opt guide §1.2 — in a real
-    // pipeline the index is READ from storage, so the double scan was pure
-    // gate-query overhead). The keeper set materializes inside the call,
-    // so the cache frees immediately after.
-    val index = Dedup.minhashIndex(
-      docs.where(pmod(col("doc_id"), lit(5L)) =!= 0), family = PortableMinhash).persist()
-    val out = Dedup
-      .incrementalNearDupKeepers(batch, index, threshold = 0.5, family = PortableMinhash)
-      .select("doc_id", "lang", "source")
-      .orderBy("doc_id")
-    index.unpersist(blocking = false)
-    out
-  }
-
-  /** ORC source/sink round-trip (same contract as docs_jsonl_roundtrip,
-    * over the other columnar format Spark ships natively) — closes the
-    * format matrix: parquet (every query), CSV (als_csv_ratings), JSONL
-    * (docs_jsonl_roundtrip), ORC (here).
-    */
-  val docsOrcRoundtrip: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
-      |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val path = s"/tmp/graft_docs_orc_${dirKey(dir)}"
-    if (!csvWritten.contains(path)) {
-      t(s, dir, "documents").write.mode("overwrite").orc(path)
-      csvWritten.add(path)
-    }
-    s.read.orc(path)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-        md5(col("text")).as("text_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Cross-document boilerplate removal: documents chunked into disjoint
-    * 8-word windows; chunks occurring in ≥2 distinct documents are
-    * stripped corpus-wide and the survivors reassembled in order. The
-    * oracle replays chunking (1-based list slices), the distinct-doc
-    * frequency gate, the anti-join, and the ordered reassembly; text
-    * integrity rides on md5 of the cleaned text.
-    */
-  val dedupBoilerplate: QueryDef = QueryDef.withOracle(
-    """WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-      |c AS (
-      |  SELECT doc_id, i AS idx, array_to_string(ws[(i*8+1):(i*8+8)], ' ') AS chunk
-      |  FROM w, unnest(range(0, CAST(ceil(len(ws)/8.0) AS BIGINT))) AS t(i)
-      |),
-      |freq AS (SELECT chunk FROM c GROUP BY chunk HAVING count(DISTINCT doc_id) >= 2),
-      |kept AS (SELECT doc_id, idx, chunk FROM c WHERE chunk NOT IN (SELECT chunk FROM freq)),
-      |agg AS (
-      |  SELECT doc_id, count(*) AS n_kept, string_agg(chunk, ' ' ORDER BY idx) AS clean
-      |  FROM kept GROUP BY doc_id),
-      |n AS (SELECT doc_id, CAST(ceil(len(ws)/8.0) AS BIGINT) AS n_chunks FROM w)
-      |SELECT n.doc_id, n.n_chunks,
-      |  CAST(coalesce(agg.n_kept, 0) AS BIGINT) AS n_kept,
-      |  md5(coalesce(agg.clean, '')) AS clean_md5
-      |FROM n LEFT JOIN agg ON n.doc_id = agg.doc_id
-      |ORDER BY n.doc_id""".stripMargin) { (s, dir) =>
-    Dedup.removeBoilerplate(t(s, dir, "documents"), chunkSize = 8, minDocs = 2)
-      .select(
-        col("id").as("doc_id"),
-        col("n_chunks"),
-        col("n_kept"),
-        md5(col("clean_text")).as("clean_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Exact duplicate-span pairs (Lee et al.-style exact-substring signal):
-    * doc pairs sharing ≥1 verbatim 16-word run, df-capped at 50. Oracle
-    * replays stride-1 span extraction, the md5-prefix 56-bit span hash,
-    * the df gate, and the pair join — byte-identical hash on both sides.
-    */
-  val dedupSpanPairs: QueryDef = QueryDef.withOracle(
-    """WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-      |sp AS (
-      |  SELECT DISTINCT doc_id,
-      |    ('0x'||substr(md5(array_to_string(ws[(i+1):(i+16)], ' ')),1,14))::BIGINT AS h
-      |  FROM w, unnest(range(0, CAST(greatest(len(ws) - 16, 0) AS BIGINT) + 1)) AS t(i)
-      |),
-      |df AS (SELECT h FROM sp GROUP BY h HAVING count(*) BETWEEN 2 AND 50)
-      |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |  CAST(count(*) AS BIGINT) AS shared_spans
-      |FROM sp a JOIN df USING (h) JOIN sp b USING (h)
-      |WHERE a.doc_id < b.doc_id
-      |GROUP BY 1, 2
-      |ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-    Dedup.duplicateSpanPairs(t(s, dir, "documents"), spanWords = 16, maxDf = 50)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** Overlapping-window chunking (32-token windows, stride 16): the
-    * RAG/context-shaping pass. Oracle replays the window arithmetic with
-    * 1-based clamped list slices; chunk text integrity via md5.
-    */
-  val chunkOverlap: QueryDef = QueryDef.withOracle(
-    """WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-      |c AS (
-      |  SELECT doc_id, i AS chunk_id, ws[(i*16+1):(i*16+32)] AS cw
-      |  FROM w, unnest(range(0,
-      |    CAST(ceil(greatest(len(ws) - 32, 0)/16.0) AS BIGINT) + 1)) AS t(i)
-      |)
-      |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-      |  CAST(len(cw) AS BIGINT) AS chunk_tokens,
-      |  md5(array_to_string(cw, ' ')) AS chunk_md5
-      |FROM c ORDER BY doc_id, chunk_id""".stripMargin) { (s, dir) =>
-    PipelineOps.chunkDocuments(t(s, dir, "documents"), window = 32, stride = 16)
-      .select(
-        col("id").as("doc_id"),
-        col("chunk_id"),
-        col("chunk_tokens"),
-        md5(col("chunk_text")).as("chunk_md5"))
-      .orderBy("doc_id", "chunk_id")
-  }
-
-  /** The same chunking computed by the custom Catalyst Generator (UDTF
-    * surface, `graft.functions.ChunkGenerator`) instead of the
-    * transform+posexplode HOF form — the generator streams chunks lazily
-    * (peak memory one doc + one chunk, vs the HOF's window/stride ×
-    * document transient array). Same oracle as chunk_overlap: the two
-    * forms must be indistinguishable in output.
-    */
-  val chunkOverlapGen: QueryDef = QueryDef.withOracle(
-    """WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-      |c AS (
-      |  SELECT doc_id, i AS chunk_id, ws[(i*16+1):(i*16+32)] AS cw
-      |  FROM w, unnest(range(0,
-      |    CAST(ceil(greatest(len(ws) - 32, 0)/16.0) AS BIGINT) + 1)) AS t(i)
-      |)
-      |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-      |  CAST(len(cw) AS BIGINT) AS chunk_tokens,
-      |  md5(array_to_string(cw, ' ')) AS chunk_md5
-      |FROM c ORDER BY doc_id, chunk_id""".stripMargin) { (s, dir) =>
-    val gen = org.apache.spark.sql.GraftSqlShims.column(
-      graft.functions.ChunkGenerator(
-        org.apache.spark.sql.GraftSqlShims.expression(col("text")),
-        org.apache.spark.sql.GraftSqlShims.expression(lit(32)),
-        org.apache.spark.sql.GraftSqlShims.expression(lit(16))))
-    t(s, dir, "documents")
-      .select(col("doc_id"), gen)
-      .select(
-        col("doc_id"),
-        col("chunk_id").cast("bigint").as("chunk_id"),
-        col("chunk_tokens").cast("bigint").as("chunk_tokens"),
-        md5(col("chunk_text")).as("chunk_md5"))
-      .orderBy("doc_id", "chunk_id")
-  }
-
-  /** Corpus-trained trigram OOV quality: vocabulary = the 512 most common
-    * character trigrams of the corpus itself (ties at the cut broken
-    * (count DESC, trigram ASC) — binary collation in both engines), score =
-    * per doc how many of its trigrams fall outside that vocabulary. The
-    * outputs are two integers and one single-division rate, so the usual
-    * float-sum ordering hazard cannot arise and the full train+score
-    * pipeline is hash-checked against DuckDB.
-    */
-  val textOovQuality: QueryDef = QueryDef.withOracle(
-    """WITH pos AS (
-      |  SELECT doc_id, text, unnest(range(1, len(text) - 1)) AS i FROM documents
-      |),
-      |tri AS (SELECT doc_id, substr(text, i, 3) AS tri FROM pos),
-      |vocab AS (
-      |  SELECT tri FROM (
-      |    SELECT tri, count(*) AS c FROM tri GROUP BY tri
-      |    ORDER BY c DESC, tri LIMIT 512)
-      |),
-      |scored AS (
-      |  SELECT t.doc_id,
-      |    count(*) AS n_trigrams,
-      |    sum(CASE WHEN v.tri IS NULL THEN 1 ELSE 0 END) AS oov
-      |  FROM tri t LEFT JOIN vocab v USING (tri)
-      |  GROUP BY t.doc_id)
-      |SELECT doc_id, CAST(n_trigrams AS BIGINT) AS n_trigrams,
-      |  CAST(oov AS BIGINT) AS oov_trigrams,
-      |  CAST(oov AS DOUBLE) / n_trigrams AS oov_rate
-      |FROM scored ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    TextOps.oovScore(t(s, dir, "documents"))
-  }.sortedDump("doc_id")
-
-  /** Fact⋈fact join over bucketed tables — the pay-the-shuffle-once layout
-    * for joins where neither side broadcasts at scale. Both tables are
-    * written `bucketBy(8, key)` once per JVM (`Bucketing.writeBucketed`),
-    * after which the planner proves co-partitioning and elides every
-    * Exchange from the join (asserted in BucketingSpec). The oracle replays
-    * the identical join+agg on the raw parquet — bucketing must be a pure
-    * layout change, invisible in the result.
-    */
-  val bucketedJoin: QueryDef = QueryDef.withOracle(
-    """SELECT o_orderpriority,
-      |  COUNT(*) AS n_items,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |GROUP BY o_orderpriority
-      |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-    val k = dirKey(dir)
-    val li = s"graft_li_buck_$k"
-    val ord = s"graft_ord_buck_$k"
-    // bucket count sized to the larger (fact) side's volume; both tables
-    // share it so the join stays provably co-partitioned
-    val nb = Bucketing.autoBuckets(s, s"$dir/lineitem.parquet")
-    Bucketing.writeBucketed(
-      t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount"),
-      li, nb, "l_orderkey")
-    Bucketing.writeBucketed(
-      t(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
-      ord, nb, "o_orderkey")
-    Bucketing.coLocatedJoin(s, li, ord, "l_orderkey", "o_orderkey")
-      .groupBy("o_orderpriority")
-      .agg(
-        count(lit(1)).as("n_items"),
-        sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)"))).cast("double")
-          .as("revenue"))
-      .orderBy("o_orderpriority")
-  }
-
-  /** Gopher/C4-style rule filter: hard keep/drop with the first failing
-    * rule recorded — token-count bounds, mean-token-length band, longest-
-    * token cap, minimum stopword ratio. All features are stateless
-    * codegen'd expressions (`TextOps.qualityFlags`); DuckDB replays every
-    * formula exactly (mean token length via the Σlen = len−(n−1) identity,
-    * so neither engine aggregates per token).
-    */
-  val qualityFilter: QueryDef = QueryDef.withOracle(
-    """WITH base AS (
-      |  SELECT doc_id, text,
-      |    CAST(len(str_split(text, ' ')) AS BIGINT) AS n,
-      |    str_split(text, ' ') AS toks
-      |  FROM documents),
-      |f AS (
-      |  SELECT doc_id, n AS n_tokens,
-      |    CAST(length(text) - n + 1 AS DOUBLE) / CAST(n AS DOUBLE) AS mean_tok_len,
-      |    CAST(list_max(list_transform(toks, x -> length(x))) AS BIGINT) AS max_tok_len,
-      |    CAST(len(list_filter(toks,
-      |        x -> x IN ('the','a','an','and','or','of','to','in','is','it','on','for'))) AS DOUBLE)
-      |      / CAST(n AS DOUBLE) AS stop_ratio
-      |  FROM base),
-      |g AS (
-      |  SELECT doc_id, n_tokens, mean_tok_len, max_tok_len, stop_ratio,
-      |    CASE WHEN n_tokens < 10 OR n_tokens > 1000 THEN 'n_tokens'
-      |         WHEN mean_tok_len < 2.0 OR mean_tok_len > 12.0 THEN 'mean_tok_len'
-      |         WHEN max_tok_len > 30 THEN 'long_token'
-      |         WHEN stop_ratio < 0.02 THEN 'low_stopword'
-      |         ELSE 'ok' END AS reason
-      |  FROM f)
-      |SELECT doc_id, n_tokens, mean_tok_len, max_tok_len, stop_ratio, reason,
-      |  reason = 'ok' AS keep
-      |FROM g ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    TextOps.qualityFlags(t(s, dir, "documents")).orderBy("doc_id")
-  }
-
-  /** Pattern scrub (the PII/number-redaction pass before a corpus ships):
-    * digit runs replaced by a token, plus the redacted-character count via
-    * the length-delta identity. Stateless codegen'd regex over the column —
-    * no UDF; the pattern stays in the Java∩RE2 regex subset so DuckDB
-    * replays it verbatim.
-    */
-  val textRedact: QueryDef = QueryDef.withOracle(
-    """SELECT event_id,
-      |  regexp_replace(props, '[0-9]+', '<NUM>', 'g') AS props_redacted,
-      |  CAST(length(props) - length(regexp_replace(props, '[0-9]', '', 'g')) AS BIGINT)
-      |    AS n_digits
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    t(s, dir, "events")
-      .select(
-        col("event_id"),
-        PipelineOps.redact(col("props"), "[0-9]+", "<NUM>").as("props_redacted"),
-        PipelineOps.charClassCount(col("props"), "[0-9]").as("n_digits"))
-  }.sortedDump("event_id")
-
-  /** Streaming content dedup: first occurrence of each (user_id,
-    * event_type, props) key survives, every later duplicate is dropped
-    * in-flight — the streaming twin of exact dedup. Emitting only the key
-    * columns makes the kept set deterministic (all duplicates agree on
-    * them), so the run is hash-checked against batch DISTINCT. State is
-    * O(distinct keys); the bounded-state TTL variant is
-    * `EventsStream.dedupedEvents` (dropDuplicatesWithinWatermark).
-    */
-  val streamDedup: QueryDef = QueryDef.withOracle(
-    """SELECT DISTINCT user_id, event_type, props FROM events
-      |ORDER BY user_id, event_type, props""".stripMargin) { (s, dir) =>
-    EventsStream.runToBatch(s, dir,
-      _.select("user_id", "event_type", "props")
-        .dropDuplicates("user_id", "event_type", "props"),
-      s"stream_dedup_${math.abs(dir.hashCode)}")
-  }.sortedDump("user_id", "event_type", "props")
-
-  /** Length-distribution audit: equi-width histogram of document n_chars
-    * (12 buckets over [0, 600), under/overflow clamped into the edge
-    * buckets). Oracle replays the clamped floor arithmetic.
-    */
-  val docsLengthHistogram: QueryDef = QueryDef.withOracle(
-    """WITH b AS (
-      |  SELECT CAST(least(greatest(floor((n_chars - 0.0) / 50.0), 0.0), 11.0) AS BIGINT) AS bucket
-      |  FROM documents)
-      |SELECT bucket, 0.0 + bucket * 50.0 AS bucket_lo,
-      |  0.0 + (bucket + 1) * 50.0 AS bucket_hi,
-      |  count(*) AS n
-      |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin) { (s, dir) =>
-    PipelineOps.histogram(t(s, dir, "documents"), "n_chars", lo = 0.0, hi = 600.0, nBins = 12)
-      .orderBy("bucket")
-  }
-
-  /** Schema-evolution read: two parquet generations of the documents
-    * table — v1 written without the `source` column (the early-crawl
-    * schema), v2 with it — read back through mergeSchema so v1 rows
-    * surface NULL source. The oracle replays the generation split with a
-    * CASE. Schema drift across file generations is a fact of life for a
-    * long-lived 100 TB corpus; the merged read is Spark's native answer.
-    */
-  val docsSchemaEvolution: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id, lang,
-      |  CASE WHEN doc_id % 2 = 1 THEN source END AS source
-      |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val root = s"/tmp/graft_docs_evo_${dirKey(dir)}"
-    if (!csvWritten.contains(root)) {
-      val docs = t(s, dir, "documents")
-      docs.where(pmod(col("doc_id"), lit(2L)) === 0)
-        .select("doc_id", "lang")
-        .write.mode("overwrite").parquet(s"$root/v1")
-      docs.where(pmod(col("doc_id"), lit(2L)) === 1)
-        .select("doc_id", "lang", "source")
-        .write.mode("overwrite").parquet(s"$root/v2")
-      csvWritten.add(root)
-    }
-    s.read.option("mergeSchema", "true").parquet(s"$root/v1", s"$root/v2")
-      .select("doc_id", "lang", "source")
-      .orderBy("doc_id")
-  }
-
-  /** Range-sorted layout scan: documents rewritten once per JVM with
-    * `repartitionByRange` + `sortWithinPartitions` on doc_id (each file a
-    * disjoint id range — parquet min/max stats then let a range predicate
-    * skip whole files' row groups), read back through a selective range
-    * filter. The oracle applies the same filter to the raw table: layout
-    * must be invisible in the result.
-    */
-  val docsSortedScan: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
-      |FROM documents
-      |WHERE doc_id BETWEEN 42 AND 137
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val path = s"/tmp/graft_docs_rangesorted_${dirKey(dir)}"
-    Bucketing.writeRangeSorted(t(s, dir, "documents"), path, numFiles = 8, sortCol = "doc_id")
-    s.read.parquet(path)
-      .where(col("doc_id").between(42L, 137L))
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-        md5(col("text")).as("text_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Streaming merge-on-write index maintenance: the events stream keeps
-    * a parquet first-seen index (content hash → min event id) fresh via
-    * foreachBatch upserts — the streaming twin of dedup_incremental's
-    * batch index. The oracle replays the equivalent global group-by; the
-    * min-merge is idempotent, so the maintained index must equal it
-    * exactly regardless of micro-batch boundaries.
-    */
-  val streamIndexMaintenance: QueryDef = QueryDef.withOracle(
-    """SELECT md5(concat_ws('|', user_id, event_type, props)) AS content_hash,
-      |  min(event_id) AS first_event_id
-      |FROM events
-      |GROUP BY 1
-      |ORDER BY 1""".stripMargin) { (s, dir) =>
-    val idxDir = s"/tmp/graft_stream_index_${dirKey(dir)}"
-    if (!csvWritten.contains(idxDir)) {
-      EventsStream.deleteRecursively(new java.io.File(idxDir))
-      EventsStream.deleteRecursively(new java.io.File(idxDir + "_ck"))
-      val keyed = EventsStream.readEvents(s, dir).select(
-        md5(concat_ws("|", col("user_id"), col("event_type"), col("props")))
-          .as("content_hash"),
-        col("event_id"))
-      EventsStream.firstSeenIndex(keyed, idxDir, idxDir + "_ck")
-      csvWritten.add(idxDir)
-    }
-    EventsStream.latestIndex(s, idxDir)
-  }.sortedDump("content_hash")
-
-  /** Exact cosine top-5 neighbors, oracle-checked against DuckDB's
-    * list_cosine_similarity. Scores intentionally excluded from the output
-    * (ranks are stable; raw float-sum order is not guaranteed identical).
-    */
-  val simTopkBrute: QueryDef = QueryDef.withOracle(
-    """SELECT query_id, neighbor_id, rank FROM (
-      |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-      |    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-      |      ORDER BY list_cosine_similarity(a.embedding, b.embedding) DESC, b.vec_id) AS rank
-      |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id) x
-      |WHERE rank <= 5
-      |ORDER BY query_id, rank""".stripMargin) { (s, dir) =>
-    val e = t(s, dir, "embeddings")
-    Similarity.bruteForceTopK(e, e, k = 5)
-      .select("query_id", "neighbor_id", "rank")
-      .orderBy("query_id", "rank")
-  }
-
-  /** The hyperplane set sim_topk_lsh signs against (12 tables ×
-    * corpus-sized plane count × 64 dims), dumped for the oracle replay.
-    * The plane count replicates lshTopK's auto-sizing formula exactly
-    * (both derive it from the same corpus count, and the plane arrays are
-    * deterministic in (dim, planes, table, seed)). Grid-checked: the
-    * oracle re-derives the plane count from the corpus count with the
-    * SAME ln-ratio-ceil arithmetic (max(4, ⌈ln(max(n/64, 2))/ln 2⌉)) and
-    * asserts the 12 × planes × 64 grid is complete; the float values pass
-    * through.
-    */
-  val simLshPlanes: QueryDef = QueryDef.withOracle(
-    duckGridOracle("sim_lsh_planes", Seq(
-      "t" -> "12",
-      "plane" -> ("GREATEST(4, CAST(CEIL(LN(GREATEST(CAST((SELECT COUNT(*) FROM embeddings) AS DOUBLE)"
-        + " / 64.0, 2.0)) / LN(2.0)) AS INT))"),
-      "pos" -> "64"))) { (s, dir) =>
-    val spark = s
-    import spark.implicits._
-    val n = t(s, dir, "embeddings").count().toDouble
-    val planes = math.max(4,
-      math.ceil(math.log(math.max(n / 64.0, 2.0)) / math.log(2.0)).toInt)
-    Similarity.lshPlanes(dim = 64, planesPerTable = planes, numTables = 12, seed = 42L)
-      .zipWithIndex.flatMap { case (pls, tbl) =>
-        pls.zipWithIndex.flatMap { case (pl, p) =>
-          pl.zipWithIndex.map { case (v, pos) => (tbl, p, pos, v) }
-        }
-      }.toSeq.toDF("t", "plane", "pos", "value").orderBy("t", "plane", "pos")
-  }
-
-  /** LSH-bucketed approximate top-5 (the n²-free scale path) —
-    * hash-checked (round 7): the covering query runs the portable-md5
-    * bucket-cap variant (the minhash precedent — production default stays
-    * xxhash64) so the oracle can replay the WHOLE pipeline from the
-    * dumped plane set: packed sign signatures, the deterministic
-    * hash-ordered per-bucket cap, candidate pairs from any shared bucket,
-    * and the exact-cosine (desc, id asc) top-5.
-    */
-  val simTopkLsh: QueryDef = QueryDef.withOracle {
-    val planePivot = (0 until 64)
-      .map(i => s"MAX(CASE WHEN pos = $i THEN value END) AS q$i").mkString(", ")
-    val planeDot = (0 until 64)
-      .map(i => s"CAST(e.embedding[${i + 1}] AS DOUBLE) * CAST(pl.q$i AS DOUBLE)")
-      .mkString(" + ")
-    s"""WITH plp AS (
-       |  SELECT t, plane, $planePivot
-       |  FROM read_parquet('{{OUT}}/sim_lsh_planes/*.parquet')
-       |  GROUP BY t, plane),
-       |emb AS (SELECT vec_id, embedding FROM embeddings),
-       |norms AS (SELECT vec_id, SQRT(${duckEmbEmbDot("e.embedding", "e.embedding")}) AS nrm
-       |  FROM emb e),
-       |sigs AS (
-       |  SELECT e.vec_id, pl.t,
-       |    SUM(CASE WHEN ($planeDot) >= 0.0
-       |        THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END) AS sig
-       |  FROM emb e CROSS JOIN plp pl
-       |  GROUP BY e.vec_id, pl.t),
-       |capped AS (
-       |  SELECT vec_id, t, sig FROM (
-       |    SELECT vec_id, t, sig,
-       |      ROW_NUMBER() OVER (PARTITION BY t, sig
-       |        ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 14))::BIGINT,
-       |                 vec_id) AS r
-       |    FROM sigs) z WHERE r <= 256),
-       |pairs AS (
-       |  SELECT DISTINCT x.vec_id AS query_id, y.vec_id AS neighbor_id
-       |  FROM sigs x JOIN capped y
-       |    ON x.t = y.t AND x.sig = y.sig AND x.vec_id <> y.vec_id),
-       |cos AS (
-       |  SELECT p.query_id, p.neighbor_id,
-       |    CASE WHEN na.nrm = 0 OR nb.nrm = 0 THEN 0.0
-       |         ELSE (${duckEmbEmbDot("a.embedding", "b.embedding")}) / (na.nrm * nb.nrm)
-       |    END AS cosine
-       |  FROM pairs p
-       |  JOIN emb a ON a.vec_id = p.query_id
-       |  JOIN emb b ON b.vec_id = p.neighbor_id
-       |  JOIN norms na ON na.vec_id = p.query_id
-       |  JOIN norms nb ON nb.vec_id = p.neighbor_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM cos)
-       |SELECT query_id, neighbor_id, rank, cosine FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
-  } { (s, dir) =>
-    Similarity.lshTopK(t(s, dir, "embeddings"), k = 5, portableCapHash = true)
-      .orderBy("query_id", "rank")
-  }
-
-  /** Codebook pivot CTE for the ANN replay oracles: the dumped
-    * `(cell, pos, value)` rows pivot to one row per cell with FLOAT
-    * columns c0..c{dim-1}.
-    */
-  private def duckCbCte(alias: String, dump: String, dim: Int): String = {
-    val cols = (0 until dim)
-      .map(i => s"MAX(CASE WHEN pos = $i THEN value END) AS c$i").mkString(", ")
-    s"$alias AS (SELECT cell, $cols FROM read_parquet('{{OUT}}/$dump/*.parquet') GROUP BY cell)"
-  }
-
-  /** vector·centroid dot: explicit left-associative 64/65-term sum of
-    * DOUBLE-cast FLOAT products — bit-identical to TopCellsExpr's
-    * `s += vv[i] * row[i]` loop (list indexing is 1-based in DuckDB).
-    */
-  private def duckEmbCellDot(emb: String, cb: String, dim: Int): String =
-    (0 until dim).map(p => s"CAST($emb[${p + 1}] AS DOUBLE) * CAST($cb.c$p AS DOUBLE)")
-      .mkString(" + ")
-
-  /** vector·vector dot, same portable arithmetic (DotProductExpr). */
-  private def duckEmbEmbDot(a: String, b: String, dim: Int = 64): String =
-    (0 until dim).map(p => s"CAST($a[${p + 1}] AS DOUBLE) * CAST($b[${p + 1}] AS DOUBLE)")
-      .mkString(" + ")
-
-  /** Fixed-grid membership oracle for a multi-key codebook/plane dump:
-    * the expected key grid is the CROSS product of the given
-    * `(name, count)` ranges (all engine-side constants or SQL-derivable
-    * counts), values pass through the dump via a left join — the
-    * [[duckMembershipOracle]] form generalized to composite keys. Pins
-    * grid completeness (exactly one row per key tuple), row count, and
-    * schema; the trained floats stay engine-specific.
-    */
-  /** SQL twin of [[Similarity.defaultNumCells]] over a table's row count:
-    * GREATEST(16, LEAST(4096, ROUND(SQRT(n)))) — keeps the grid oracles
-    * count-agnostic now that codebooks are √n-sized (round 8).
-    */
-  private def duckDefaultCellsSql(table: String): String =
-    s"GREATEST(16, LEAST(4096, CAST(ROUND(SQRT(CAST((SELECT COUNT(*) FROM $table) AS DOUBLE))) AS INT)))"
-
-  private def duckGridOracle(dump: String, keys: Seq[(String, String)]): String = {
-    val ctes = keys.map { case (k, n) =>
-      s"g_$k AS (SELECT CAST(unnest(generate_series(0, ($n) - 1)) AS INT) AS $k)"
-    }.mkString(",\n")
-    val cross = keys.map(k => s"g_${k._1}").mkString(" CROSS JOIN ")
-    val cols = keys.map(_._1)
-    val sel = cols.map(k => s"grid.$k").mkString(", ")
-    val on = cols.map(k => s"f.$k = grid.$k").mkString(" AND ")
-    s"""WITH $ctes,
-       |grid AS (SELECT ${cols.mkString(", ")} FROM $cross)
-       |SELECT $sel, f.value
-       |FROM grid LEFT JOIN read_parquet('{{OUT}}/$dump/*.parquet') f ON $on
-       |ORDER BY ${cols.map(k => s"grid.$k").mkString(", ")}""".stripMargin
-  }
-
-  /** The per-dir trained IVF codebook as scalar rows — the dump the
-    * sim_topk_ivf oracle replays against. Grid-checked (√n cells × 64
-    * dims, the defaultNumCells rule — k-means floats pass through); within a session this is THE
-    * cached array every IVF query probes with, so dump and serving can
-    * never diverge.
-    */
-  val simIvfCodebook: QueryDef = QueryDef.withOracle(
-    duckGridOracle("sim_ivf_codebook",
-      Seq("cell" -> duckDefaultCellsSql("embeddings"), "pos" -> "64"))) { (s, dir) =>
-    val spark = s
-    import spark.implicits._
-    trainedCodebook(s, dir).zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (v, p) => (i, p, v) }
-    }.toSeq.toDF("cell", "pos", "value").orderBy("cell", "pos")
-  }
-
-  /** The per-dir trained MIPS codebook (augmented 65-dim space) as scalar
-    * rows — the dump the sim_topk_mips oracle replays against. The
-    * augmentation bound itself needs no dump: max ‖v‖² is an
-    * order-independent aggregate the oracle recomputes exactly.
-    * Grid-checked (√n cells × 65 augmented dims).
-    */
-  val simMipsCodebook: QueryDef = QueryDef.withOracle(
-    duckGridOracle("sim_mips_codebook",
-      Seq("cell" -> duckDefaultCellsSql("embeddings"), "pos" -> "65"))) { (s, dir) =>
-    val spark = s
-    import spark.implicits._
-    trainedMipsIdx(s, dir).cells.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (v, p) => (i, p, v) }
-    }.toSeq.toDF("cell", "pos", "value").orderBy("cell", "pos")
-  }
-
-  /** The per-dir trained PQ codebooks (residual space) as scalar rows —
-    * the dump the sim_topk_ivfpq oracle replays against. Same cache as the
-    * serving query, so dump and search share floats. Grid-checked (8
-    * subspaces × 16 codes × 8 sub-dims).
-    */
-  val simPqCodebook: QueryDef = QueryDef.withOracle(
-    duckGridOracle("sim_pq_codebook",
-      Seq("m" -> "8", "code" -> "16", "pos" -> "8"))) { (s, dir) =>
-    val spark = s
-    import spark.implicits._
-    trainedPq(s, dir).zipWithIndex.flatMap { case (codes, m) =>
-      codes.zipWithIndex.flatMap { case (c, code) =>
-        c.zipWithIndex.map { case (v, p) => (m, code, p, v) }
-      }
-    }.toSeq.toDF("m", "code", "pos", "value").orderBy("m", "code", "pos")
-  }
-
-  /** IVF-style probe-limited top-5 with a k-means-trained codebook (3
-    * Lloyd passes over the corpus; only the k×dim centroid table reaches
-    * the driver) — hash-checked (round-6 verdict #3): every stage of the
-    * engine path is deterministic given the dumped codebook, so the oracle
-    * replays it stage by stage in DuckDB — argmax-dot assignment (score
-    * desc, cell asc ties), occupied-cell probing (nProbe=4), candidate
-    * generation by cell equality minus self, exact cosine
-    * (dot/(‖q‖·‖c‖), zero-norm → 0) and (cosine desc, id asc) top-5 —
-    * with all float arithmetic written as the same left-to-right
-    * double-accumulation the codegen expressions execute.
-    */
-  val simTopkIvf: QueryDef = QueryDef.withOracle(
-    s"""WITH ${duckCbCte("cb", "sim_ivf_codebook", 64)},
-       |emb AS (SELECT vec_id, embedding FROM embeddings),
-       |norms AS (SELECT vec_id, SQRT(${duckEmbEmbDot("e.embedding", "e.embedding")}) AS nrm
-       |  FROM emb e),
-       |scores AS (
-       |  SELECT e.vec_id, cb.cell, ${duckEmbCellDot("e.embedding", "cb", 64)} AS s
-       |  FROM emb e CROSS JOIN cb),
-       |assign AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT vec_id, cell,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS r
-       |    FROM scores) z WHERE r = 1),
-       |occ AS (SELECT DISTINCT cell FROM assign),
-       |probes AS (
-       |  SELECT vec_id AS query_id, cell FROM (
-       |    SELECT sc.vec_id, sc.cell,
-       |      ROW_NUMBER() OVER (PARTITION BY sc.vec_id ORDER BY sc.s DESC, sc.cell ASC) AS r
-       |    FROM scores sc JOIN occ USING (cell)) z WHERE r <= 4),
-       |cand AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id
-       |  FROM probes p JOIN assign a USING (cell)
-       |  WHERE p.query_id <> a.vec_id),
-       |cos AS (
-       |  SELECT c.query_id, c.neighbor_id,
-       |    CASE WHEN nq.nrm = 0 OR nn.nrm = 0 THEN 0.0
-       |         ELSE (${duckEmbEmbDot("q.embedding", "b.embedding")}) / (nq.nrm * nn.nrm)
-       |    END AS cosine
-       |  FROM cand c
-       |  JOIN emb q ON q.vec_id = c.query_id
-       |  JOIN emb b ON b.vec_id = c.neighbor_id
-       |  JOIN norms nq ON nq.vec_id = c.query_id
-       |  JOIN norms nn ON nn.vec_id = c.neighbor_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM cos)
-       |SELECT query_id, neighbor_id, rank, cosine FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin) { (s, dir) =>
-    val e = t(s, dir, "embeddings")
-    Similarity.ivfTopK(e, e, k = 5, trainedCodebook = Some(trainedCodebook(s, dir)))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Maximum-inner-product ANN over raw (unnormalized) embeddings —
-    * completes the ANN matrix: the cosine tiers (brute/LSH/IVF/IVF-PQ)
-    * rank by angle; this one ranks by raw dot through the augmented-norm
-    * MIPS→cosine reduction ([[Similarity.mipsIvfTopK]]), the retrieval
-    * mode of recommendation/scoring workloads. Self-matches are included
-    * by MIPS-serving semantics (a catalog lookup has no self notion).
-    * Hash-checked (round-6 verdict #3): the oracle replays augmentation
-    * (the bound is an order-independent MAX it recomputes exactly),
-    * assignment over the dumped trained codebook, occupied-cell probing,
-    * and true-dot (score desc, id asc) top-5, all in the same
-    * left-to-right double arithmetic as the codegen expressions. Recall
-    * vs a brute-dot baseline stays spec-asserted in SimilaritySpec.
-    */
-  val simTopkMips: QueryDef = QueryDef.withOracle(
-    s"""WITH ${duckCbCte("cb", "sim_mips_codebook", 65)},
-       |emb AS (SELECT vec_id, embedding FROM embeddings),
-       |sd AS (SELECT vec_id, ${duckEmbEmbDot("e.embedding", "e.embedding")} AS selfdot
-       |  FROM emb e),
-       |mx AS (SELECT MAX(selfdot) AS maxsq FROM sd),
-       |aug AS (
-       |  SELECT e.vec_id, e.embedding,
-       |    CAST(SQRT(GREATEST(mx.maxsq - sd.selfdot, 0.0)) AS FLOAT) AS a64
-       |  FROM emb e JOIN sd USING (vec_id) CROSS JOIN mx),
-       |cscore AS (
-       |  SELECT g.vec_id, cb.cell,
-       |    ${duckEmbCellDot("g.embedding", "cb", 64)}
-       |      + CAST(g.a64 AS DOUBLE) * CAST(cb.c64 AS DOUBLE) AS s
-       |  FROM aug g CROSS JOIN cb),
-       |assign AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT vec_id, cell,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS r
-       |    FROM cscore) z WHERE r = 1),
-       |occ AS (SELECT DISTINCT cell FROM assign),
-       |qscore AS (
-       |  SELECT e.vec_id, cb.cell,
-       |    ${duckEmbCellDot("e.embedding", "cb", 64)}
-       |      + CAST(0.0 AS DOUBLE) * CAST(cb.c64 AS DOUBLE) AS s
-       |  FROM emb e CROSS JOIN cb),
-       |probes AS (
-       |  SELECT vec_id AS query_id, cell FROM (
-       |    SELECT q.vec_id, q.cell,
-       |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY q.s DESC, q.cell ASC) AS r
-       |    FROM qscore q JOIN occ USING (cell)) z WHERE r <= 4),
-       |sc AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |    ${duckEmbEmbDot("q.embedding", "b.embedding")} AS score
-       |  FROM probes p JOIN assign a USING (cell)
-       |  JOIN emb q ON q.vec_id = p.query_id
-       |  JOIN emb b ON b.vec_id = a.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, score,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY score DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM sc)
-       |SELECT query_id, neighbor_id, rank, score FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin) { (s, dir) =>
-    val e = t(s, dir, "embeddings")
-    Similarity.mipsIvfTopK(e, e, k = 5, nProbe = 4, numCells = 64,
-      queryIdCol = "vec_id", corpusIdCol = "vec_id", vecCol = "embedding",
-      dim = 64, trainedIndex = Some(trainedMipsIdx(s, dir)))
-      .toDF("query_id", "neighbor_id", "rank", "score")
-      .orderBy("query_id", "rank")
-  }
-
-  /** IVF-PQ ANN — the composed compressed-index tier: IVF cells prune the
-    * probe set, residual PQ codes (M bytes per vector) carry the ADC scan,
-    * raw vectors only re-attach for the exact re-rank of the top-`rerank`
-    * candidates. The recall of this tier vs brute force is measured by
-    * sim_recall's `ivfpq_recall` column.
-    *
-    * Hash-checked (round 7, completing the deterministic ANN matrix): the
-    * oracle replays the ENTIRE composed index from the two codebook dumps
-    * — FLOAT residuals against the assigned centroid, per-subspace
-    * argmax-(dot − ‖c‖²/2) codes with lowest-code ties, the per-pair ADC
-    * decomposition qdotcell + Σₘ q_subₘ·c_{m,codeₘ} in the engine's exact
-    * left-to-right double order, the (adc desc, id asc) rerank-50 cut,
-    * and the exact-cosine top-5 — so a hash match pins residual encoding,
-    * code assignment, ADC arithmetic, and both rank cuts bit-for-bit.
-    */
-  val simTopkIvfPq: QueryDef = QueryDef.withOracle {
-    val subDim = 8
-    val numSub = 8
-    // residual columns r0..r63 (FLOAT subtraction, as zip_with produces)
-    val resCols = (0 until 64)
-      .map(i => s"CAST(e.embedding[${i + 1}] AS FLOAT) - CAST(cb.c$i AS FLOAT) AS r$i")
-      .mkString(", ")
-    // per-(m, code) score over the residual slice: dot − ‖c‖²/2
-    val caseBranches = (0 until numSub).map { m =>
-      val dot = (0 until subDim)
-        .map(j => s"CAST(res.r${m * subDim + j} AS DOUBLE) * CAST(pq.p$j AS DOUBLE)")
-        .mkString(" + ")
-      s"WHEN $m THEN $dot"
-    }.mkString(" ")
-    val pqPivot = (0 until subDim)
-      .map(j => s"MAX(CASE WHEN pos = $j THEN value END) AS p$j").mkString(", ")
-    val half = (0 until subDim)
-      .map(j => s"CAST(p$j AS DOUBLE) * CAST(p$j AS DOUBLE)").mkString(" + ")
-    val codePivot = (0 until numSub)
-      .map(m => s"MAX(CASE WHEN m = $m THEN code END) AS k$m").mkString(", ")
-    val lutJoins = (0 until numSub)
-      .map(m => s"JOIN pqp pm$m ON pm$m.m = $m AND pm$m.code = cw.k$m").mkString("\n  ")
-    val lutSum = (0 until numSub).map { m =>
-      "(" + (0 until subDim)
-        .map(j => s"CAST(q.embedding[${m * subDim + j + 1}] AS DOUBLE) * CAST(pm$m.p$j AS DOUBLE)")
-        .mkString(" + ") + ")"
-    }.mkString(" + ")
-    s"""WITH ${duckCbCte("cb", "sim_ivf_codebook", 64)},
-       |pqp AS (SELECT m, code, $pqPivot
-       |  FROM read_parquet('{{OUT}}/sim_pq_codebook/*.parquet') GROUP BY m, code),
-       |pqh AS (SELECT m, code, ($half) / 2.0 AS half FROM pqp),
-       |emb AS (SELECT vec_id, embedding FROM embeddings),
-       |norms AS (SELECT vec_id, SQRT(${duckEmbEmbDot("e.embedding", "e.embedding")}) AS nrm
-       |  FROM emb e),
-       |scores AS (
-       |  SELECT e.vec_id, cb.cell, ${duckEmbCellDot("e.embedding", "cb", 64)} AS s
-       |  FROM emb e CROSS JOIN cb),
-       |assign AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT vec_id, cell,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS r
-       |    FROM scores) z WHERE r = 1),
-       |res AS (
-       |  SELECT e.vec_id, a.cell, $resCols
-       |  FROM emb e JOIN assign a USING (vec_id) JOIN cb ON cb.cell = a.cell),
-       |cscore AS (
-       |  SELECT res.vec_id, pq.m, pq.code,
-       |    (CASE pq.m $caseBranches END) - h.half AS score
-       |  FROM res CROSS JOIN pqp pq JOIN pqh h ON h.m = pq.m AND h.code = pq.code),
-       |codes AS (
-       |  SELECT vec_id, m, code FROM (
-       |    SELECT vec_id, m, code,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY score DESC, code ASC) AS r
-       |    FROM cscore) z WHERE r = 1),
-       |cw AS (SELECT vec_id, $codePivot FROM codes GROUP BY vec_id),
-       |probes AS (
-       |  SELECT vec_id AS query_id, cell, s AS qdotcell FROM (
-       |    SELECT sc.vec_id, sc.cell, sc.s,
-       |      ROW_NUMBER() OVER (PARTITION BY sc.vec_id ORDER BY sc.s DESC, sc.cell ASC) AS r
-       |    FROM scores sc) z WHERE r <= 4),
-       |adc AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |    p.qdotcell + ($lutSum) AS adc
-       |  FROM probes p
-       |  JOIN assign a USING (cell)
-       |  JOIN cw ON cw.vec_id = a.vec_id
-       |  JOIN emb q ON q.vec_id = p.query_id
-       |  $lutJoins
-       |  WHERE p.query_id <> a.vec_id),
-       |cand AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adc DESC, neighbor_id ASC) AS r
-       |    FROM adc) z WHERE r <= 50),
-       |cos AS (
-       |  SELECT c.query_id, c.neighbor_id,
-       |    CASE WHEN nq.nrm = 0 OR nn.nrm = 0 THEN 0.0
-       |         ELSE (${duckEmbEmbDot("q.embedding", "b.embedding")}) / (nq.nrm * nn.nrm)
-       |    END AS cosine
-       |  FROM cand c
-       |  JOIN emb q ON q.vec_id = c.query_id
-       |  JOIN emb b ON b.vec_id = c.neighbor_id
-       |  JOIN norms nq ON nq.vec_id = c.query_id
-       |  JOIN norms nn ON nn.vec_id = c.neighbor_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM cos)
-       |SELECT query_id, neighbor_id, rank, cosine FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
-  } { (s, dir) =>
-    val e = t(s, dir, "embeddings")
-    Similarity.ivfPqTopK(e, e, k = 5,
-      trainedCells = Some(trainedCodebook(s, dir)),
-      trainedPq = Some(trainedPq(s, dir)))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Shared DuckDB replay of a [[Similarity.servePrunedTopK]] point lookup
-    * for the min-vec_id query: probe the 4 max-dot OCCUPIED cells of the
-    * dumped codebook (round-8: serve now ranks occupied cells only, the
-    * same rule as the in-memory ivfTopK kernel — occupancy re-derived here
-    * via the assignment replay, exactly what the index's partition listing
-    * encodes), re-derive the probed cells' members the same way, and
-    * re-rank exactly by cosine. Used verbatim by sim_ivf_serve and
-    * sim_ivf_append: an append-then-serve index holds the same member set
-    * as a full build, so the served values must be identical (the
-    * equivalence SimilaritySpec asserts, here value-pinned).
-    */
-  private def duckServeOracle: String =
-    s"""WITH ${duckCbCte("cb", "sim_ivf_codebook", 64)},
-       |emb AS (SELECT vec_id, embedding FROM embeddings),
-       |q AS (SELECT vec_id AS qid, embedding AS qv FROM emb ORDER BY vec_id LIMIT 1),
-       |norms AS (SELECT vec_id, SQRT(${duckEmbEmbDot("e.embedding", "e.embedding")}) AS nrm
-       |  FROM emb e),
-       |scores AS (
-       |  SELECT e.vec_id, cb.cell, ${duckEmbCellDot("e.embedding", "cb", 64)} AS s
-       |  FROM emb e CROSS JOIN cb),
-       |assign AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT vec_id, cell,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS r
-       |    FROM scores) z WHERE r = 1),
-       |occ AS (SELECT DISTINCT cell FROM assign),
-       |probes AS (
-       |  SELECT cell FROM (
-       |    SELECT cb.cell,
-       |      ROW_NUMBER() OVER (ORDER BY ${duckEmbCellDot("q.qv", "cb", 64)} DESC, cb.cell ASC) AS r
-       |    FROM q CROSS JOIN cb JOIN occ ON occ.cell = cb.cell) z WHERE r <= 4),
-       |cos AS (
-       |  SELECT q.qid AS query_id, a.vec_id AS neighbor_id,
-       |    CASE WHEN nq.nrm = 0 OR nn.nrm = 0 THEN 0.0
-       |         ELSE (${duckEmbEmbDot("q.qv", "b.embedding")}) / (nq.nrm * nn.nrm)
-       |    END AS cosine
-       |  FROM assign a JOIN probes USING (cell)
-       |  CROSS JOIN q
-       |  JOIN emb b ON b.vec_id = a.vec_id
-       |  JOIN norms nq ON nq.vec_id = q.qid
-       |  JOIN norms nn ON nn.vec_id = a.vec_id
-       |  WHERE a.vec_id <> q.qid)
-       |SELECT query_id, neighbor_id,
-       |  CAST(ROW_NUMBER() OVER (ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank,
-       |  cosine
-       |FROM cos ORDER BY cosine DESC, neighbor_id ASC LIMIT 10""".stripMargin
-
-  /** IVF index SERVING path: embeddings written once partitioned by their
-    * trained-codebook cell (`writeCellIndex`), then a point lookup for one
-    * query vector scans ONLY its 4 probe-cell directories — the physical
-    * plan carries `PartitionFilters: [cell IN (...)]` and touches
-    * nProbe/numCells of the corpus no matter how big it grows.
-    * Hash-checked (round 7): the oracle replays probe selection over the
-    * dumped codebook, cell membership, and the exact cosine re-rank;
-    * SimilaritySpec additionally asserts served == in-memory IVF.
-    */
-  val simIvfServe: QueryDef = QueryDef.withOracle(duckServeOracle) { (s, dir) =>
-    val cb = trainedCodebook(s, dir)
-    val path = s"/tmp/graft_ivf_index_${dirKey(dir)}"
-    if (!csvWritten.contains(path)) {
-      Similarity.writeCellIndex(t(s, dir, "embeddings"), cb, path)
-      csvWritten.add(path)
-    }
-    // query = the smallest vec_id present (not a hardcoded 0, which would
-    // throw NoSuchElementException on any corpus without that id)
-    val qRow = t(s, dir, "embeddings")
-      .orderBy(col("vec_id")).select(col("vec_id"), col("embedding"))
-      .head(1).headOption
-      .getOrElse(sys.error(s"sim_ivf_serve: embeddings table at $dir is empty"))
-    val qid = qRow.getLong(0)
-    val q = qRow.getSeq[Float](1).toArray
-    Similarity.servePrunedTopK(s.read.parquet(path), queryId = qid, queryVec = q, cells = cb, k = 10)
-  }
-
-  /** Incremental ANN index maintenance: HALF the corpus is indexed
-    * ([[Similarity.writeCellIndex]]), the other half APPENDED later under
-    * the same codebook ([[Similarity.appendToCellIndex]] — assignment-only,
-    * no retrain), then a pruned serve runs over the combined index. The
-    * equivalence append-then-serve == full-build-serve is spec-asserted in
-    * SimilaritySpec and now value-pinned: the oracle is the SAME replay as
-    * sim_ivf_serve (the combined index holds the identical member set), so
-    * a hash match proves the appended index serves bit-identical results.
-    * This is the ANN twin of stream_index_maintenance's merge-on-write
-    * exact index.
-    */
-  val simIvfAppend: QueryDef = QueryDef.withOracle(duckServeOracle) { (s, dir) =>
-    val cb = trainedCodebook(s, dir)
-    val path = s"/tmp/graft_ivf_append_${dirKey(dir)}"
-    val e = t(s, dir, "embeddings")
-    if (!csvWritten.contains(path)) {
-      Similarity.writeCellIndex(e.where(col("vec_id") % 2 === 0), cb, path)
-      Similarity.appendToCellIndex(e.where(col("vec_id") % 2 === 1), cb, path)
-      csvWritten.add(path)
-    }
-    val qRow = e.orderBy(col("vec_id")).select(col("vec_id"), col("embedding"))
-      .head(1).headOption
-      .getOrElse(sys.error(s"sim_ivf_append: embeddings table at $dir is empty"))
-    Similarity.servePrunedTopK(s.read.parquet(path),
-      queryId = qRow.getLong(0), queryVec = qRow.getSeq[Float](1).toArray,
-      cells = cb, k = 10)
-  }
-
-  /** The drifted batch of the append-drift corpus: every fixture embedding
-    * cyclically shifted one position, under fresh ids above the fixture
-    * range. The shift is a pure PERMUTATION — no arithmetic, so both
-    * engines hold bit-identical floats — yet is maximally mis-aligned with
-    * centroids trained on the unshifted mass (norms and marginals are
-    * unchanged; directions are not): a deterministic stand-in for real
-    * distribution drift between codebook retrains.
-    */
-  private def driftedEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val off = e.agg(max(col("vec_id"))).head().getLong(0) + 1L
-    e.select(
-      (col("vec_id") + off).as("vec_id"),
-      concat(slice(col("embedding"), 2, 63), slice(col("embedding"), 1, 1)).as("embedding"))
-  }
-
-  /** Recall budget for [[simDriftRecall]]'s `retrain_recommended` flag: a
-    * retrain is recommended when retraining the codebook on base ∪ appended
-    * mass would recover MORE than this much recall@5 (`fresh − stale >
-    * margin`). 0.02 ≈ the measurement's own sampling CI at the fixture
-    * tiers, so the flag trips only on decay distinguishable from noise —
-    * below it, the stale index is within measurement error of retrained.
-    * Public so `DriftThresholdSpec` pins the decision rule.
-    */
-  val retrainGainMargin: Double = 0.02
-
-  /** The drift meter's decision rule, shared by the query body and pinned
-    * by `DriftThresholdSpec`: STRICT inequality — a gain equal to the
-    * noise budget is not evidence of decay. The DuckDB oracle re-derives
-    * the identical comparison over the same doubles.
-    */
-  def retrainDecision(gain: Double): Boolean = gain > retrainGainMargin
-
-  /** Codebook freshly retrained on base ∪ drifted, with the SAME cell
-    * count as the stale per-dir codebook so the drift meter isolates
-    * centroid placement from probe-fraction effects.
-    */
-  private def trainedDriftCodebook(s: SparkSession, dir: String): Array[Array[Float]] =
-    SessionArtifacts.getOrBuild(s, dir, "driftCodebook") {
-      val base = t(s, dir, "embeddings").select("vec_id", "embedding")
-      Similarity.trainCodebook(
-        base.unionByName(driftedEmbeddings(s, dir)),
-        numCells = Similarity.defaultNumCells(base.count()))
-    }
-
-  /** The retrained (base ∪ drifted) codebook as scalar rows — the dump the
-    * sim_drift_recall oracle replays the fresh tier against. Grid-checked
-    * like [[simIvfCodebook]] (same defaultNumCells(n) grid by design).
-    */
-  val simDriftCodebook: QueryDef = QueryDef.withOracle(
-    duckGridOracle("sim_drift_codebook",
-      Seq("cell" -> duckDefaultCellsSql("embeddings"), "pos" -> "64"))) { (s, dir) =>
-    val spark = s
-    import spark.implicits._
-    trainedDriftCodebook(s, dir).zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (v, p) => (i, p, v) }
-    }.toSeq.toDF("cell", "pos", "value").orderBy("cell", "pos")
-  }
-
-  /** DuckDB replay of the whole drift meter: rebuild the drifted batch (a
-    * pure list-slice permutation of the fixture floats), union, brute-force
-    * truth for the drifted query sample, and TWO full IVF replays — stale
-    * codebook (sim_ivf_codebook dump) and retrained codebook
-    * (sim_drift_codebook dump) — each the same assignment/probe/cosine
-    * arithmetic as the sim_topk_ivf oracle.
-    */
-  private def duckDriftRecallOracle: String = {
-    val anchorHash =
-      "('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 14))::BIGINT"
-    def cosExpr(qa: String, na: String, ca: String, nb: String) =
-      s"""CASE WHEN $na.nrm = 0 OR $nb.nrm = 0 THEN 0.0
-         |         ELSE (${duckEmbEmbDot(s"$qa.embedding", s"$ca.embedding")}) / ($na.nrm * $nb.nrm)
-         |    END""".stripMargin
-    // one IVF replay tier over `emb`, parameterized by codebook CTE + prefix
-    def ivfTier(cb: String, p: String) =
-      s"""${p}sc AS (
-         |  SELECT e.vec_id, $cb.cell, ${duckEmbCellDot("e.embedding", cb, 64)} AS s
-         |  FROM emb e CROSS JOIN $cb),
-         |${p}asg AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT vec_id, cell,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS r
-         |    FROM ${p}sc) z WHERE r = 1),
-         |${p}occ AS (SELECT DISTINCT cell FROM ${p}asg),
-         |${p}prb AS (
-         |  SELECT vec_id AS query_id, cell FROM (
-         |    SELECT sc.vec_id, sc.cell,
-         |      ROW_NUMBER() OVER (PARTITION BY sc.vec_id ORDER BY sc.s DESC, sc.cell ASC) AS r
-         |    FROM ${p}sc sc JOIN ${p}occ USING (cell)
-         |    JOIN qset ON qset.vec_id = sc.vec_id) z WHERE r <= 4),
-         |${p}top AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT c.query_id, c.neighbor_id,
-         |      ROW_NUMBER() OVER (PARTITION BY c.query_id ORDER BY
-         |        ${cosExpr("q2", "nq", "b3", "nn2")} DESC, c.neighbor_id ASC) AS r
-         |    FROM (SELECT pr.query_id, a.vec_id AS neighbor_id
-         |          FROM ${p}prb pr JOIN ${p}asg a USING (cell)
-         |          WHERE pr.query_id <> a.vec_id) c
-         |    JOIN emb q2 ON q2.vec_id = c.query_id
-         |    JOIN emb b3 ON b3.vec_id = c.neighbor_id
-         |    JOIN norms nq ON nq.vec_id = c.query_id
-         |    JOIN norms nn2 ON nn2.vec_id = c.neighbor_id) z
-         |  WHERE r <= 5)""".stripMargin
-    s"""WITH emb0 AS (SELECT vec_id, embedding FROM embeddings),
-       |off AS (SELECT MAX(vec_id) + 1 AS o FROM emb0),
-       |drift AS (
-       |  SELECT e.vec_id + off.o AS vec_id,
-       |    list_concat(e.embedding[2:64], list_value(e.embedding[1])) AS embedding
-       |  FROM emb0 e, off),
-       |emb AS (SELECT * FROM emb0 UNION ALL SELECT * FROM drift),
-       |norms AS (SELECT vec_id, SQRT(${duckEmbEmbDot("e.embedding", "e.embedding")}) AS nrm
-       |  FROM emb e),
-       |qset AS (SELECT vec_id FROM drift
-       |  ORDER BY $anchorHash, vec_id LIMIT $recallAnchorBudget),
-       |bf AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT s.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-       |        ${cosExpr("q", "nq", "b", "nb")} DESC, b.vec_id ASC) AS r
-       |    FROM qset s
-       |    JOIN emb q ON q.vec_id = s.vec_id
-       |    JOIN emb b ON b.vec_id <> s.vec_id
-       |    JOIN norms nq ON nq.vec_id = s.vec_id
-       |    JOIN norms nb ON nb.vec_id = b.vec_id) z
-       |  WHERE r <= 5),
-       |${duckCbCte("cbs", "sim_ivf_codebook", 64)},
-       |${duckCbCte("cbf", "sim_drift_codebook", 64)},
-       |${ivfTier("cbs", "st")},
-       |${ivfTier("cbf", "fr")},
-       |m AS (SELECT
-       |  (SELECT COUNT(*) FROM bf) AS n,
-       |  (SELECT COUNT(*) FROM bf JOIN sttop USING (query_id, neighbor_id)) AS sh,
-       |  (SELECT COUNT(*) FROM bf JOIN frtop USING (query_id, neighbor_id)) AS fh),
-       |r AS (SELECT CAST(n AS BIGINT) AS n_exact_pairs,
-       |  CASE WHEN n = 0 THEN 1.0
-       |       ELSE CAST(sh AS DOUBLE) / CAST(n AS DOUBLE) END AS stale_recall,
-       |  CASE WHEN n = 0 THEN 1.0
-       |       ELSE CAST(fh AS DOUBLE) / CAST(n AS DOUBLE) END AS fresh_recall
-       |  FROM m)
-       |SELECT n_exact_pairs, stale_recall, fresh_recall,
-       |  fresh_recall - stale_recall AS retrain_gain,
-       |  (fresh_recall - stale_recall) > $retrainGainMargin AS retrain_recommended
-       |FROM r""".stripMargin
-  }
-
-  /** Recall-drift meter for [[Similarity.appendToCellIndex]] (round-8
-    * verdict #7): appends are assignment-only under a frozen codebook, so
-    * serve recall decays as appended mass drifts from the trained
-    * centroids — this query MEASURES that decay and the gain a retrain
-    * would buy, the retrain-cadence signal the operator's doc promises.
-    *
-    * Corpus = fixture embeddings ∪ a drifted batch ([[driftedEmbeddings]]);
-    * queries = a hash-sample of the DRIFTED mass (where decay concentrates).
-    * `stale_recall` serves with the codebook trained on the base only
-    * (exactly what an appended index probes with); `fresh_recall` retrains
-    * on the union at the same cell count; `retrain_gain` is the cadence
-    * signal — retrain when it exceeds the recall budget.
-    *
-    * Hash-checked end to end: the oracle rebuilds the drifted batch (a
-    * pure slice permutation — bit-identical floats), replays BOTH IVF
-    * tiers over the dumped codebooks with the same
-    * assignment/probe/cosine arithmetic as sim_topk_ivf, and recomputes
-    * brute-force truth; the recall quotients are identical integer
-    * divisions in both engines.
-    */
-  val simDriftRecall: QueryDef = QueryDef.withOracle(duckDriftRecallOracle) { (s, dir) =>
-    val base = t(s, dir, "embeddings").select("vec_id", "embedding")
-    val drifted = driftedEmbeddings(s, dir)
-    val union = base.unionByName(drifted).persist()
-    // fixed anchor budget over the drifted mass (round-11 verdict #4, was
-    // a 1/16 rate sample): truth cost O(anchors × union) — flat per
-    // corpus scan — while the decay signal, a ~0.1-scale recall gap,
-    // stays far outside the 256-anchor estimate's ~±0.014 std
-    val anchorSet = recallAnchorIds(drifted, "vec_id")
-    val queries = drifted.where(col("vec_id").isin(anchorSet.map(Long.box): _*))
-    // pre-touch memoized codebooks, then materialize the shared persisted
-    // union ONCE so the overlapped tiers read one cache instead of racing
-    // on its lineage; then run the three independent tier pipelines
-    // concurrently (opt guide §2.6 — tier contents are fully determined,
-    // so the hit counts are unchanged; was 44 sequential jobs / 7 s)
-    val staleCells = trainedCodebook(s, dir)
-    val freshCells = trainedDriftCodebook(s, dir)
-    union.count()
-    val Seq((exact, n), (stale, _), (fresh, _)) =
-      Parallelism.inParallel[(DataFrame, Long)](Seq(
-        () => {
-          val df = Similarity.bruteForceTopK(queries, union, k = 5)
-            .select("query_id", "neighbor_id").persist()
-          (df, df.count())
-        },
-        () => (Similarity
-          .ivfTopK(queries, union, k = 5, trainedCodebook = Some(staleCells))
-          .select("query_id", "neighbor_id"), 0L),
-        () => (Similarity
-          .ivfTopK(queries, union, k = 5, trainedCodebook = Some(freshCells))
-          .select("query_id", "neighbor_id"), 0L)))
-    val Seq(staleHits, freshHits) = Parallelism.inParallel(Seq(
-      () => exact.join(stale, Seq("query_id", "neighbor_id")).count(),
-      () => exact.join(fresh, Seq("query_id", "neighbor_id")).count()))
-    exact.unpersist(blocking = false)
-    union.unpersist(blocking = false)
-    val (sr, fr) =
-      if (n == 0) (1.0, 1.0)
-      else (staleHits.toDouble / n, freshHits.toDouble / n)
-    val spark = s
-    import spark.implicits._
-    // retrain_recommended (round-10 verdict #8): the meter's consumer
-    // contract — appendToCellIndex's doc promises a retrain-cadence
-    // SIGNAL, so emit the decision, not just two floats the operator has
-    // to subtract. The margin is the recall budget an append window may
-    // burn before a retrain pays for itself; oracle re-derives the same
-    // comparison over identical integer-division doubles.
-    Seq((n, sr, fr, fr - sr, retrainDecision(fr - sr)))
-      .toDF("n_exact_pairs", "stale_recall", "fresh_recall", "retrain_gain",
-        "retrain_recommended")
-  }
-
-  /** BPE-ish subword-count estimate (long words cost ≈ len/4 extra
-    * tokens), hash-checked: DuckDB replays the identical per-token
-    * greatest/ceil arithmetic. Complements q15's whitespace token count —
-    * together they are the cheap token-budget estimators a corpus-sizing
-    * pass runs before committing to a real tokenizer sweep.
-    */
-  val tokenBpeEstimate: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id,
-      |  CAST(list_sum(list_transform(str_split(text, ' '),
-      |    x -> greatest(1, CAST(ceil(length(x) / 4.0) AS BIGINT)))) AS BIGINT)
-      |    AS n_tokens_bpe
-      |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    t(s, dir, "documents")
-      .select(col("doc_id"), TextOps.bpeTokenEstimate(col("text")).as("n_tokens_bpe"))
-      .orderBy("doc_id")
-  }
-
-  /** ANN quality surface: recall@5 of the LSH and (trained-codebook) IVF
-    * paths against the exact brute-force neighbors — the accuracy/cost
-    * trade of the approximate tiers as driver-readable numbers.
-    *
-    * Recall is ESTIMATED on a FIXED-COUNT deterministic anchor set
-    * ([[recallAnchorBudget]] ids by hash order) while every tier still
-    * searches the FULL corpus: recall is a population statistic, so a
-    * fixed anchor budget answers it with exact ground truth costing
-    * anchors·m — flat per corpus scan at any scale, where a fixed-RATE
-    * sample still grew O(m²) and priced the meter out at ×100. The
-    * per-tier result sets are tiny (≤ k rows per anchor) and are
-    * persisted so the hit-count joins don't re-run a search lineage per
-    * count.
-    *
-    * Hash-checked (round-7 verdict #3): every side of every recall
-    * fraction now has its own green DuckDB replay (brute via the exact
-    * cosine, LSH from the dumped plane set, IVF/IVF-PQ from the dumped
-    * codebooks), so the composed metric is oracle-derivable the way
-    * dedup_recall composed its two sides. Two portability swaps make the
-    * composition exact: the query sample is the cross-engine md5 hash
-    * family ([[graft.ops.TextOps.portableHash56]] — the minhash/LSH-cap
-    * precedent; production sampling stays xxhash64 via
-    * [[graft.ops.PipelineOps]]), and the LSH tier runs its portable-cap
-    * variant exactly as the covering sim_topk_lsh query does.
-    */
-  /** The composed sim_recall replay: re-derives all four tier result sets
-    * (brute ground truth over the sampled queries; LSH from the dumped
-    * plane set with the portable bucket cap; IVF and IVF-PQ from the
-    * dumped codebooks) with the SAME per-stage SQL as their individually
-    * hash-green covering oracles (sim_topk_brute/lsh/ivf/ivfpq — CTEs here
-    * carry l/i/p prefixes, query side restricted to the portable md5
-    * sample), then computes the three hit fractions. Each division is one
-    * IEEE double op over exact integer counts — bit-identical across
-    * engines.
-    */
-  private def duckSimRecallOracle: String = {
-    val anchorHash =
-      "('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 14))::BIGINT"
-    def cosExpr(qa: String, na: String, ca: String, nb: String) =
-      s"""CASE WHEN $na.nrm = 0 OR $nb.nrm = 0 THEN 0.0
-         |         ELSE (${duckEmbEmbDot(s"$qa.embedding", s"$ca.embedding")}) / ($na.nrm * $nb.nrm)
-         |    END""".stripMargin
-    val planePivot = (0 until 64)
-      .map(i => s"MAX(CASE WHEN pos = $i THEN value END) AS q$i").mkString(", ")
-    val planeDot = (0 until 64)
-      .map(i => s"CAST(e.embedding[${i + 1}] AS DOUBLE) * CAST(pl.q$i AS DOUBLE)")
-      .mkString(" + ")
-    val subDim = 8
-    val numSub = 8
-    val resCols = (0 until 64)
-      .map(i => s"CAST(e.embedding[${i + 1}] AS FLOAT) - CAST(cb.c$i AS FLOAT) AS r$i")
-      .mkString(", ")
-    val caseBranches = (0 until numSub).map { m =>
-      val dot = (0 until subDim)
-        .map(j => s"CAST(res.r${m * subDim + j} AS DOUBLE) * CAST(pq.p$j AS DOUBLE)")
-        .mkString(" + ")
-      s"WHEN $m THEN $dot"
-    }.mkString(" ")
-    val pqPivot = (0 until subDim)
-      .map(j => s"MAX(CASE WHEN pos = $j THEN value END) AS p$j").mkString(", ")
-    val half = (0 until subDim)
-      .map(j => s"CAST(p$j AS DOUBLE) * CAST(p$j AS DOUBLE)").mkString(" + ")
-    val codePivot = (0 until numSub)
-      .map(m => s"MAX(CASE WHEN m = $m THEN code END) AS k$m").mkString(", ")
-    val lutJoins = (0 until numSub)
-      .map(m => s"JOIN pqp pm$m ON pm$m.m = $m AND pm$m.code = cw.k$m").mkString("\n  ")
-    val lutSum = (0 until numSub).map { m =>
-      "(" + (0 until subDim)
-        .map(j => s"CAST(q.embedding[${m * subDim + j + 1}] AS DOUBLE) * CAST(pm$m.p$j AS DOUBLE)")
-        .mkString(" + ") + ")"
-    }.mkString(" + ")
-    s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings),
-       |norms AS (SELECT vec_id, SQRT(${duckEmbEmbDot("e.embedding", "e.embedding")}) AS nrm
-       |  FROM emb e),
-       |qset AS (SELECT vec_id FROM emb
-       |  ORDER BY $anchorHash, vec_id LIMIT $recallAnchorBudget),
-       |bf AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT s.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-       |        ${cosExpr("q", "nq", "b", "nb")} DESC, b.vec_id ASC) AS r
-       |    FROM qset s
-       |    JOIN emb q ON q.vec_id = s.vec_id
-       |    JOIN emb b ON b.vec_id <> s.vec_id
-       |    JOIN norms nq ON nq.vec_id = s.vec_id
-       |    JOIN norms nb ON nb.vec_id = b.vec_id) z
-       |  WHERE r <= 5),
-       |plp AS (
-       |  SELECT t, plane, $planePivot
-       |  FROM read_parquet('{{OUT}}/sim_lsh_planes/*.parquet')
-       |  GROUP BY t, plane),
-       |lsig AS (
-       |  SELECT e.vec_id, pl.t,
-       |    SUM(CASE WHEN ($planeDot) >= 0.0
-       |        THEN (CAST(1 AS BIGINT) << pl.plane) ELSE 0 END) AS sig
-       |  FROM emb e CROSS JOIN plp pl
-       |  GROUP BY e.vec_id, pl.t),
-       |lcap AS (
-       |  SELECT vec_id, t, sig FROM (
-       |    SELECT vec_id, t, sig,
-       |      ROW_NUMBER() OVER (PARTITION BY t, sig
-       |        ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 14))::BIGINT,
-       |                 vec_id) AS r
-       |    FROM lsig) z WHERE r <= 256),
-       |lpair AS (
-       |  SELECT DISTINCT x.vec_id AS query_id, y.vec_id AS neighbor_id
-       |  FROM lsig x JOIN qset ON qset.vec_id = x.vec_id
-       |  JOIN lcap y ON x.t = y.t AND x.sig = y.sig AND x.vec_id <> y.vec_id),
-       |lsh AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT p.query_id, p.neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY p.query_id ORDER BY
-       |        ${cosExpr("a", "na", "b2", "nb")} DESC, p.neighbor_id ASC) AS r
-       |    FROM lpair p
-       |    JOIN emb a ON a.vec_id = p.query_id
-       |    JOIN emb b2 ON b2.vec_id = p.neighbor_id
-       |    JOIN norms na ON na.vec_id = p.query_id
-       |    JOIN norms nb ON nb.vec_id = p.neighbor_id) z
-       |  WHERE r <= 5),
-       |${duckCbCte("cb", "sim_ivf_codebook", 64)},
-       |isc AS (
-       |  SELECT e.vec_id, cb.cell, ${duckEmbCellDot("e.embedding", "cb", 64)} AS s
-       |  FROM emb e CROSS JOIN cb),
-       |iasg AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT vec_id, cell,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) AS r
-       |    FROM isc) z WHERE r = 1),
-       |iocc AS (SELECT DISTINCT cell FROM iasg),
-       |iprb AS (
-       |  SELECT vec_id AS query_id, cell FROM (
-       |    SELECT sc.vec_id, sc.cell,
-       |      ROW_NUMBER() OVER (PARTITION BY sc.vec_id ORDER BY sc.s DESC, sc.cell ASC) AS r
-       |    FROM isc sc JOIN iocc USING (cell)
-       |    JOIN qset ON qset.vec_id = sc.vec_id) z WHERE r <= 4),
-       |ivf AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT c.query_id, c.neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY c.query_id ORDER BY
-       |        ${cosExpr("q2", "nq", "b3", "nn2")} DESC, c.neighbor_id ASC) AS r
-       |    FROM (SELECT p.query_id, a.vec_id AS neighbor_id
-       |          FROM iprb p JOIN iasg a USING (cell)
-       |          WHERE p.query_id <> a.vec_id) c
-       |    JOIN emb q2 ON q2.vec_id = c.query_id
-       |    JOIN emb b3 ON b3.vec_id = c.neighbor_id
-       |    JOIN norms nq ON nq.vec_id = c.query_id
-       |    JOIN norms nn2 ON nn2.vec_id = c.neighbor_id) z
-       |  WHERE r <= 5),
-       |pqp AS (SELECT m, code, $pqPivot
-       |  FROM read_parquet('{{OUT}}/sim_pq_codebook/*.parquet') GROUP BY m, code),
-       |pqh AS (SELECT m, code, ($half) / 2.0 AS half FROM pqp),
-       |res AS (
-       |  SELECT e.vec_id, a.cell, $resCols
-       |  FROM emb e JOIN iasg a USING (vec_id) JOIN cb ON cb.cell = a.cell),
-       |pcs AS (
-       |  SELECT res.vec_id, pq.m, pq.code,
-       |    (CASE pq.m $caseBranches END) - h.half AS score
-       |  FROM res CROSS JOIN pqp pq JOIN pqh h ON h.m = pq.m AND h.code = pq.code),
-       |pcode AS (
-       |  SELECT vec_id, m, code FROM (
-       |    SELECT vec_id, m, code,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY score DESC, code ASC) AS r
-       |    FROM pcs) z WHERE r = 1),
-       |pcw AS (SELECT vec_id, $codePivot FROM pcode GROUP BY vec_id),
-       |pprb AS (
-       |  SELECT vec_id AS query_id, cell, s AS qdotcell FROM (
-       |    SELECT sc.vec_id, sc.cell, sc.s,
-       |      ROW_NUMBER() OVER (PARTITION BY sc.vec_id ORDER BY sc.s DESC, sc.cell ASC) AS r
-       |    FROM isc sc JOIN qset ON qset.vec_id = sc.vec_id) z WHERE r <= 4),
-       |padc AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |    p.qdotcell + ($lutSum) AS adc
-       |  FROM pprb p
-       |  JOIN iasg a USING (cell)
-       |  JOIN pcw cw ON cw.vec_id = a.vec_id
-       |  JOIN emb q ON q.vec_id = p.query_id
-       |  $lutJoins
-       |  WHERE p.query_id <> a.vec_id),
-       |pcand AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adc DESC, neighbor_id ASC) AS r
-       |    FROM padc) z WHERE r <= 50),
-       |pq5 AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT c.query_id, c.neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY c.query_id ORDER BY
-       |        ${cosExpr("q3", "nq", "b4", "nn3")} DESC, c.neighbor_id ASC) AS r
-       |    FROM pcand c
-       |    JOIN emb q3 ON q3.vec_id = c.query_id
-       |    JOIN emb b4 ON b4.vec_id = c.neighbor_id
-       |    JOIN norms nq ON nq.vec_id = c.query_id
-       |    JOIN norms nn3 ON nn3.vec_id = c.neighbor_id) z
-       |  WHERE r <= 5),
-       |nn AS (SELECT COUNT(*) AS c FROM bf),
-       |lhit AS (SELECT COUNT(*) AS c FROM bf JOIN lsh USING (query_id, neighbor_id)),
-       |ihit AS (SELECT COUNT(*) AS c FROM bf JOIN ivf USING (query_id, neighbor_id)),
-       |phit AS (SELECT COUNT(*) AS c FROM bf JOIN pq5 USING (query_id, neighbor_id))
-       |SELECT
-       |  CAST(lhit.c AS DOUBLE) / CAST(nn.c AS DOUBLE) AS lsh_recall,
-       |  CAST(ihit.c AS DOUBLE) / CAST(nn.c AS DOUBLE) AS ivf_recall,
-       |  CAST(phit.c AS DOUBLE) / CAST(nn.c AS DOUBLE) AS ivfpq_recall,
-       |  nn.c AS n_exact_pairs
-       |FROM nn, lhit, ihit, phit""".stripMargin
-  }
-
-  /** FIXED anchor budget of the recall meters: the truth tier is exact
-    * top-k for exactly this many deterministically-chosen anchor queries,
-    * so its cost is O(anchors × corpus) — flat per corpus SCAN at any
-    * scale — where the earlier fixed-RATE sample made it O(corpus²/rate)
-    * and priced the meter out at ×100 (241.9 s measured in round 11). At
-    * 256 anchors × k=5 the estimate rests on 1,280 truth pairs: ±0.014
-    * std at the recall levels the tiers run, ample for a 3-tier quality
-    * meter (RecallAnchorSpec pins the anchored estimate against full
-    * truth at sf0.1). A compile-time constant (no type ascription): the
-    * drift meter's oracle string interpolates it during object init,
-    * before a plain val here would be assigned.
-    */
-  final val recallAnchorBudget = 256
-
-  /** The deterministic anchor set: the `recallAnchorBudget` ids smallest
-    * by (portable md5 hash, id) — a fixed-size, order-independent choice
-    * both engines reproduce (the oracle replays it as ORDER BY hash, id
-    * LIMIT n). Collected to the driver: bounded at the budget.
-    */
-  def recallAnchorIds(ids: DataFrame, idCol: String): Array[Long] =
-    ids.select(col(idCol))
-      .orderBy(TextOps.portableHash56(col(idCol).cast("string")), col(idCol))
-      .limit(recallAnchorBudget)
-      .collect().map(_.getLong(0))
-
-  val simRecall: QueryDef = QueryDef.withOracle(
-    duckSimRecallOracle) { (s, dir) =>
-    val e = t(s, dir, "embeddings")
-    // fixed anchor budget (round-11 verdict #4, was a 1/8 rate sample):
-    // truth cost O(anchors × corpus), not O(corpus²/8); below the budget
-    // the anchor set is the whole corpus, so small-sf oracle tiers keep
-    // full truth
-    val anchorSet = recallAnchorIds(e, "vec_id")
-    val sampled: Column => Column = id => id.isin(anchorSet.map(Long.box): _*)
-    val queries = e.where(sampled(col("vec_id")))
-    // pre-touch the memoized codebooks OUTSIDE the parallel region: two
-    // tiers read them, and a concurrent first-use would train twice
-    val cells = trainedCodebook(s, dir)
-    val pq = trainedPq(s, dir)
-    // The four tier searches are independent eager pipelines (each
-    // *TopK materializes via localCheckpoint); running them sequentially
-    // left most of the 32 cores idle through each pipeline's many small
-    // stages (measured 68 jobs / 14 s isolated). Overlapping them lets
-    // the scheduler back-fill one tier's task tails with the next tier's
-    // stages (opt guide §2.6); tier contents are unchanged — each is a
-    // fully-determined frame — so the hit counts below are identical.
-    val Seq((exact, nExactL), (lsh, _), (ivf, _), (ivfpq, _)) =
-      Parallelism.inParallel[(DataFrame, Long)](Seq(
-        // brute tier is a lazy plan: persist AND count inside the thunk so
-        // the phase-2 joins read a materialized cache instead of racing on
-        // its lineage (the other tiers localCheckpoint internally — eager)
-        () => {
-          val df = Similarity.bruteForceTopK(queries, e, k = 5)
-            .select("query_id", "neighbor_id").persist()
-          (df, df.count())
-        },
-        () => (Similarity
-          .lshTopK(e, k = 5, queryIdPredicate = Some(sampled), portableCapHash = true)
-          .select("query_id", "neighbor_id").persist(), 0L),
-        () => (Similarity
-          .ivfTopK(queries, e, k = 5, trainedCodebook = Some(cells))
-          .select("query_id", "neighbor_id").persist(), 0L),
-        () => (Similarity
-          .ivfPqTopK(queries, e, k = 5,
-            trainedCells = Some(cells), trainedPq = Some(pq))
-          .select("query_id", "neighbor_id").persist(), 0L)))
-    val Seq(lshHits, ivfHits, ivfpqHits) = Parallelism.inParallel(Seq(
-      () => exact.join(lsh, Seq("query_id", "neighbor_id")).count(),
-      () => exact.join(ivf, Seq("query_id", "neighbor_id")).count(),
-      () => exact.join(ivfpq, Seq("query_id", "neighbor_id")).count()))
-    val nExact = nExactL.toDouble
-    Seq(exact, lsh, ivf, ivfpq).foreach(_.unpersist(blocking = false))
-    val spark = s
-    import spark.implicits._
-    Seq((lshHits / nExact, ivfHits / nExact, ivfpqHits / nExact, nExact.toLong))
-      .toDF("lsh_recall", "ivf_recall", "ivfpq_recall", "n_exact_pairs")
-  }
-
-  /** Sketch aggregates: HLL++ approximate distinct and approximate
-    * quantiles — sketches ONLY in the hot query (round-8 verdict #6: the
-    * exact countDistinct tier is a 3× expand over the full table and
-    * existed only to measure sketch error; at ×10 it was 2× the cost of
-    * the sketches it was checking). The exact tier now lives in the
-    * ORACLE, which recomputes it in DuckDB and ENFORCES the error bounds:
-    * approx distincts within ±15% (3× the default 5% rsd) and approx
-    * quantiles inside the exact [q±0.01] rank bracket (accuracy 10000 ⇒
-    * rank error ≤ 1e-4, two orders tighter). A sketch-error regression
-    * empties the oracle side and fails the gate as a rows mismatch —
-    * same enforcing pattern as the RMSE/MPR floors.
-    */
-  val sketchAggregates: QueryDef = QueryDef.withOracle(
-    """WITH ex AS (
-      |  SELECT COUNT(DISTINCT l_partkey) AS parts,
-      |    COUNT(DISTINCT l_suppkey) AS supps,
-      |    quantile_cont(l_extendedprice, 0.49) AS med_lo,
-      |    quantile_cont(l_extendedprice, 0.51) AS med_hi,
-      |    quantile_cont(l_extendedprice, 0.98) AS p99_lo,
-      |    quantile_cont(l_extendedprice, 1.00) AS p99_hi
-      |  FROM lineitem)
-      |SELECT d.approx_parts, d.approx_supps,
-      |  d.approx_median_price, d.approx_p99_price
-      |FROM read_parquet('{{OUT}}/sketch_aggregates/*.parquet') d, ex
-      |WHERE d.approx_parts BETWEEN CAST(0.85 * ex.parts AS BIGINT)
-      |                         AND CAST(1.15 * ex.parts AS BIGINT)
-      |  AND d.approx_supps BETWEEN CAST(0.85 * ex.supps AS BIGINT)
-      |                         AND CAST(1.15 * ex.supps AS BIGINT)
-      |  AND d.approx_median_price BETWEEN ex.med_lo AND ex.med_hi
-      |  AND d.approx_p99_price BETWEEN ex.p99_lo AND ex.p99_hi""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem").agg(
-      approx_count_distinct(col("l_partkey")).as("approx_parts"),
-      approx_count_distinct(col("l_suppkey")).as("approx_supps"),
-      percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000)).as("approx_median_price"),
-      percentile_approx(col("l_extendedprice"), lit(0.99), lit(10000)).as("approx_p99_price"))
-  }
-
-  /** Mergeable-sketch tier (Apache DataSketches builtins): HLL sketches
-    * built per event_type then UNIONED — the pre-aggregate-then-merge shape
-    * that lets a 100 TB pipeline sketch per partition/day and combine
-    * later without rescanning — plus a theta-sketch set intersection
-    * (purchasers ∩ viewers), next to their exact companions. Sketch
-    * estimates are representation-specific and pass through the dump
-    * (SketchAndWinnowSpec bounds the error); the exact companions are
-    * oracle-pinned by independent DuckDB recomputation.
-    */
-  val sketchMergeable: QueryDef = QueryDef.withOracle(
-    """SELECT d.approx_users_merged,
-      |  (SELECT COUNT(DISTINCT user_id) FROM events) AS exact_users,
-      |  (SELECT COUNT(DISTINCT CASE WHEN event_type = 'purchase' THEN user_id END)
-      |     FROM events) AS exact_purchasers,
-      |  d.approx_purchasers, d.approx_purchase_and_view_users
-      |FROM read_parquet('{{OUT}}/sketch_mergeable/*.parquet') d""".stripMargin) { (s, dir) =>
-    val events = t(s, dir, "events")
-    val mergedHll = events
-      .groupBy("event_type")
-      .agg(expr("hll_sketch_agg(user_id)").as("hll"))
-      .agg(expr("CAST(hll_sketch_estimate(hll_union_agg(hll)) AS BIGINT)")
-        .as("approx_users_merged"))
-    val exact = events.agg(
-      countDistinct(col("user_id")).as("exact_users"),
-      countDistinct(when(col("event_type") === "purchase", col("user_id")))
-        .as("exact_purchasers"))
-    val theta = events
-      .agg(
-        expr("theta_sketch_agg(CASE WHEN event_type = 'purchase' THEN user_id END)").as("p"),
-        expr("theta_sketch_agg(CASE WHEN event_type = 'view' THEN user_id END)").as("v"))
-      .select(
-        expr("CAST(theta_sketch_estimate(p) AS BIGINT)").as("approx_purchasers"),
-        expr("CAST(theta_sketch_estimate(theta_intersection(p, v)) AS BIGINT)")
-          .as("approx_purchase_and_view_users"))
-    mergedHll.join(exact).join(theta)
-  }
-
-  /** Heavy hitters: approx_top_k (bounded-map frequent-items sketch) over a
-    * genuinely skewed key — the power-law order-magnitude bucket
-    * `length(bin(l_orderkey)) - 1` (≡ floor(log2), computed via integer bit
-    * length so Spark and DuckDB agree exactly; FP log2 differs at exact
-    * powers of two). Bucket populations double per level, so top-5 counts
-    * are strictly distinct and the deterministic (count DESC, item ASC)
-    * tie-break makes the result hash-checkable against an exact GROUP BY
-    * oracle: key cardinality (≤63 buckets at ANY scale) sits far below the
-    * sketch's tracked capacity, where approx_top_k's counts are exact —
-    * the heavy-hitter regime the sketch exists for. Estimate-mode behavior
-    * (cardinality above capacity) stays covered rows-only by
-    * sketch_aggregates/sketch_mergeable.
-    *
-    * The sketch is asked for ALL buckets (k=64 ≥ the ≤63 possible BIGINT
-    * bit-lengths), not its own top-5: when the partially-filled highest
-    * bucket TIES another bucket's count, approx_top_k's choice among tied
-    * items need not match the (count DESC, item ASC) rule the oracle ranks
-    * by (round-6 ADVICE — a latent flake at untested scale factors). With
-    * the full exact-count entry set in hand, OUR window applies the
-    * deterministic tie-break and takes 5.
-    */
-  val sketchHeavyHitters: QueryDef = QueryDef.withOracle(
-    """WITH keyed AS (
-      |  SELECT CAST(LENGTH(BIN(l_orderkey)) - 1 AS BIGINT) AS item FROM lineitem),
-      |counts AS (
-      |  SELECT item, COUNT(*) AS approx_count FROM keyed GROUP BY item),
-      |ranked AS (
-      |  SELECT CAST(ROW_NUMBER() OVER (ORDER BY approx_count DESC, item ASC) AS BIGINT) AS rank,
-      |    item, approx_count
-      |  FROM counts)
-      |SELECT rank, item, approx_count FROM ranked
-      |WHERE rank <= 5 ORDER BY rank""".stripMargin) { (s, dir) =>
-    t(s, dir, "lineitem")
-      .select((length(bin(col("l_orderkey"))) - 1).cast("bigint").as("hh_key"))
-      .agg(expr("approx_top_k(hh_key, 64, 10000)").as("top"))
-      .select(explode(col("top")).as("entry"))
-      .select(
-        col("entry.item").cast("bigint").as("item"),
-        col("entry.count").cast("bigint").as("approx_count"))
-      // ≤63 rows reach the window — single-partition rank is fine here
-      .withColumn("rank", row_number()
-        .over(Window.orderBy(col("approx_count").desc, col("item").asc))
-        .cast("bigint"))
-      .where(col("rank") <= 5)
-      .select("rank", "item", "approx_count")
-      .orderBy("rank")
-  }
-
-  /** Winnowing fingerprints per document, exploded to `(doc_id,
-    * fingerprint)` scalar rows and hash-checked against a DuckDB oracle
-    * that replays the whole pipeline (shingle → hash → sliding-window min →
-    * dedup; shingleSize=3, window=4). The oracle-checked form plugs in the
-    * cross-engine portable md5 hash; production default stays xxhash64.
-    * Shared-run guarantees are asserted in SketchAndWinnowSpec.
-    */
-  val textWinnow: QueryDef = QueryDef.withOracle(
-    """WITH toks AS (
-      |  SELECT doc_id, text, str_split(text, ' ') AS ts FROM documents),
-      |pos AS (
-      |  SELECT doc_id, text, ts,
-      |    unnest(generate_series(1, greatest(len(ts) - 2, 1))) AS p
-      |  FROM toks),
-      |sh AS (
-      |  SELECT doc_id, p - 1 AS pos,
-      |    CASE WHEN len(ts) < 3 THEN text
-      |         ELSE concat_ws(' ', ts[p], ts[p+1], ts[p+2]) END AS s
-      |  FROM pos),
-      |hs AS (
-      |  SELECT doc_id, pos, ('0x' || substr(md5(s), 1, 14))::BIGINT AS h FROM sh),
-      |win AS (
-      |  SELECT doc_id, pos,
-      |    MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-      |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS m,
-      |    COUNT(*) OVER (PARTITION BY doc_id) AS n
-      |  FROM hs)
-      |SELECT DISTINCT doc_id, m AS fingerprint
-      |FROM win
-      |WHERE pos <= greatest(n - 4, 0)
-      |ORDER BY doc_id, fingerprint""".stripMargin) { (s, dir) =>
-    TextOps.winnowFingerprints(t(s, dir, "documents"), hashFn = TextOps.portableHash56)
-      .select(col("doc_id"), explode(col("fingerprints")).as("fingerprint"))
-      .orderBy("doc_id", "fingerprint")
-  }
-
-  /** Multimodal: stub-decoded per-asset feature values through the
-    * codegen'd expression path, one `(asset_id, modality, dim, value)`
-    * scalar row per dimension — hash-checked: the whole chain (asset
-    * derivation, modality assignment, per-dim stub decode) is replayed in
-    * DuckDB via the portable md5-prefix hash. The xxhash64 production stub
-    * and the mapPartitions codec-init pattern stay spec'd in MultimodalSpec.
-    */
-  val multimodalFeatures: QueryDef = QueryDef.withOracle(
-    """WITH assets AS (
-      |  SELECT doc_id AS asset_id,
-      |    CASE (doc_id % 3) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
-      |    text
-      |  FROM documents),
-      |dims AS (SELECT unnest(generate_series(0, 7)) AS dim)
-      |SELECT asset_id, modality, CAST(dim AS BIGINT) AS dim,
-      |  (('0x' || substr(md5(concat_ws('#', text, dim::VARCHAR)), 1, 14))::BIGINT % 1000000) / 1000000.0 AS value
-      |FROM assets, dims
-      |ORDER BY asset_id, dim""".stripMargin) { (s, dir) =>
-    Multimodal.assetsFromDocuments(t(s, dir, "documents"))
-      .select(col("asset_id"), col("modality"), col("payload"),
-        explode(sequence(lit(0), lit(7))).as("dim"))
-      .select(col("asset_id"), col("modality"), col("dim").cast("bigint").as("dim"),
-        Multimodal.stubDecodeFeaturePortable(col("payload"), col("dim")).as("value"))
-      .orderBy("asset_id", "dim")
-  }
-
-  /** Multimodal: video frame sampling row-explosion, hash-checked — the
-    * frame-index arithmetic and payload slicing replay exactly in DuckDB
-    * (fixture payloads are ASCII text, so the byte slice the operator takes
-    * equals the char slice the oracle takes; dumped decoded for comparison).
-    */
-  val multimodalFrames: QueryDef = QueryDef.withOracle(
-    """WITH assets AS (
-      |  SELECT doc_id AS asset_id, text, (n_chars % 100) + 1 AS n_frames
-      |  FROM documents
-      |  WHERE (doc_id % 3) = 2),
-      |frames AS (
-      |  SELECT asset_id, text,
-      |    unnest(generate_series(0, greatest(n_frames - 1, 0), 10)) AS frame_idx
-      |  FROM assets)
-      |SELECT asset_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-      |  substring(text, CAST((frame_idx * 16) % greatest(length(text), 1) + 1 AS INT), 16) AS frame_text
-      |FROM frames
-      |ORDER BY asset_id, frame_idx""".stripMargin) { (s, dir) =>
-    Multimodal.sampleFrames(Multimodal.assetsFromDocuments(t(s, dir, "documents")))
-      .select(col("asset_id"), col("frame_idx").cast("bigint").as("frame_idx"),
-        decode(col("frame_payload"), "UTF-8").as("frame_text"))
-      .orderBy("asset_id", "frame_idx")
-  }
-
-  /** Multimodal REAL decode (round 6, non-stub): per document an actual
-    * 24-bit BMP or RIFF/WAVE file is generated (pixel/sample content a
-    * closed-form function of doc_id), then decoded by the JDK's genuine
-    * codecs — ImageIO's BMP reader, javax.sound's WAV parser — and reduced
-    * to pixel/sample statistics ([[Multimodal.realAssets]] /
-    * [[Multimodal.decodeReal]]). Because the content is closed-form, the
-    * DuckDB oracle re-derives every decoded statistic arithmetically: a
-    * hash match proves the full encode→real-decode round trip (stride
-    * padding, bottom-up rows, BGR order, PCM endianness) bit-for-bit.
-    * Mean formulas are written with the same operands the decoder divides
-    * (pixel sum / pixel count) so both sides round identically.
-    */
-  val multimodalRealDecode: QueryDef = QueryDef.withOracle(
-    """WITH img AS (
-      |  SELECT doc_id,
-      |    CAST(8 + (doc_id % 8) * 4 AS INTEGER) AS w,
-      |    CAST(8 + (doc_id % 6) * 4 AS INTEGER) AS h
-      |  FROM documents WHERE doc_id % 3 = 0),
-      |aud AS (
-      |  SELECT doc_id,
-      |    CAST(8000 + (doc_id % 4) * 4000 AS INTEGER) AS sr,
-      |    CAST(200 + (doc_id % 100) AS BIGINT) AS n,
-      |    CAST((doc_id % 1000) + 1 AS DOUBLE) AS amp
-      |  FROM documents WHERE doc_id % 3 = 1)
-      |SELECT doc_id AS asset_id, 'image' AS modality, w AS width, h AS height,
-      |  CAST(doc_id % 256 AS DOUBLE) AS mean_r,
-      |  CAST(h * (w * (w - 1) / 2) AS DOUBLE) / (CAST(w AS BIGINT) * h) AS mean_g,
-      |  CAST(w * (h * (h - 1) / 2) AS DOUBLE) / (CAST(w AS BIGINT) * h) AS mean_b,
-      |  CAST(NULL AS INTEGER) AS sample_rate, CAST(NULL AS BIGINT) AS n_samples,
-      |  CAST(NULL AS DOUBLE) AS peak, CAST(NULL AS DOUBLE) AS duration_ms
-      |FROM img
-      |UNION ALL
-      |SELECT doc_id, 'audio', NULL, NULL, NULL, NULL, NULL,
-      |  sr, n, amp, n * 1000.0 / sr
-      |FROM aud
-      |ORDER BY asset_id""".stripMargin) { (s, dir) =>
-    Multimodal.decodeReal(Multimodal.realAssets(t(s, dir, "documents")))
-  }.sortedDump("asset_id")
-
-  /** Multimodal REAL video decode (round-7, closes the modality matrix):
-    * per `doc_id % 3 == 2` document an actual animated GIF is encoded
-    * through ImageIO's GIF writer ([[Multimodal.realVideoAssets]] — frame
-    * count/dims/colors closed-form in doc_id), then ImageIO's GIF reader
-    * iterates every frame and reduces it to pixel statistics
-    * ([[Multimodal.decodeRealVideoFrames]]). Constant-color frames keep
-    * the writer's palette exact, so the oracle re-derives each frame's
-    * statistics arithmetically: a hash match proves the multi-frame
-    * encode→decode round trip (frame order, palette, raster) bit-for-bit.
-    * Corrupt-payload rejection is spec'd in RealCodecSpec.
-    */
-  val multimodalRealVideo: QueryDef = QueryDef.withOracle(
-    """WITH vids AS (
-      |  SELECT doc_id,
-      |    CAST(8 + (doc_id % 5) * 4 AS INTEGER) AS w,
-      |    CAST(8 + (doc_id % 4) * 4 AS INTEGER) AS h,
-      |    CAST(2 + (doc_id % 6) AS INTEGER) AS n
-      |  FROM documents WHERE doc_id % 3 = 2),
-      |frames AS (
-      |  SELECT doc_id, w, h, unnest(generate_series(0, n - 1)) AS k FROM vids)
-      |SELECT doc_id AS asset_id, CAST(k AS INTEGER) AS frame_idx,
-      |  w AS width, h AS height,
-      |  CAST(doc_id % 256 AS DOUBLE) AS mean_r,
-      |  CAST((7 * k + 13) % 256 AS DOUBLE) AS mean_g,
-      |  CAST((11 * k + 5) % 256 AS DOUBLE) AS mean_b
-      |FROM frames
-      |ORDER BY asset_id, frame_idx""".stripMargin) { (s, dir) =>
-    Multimodal.decodeRealVideoFrames(
-      Multimodal.realVideoAssets(t(s, dir, "documents")))
-  }.sortedDump("asset_id", "frame_idx")
-
-  /** REAL feature extraction (replaces the round-6 murmur-hash stub): the
-    * full three-modality real-asset corpus decoded by the JDK codecs, each
-    * asset reduced to an 8-dim vector of decoded-content statistics
-    * ([[Multimodal.extractFeatures]]), dumped as exploded scalar rows. The
-    * oracle re-derives every feature from the closed-form asset content —
-    * including the double→float casts — so the featurizer's output is
-    * hash-pinned, not just shaped.
-    */
-  val multimodalRealFeatures: QueryDef = QueryDef.withOracle(
-    """WITH img AS (
-      |  SELECT doc_id, CAST(8 + (doc_id % 8) * 4 AS BIGINT) AS w,
-      |    CAST(8 + (doc_id % 6) * 4 AS BIGINT) AS h
-      |  FROM documents WHERE doc_id % 3 = 0),
-      |aud AS (
-      |  SELECT doc_id, 8000 + (doc_id % 4) * 4000 AS sr,
-      |    200 + (doc_id % 100) AS n
-      |  FROM documents WHERE doc_id % 3 = 1),
-      |vid AS (
-      |  SELECT doc_id, 2 + (doc_id % 6) AS n, 8 + (doc_id % 5) * 4 AS w,
-      |    8 + (doc_id % 4) * 4 AS h
-      |  FROM documents WHERE doc_id % 3 = 2),
-      |feats AS (
-      |  SELECT doc_id AS asset_id, 'image' AS modality,
-      |    [1.0, CAST(w AS DOUBLE), CAST(h AS DOUBLE),
-      |     CAST(doc_id % 256 AS DOUBLE),
-      |     CAST(h * (w * (w - 1) / 2) AS DOUBLE) / (w * h),
-      |     CAST(w * (h * (h - 1) / 2) AS DOUBLE) / (w * h), 0.0, 0.0] AS fs
-      |  FROM img
-      |  UNION ALL
-      |  SELECT doc_id, 'audio',
-      |    [2.0, CAST(sr AS DOUBLE), CAST(n AS DOUBLE),
-      |     CAST((doc_id % 1000) + 1 AS DOUBLE), n * 1000.0 / sr,
-      |     0.0, 0.0, 0.0]
-      |  FROM aud
-      |  UNION ALL
-      |  SELECT doc_id, 'video',
-      |    [3.0, CAST(n AS DOUBLE), CAST(w AS DOUBLE), CAST(h AS DOUBLE),
-      |     CAST(doc_id % 256 AS DOUBLE), 13.0, 5.0, 0.0]
-      |  FROM vid),
-      |dims AS (SELECT unnest(generate_series(0, 7)) AS pos)
-      |SELECT asset_id, modality, CAST(pos AS INT) AS pos,
-      |  CAST(fs[pos + 1] AS FLOAT) AS value
-      |FROM feats, dims
-      |ORDER BY asset_id, pos""".stripMargin) { (s, dir) =>
-    val docs = t(s, dir, "documents")
-    Multimodal.extractFeatures(
-      Multimodal.realAssets(docs).union(Multimodal.realVideoAssets(docs)))
-      .select(col("asset_id"), col("modality"),
-        posexplode(col("features")).as(Seq("pos", "value")))
-  }.sortedDump("asset_id", "pos")
-
-  /** Structured-Streaming windowed aggregation run to completion over the
-    * fixture files (real streaming machinery; emitted windows only — append
-    * mode emits a window once the watermark passes its end, so the trailing
-    * window stays in state; the oracle replicates that cutoff).
-    */
-  val streamEventsDaily: QueryDef = QueryDef.withOracle(
-    """SELECT CAST(FLOOR(epoch(date_trunc('day', ts))) AS BIGINT) AS window_start,
-      |  event_type,
-      |  COUNT(*) AS n_events,
-      |  CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-      |FROM events
-      |WHERE epoch(date_trunc('day', ts)) + 86400
-      |      <= (SELECT epoch(max(ts)) - 3600 FROM events)
-      |GROUP BY 1, 2
-      |ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-    EventsStream.runToBatch(s, dir, EventsStream.windowedAgg(_),
-      s"stream_events_daily_${math.abs(dir.hashCode)}")
-      .orderBy("window_start", "event_type")
-  }
-
-  /** Partitioned-layout sink + pruned scan: documents written
-    * `partitionBy(lang)` once, then read back with a partition-column
-    * filter — the plan prunes to the matching directories
-    * (`PartitionFilters`, zero I/O on other langs), the layout that turns
-    * a 100 TB scan into a per-partition scan. Hash-checked against the
-    * same filter over the original table.
-    */
-  val docsPartitionedScan: QueryDef = QueryDef.withOracle(
-    """SELECT doc_id, lang, n_chars FROM documents
-      |WHERE lang IN ('en', 'fr')
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val path = s"/tmp/graft_docs_part_${dirKey(dir)}"
-    if (!csvWritten.contains(path)) {
-      t(s, dir, "documents").write.partitionBy("lang").mode("overwrite").parquet(path)
-      csvWritten.add(path)
-    }
-    s.read.parquet(path)
-      .where(col("lang").isin("en", "fr"))
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy("doc_id")
-  }
-
-  /** Stream-stream interval join run to completion (real state-store join
-    * machinery; inner join emits eagerly, so the batch interval join is an
-    * exact oracle).
-    */
-  val streamPurchaseViews: QueryDef = QueryDef.withOracle(
-    """SELECT p.event_id AS purchase_id, v.event_id AS view_id, p.user_id,
-      |  CAST(p.value AS DOUBLE) AS purchase_value
-      |FROM events p JOIN events v
-      |  ON p.event_type = 'purchase' AND v.event_type = 'view'
-      |  AND v.user_id = p.user_id
-      |  AND v.ts >= p.ts - INTERVAL 1 HOUR AND v.ts <= p.ts
-      |ORDER BY purchase_id, view_id""".stripMargin) { (s, dir) =>
-    EventsStream.runToBatch(s, dir, EventsStream.purchaseViewJoin(_),
-      s"stream_purchase_views_${math.abs(dir.hashCode)}")
-  }.sortedDump("purchase_id", "view_id")
 
   // ------------------------------------------------------------------
 

@@ -234,13 +234,10 @@ object EventsStream {
       queryName: String,
       statePartitions: Int = -1): DataFrame = {
     val streamSession = spark.newSession()
-    // state width precedence: explicit caller value (specs pin
-    // width-invariance with it) > env override (scale A/Bs) >
-    // volume-scaled auto ([[autoStatePartitions]])
+    // state width: the explicit caller value (specs pin width-invariance
+    // with it), else volume-scaled auto ([[autoStatePartitions]])
     val stateParts =
-      if (statePartitions > 0) statePartitions
-      else sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt)
-        .getOrElse(autoStatePartitions(sfDir))
+      if (statePartitions > 0) statePartitions else autoStatePartitions(sfDir)
     streamSession.conf.set("spark.sql.shuffle.partitions", stateParts)
     // RocksDB state store: the 100 TB posture. The default HDFS-backed
     // provider keeps every stateful operator's state in executor HEAP —
@@ -248,40 +245,22 @@ object EventsStream {
     // spills to local disk with bounded memory, at equal results (the
     // provider is a storage backend, not a semantics change; the
     // state-partition sizing note above still governs per-batch cost).
-    // SPARK_GRAFT_STATE_STORE=hdfs restores the in-memory provider for
-    // A/B measurement.
-    if (!sys.env.get("SPARK_GRAFT_STATE_STORE").contains("hdfs")) {
-      streamSession.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // changelog checkpointing: commit the per-batch DELTA instead of a
-      // full RocksDB snapshot per store per trigger — the snapshot upload
-      // was 1-3x per-row overhead in the x100 A/B (stream_purchase_views
-      // runs 4 stores x 8 partitions x every micro-batch)
-      streamSession.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // skip per-put/delete row-count bookkeeping: numTotalStateRows is a
-      // metrics nicety, not a semantics surface, and maintaining it costs
-      // a read-before-write on every state mutation across all stores
-      // (the documented first knob for RocksDB-provider overhead)
-      streamSession.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        "false")
-      // A/B hook for further state-store tuning without a code change:
-      // SPARK_GRAFT_ROCKSDB_OPTS="boundedMemoryUsage=true,maxMemoryUsageMB=2048"
-      // applies each pair under spark.sql.streaming.stateStore.rocksdb.;
-      // a key already starting with "spark." is set verbatim (e.g. the
-      // state-row encoding format spark.sql.streaming.stateStore.encodingFormat)
-      sys.env.get("SPARK_GRAFT_ROCKSDB_OPTS").foreach { opts =>
-        opts.split(',').filter(_.contains("=")).foreach { kv =>
-          val Array(k0, v) = kv.split("=", 2)
-          val k = k0.trim
-          streamSession.conf.set(
-            if (k.startsWith("spark.")) k
-            else s"spark.sql.streaming.stateStore.rocksdb.$k", v.trim)
-        }
-      }
-    }
+    streamSession.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // changelog checkpointing: commit the per-batch DELTA instead of a
+    // full RocksDB snapshot per store per trigger — the snapshot upload
+    // was 1-3x per-row overhead in the x100 A/B (stream_purchase_views
+    // runs 4 stores x 8 partitions x every micro-batch)
+    streamSession.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "true")
+    // skip per-put/delete row-count bookkeeping: numTotalStateRows is a
+    // metrics nicety, not a semantics surface, and maintaining it costs
+    // a read-before-write on every state mutation across all stores
+    // (the documented first knob for RocksDB-provider overhead)
+    streamSession.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
+      "false")
     val out = transform(readEvents(streamSession, sfDir))
     // pid-scoped scratch: a world-shared path would let a concurrent
     // process running the same queryName delete this run's live

@@ -18,9 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * branches; both src-factor lookups (dense, and sparse via the injected
   * cap) are compared.
   *
-  * The src side is ONE block: `computeYtY`'s `treeAggregate` merges
-  * partition partials in task-completion order, so with several src blocks
-  * the kernel's own YᵀY and the oracle's can differ in the last bit.
+  * The src side is ONE block: `computeYtY` sums one partial per block and
+  * then merges the partials, so with several src blocks its YᵀY and the
+  * oracle's single running sum can differ in the last bit.
   */
 class HalfStepParitySpec extends AnyFunSuite with SparkFixture {
   import HalfStepParitySpec._

@@ -1,9 +1,7 @@
 package graft.als
 
-import graft.SparkFixture
+import graft.{JobBudget, SparkFixture}
 import graft.ops.Similarity
-import org.apache.spark.GraftSparkInternals
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -20,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * call, or loses the factor tables' size so the joins fall back to
   * sort-merge, fails here rather than only in a benchmark trace.
   */
-class ServingJobBudgetSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlanHelper {
+class ServingJobBudgetSpec extends AnyFunSuite with SparkFixture with JobBudget
+    with AdaptiveSparkPlanHelper {
 
   private lazy val ratings: DataFrame = {
     val spark2 = spark
@@ -47,39 +46,6 @@ class ServingJobBudgetSpec extends AnyFunSuite with SparkFixture with AdaptiveSp
     import spark2.implicits._
     Seq((1000L, 0L, 5.0f), (1000L, 3L, 2.0f), (1001L, 1L, 4.0f), (1001L, 2L, 1.0f),
       (1001L, 999L, 3.0f)).toDF("user", "item", "rating")
-  }
-
-  /** Jobs started and stages executed (skipped stages excluded) by `body`,
-    * counted for this thread's jobs only through a local property.
-    */
-  private def budget[T](body: => T): (T, Int, Int) = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.budget"
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) {
-          jobs.incrementAndGet()
-          e.stageIds.foreach(ours.add)
-        }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (ours.contains(e.stageInfo.stageId) && e.stageInfo.submissionTime.isDefined)
-          stages.incrementAndGet()
-    }
-    GraftSparkInternals.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, tag)
-    try {
-      val out = body
-      GraftSparkInternals.drainListenerBus(sc)
-      (out, jobs.get, stages.get)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   private def joins(plan: SparkPlan): (Int, Int, Int) = (

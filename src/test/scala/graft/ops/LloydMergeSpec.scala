@@ -46,13 +46,13 @@ class LloydMergeSpec extends AnyFunSuite with SparkFixture {
     val reversed = inOrder(partials.reverse, groups, width)._2
     assert(bits(reversed) != bits(wantSums), "fixture too weak to see an order change")
     for (seed <- 1 to 20) {
-      val merge = new Similarity.LloydMerge(groups, width)
+      val merge = new OrderedMerge(Similarity.lloydZero(groups, width), Similarity.lloydAdd)
       new Random(seed).shuffle(partials.indices.toList).foreach(p => merge.add(p, partials(p)))
       val (counts, sums) = merge.result(parts)
       assert(counts.toSeq == wantCounts.toSeq, s"seed=$seed")
       assert(bits(sums) == bits(wantSums), s"seed=$seed")
     }
-    val partial = new Similarity.LloydMerge(groups, width)
+    val partial = new OrderedMerge(Similarity.lloydZero(groups, width), Similarity.lloydAdd)
     partial.add(1, partials(1))
     intercept[IllegalArgumentException](partial.result(parts))
   }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkFixture
+import graft.ops.IndexHealth
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the drift meter's decision rule (round-10 verdict #8): the
@@ -12,24 +13,24 @@ import org.scalatest.funsuite.AnyFunSuite
 class DriftThresholdSpec extends AnyFunSuite with SparkFixture {
 
   test("margin is a strict threshold at the documented noise budget") {
-    val m = Queries.retrainGainMargin
+    val m = IndexHealth.retrainGainMargin
     assert(m == 0.02, "margin is the documented sampling-CI-scale budget")
     // the PRODUCTION decision rule (the one simDriftRecall emits), not a
     // tautology over the raw comparison operator
-    assert(!Queries.retrainDecision(m), "gain == margin must NOT recommend a retrain")
-    assert(Queries.retrainDecision(m + 1e-9), "any gain above the margin must")
-    assert(!Queries.retrainDecision(0.0))
-    assert(!Queries.retrainDecision(-0.1), "improving recall never recommends")
+    assert(!IndexHealth.retrainDecision(m), "gain == margin must NOT recommend a retrain")
+    assert(IndexHealth.retrainDecision(m + 1e-9), "any gain above the margin must")
+    assert(!IndexHealth.retrainDecision(0.0))
+    assert(!IndexHealth.retrainDecision(-0.1), "improving recall never recommends")
   }
 
   test("sim_drift_recall emits a flag consistent with its own gain column") {
-    val row = Queries.simDriftRecall
+    val row = SimilarityQueries.simDriftRecall
       .fn(spark, "/root/testdata/sf0.001")
       .head()
     val gain = row.getAs[Double]("retrain_gain")
     val flag = row.getAs[Boolean]("retrain_recommended")
-    assert(flag == gain > Queries.retrainGainMargin,
-      s"flag $flag inconsistent with gain $gain at margin ${Queries.retrainGainMargin}")
+    assert(flag == gain > IndexHealth.retrainGainMargin,
+      s"flag $flag inconsistent with gain $gain at margin ${IndexHealth.retrainGainMargin}")
     val sr = row.getAs[Double]("stale_recall")
     val fr = row.getAs[Double]("fresh_recall")
     assert(math.abs(gain - (fr - sr)) == 0.0, "gain must be exactly fresh − stale")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkFixture
+import graft.als.RankingMetrics
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,9 +29,9 @@ class MprSamplingSpec extends AnyFunSuite with SparkFixture {
     val inter = (0 until 40).flatMap { u =>
       (0 until 5).map(j => (u.toLong, ((u * 31 + j * 17) % 240).toLong, 1.0 + j))
     }.toDF("user_id", "item_id", "rating")
-    val exact = Queries.meanPercentileRank(users, items, inter)
-    val sampled = Queries.meanPercentileRank(users, items, inter,
-      sampleDenom = Queries.mprSampleDenom(240))
+    val exact = RankingMetrics.meanPercentileRank(users, items, inter)
+    val sampled = RankingMetrics.meanPercentileRank(users, items, inter,
+      sampleDenom = RankingMetrics.mprSampleDenom(240))
     assert(exact >= 0.0 && exact <= 1.0)
     assert(sampled >= 0.0 && sampled <= 1.0)
     // hash sampling ranks each observed item within a uniform ~1/denom
@@ -42,10 +43,10 @@ class MprSamplingSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("sampleDenom 1 below 64 items (exact), bounded sample above") {
-    assert(Queries.mprSampleDenom(8) == 1)
-    assert(Queries.mprSampleDenom(63) == 1)
-    assert(Queries.mprSampleDenom(640) == 10)
-    assert(Queries.mprSampleDenom(64000) == 1000)
+    assert(RankingMetrics.mprSampleDenom(8) == 1)
+    assert(RankingMetrics.mprSampleDenom(63) == 1)
+    assert(RankingMetrics.mprSampleDenom(640) == 10)
+    assert(RankingMetrics.mprSampleDenom(64000) == 1000)
   }
 
   test("sampled branch's plan generates candidates — no user×catalog loop join") {
@@ -55,7 +56,7 @@ class MprSamplingSpec extends AnyFunSuite with SparkFixture {
     val items = factors(240, 6)
     val inter = (0 until 40).map(u => (u.toLong, (u % 240).toLong, 1.0))
       .toDF("user_id", "item_id", "rating")
-    val sampledPlan = Queries
+    val sampledPlan = RankingMetrics
       .mprWeightedPercentiles(users, items, inter, sampleDenom = 4)
       .queryExecution.executedPlan.toString
     assert(!sampledPlan.contains("BroadcastNestedLoopJoin"),
@@ -63,7 +64,7 @@ class MprSamplingSpec extends AnyFunSuite with SparkFixture {
         "enumerate the catalog per user:\n" + sampledPlan)
     // the exact small-catalog oracle branch is the only place the
     // full-catalog loop join remains
-    val exactPlan = Queries
+    val exactPlan = RankingMetrics
       .mprWeightedPercentiles(users, items, inter, sampleDenom = 1)
       .queryExecution.executedPlan.toString
     assert(exactPlan.contains("BroadcastNestedLoopJoin"))
@@ -76,8 +77,8 @@ class MprSamplingSpec extends AnyFunSuite with SparkFixture {
     import spark2.implicits._
     val inter = (0 until 10).map(u => (u.toLong, (u % 12).toLong, 2.0))
       .toDF("user_id", "item_id", "rating")
-    val a = Queries.meanPercentileRank(users, items, inter)
-    val b = Queries.meanPercentileRank(users, items, inter, sampleDenom = 1)
+    val a = RankingMetrics.meanPercentileRank(users, items, inter)
+    val b = RankingMetrics.meanPercentileRank(users, items, inter, sampleDenom = 1)
     assert(a == b)
   }
 }

@@ -1,13 +1,13 @@
 package graft.queries
 
 import graft.{SparkFixture, Tables}
-import graft.ops.Similarity
+import graft.ops.{IndexHealth, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the recall meters' fixed anchor budget: the anchored estimate
-  * (exact truth for [[Queries.recallAnchorBudget]] hash-chosen queries)
+  * (exact truth for [[IndexHealth.recallAnchorBudget]] hash-chosen queries)
   * must track the full-truth recall (exact truth for EVERY query) — the
   * bound that justifies running the ×100 meter at O(anchors × corpus)
   * instead of the O(corpus²) full truth the small-sf oracle tiers keep.
@@ -16,13 +16,13 @@ class RecallAnchorSpec extends AnyFunSuite with SparkFixture {
 
   test("anchor selection is deterministic, bounded, and degenerates to the full set below budget") {
     val e = Tables.load(spark, "/root/testdata/sf0.01", "embeddings")
-    val a1 = Queries.recallAnchorIds(e, "vec_id")
-    val a2 = Queries.recallAnchorIds(e, "vec_id")
+    val a1 = IndexHealth.recallAnchorIds(e, "vec_id")
+    val a2 = IndexHealth.recallAnchorIds(e, "vec_id")
     assert(a1.toSeq == a2.toSeq)
-    assert(a1.length == math.min(Queries.recallAnchorBudget, e.count()).toInt)
+    assert(a1.length == math.min(IndexHealth.recallAnchorBudget, e.count()).toInt)
     // a corpus at or below the budget keeps FULL truth
-    val small = e.limit(Queries.recallAnchorBudget / 2)
-    assert(Queries.recallAnchorIds(small, "vec_id").length == small.count().toInt)
+    val small = e.limit(IndexHealth.recallAnchorBudget / 2)
+    assert(IndexHealth.recallAnchorIds(small, "vec_id").length == small.count().toInt)
   }
 
   test("anchored IVF recall tracks full-truth recall at sf0.1") {
@@ -41,8 +41,8 @@ class RecallAnchorSpec extends AnyFunSuite with SparkFixture {
       hits.toDouble / n
     }
     val full = recall(e)
-    val anchors = Queries.recallAnchorIds(e, "vec_id")
-    assert(anchors.length == Queries.recallAnchorBudget)
+    val anchors = IndexHealth.recallAnchorIds(e, "vec_id")
+    assert(anchors.length == IndexHealth.recallAnchorBudget)
     val anchored = recall(e.where(col("vec_id").isin(anchors.map(Long.box): _*)))
     // 256 anchors × k=5 = 1,280 truth pairs → ±0.014 std on the estimate;
     // 0.05 is ~3.5σ of headroom while still catching a broken anchor tier
@@ -69,7 +69,7 @@ class RecallAnchorSpec extends AnyFunSuite with SparkFixture {
       if (n == 0) 1.0 else hits.toDouble / n
     }
     val full = pairRecall(None)
-    val anchors = Queries.recallAnchorIds(docs, "doc_id")
+    val anchors = IndexHealth.recallAnchorIds(docs, "doc_id")
     val anchorPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       id => id.isin(anchors.map(Long.box): _*)
     val anchored = pairRecall(Some(anchorPred))

@@ -9,8 +9,14 @@ reads them in, and compared column by column: NaN equals NaN, arrays
 compare element-wise. Parquet file bytes are not compared, since they
 differ between two runs of one binary. Prints one line per differing dump
 and exits 1 if any dump differs or exists in only one dir.
+
+The two dirs' oracle_sql.json files are compared too, key by key, after
+each dir's absolute path (which Verify writes into every oracle that reads
+a dump) is replaced with a placeholder: a key whose SQL differs, or that
+only one file has, counts as one more difference.
 """
 import glob
+import json
 import math
 import os
 import sys
@@ -60,6 +66,32 @@ def first_difference(a: pd.DataFrame, b: pd.DataFrame):
     return None
 
 
+def oracle_sql(root: str) -> dict:
+    """The dir's oracle_sql.json with its own absolute path replaced by
+    {{OUT}}, or {} when the dir has none."""
+    path = os.path.join(root, "oracle_sql.json")
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        sql = json.load(f)
+    out = os.path.abspath(root)
+    return {k: v.replace(out, "{{OUT}}") for k, v in sql.items()}
+
+
+def diff_oracle_sql(dir_a: str, dir_b: str) -> int:
+    a, b = oracle_sql(dir_a), oracle_sql(dir_b)
+    differing = 0
+    for key in sorted(set(a) | set(b)):
+        if key not in a or key not in b:
+            print(f"{key:28s} SQL ONLY-IN {dir_a if key in a else dir_b}")
+            differing += 1
+        elif a[key] != b[key]:
+            print(f"{key:28s} SQL DIFFERS")
+            differing += 1
+    print(f"{len(set(a) | set(b))} oracle SQL keys compared, {differing} differing")
+    return differing
+
+
 def main(dir_a: str, dir_b: str) -> int:
     con = duckdb.connect()
     a, b = dumps(dir_a), dumps(dir_b)
@@ -74,6 +106,7 @@ def main(dir_a: str, dir_b: str) -> int:
             print(f"{name:28s} DIFFERS {diff}")
             differing += 1
     print(f"{len(set(a) | set(b))} dumps compared, {differing} differing")
+    differing += diff_oracle_sql(dir_a, dir_b)
     return 1 if differing else 0
 
 
