@@ -849,7 +849,10 @@ object Dedup {
     * Returns `(id, cluster_id)` for every node incident to at least one
     * edge; `cluster_id` is the component's minimum node id. Nodes with no
     * edges are their own singleton clusters — callers add them with a
-    * left join + coalesce (see the `dedup_clusters` query).
+    * left join + coalesce (see the `dedup_clusters` query). The returned
+    * frame is cached and filled in the call, and nothing else the call
+    * persisted outlives it: `unpersist()` it (or `catalog.clearCache()`)
+    * when done, as with [[minhashNearDups]]' result.
     */
   /** Ledger of the most recent [[connectedComponents]] call on this JVM —
     * spec observability only (asserting on the concrete reaped ids keeps
@@ -1109,7 +1112,14 @@ object Dedup {
       .flatMap(e => Iterator((e._1, e._2), (e._2, e._1)))
       .reduceByKey(math.min(_, _), partsFor(edgesFp._1))
       .map { case (id, mv) => (id, math.min(mv, id)) }
-    spark.createDataFrame(labels).toDF("id", "cluster_id")
+    // the last round's cut is the labels' only source (a local checkpoint
+    // has no recompute path), so the labels are materialized here and the
+    // cut released in the call: the caller owns one cached frame and frees
+    // it with `unpersist()` or `catalog.clearCache()`
+    val out = spark.createDataFrame(labels).toDF("id", "cluster_id").persist()
+    out.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
+    edges.unpersist(blocking = false)
+    out
   }
 
   /** Partitions a (node, x) composite key by node only, so one sorted

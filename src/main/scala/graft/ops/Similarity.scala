@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.VectorFunctions
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1089,8 +1090,9 @@ object Similarity {
     * session builds it ONCE ([[buildCellIndex]]) and passes it to every
     * [[ivfTopK]]/[[mipsIvfTopK]] call (round-13 verdict #7: the per-call
     * rebuild dominated the ×100 approx-serve rows even though the
-    * codebook itself was already cached). Caller owns the persist:
-    * [[unpersist]] when the index is retired.
+    * codebook itself was already cached). The occupancy the probe routes
+    * by is broadcast once per index, on first use. Caller owns the
+    * persist and the broadcasts: [[unpersist]] when the index is retired.
     */
   final case class CellIndex(
       cells: Array[Array[Float]],
@@ -1098,7 +1100,33 @@ object Similarity {
       blocks: org.apache.spark.rdd.RDD[(Int, (Array[Long], Array[Float], Array[Double]))],
       occupied: Seq[(Int, Array[Float])],
       partitioner: org.apache.spark.Partitioner) {
-    def unpersist(): Unit = blocks.unpersist(blocking = false): Unit
+    private var occupancy: (Broadcast[Array[Int]], Broadcast[Array[Float]]) = _
+
+    /** The occupied cells' ids and row-major centroids, broadcast on the
+      * first probe and reused by every later one.
+      */
+    private[ops] def occupancyBroadcast: (Broadcast[Array[Int]], Broadcast[Array[Float]]) =
+      synchronized {
+        if (occupancy == null) {
+          val (ids, mat) = flattenCells(occupied)
+          occupancy = (blocks.sparkContext.broadcast(ids), blocks.sparkContext.broadcast(mat))
+        }
+        occupancy
+      }
+
+    /** Releases the blocks and destroys the occupancy broadcasts: a frame
+      * a probe returned before this must be consumed first.
+      */
+    def unpersist(): Unit = {
+      blocks.unpersist(blocking = false)
+      synchronized {
+        if (occupancy != null) {
+          occupancy._1.destroy()
+          occupancy._2.destroy()
+          occupancy = null
+        }
+      }
+    }
     /** Persisted-RDD id, for harness pin lists. */
     def rddId: Int = blocks.id
     /** MEASURED executor-storage footprint of the persisted blocks
@@ -1195,7 +1223,6 @@ object Similarity {
       prebuilt: Option[CellIndex] = None): DataFrame = {
     require(k > 0)
     val spark = corpus.sparkSession
-    val sc = spark.sparkContext
     // When `prebuilt` is supplied, BOTH `corpus` and `cells` parameters are
     // ignored in favor of the index's own state — so validate they name the
     // same space: augmentBound plus codebook value-equality (round-14
@@ -1215,12 +1242,10 @@ object Similarity {
     val partitioner = idx.partitioner
     val aug = augmentBound
 
-    // occupancy flattened once into primitive arrays (round 14: a boxed
-    // (cellId, score) tuple per occupied cell plus a sort per QUERY
-    // dominated the ×100 serve rows)
-    val (occIds, occMat) = flattenCells(idx.occupied)
-    val bcOccIds = sc.broadcast(occIds)
-    val bcOccMat = sc.broadcast(occMat)
+    // occupancy flattened once per index into primitive arrays (round 14:
+    // a boxed (cellId, score) tuple per occupied cell plus a sort per
+    // QUERY dominated the ×100 serve rows)
+    val (bcOccIds, bcOccMat) = idx.occupancyBroadcast
 
     val probed = Parallelism.widen(queries).rdd
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -1274,12 +1299,16 @@ object Similarity {
 
     import spark.implicits._
     val result = BlockTopK.topKRows(partial, k).toDF(outCols: _*)
-      // bounded result materialized, corpus-sized block cache released —
-      // the per-call persist must not outlive the call (round-6 ADVICE).
-      // A PREBUILT index is caller-owned session state and stays persisted.
-      .localCheckpoint()
-    if (prebuilt.isEmpty) cellBlocks.unpersist(blocking = false): Unit
-    result
+    // A PREBUILT index is caller-owned session state: nothing of this call
+    // is persisted, so the result stays a lazy frame over the index. A
+    // per-call index must not outlive the call (round-6 ADVICE): the
+    // bounded result is materialized, then the index released.
+    if (prebuilt.nonEmpty) result
+    else {
+      val done = result.localCheckpoint()
+      idx.unpersist()
+      done
+    }
   }
 
   /** Pre-trained MIPS routing state: the augmentation bound (max ‖v‖² at

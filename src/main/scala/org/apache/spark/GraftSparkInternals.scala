@@ -63,6 +63,14 @@ object GraftSparkInternals {
     SparkEnv.get.blockManager.diskBlockManager.getAllFiles()
       .count(_.getName.startsWith(s"shuffle_${shuffleId}_"))
 
+  /** Ids of the broadcasts whose blocks this node's block manager holds
+    * (test observability: a destroyed broadcast leaves none). Local/driver
+    * block manager only, like [[shuffleFileCount]].
+    */
+  def broadcastIds(sc: SparkContext): Set[Long] =
+    SparkEnv.get.blockManager.getMatchingBlockIds(_.isBroadcast)
+      .collect { case b: org.apache.spark.storage.BroadcastBlockId => b.broadcastId }.toSet
+
   /** Blocks until every event already posted to the listener bus has been
     * delivered (bounded by `timeoutMillis`). Listener events are delivered
     * asynchronously, so a harness that samples per-query job/stage/shuffle

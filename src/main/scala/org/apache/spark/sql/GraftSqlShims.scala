@@ -18,6 +18,12 @@ object GraftSqlShims {
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, as the
+    * planner reads it (negative: broadcast joins are off).
+    */
+  def autoBroadcastJoinThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
+
   /** Wraps an already-produced `InternalRow` RDD back into a DataFrame —
     * the inverse of `queryExecution.toRdd`, exactly what
     * `Dataset.localCheckpoint` does internally after checkpointing. Used

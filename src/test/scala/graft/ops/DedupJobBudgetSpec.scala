@@ -42,6 +42,20 @@ class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture with JobBudget {
     out
   }
 
+  test("connectedComponents leaves nothing persisted once its result is released") {
+    val pairs = local(Dedup.ngramJaccardPairs(docs, threshold = 0.5))
+    val sc = spark.sparkContext
+    Seq[DataFrame => Unit](_.unpersist(), _ => spark.catalog.clearCache()).foreach { release =>
+      val before = sc.getPersistentRDDs.keySet
+      val out = Dedup.connectedComponents(pairs)
+      assert(out.count() > 0)
+      release(out)
+      // no GC in between: `out` is still reachable here
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+      assert(left.isEmpty, left.values.mkString("; "))
+    }
+  }
+
   test("near-dedup calls stay inside their job and stage budgets") {
     def measured(name: String, call: => DataFrame): (String, (Int, Int)) = {
       val (out, jobs, stages) = budget {
@@ -67,7 +81,9 @@ class DedupJobBudgetSpec extends AnyFunSuite with SparkFixture with JobBudget {
     assert(got.init == Seq(
       "minhashNearDups" -> ((12, 12)),
       "minhashNearDups candidatesMinBytes=0" -> ((11, 11)),
-      "connectedComponents" -> ((6, 15)),
+      // the labels are cached in the call (one job) so that the last
+      // round's cut is released there; the caller's action reads the cache
+      "connectedComponents" -> ((7, 16)),
       "nearDedupKeepers" -> ((4, 4)),
       "ngramJaccardPairs" -> ((18, 18))))
     // the sorted-run kernel's count is not a constant: one call in three

@@ -14,10 +14,12 @@
 # with R the run length BENCHMARK.json declares (`run_seconds`).
 #
 # Prints one row per pair (op_s_p50, setup_s, shuffle_mb, quality on each
-# side), then per metric the number of pairs the checkout won (ties count
-# for neither side), each side's median and quartile spread (IQR), and
-# whether the medians differ by more than the parent's IQR. Every result
-# line is kept in $AB_DIR/results.jsonl.
+# side), each side's failed/attempted ops with a FLAG line when the
+# checkout's failed share is higher than the parent's, then per metric the
+# number of pairs the checkout won (ties count for neither side), each
+# side's median and quartile spread (IQR), and whether the medians differ
+# by more than the parent's IQR. Every result line is kept in
+# $AB_DIR/results.jsonl.
 #
 # With AB_TRACE=1 it then runs one traced pair (`--trace 1`, first seed,
 # parent first) and prints both sides' per-layer metrics for the
@@ -32,7 +34,7 @@
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  sed -n '2,31p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,33p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 ref=$1
@@ -112,8 +114,15 @@ for n in sorted(pairs):
     first = "parent" if n % 2 == 0 else "change"
     cells = "  ".join(f"{value(p, m):>11.6g} {value(c, m):>11.6g}" for m, _ in metrics)
     print(f"{n:>4} {pairs[n]['seed']:>4} {first:<6} {cells}")
-failed = sum(r["result"]["failed"] for r in runs)
-print(f"failed ops: {failed} of {sum(r['result']['attempted'] for r in runs)}")
+share = {}
+for side in ("parent", "change"):
+    failed = sum(r["result"]["failed"] for r in runs if r["side"] == side)
+    attempted = sum(r["result"]["attempted"] for r in runs if r["side"] == side)
+    share[side] = failed / attempted if attempted else 0.0
+    print(f"failed ops, {side}: {failed} of {attempted}")
+if share["change"] > share["parent"]:
+    print(f"FLAG: the checkout fails a larger share of ops than the parent "
+          f"({share['change']:.1%} vs {share['parent']:.1%})")
 for m, better in metrics:
     ps = [value(pairs[n]["parent"], m) for n in pairs]
     cs = [value(pairs[n]["change"], m) for n in pairs]
